@@ -7,11 +7,11 @@ import org.apache.spark.sql.functions._
 /** The reference's `/stats/{index_name}` analytics endpoint
   * (`app/api/analytics.py:141-213`): chunk count, length stats (min / max /
   * avg / linear-interpolation p95, `analytics.py:106-115`) and the 20-bin
-  * histogram (`:118-135`) — computed over the index's persisted docs
-  * sidecar ([[IndexStore]]), latest or a specific version.
+  * histogram (`:118-135`) — computed over the chunk text the index rows
+  * carry ([[IndexStore.loadDocs]]), latest or a specific version.
   *
   * Scale shape: the reference loads the whole `.docs.json` into the server
-  * process; here the sidecar is a parquet scan. The exact interpolated p95
+  * process; here the text is a parquet column scan. The exact interpolated p95
   * is computed from CUMULATIVE COUNTS OVER DISTINCT LENGTHS — chunk
   * lengths are bounded by the chunk size, so the windowed frame is tiny
   * and constant no matter how many chunks the index holds (a row-level
@@ -20,22 +20,23 @@ import org.apache.spark.sql.functions._
 object IndexStats {
 
   /** One row: chunks, len_min, len_max, len_avg, len_p95 (reference field
-    * names). Errors if the index has no docs sidecar.
+    * names) over the chunks that carry text. Errors if the index rows
+    * have no text column.
     */
   def stats(spark: SparkSession, root: String, name: String,
             version: Option[String] = None): DataFrame =
-    statsOf(sidecarLens(spark, root, name, version))
+    statsOf(chunkLens(spark, root, name, version))
 
-  /** The reference's 20-bin histogram over the sidecar chunk lengths. */
+  /** The reference's 20-bin histogram over the chunk text lengths. */
   def histogram(spark: SparkSession, root: String, name: String,
                 version: Option[String] = None): DataFrame =
-    graft.operators.Chunking.lengthHistogram(sidecarLens(spark, root, name, version))
+    graft.operators.Chunking.lengthHistogram(chunkLens(spark, root, name, version))
 
-  private def sidecarLens(spark: SparkSession, root: String, name: String,
-                          version: Option[String]): DataFrame =
+  private def chunkLens(spark: SparkSession, root: String, name: String,
+                        version: Option[String]): DataFrame =
     IndexStore.loadDocs(spark, root, name, version)
       .getOrElse(throw new IllegalStateException(
-        s"index '$name' has no docs sidecar — build it with docs to get stats"))
+        s"index '$name' has no chunk text — rebuild it to get stats"))
       .select(length(col("text")).cast("long").as("len"))
 
   /** Exact stats over any single `len` column. The p95 is

@@ -21,6 +21,10 @@ import graft.operators.VectorOps
   *
   * Layout: `root/<name>/latest/vectors/` (+ `manifest.json`) and
   * `root/<name>/versions/<ts>/vectors/` (+ `manifest.json`, `meta.json`).
+  * Each vectors row is `(id, vec | codes, cell, text)`: the chunk text
+  * (the reference's `.docs.json` map) rides in the same row as its
+  * vector, nullable for rows written without text, so a search reads its
+  * previews from the rows it scores — one scan, pruned with the cells.
   *
   * Scale: an IVF index is written `partitionBy("cell")`, so probing
   * `nprobe` cells is a partition-pruned scan reading nprobe/nlist of the
@@ -111,16 +115,18 @@ object IndexStore {
     finally in.close()
   }
 
-  /** Build + persist an index over `vectors` (`id`, `vec array<float>`).
-    * backend: "flat" (single cell, unpartitioned) or "ivf" (deterministic
-    * sampled k-means cells, partitioned by cell). Writes latest + a
-    * timestamped version.
+  /** Build + persist an index over `vectors` (`id`, `vec array<float>`,
+    * optionally `text`). backend: "flat" (single cell, unpartitioned) or
+    * "ivf" (deterministic sampled k-means cells, partitioned by cell).
+    * Writes latest + a timestamped version.
     *
-    * `docs` is the chunk-text sidecar (`id`, `text`) — the reference
-    * persists the same map as `.docs.json` + `.ids.json` beside the index
-    * (`pipeline.py:65-69,136-139`, copied per version at `:124`) so search
-    * and eval can show previews; here it is a parquet dataset that scales
-    * with splits instead of a driver-side JSON blob.
+    * Chunk text — the map the reference persists as `.docs.json` +
+    * `.ids.json` beside the index (`pipeline.py:65-69,136-139`) so search
+    * and eval can show previews — is written into the vector rows' `text`
+    * column. It comes from `vectors`' own `text` column, or, when `docs`
+    * (`id`, `text`) is given, from `docs` left-joined onto the vectors by
+    * id (for callers that hold vectors and chunk text apart). With
+    * neither, `text` is null.
     */
   def build(vectors: DataFrame, root: String, name: String, backend: String,
             params: Params = Params(VectorOps.NumCells, VectorOps.NProbe),
@@ -142,6 +148,11 @@ object IndexStore {
     def centsDf(cents: Array[Array[Double]]): DataFrame =
       cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cell", "centroid")
+    val rows = docs match {
+      case Some(d) =>
+        vectors.drop("text").join(d.select(col("id"), col("text")), Seq("id"), "left")
+      case None => withText(vectors)
+    }
     val assigned = backend match {
       case "ivf" =>
         // Deterministic bounded-sample fit (IvfModel), then a narrow
@@ -152,8 +163,9 @@ object IndexStore {
         centSidecar = Some(centsDf(cents))
         dimFromFit = cents.headOption.map(_.length)
         VectorOps.assignCells(
-            vectors.select(col("id"), col("vec").as("embedding")), cents)
-          .select(col("id"), col("embedding").as("vec"), col("cell").cast("int").as("cell"))
+            rows.select(col("id"), col("vec").as("embedding"), col("text")), cents)
+          .select(col("id"), col("embedding").as("vec"),
+            col("cell").cast("int").as("cell"), col("text"))
       case "ivf_hier" =>
         // Same layout as "ivf", assignment via the two-level coarse probe
         // (graft.functions.IvfProbesHier): O(N·√nlist) instead of
@@ -172,11 +184,11 @@ object IndexStore {
         // rows (all probed supers memberless) — the try_element_at +
         // isNotNull-filter form it replaces triple-evaluated the probe
         // (project + filter + pushed scan filter; see ivfBuildHier)
-        vectors.select(col("id"), col("vec"),
+        rows.select(col("id"), col("vec"), col("text"),
             explode(graft.functions.IvfProbesHier.column(col("vec"),
               supers, cents, memberOf, sp, 1)).as("p"))
           .select(col("id"), col("vec"),
-            col("p")("cell").cast("int").as("cell"))
+            col("p")("cell").cast("int").as("cell"), col("text"))
       case "ivfpq" =>
         // The 100 TB serving layout: coarse cells for pruning + PQ CODES
         // instead of raw vectors (SubSpaces longs per row, 64× smaller).
@@ -192,13 +204,13 @@ object IndexStore {
           cb.zipWithIndex.flatMap { case (book, m) =>
             book.zipWithIndex.map { case (c, code) => (m, code, c.toSeq) }
           }.toSeq.toDF("m", "code", "cent"))
-        vectors.select(col("id"),
+        rows.select(col("id"),
           element_at(graft.functions.IvfProbes.column(col("vec"), cents, 1), 1)("cell")
             .cast("int").as("cell"),
           transform(graft.functions.PqCodes.column(col("vec"), cb), p => p("code"))
-            .as("codes"))
+            .as("codes"), col("text"))
       case "flat" =>
-        vectors.select(col("id"), col("vec"), lit(0).as("cell"))
+        rows.select(col("id"), col("vec"), lit(0).as("cell"), col("text"))
       case other =>
         // Mirror the reference's loader contract (ingest/backends/
         // loader.py:10 `raise ValueError(f"Unknown backend: {name}")`)
@@ -226,8 +238,6 @@ object IndexStore {
         _.coalesce(1).write.mode("overwrite").parquet(s"$vDir/centroids"))
       cbSidecar.foreach(
         _.coalesce(1).write.mode("overwrite").parquet(s"$vDir/codebooks"))
-      docs.foreach(_.select(col("id"), col("text"))
-        .write.mode("overwrite").parquet(s"$vDir/docs"))
       // per-doc provenance, the reference's `<index>.sources.json`
       // (answerless_search.py:60-71,104-111): (doc_id, origin_*, ...)
       sources.foreach(_.write.mode("overwrite").parquet(s"$vDir/sources"))
@@ -245,7 +255,7 @@ object IndexStore {
       chunking, metric, createdAt, measuredRecall)
     writeString(s"$vDir/manifest.json", manifest.toJson)
     val latestDir = s"$root/$name/latest"
-    for (ds <- Seq("vectors", "centroids", "codebooks", "docs", "sources"))
+    for (ds <- Seq("vectors", "centroids", "codebooks", "sources"))
       copyDirOver(s"$vDir/$ds", s"$latestDir/$ds")
     writeString(s"$latestDir/manifest.json", manifest.toJson)
     val meta =
@@ -257,6 +267,11 @@ object IndexStore {
     writeString(s"$root/$name/versions/$version/meta.json", meta)
     manifest
   }
+
+  /** `df` with a string `text` column: its own when present, else null. */
+  private[graft] def withText(df: DataFrame): DataFrame =
+    if (df.columns.contains("text")) df
+    else df.withColumn("text", lit(null).cast("string"))
 
   /** Default per-file row ceiling for the vectors layout — ~1 GB parquet
     * files at a few-hundred-dim float32 embedding row (1M rows × ~1 KB).
@@ -483,7 +498,8 @@ object IndexStore {
                version: Option[String] = None): Manifest =
     parseManifest(manifestJson(root, name, version))
 
-  /** Incremental index growth: assign `newVectors` (`id`, `vec`) with the
+  /** Incremental index growth: assign `newVectors` (`id`, `vec`,
+    * optionally `text` — null when absent, like [[build]]) with the
     * PERSISTED centroids/codebooks — no refit — append them to the latest
     * cell partitions, and record a new version whose `vectors/` holds just
     * the appended DELTA (parent + delta reconstructs the version; `latest`
@@ -512,22 +528,24 @@ object IndexStore {
     healPendingMerge(root, name)
     val old = manifest(root, name)
     val parent = versions(root, name).lastOption.getOrElse("none")
+    val rows = withText(newVectors)
     val assigned = old.backend match {
       case "ivfpq" =>
         val cents = loadCentroids(spark, root, name)
         val cb = loadCodebooks(spark, root, name)
-        newVectors.select(col("id"),
+        rows.select(col("id"),
           element_at(graft.functions.IvfProbes.column(col("vec"), cents, 1), 1)("cell")
             .cast("int").as("cell"),
           transform(graft.functions.PqCodes.column(col("vec"), cb), p => p("code"))
-            .as("codes"))
+            .as("codes"), col("text"))
       case b if b.startsWith("ivf") =>
         val cents = loadCentroids(spark, root, name)
         VectorOps.assignCells(
-            newVectors.select(col("id"), col("vec").as("embedding")), cents)
-          .select(col("id"), col("embedding").as("vec"), col("cell").cast("int").as("cell"))
+            rows.select(col("id"), col("vec").as("embedding"), col("text")), cents)
+          .select(col("id"), col("embedding").as("vec"),
+            col("cell").cast("int").as("cell"), col("text"))
       case "flat" =>
-        newVectors.select(col("id"), col("vec"), lit(0).as("cell"))
+        rows.select(col("id"), col("vec"), lit(0).as("cell"), col("text"))
       case other => // unreachable via build(), but a hand-written manifest could carry it
         throw new IllegalArgumentException(
           s"Unknown backend: $other (supported: flat, ivf, ivf_hier, ivfpq)")
@@ -617,28 +635,25 @@ object IndexStore {
         .getOrElse(sys.error(s"delta manifest for $name/$version has no parent"))
         .group(1)
       require(parent != "none", s"delta version $name/$version has no resolvable parent")
-      loadResolved(spark, root, name, parent).unionByName(df)
+      loadResolved(spark, root, name, parent).unionByName(df, allowMissingColumns = true)
     }
   }
 
-  /** The chunk-text sidecar written at build time, if any — the lazy scan
-    * search joins back against for previews.
+  /** The index's chunk text as a lazy `(id, text)` scan of the vector
+    * rows ([[loadServing]]), rows without text left out; None for an
+    * artifact whose rows carry no `text` column (written before chunk
+    * text moved into the rows — a rebuild restores it).
     */
   def loadDocs(spark: SparkSession, root: String, name: String,
                version: Option[String] = None,
                manifestText: Option[String] = None): Option[DataFrame] = {
-    val dir = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
-    val p = new HPath(s"$dir/docs")
-    // same serving cache as the vectors: the preview join re-reads this
-    // sidecar on every search
-    if (p.getFileSystem(hadoopConf).exists(p))
-      Some(cachedServingFrame(spark, root, name, version, "docs",
-        manifestText)(spark.read.parquet(p.toString)))
-    else None
+    val rows = loadServing(spark, root, name, version, manifestText)
+    if (!rows.columns.contains("text")) None
+    else Some(rows.filter(col("text").isNotNull).select(col("id"), col("text")))
   }
 
   /** The per-doc provenance sidecar, if present — served through the same
-    * cache as the docs sidecar (searchWithSource joins it per query).
+    * cache as the vectors (searchWithSource joins it per query).
     */
   def loadSources(spark: SparkSession, root: String, name: String,
                   version: Option[String] = None,
@@ -936,7 +951,17 @@ object IndexStore {
   def adcSearch(spark: SparkSession, root: String, name: String,
                 queries: DataFrame, k: Int,
                 nprobe: Int = -1,
-                version: Option[String] = None): DataFrame = {
+                version: Option[String] = None): DataFrame =
+    adcRanked(spark, root, name, queries, k, nprobe, version)
+      .select(col("q_id"), col("rk"), col("neighbor_id"), col("score"))
+
+  /** [[adcSearch]] with each hit's chunk `text` carried from the probed
+    * rows (null when the rows have none) — the ivfpq text search's
+    * previews, read in the same pruned scan that scores the codes.
+    */
+  private[graft] def adcRanked(spark: SparkSession, root: String, name: String,
+                               queries: DataFrame, k: Int, nprobe: Int,
+                               version: Option[String]): DataFrame = {
     // ONE manifest read per call: the text keys every cache below and the
     // parsed form resolves the serving dial
     val mj = scala.util.Try(manifestJson(root, name, version)).toOption
@@ -951,7 +976,7 @@ object IndexStore {
         explode(graft.functions.IvfProbes.column(col("vec"), cents, np)).as("p"))
       .select(col("q_id"), col("q_emb"), col("q_nrm"), col("p.cell").cast("int").as("cell"))
     val cells = qCells.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq
-    probe(loadServing(spark, root, name, version, mj), cells)
+    probe(withText(loadServing(spark, root, name, version, mj)), cells)
       .join(broadcast(qCells), Seq("cell"))
       .filter(col("id") =!= col("q_id"))
       .withColumn("score",
@@ -961,7 +986,7 @@ object IndexStore {
           .partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("rk").cast("long").as("rk"),
-        col("id").as("neighbor_id"), col("score"))
+        col("id").as("neighbor_id"), col("score"), col("text"))
   }
 
   /** Export an index version (or latest) as a single zip archive — the

@@ -54,6 +54,12 @@ object Search {
     new java.util.concurrent.ConcurrentHashMap[SparkSession,
       scala.collection.mutable.Map[String, DataFrame]]()
 
+  // [[bm25Consts]]' driver-side numbers per (session, dir): held beside
+  // the frame map (reading a cached frame back would cost a query per
+  // call) and dropped with it
+  private val corpusConsts =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Bm25Consts]()
+
   /** Config: how the shared per-doc term-stats frame is materialized.
     * `local` (default) = `localCheckpoint(true)` — fastest, but the blocks
     * live in executor memory with TRUNCATED lineage, so on a real cluster
@@ -77,8 +83,8 @@ object Search {
     }
 
   /** The session's stats map, creating it (and registering the context-
-    * shutdown cleanup listener) on first touch — shared by
-    * [[perDocTerms]] and [[queryIdf]].
+    * shutdown cleanup listener) on first touch — shared by every
+    * per-corpus stats entry ([[perDocTerms]], [[vocabTable]], [[bm25Consts]], …).
     */
   private def statsCacheFor(spark: SparkSession)
       : scala.collection.mutable.Map[String, DataFrame] =
@@ -86,8 +92,10 @@ object Search {
       val sc = s.sparkContext
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
           perDocCache.keySet.removeIf(k => k.sparkContext eq sc)
+          corpusConsts.keySet.removeIf(k => k._1.sparkContext eq sc)
+        }
       })
       scala.collection.mutable.Map.empty
     })
@@ -118,12 +126,12 @@ object Search {
     */
   def prewarm(spark: SparkSession, dir: String): Unit = {
     perDocTerms(spark, dir)
-    // the fixed-query idf table and the vocabulary table are shared the
-    // same way (r15) — warm them with the stats so per-query attribution
-    // stays build-free (vocabTable feeds text_vocab / text_surprisal /
-    // text_tfidf; queryIdf feeds every bm25-derived operator)
-    queryIdf(spark, dir, QueryText)
+    // the vocabulary table and the BM25 constants are shared the same way —
+    // warm them with the stats so per-query attribution stays build-free
+    // (vocabTable feeds text_vocab / text_surprisal / text_tfidf and every
+    // query's idf rows; bm25Consts feeds every bm25-derived operator)
     vocabTable(spark, dir)
+    bm25Consts(spark, dir)
     ()
   }
 
@@ -148,7 +156,7 @@ object Search {
     */
   def bm25ScoredFor(spark: SparkSession, dir: String, queryText: String): DataFrame = {
     val perDoc = perDocTerms(spark, dir)
-    val stats = corpusStatsRow(spark, dir)
+    val avgdl = bm25Consts(spark, dir).avgdl
     val qTerms = queryText.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
     val idf = queryIdf(spark, dir, queryText)
     val tf = perDoc.select(col("doc_id"), col("dl"),
@@ -156,11 +164,10 @@ object Search {
       .filter(col("term").isInCollection(qTerms))
     val perTerm = tf
       .join(broadcast(idf), Seq("term"))
-      .crossJoin(broadcast(stats))
       .withColumn("ts",
         col("idf") * (col("f").cast("double") * lit(K1 + 1.0)) /
           (col("f").cast("double") +
-            lit(K1) * (lit(1.0 - B) + lit(B) * (col("dl").cast("double") / col("avgdl")))))
+            lit(K1) * (lit(1.0 - B) + lit(B) * (col("dl").cast("double") / lit(avgdl)))))
     perTerm.groupBy(col("doc_id")).agg(round(sum(col("ts")), 6).as("score"))
   }
 
@@ -171,7 +178,7 @@ object Search {
   private[operators] def corpusStatsRow(spark: SparkSession, dir: String): DataFrame = {
     val m = statsCacheFor(spark)
     m.synchronized {
-      // \u0000 separator, like the idf key
+      // \u0000 separator, like the vocab key
       m.getOrElseUpdate("stats\u0000" + dir, {
         val perDoc = perDocTerms(spark, dir)
         materialize(spark,
@@ -185,7 +192,7 @@ object Search {
 
   /** The corpus vocabulary table `(term, tf, df)` — session-cached (r15
     * batch 3): text_vocab, text_surprisal (cf = tf), text_tfidf (df) and
-    * [[queryIdf]]'s build each re-aggregated the whole exploded per-doc
+    * the bm25 idf each re-aggregated the whole exploded per-doc
     * maps per call; at 100 TB the vocabulary is the same persisted
     * index-build artifact as the df table (one Σ|per-doc vocab|-sized agg
     * per corpus snapshot, then vocabulary-sized reads).
@@ -193,7 +200,7 @@ object Search {
   private[operators] def vocabTable(spark: SparkSession, dir: String): DataFrame = {
     val m = statsCacheFor(spark)
     m.synchronized {
-      // \u0000 separator, like the idf key: a corpus dir is free-form
+      // \u0000 separator: a corpus dir is free-form
       m.getOrElseUpdate("vocab\u0000" + dir, {
         val perDoc = perDocTerms(spark, dir)
         materialize(spark,
@@ -205,10 +212,10 @@ object Search {
     }
   }
 
-  /** Drop the session's materialized stats frames (perDoc / stats / idf /
-    * vocab) and eagerly unpersist their checkpoint blocks — the cold-twin
-    * hook: Bench's `--all` cold phase prices the first-touch build of the
-    * whole lexical-stats family through this.
+  /** Drop the session's materialized stats frames (perDoc / stats / vocab /
+    * gold) and BM25 constants, and eagerly unpersist the frames' checkpoint
+    * blocks — the cold-twin hook: Bench's `--all` cold phase prices the
+    * first-touch build of the whole lexical-stats family through this.
     */
   def invalidateCaches(spark: SparkSession): Unit = {
     val m = statsCacheFor(spark)
@@ -221,48 +228,57 @@ object Search {
         })
       m.clear()
     }
+    corpusConsts.keySet.removeIf(k => k._1 eq spark)
   }
 
-  /** The per-query idf table `(term, idf)` — ≤ |query| rows, but its build
-    * walks the WHOLE vocabulary twice (the per-term df aggregation feeds
-    * both the epsilon floor's vocabulary-mean idf AND the query-term
-    * lookup, and Spark re-executes the shared df subtree once per branch).
-    * Materialized once per (session, dir, query) and reused by every
-    * bm25-derived operator (topk/preview/highlights/hybrid/eval) — the
-    * [[perDocTerms]] "build the inverted stats, then query them"
-    * convention (r15): at 100 TB the idf table is a persisted index-build
-    * artifact next to the df table; recomputing the vocabulary scan per
-    * search was the bm25 family's repeated fixed cost. Its build reads
-    * the materialized [[vocabTable]] (r15 batch 3), so both consumer
-    * branches (epsilon-floor mean + query-term lookup) scan the
-    * vocabulary checkpoint instead of re-running the per-doc explode.
+  /** Stats entries held for `spark` (for specs: a serving session's
+    * caches must not grow with the queries it answers).
+    */
+  private[graft] def statsCacheSize(spark: SparkSession): Int = {
+    val m = statsCacheFor(spark)
+    m.synchronized(m.size) + corpusConsts.keySet.stream.filter(_._1 eq spark).count().toInt
+  }
+
+  /** BM25Okapi's idf of a term in `df` of `nDocs` documents (may be < 0). */
+  private def rawIdf(nDocs: Column, df: Column): Column =
+    log((nDocs - df.cast("double") + 0.5) / (df.cast("double") + 0.5))
+
+  /** The corpus-level BM25 constants of a dir: document count, mean
+    * document length, and the vocabulary-mean idf behind BM25Okapi's
+    * epsilon floor (a negative idf becomes `epsilon · mean idf`).
+    */
+  private case class Bm25Consts(nDocs: Long, avgdl: Double, avgIdf: Double)
+
+  /** [[Bm25Consts]] of `dir`: one vocabulary-wide aggregation per
+    * (session, dir), kept on the driver, so a query plan carries them as
+    * literals instead of broadcasting the stats row per query.
+    */
+  private def bm25Consts(spark: SparkSession, dir: String): Bm25Consts =
+    corpusConsts.computeIfAbsent((spark, dir), _ => {
+      val r = vocabTable(spark, dir).crossJoin(broadcast(corpusStatsRow(spark, dir)))
+        .agg(max(col("n_docs")), max(col("avgdl")),
+          sum(rawIdf(col("n_docs").cast("double"), col("df"))) /
+            count(lit(1)).cast("double"))
+        .head()
+      // an empty corpus has no vocabulary, so no query term ever reads these
+      def num(i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+      Bm25Consts(if (r.isNullAt(0)) 0L else r.getLong(0), num(1), num(2))
+    })
+
+  /** The per-query idf table `(term, idf)` — ≤ |query| rows, derived on
+    * every call from the cached [[vocabTable]] (a filter to the query
+    * terms) and the cached [[bm25Consts]]. Nothing is cached per query
+    * text, so a serving session's stats map and checkpoint blocks stay
+    * the same size however many distinct queries it answers.
     */
   private[operators] def queryIdf(spark: SparkSession, dir: String,
       queryText: String): DataFrame = {
-    val m = statsCacheFor(spark)
-    m.synchronized {
-      // \u0000 separators: dir and query are free-form strings, so a
-      // plain-space join could alias two (dir, query) pairs
-      m.getOrElseUpdate("idf\u0000" + dir + "\u0000" + queryText, {
-        val stats = corpusStatsRow(spark, dir)
-        val df = vocabTable(spark, dir).select(col("term"), col("df"))
-        // idf over the WHOLE vocabulary (needed for BM25Okapi's epsilon
-        // floor: negative idf -> 0.25 * mean(idf over vocab)).
-        val idfRaw = df.crossJoin(broadcast(stats))
-          .withColumn("idf_raw",
-            log((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
-                (col("df").cast("double") + 0.5)))
-        val avgIdf = idfRaw.agg(
-          (sum(col("idf_raw")) / count(lit(1)).cast("double")).as("avg_idf"))
-        val qTerms = queryText.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
-        materialize(spark, idfRaw.filter(col("term").isInCollection(qTerms))
-          .crossJoin(broadcast(avgIdf))
-          .withColumn("idf",
-            when(col("idf_raw") < 0, lit(Epsilon) * col("avg_idf")).otherwise(col("idf_raw")))
-          .select(col("term"), col("idf")),
-          "idf_" + Integer.toHexString((dir + " " + queryText).hashCode))
-      })
-    }
+    val c = bm25Consts(spark, dir)
+    val qTerms = queryText.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+    val raw = rawIdf(lit(c.nDocs.toDouble), col("df"))
+    vocabTable(spark, dir).filter(col("term").isInCollection(qTerms))
+      .select(col("term"),
+        when(raw < 0, lit(Epsilon) * lit(c.avgIdf)).otherwise(raw).as("idf"))
   }
 
   val PreviewLen = 220

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Embedder, VectorFunctions}
@@ -60,9 +59,10 @@ object IndexPipeline {
       assignProbes, superProbes, m, efConstruction, efSearch)
   }
 
-  /** Chunked text with the reference's `{doc}#{j}` chunk ids — both the
-    * embedder input and the docs sidecar (`pipeline.py:65-69`); the
-    * chunk mode is the upload knob (`chunker.py:26-31`).
+  /** Chunked text with the reference's `{doc}#{j}` chunk ids — the
+    * embedder input, whose text the index rows keep for previews
+    * (`pipeline.py:65-69`); the chunk mode is the upload knob
+    * (`chunker.py:26-31`).
     */
   def chunked(docs: DataFrame, cfg: Config): DataFrame =
     Chunking.chunkDf(docs.select(col("doc_id"), col("text")),
@@ -70,26 +70,26 @@ object IndexPipeline {
       .select(col("chunk_id").as("id"), col("chunk").as("text"))
       .filter(length(col("text")) > 0)
 
-  /** Chunk + embed a (doc_id, text) frame into (id, vec) vectors. The
+  /** Chunk + embed a (doc_id, text) frame into (id, vec, text) rows: the
+    * vectors plus the chunk text [[IndexStore]] keeps beside them. The
     * encoder is resolved from the config's model name via the
     * [[graft.functions.Encoders]] registry — the ONNX/JNI drop-in point.
     */
   def vectorize(docs: DataFrame, cfg: Config): DataFrame =
     Embedder.embed(chunked(docs, cfg), cfg.dim, cfg.normalize,
         graft.functions.Encoders.get(cfg.model))
-      .toDF().select(col("id"), col("vec"))
+      .toDF().select(col("id"), col("vec"), col("text"))
 
-  /** Full build: docs frame → persisted, versioned index + chunk-text
-    * sidecar (so search can return previews, like the reference's
-    * `.docs.json`).
+  /** Full build: docs frame → persisted, versioned index whose rows carry
+    * their chunk text (so search can return previews, like the
+    * reference's `.docs.json`).
     */
   def build(docs: DataFrame, root: String, cfg: Config): IndexStore.Manifest =
     IndexStore.build(
       vectorize(docs, cfg), root, cfg.name, cfg.backend,
       params = cfg.params,
       chunking = IndexStore.Chunking(cfg.chunkMode, cfg.chunkSize, cfg.chunkOverlap),
-      model = cfg.model, normalize = cfg.normalize,
-      metric = "ip", docs = Some(chunked(docs, cfg)))
+      model = cfg.model, normalize = cfg.normalize, metric = "ip")
 
   /** [[build]] with progress events (reference `pipeline.py:46-66,174-185`:
     * named stage markers, DONE on success, "ERROR: …" then failure) plus
@@ -106,14 +106,13 @@ object IndexPipeline {
         onEvent(s"Embedding with ${cfg.model} (dim=${cfg.dim})")
         val vecs = Embedder.embed(ch, cfg.dim, cfg.normalize,
             graft.functions.Encoders.get(cfg.model))
-          .toDF().select(col("id"), col("vec"))
+          .toDF().select(col("id"), col("vec"), col("text"))
         onEvent(s"Building index [${cfg.backend}]")
         val manifest = IndexStore.build(
           vecs, root, cfg.name, cfg.backend,
           params = cfg.params,
           chunking = IndexStore.Chunking(cfg.chunkMode, cfg.chunkSize, cfg.chunkOverlap),
-          model = cfg.model, normalize = cfg.normalize,
-          metric = "ip", docs = Some(ch))
+          model = cfg.model, normalize = cfg.normalize, metric = "ip")
         onEvent("DONE")
         manifest
       } catch {
@@ -156,13 +155,11 @@ object IndexPipeline {
     val sources = docs.select(col("doc_id"),
       lit(path).as("origin_path"), lit(format).as("content_type"))
     IndexStore.build(
-      vectorize(docs.select(col("doc_id"), col("text")), cfg), root, cfg.name,
-      cfg.backend,
+      vectorize(docs, cfg), root, cfg.name, cfg.backend,
       params = cfg.params,
       chunking = IndexStore.Chunking(cfg.chunkMode, cfg.chunkSize, cfg.chunkOverlap),
       model = "stub-hash-projection", normalize = cfg.normalize,
-      metric = "ip", docs = Some(chunked(docs.select(col("doc_id"), col("text")), cfg)),
-      sources = Some(sources))
+      metric = "ip", sources = Some(sources))
   }
 
   /** Search plus the reference's `source` enrichment
@@ -189,18 +186,18 @@ object IndexPipeline {
   }
 
   /** The reference's `/chunk` endpoint (`answerless_search.py:168-220`):
-    * the FULL raw chunk text for one chunk id from the docs sidecar, plus
+    * the FULL raw chunk text for one chunk id from the index rows, plus
     * per-term highlight spans when a query is given (same `_find_spans`
     * semantics as [[graft.operators.Search.searchHighlights]], over the
     * full text instead of the preview). The id predicate pushes down to
-    * the sidecar scan.
+    * the index scan.
     */
   def getChunk(spark: SparkSession, root: String, name: String,
                chunkId: String, query: Option[String] = None,
                version: Option[String] = None): DataFrame = {
     val docs = IndexStore.loadDocs(spark, root, name, version)
       .getOrElse(throw new IllegalStateException(
-        s"index '$name' has no docs sidecar — build it with docs to fetch chunks"))
+        s"index '$name' has no chunk text — rebuild it to fetch chunks"))
     val base = docs.filter(col("id") === chunkId)
       .select(col("id").as("doc_id"), col("text"))
     val terms = query.toSeq
@@ -213,15 +210,18 @@ object IndexPipeline {
 
   /** Search a persisted index with a text query: embed the query with the
     * same stub encoder, score by inner product (the reference's faiss
-    * metric), return top-k (rk, id, score, preview). The query vector is a
-    * one-row broadcast; a flat index scans fully (exact), an IVF index is
-    * probed cell-locally by the caller via [[IndexStore.probe]].
+    * metric), return top-k (rk, id, score, preview) in rank order. The
+    * query vector is a literal; a flat index scans fully (exact), an IVF
+    * index scans only its probed cells (a partition filter).
     *
     * `preview` is the reference's slice (first [[graft.operators.Search
-    * .PreviewLen]] chars + '…', `answerless_search.py:139-163`) joined
-    * back from the docs sidecar — the tiny top-k is broadcast against the
-    * sidecar scan, so the corpus-side never shuffles. Indexes built
-    * without a sidecar get a null preview.
+    * .PreviewLen]] chars + '…', `answerless_search.py:139-163`) of the
+    * chunk text that rides in each index row: the top-k carries `text`
+    * out of the same scan, so flat and ivf search is one lazy plan — scan,
+    * score, top-k, preview cut on the k survivors — with no join. Rows
+    * without text (an (id, vec)-only append, a streamed vectors-only dir,
+    * an artifact written before text moved into the rows) keep their hit
+    * with a null preview.
     */
   def search(spark: SparkSession, root: String, name: String,
              query: String, k: Int, cfg: Config = Config("q"),
@@ -232,7 +232,7 @@ object IndexPipeline {
     // Dispatch on the PERSISTED backend (the manifest travels with the
     // artifact), not the caller's cfg — a shipped index searches correctly
     // whatever the caller assumes. Indexes without a manifest (e.g. the
-    // streaming-ingest append path writes vectors only) search as flat.
+    // streaming-ingest append path writes rows but no manifest) search as flat.
     // ONE manifest read per search: its text keys the serving caches and
     // its parsed form resolves the dial default. Backend dispatch stays
     // LENIENT (a bare regex over the text): a reformatted or partial
@@ -249,18 +249,20 @@ object IndexPipeline {
     // the scan (the full dataset for flat; the probed cells for ivf*)
     def scoreTopK(slice: DataFrame): DataFrame = {
       val qlit = array(qv.map(x => lit(x)).toIndexedSeq: _*)
-      val scored = slice
-        .withColumn("score", round(VectorFunctions.dot(qlit, col("vec")), 6))
+      val scored = IndexStore.withText(slice).select(col("id"),
+        round(VectorFunctions.dot(qlit, col("vec")), 6).as("score"), col("text"))
       graft.functions.Ranking.topK(scored, k, col("score").desc, col("id"))
-        .select(col("rk"), col("id"), col("score"))
     }
     val hits = backend match {
       case "ivfpq" =>
-        // the index holds PQ codes, not vectors: probe + ADC-score
+        // the index holds PQ codes, not vectors: probe + ADC-score; the
+        // per-query window leaves the k hits in rank order inside the
+        // query's one partition
         import spark.implicits._
         val qdf = Seq(("__query__", qv)).toDF("id", "vec")
-        IndexStore.adcSearch(spark, root, name, qdf, k, cfg.nprobe, version)
-          .select(col("rk"), col("neighbor_id").as("id"), col("score"))
+        IndexStore.adcRanked(spark, root, name, qdf, k, cfg.nprobe, version)
+          .select(col("rk"), col("neighbor_id").as("id"), col("score"), col("text"))
+          .sortWithinPartitions(col("rk"))
       case b if b.startsWith("ivf") =>
         // IVF text search PROBES: nearest nprobe coarse cells from the
         // tiny persisted centroid sidecar (driver arithmetic), pushed as
@@ -291,17 +293,9 @@ object IndexPipeline {
       case _ =>
         scoreTopK(IndexStore.loadServing(spark, root, name, version, mj))
     }
-    // rank order in the result — k rows, so the sort is free; callers read
-    // hit lists top-down like the reference API
-    (IndexStore.loadDocs(spark, root, name, version, mj) match {
-      case Some(docs) =>
-        val preview = when(length(col("text")) > graft.operators.Search.PreviewLen,
-            concat(substring(col("text"), 1, graft.operators.Search.PreviewLen), lit("…")))
-          .otherwise(col("text"))
-        docs.join(broadcast(hits), Seq("id"))
-          .select(col("rk"), col("id"), col("score"), preview.as("preview"))
-      case None =>
-        hits.withColumn("preview", lit(null).cast("string"))
-    }).orderBy(col("rk"))
+    val preview = when(length(col("text")) > graft.operators.Search.PreviewLen,
+        concat(substring(col("text"), 1, graft.operators.Search.PreviewLen), lit("…")))
+      .otherwise(col("text"))
+    hits.select(col("rk"), col("id"), col("score"), preview.as("preview"))
   }
 }

@@ -14,9 +14,10 @@ import graft.pipeline.IndexPipeline
   * SINK commit log makes the append exactly-once across restarts (the
   * reason this uses the native sink rather than foreachBatch writes).
   *
-  * The docs sidecar is streamed the same way by [[startDocs]]; a search
-  * over the growing index is just [[IndexPipeline.search]] over the same
-  * directory — new files are visible to the next batch query.
+  * Each streamed row carries its chunk text beside the vector, so a
+  * search over the growing index is just [[IndexPipeline.search]] over the
+  * same directory, previews included — new files are visible to the next
+  * batch query.
   */
 object IndexIngest {
 
@@ -43,7 +44,7 @@ object IndexIngest {
         "targets manifest-less dirs — grow built artifacts with IndexStore.append")
   }
 
-  /** Start appending (id, vec, cell=0) vectors for a streaming docs frame
+  /** Start appending (id, vec, text, cell=0) rows for a streaming docs frame
     * into `root/name/latest/vectors`. Caller owns the checkpoint dir
     * (reuse it to resume exactly-once).
     */
@@ -55,19 +56,6 @@ object IndexIngest {
       .writeStream
       .format("parquet")
       .option("path", s"$root/$name/latest/vectors")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Stream the chunk-text docs sidecar beside the vectors. */
-  def startDocs(docs: DataFrame, root: String, name: String,
-                cfg: IndexPipeline.Config, checkpoint: String): StreamingQuery = {
-    requireIngestDir(root, name)
-    IndexPipeline.chunked(docs, cfg)
-      .writeStream
-      .format("parquet")
-      .option("path", s"$root/$name/latest/docs")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.index.IndexStore
 import graft.operators.VectorOps
+import graft.pipeline.IndexPipeline
 import graft.sources.Tables
 
 /** IndexStore.append: incremental growth with FROZEN quantizers — new
@@ -201,6 +202,63 @@ class IndexAppendSpec extends SparkSpec {
       .forall(id => !ids.contains(id)), "rolled-back rows still visible")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
       s"$root/idx/latest/vectors/_graft_merge.json")), "journal not cleared")
+  }
+
+  /** Build 200 corpus docs on `backend`, append one fresh doc through
+    * `vectorize` (its (id, vec) columns only unless `withText`), then
+    * search the appended doc's first chunk with k = 5. Returns the hits
+    * and that chunk's (id, text).
+    */
+  private def appendThenSearch(backend: String, withText: Boolean)
+      : (Seq[org.apache.spark.sql.Row], (String, String)) = {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory(s"graft_app_search_$backend").toString
+    val cfg = IndexPipeline.Config(name = "idx", backend = backend)
+    IndexPipeline.build(Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text")).orderBy(col("doc_id")).limit(200), root, cfg)
+    val delta = Seq((90000001L,
+        "quokka marmalade zeppelin fjord " * 4 + "an appended document nobody indexed before"))
+      .toDF("doc_id", "text")
+    val vecs = IndexPipeline.vectorize(delta, cfg)
+    IndexStore.append(if (withText) vecs else vecs.select(col("id"), col("vec")), root, "idx")
+    val first = IndexPipeline.chunked(delta, cfg).filter(col("id") === "90000001#0")
+      .collect().map(r => (r.getAs[String]("id"), r.getAs[String]("text"))).head
+    (IndexPipeline.search(spark, root, "idx", first._2, 5, cfg).collect().toSeq, first)
+  }
+
+  test("search finds a chunk appended through vectorize, with its preview") {
+    for (backend <- Seq("flat", "ivf")) {
+      val (hits, (id, text)) = appendThenSearch(backend, withText = true)
+      assert(hits.length == 5, s"$backend: ${hits.length} hits")
+      assert(hits.head.getAs[String]("id") == id, s"$backend: rank 1 is not the appended chunk")
+      assert(hits.head.getAs[String]("preview") == text)
+      assert(hits.forall(_.getAs[String]("preview") != null))
+    }
+  }
+
+  test("an (id, vec)-only delta keeps its hits, with a null preview") {
+    for (backend <- Seq("flat", "ivf")) {
+      val (hits, (id, _)) = appendThenSearch(backend, withText = false)
+      assert(hits.length == 5, s"$backend: ${hits.length} hits")
+      assert(hits.head.getAs[String]("id") == id, s"$backend: rank 1 is not the appended chunk")
+      assert(hits.head.getAs[String]("preview") == null)
+      assert(hits.tail.forall(_.getAs[String]("preview") != null))
+    }
+    // rows with no text column at all (a hand-written vectors-only dir)
+    // search the same way
+    val root = java.nio.file.Files.createTempDirectory("graft_app_no_text").toString
+    val cfg = IndexPipeline.Config(name = "bare")
+    val vecs = IndexPipeline.vectorize(Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text")).orderBy(col("doc_id")).limit(20), cfg)
+    vecs.select(col("id"), col("vec"), lit(0).as("cell"))
+      .write.parquet(s"$root/bare/latest/vectors")
+    val (id, text) = vecs.select("id", "text").collect()
+      .map(r => (r.getString(0), r.getString(1))).groupBy(_._2)
+      .collectFirst { case (_, Array(only)) => only }.get
+    val hits = IndexPipeline.search(spark, root, "bare", text, 5, cfg).collect()
+    assert(hits.length == 5 && hits.head.getAs[String]("id") == id)
+    assert(hits.forall(_.getAs[String]("preview") == null))
   }
 
   test("ivf append partitions new rows into existing cell layout") {

@@ -33,7 +33,7 @@ class IndexPipelineSpec extends SparkSpec {
     assert(hits.head.getAs[String]("id") == someChunk.getString(0))
     // normalized stub vectors: self inner product == 1 (6dp)
     assert(math.abs(hits.head.getAs[Double]("score") - 1.0) < 1e-6)
-    // docs sidecar: the hit carries its chunk text as the preview
+    // the hit carries its row's chunk text as the preview
     // (chunks are 100 chars < PreviewLen, so preview == full chunk)
     assert(hits.head.getAs[String]("preview") == someChunk.getString(1))
   }
@@ -80,6 +80,38 @@ class IndexPipelineSpec extends SparkSpec {
     val one = IndexPipeline.search(spark, root, "probed",
       someChunk.getString(1), 1, cfg.copy(nprobe = 1)).collect()
     assert(one.head.getAs[String]("id") == someChunk.getString(0))
+  }
+
+  test("a warm flat or ivf search is one Spark job over one scan, no join") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val root = Files.createTempDirectory("graft-pipe-plan").toString
+    val docs = graft.sources.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text")).limit(40)
+    val chunk = graft.operators.Chunking
+      .chunkFixedDf(docs, graft.operators.Chunking.Size, graft.operators.Chunking.Overlap)
+      .select("chunk_id", "chunk").collect()(5)
+    for (backend <- Seq("flat", "ivf")) {
+      val cfg = IndexPipeline.Config(name = s"plan_$backend", backend = backend)
+      IndexPipeline.build(docs, root, cfg)
+      def search() = IndexPipeline.search(spark, root, cfg.name, chunk.getString(1), 5, cfg)
+      val want = search().collect() // warms the serving caches
+      val (rows, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+        search().collect()
+      }
+      assert(jobs == 1, s"$backend: a warm search ran $jobs jobs")
+      assert(rows.toSeq == want.toSeq)
+      assert(rows.map(_.getAs[Long]("rk")).toSeq == (1L to 5L))
+      assert(rows.head.getAs[String]("id") == chunk.getString(0))
+      assert(rows.head.getAs[String]("preview") == chunk.getString(1))
+      val plan = search().queryExecution.sparkPlan
+      val scans = plan.collect { case f: FileSourceScanExec => f }
+      assert(scans.length == 1, s"$backend: want one scan, got:\n$plan")
+      assert(plan.collect { case j: BaseJoinExec => j }.isEmpty,
+        s"$backend: want no join, got:\n$plan")
+      if (backend == "ivf")
+        assert(scans.head.partitionFilters.nonEmpty, s"ivf scan must prune cells:\n$plan")
+    }
   }
 
   test("eval surface over the pipeline: self-query gold has perfect recall") {
@@ -162,7 +194,7 @@ class IndexPipelineSpec extends SparkSpec {
     assert(manifest.chunking.mode == "sentences")
     assert(IndexStore.manifestJson(root, "e2e_sent").contains("\"mode\": \"sentences\""))
 
-    // sidecar chunks are exactly the sentence-kernel chunks of the input
+    // the rows' chunk text is exactly the sentence-kernel chunks of the input
     val want = graft.operators.Chunking
       .chunkDf(docs, "sentences", cfg.chunkSize, cfg.chunkOverlap)
       .filter(length(col("chunk")) > 0)
@@ -198,7 +230,7 @@ class IndexPipelineSpec extends SparkSpec {
     assert(manifest.backend == "ivfpq" && manifest.count > 0)
     // the stored rows are codes, not vectors
     val idx = graft.index.IndexStore.load(spark, root, "e2e_pq")
-    assert(idx.columns.toSet == Set("id", "codes", "cell"))
+    assert(idx.columns.toSet == Set("id", "codes", "cell", "text"))
 
     val someChunk = graft.operators.Chunking
       .chunkFixedDf(docs, cfg.chunkSize, cfg.chunkOverlap)

@@ -17,7 +17,7 @@ class IndexPqSpec extends SparkSpec {
 
     // the stored rows are CODES, not vectors — SubSpaces longs each
     val idx = IndexStore.load(spark, root, "pqidx")
-    assert(idx.columns.toSet == Set("id", "codes", "cell"))
+    assert(idx.columns.toSet == Set("id", "codes", "cell", "text"))
     val row = idx.limit(1).collect()(0)
     assert(row.getSeq[Long](row.fieldIndex("codes")).length == PqModel.SubSpaces)
 

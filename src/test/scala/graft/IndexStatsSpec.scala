@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.index.{IndexStats, IndexStore}
 import graft.pipeline.IndexPipeline
 
-/** /stats/{index} analytics over the docs sidecar, pinned against a
-  * python-replica of analytics.py's percentile + histogram on the
-  * collected sidecar texts.
+/** /stats/{index} analytics over the chunk text in the index rows, pinned
+  * against a python-replica of analytics.py's percentile + histogram on
+  * the collected chunk texts.
   */
 class IndexStatsSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"

@@ -23,7 +23,7 @@ class IndexStoreSpec extends SparkSpec {
 
     val loaded = IndexStore.load(spark, root, "flat_test")
     assert(loaded.count() == 100)
-    assert(loaded.columns.toSet == Set("id", "vec", "cell"))
+    assert(loaded.columns.toSet == Set("id", "vec", "cell", "text"))
 
     val mj = IndexStore.manifestJson(root, "flat_test")
     assert(mj.contains("\"model\": \"stub-model\"") && mj.contains("\"dim\": 8"))

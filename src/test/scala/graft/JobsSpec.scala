@@ -63,7 +63,7 @@ class JobsSpec extends SparkSpec {
     IndexPipeline.buildFromFile(spark, dir.resolve("t.csv").toString, "csv",
       root, IndexPipeline.Config("jobs_csv", chunkSize = 200, chunkOverlap = 10),
       textColumn = None)
-    // docs sidecar carries the assembled row text as chunk text
+    // the index rows carry the assembled row text as chunk text
     val sidecar = IndexStore.loadDocs(spark, root, "jobs_csv").get
       .collect().map(_.getString(1)).toSet
     assert(sidecar === Set("paris | 100 |  x ", "lyon | 50"))

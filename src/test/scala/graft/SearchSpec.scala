@@ -252,6 +252,27 @@ class SearchSpec extends SparkSpec {
     assert(other.map(_.getAs[Long]("rk")).toSeq == (1L to other.length).toSeq)
   }
 
+  test("bm25TopFor caches nothing per query text: the stats map stays put") {
+    // a serving session answers an open-ended stream of distinct queries;
+    // only per-corpus stats may be cached, never one entry per query
+    val sess = spark.newSession()
+    def top(q: String) = Search.bm25TopFor(sess, dir, q, Search.BmK).collect()
+      .map(r => (r.getAs[Long]("rk"), r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
+      .toSeq
+    val first = top(Search.QueryText)
+    val afterOne = Search.statsCacheSize(sess)
+    val terms = corpus.values.flatten.toSeq.distinct.sorted
+    val queries = terms.combinations(2).map(_.mkString(" ")).take(100).toSeq
+    assert(queries.length == 100, "fixture regression: vocabulary too small")
+    queries.foreach(top)
+    assert(Search.statsCacheSize(sess) == afterOne)
+    assert(top(Search.QueryText) == first)
+    assert(first.nonEmpty)
+    // and a fresh session's answer equals the shared session's
+    assert(first == Search.bm25TopK(spark, dir).collect()
+      .map(r => (r.getAs[Long]("rk"), r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
+      .toSeq)
+  }
 
   test("hybridRrfFor with the fixed inputs equals hybrid_rrf") {
     val fixed = Search.hybridRrf(spark, dir).collect()
