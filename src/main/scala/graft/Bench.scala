@@ -85,8 +85,8 @@ object Bench {
       // extended from centroids to the assignment); this twin prices the
       // assignment build + first search together.
       "ann_ivf_cold" -> "ann_ivf",
-      // r15 batch 3: the lexical-stats family (perDocTerms maps, one-row
-      // corpus stats, query idf, vocabulary table) is session-cached and
+      // r15 batch 3: the lexical-stats family (perDocTerms maps, BM25
+      // constants, vocabulary table) is session-cached and
       // prewarmed by Bench — this twin prices the whole first-touch
       // stats build + one search, a price that was previously invisible
       // in every sweep (prewarm predates r15).

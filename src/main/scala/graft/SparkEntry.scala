@@ -168,7 +168,7 @@ object SparkEntry {
   }
 
   /** DuckDB CTE block producing the full BM25 ranking `bmr(rk, doc_id,
-    * score)`, mirroring [[graft.operators.Search.bm25Ranked]].
+    * score)`, mirroring [[graft.operators.Search.bm25TopFor]].
     */
   private def bm25Ctes: String = {
     val qlist = graft.operators.Search.QueryText.toLowerCase.split("\\s+")

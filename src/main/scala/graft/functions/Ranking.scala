@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Distributed global top-k with dense 1..k ranks.
   *
@@ -16,4 +17,15 @@ object Ranking {
   def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
     df.orderBy(order: _*).limit(k)
       .withColumn("rk", row_number().over(Window.orderBy(order: _*)).cast("long"))
+
+  /** [[topK]]'s rows, computed now as a local frame. With the TakeOrdered
+    * at the plan root the per-partition heaps merge on the driver, one job
+    * and no shuffle; under [[topK]]'s window they are shuffled first.
+    */
+  def topKLocal(df: DataFrame, k: Int, order: Column*): DataFrame = {
+    val rows = df.orderBy(order: _*).limit(k).collect().zipWithIndex
+      .map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      df.schema.add("rk", LongType, nullable = false))
+  }
 }

@@ -377,9 +377,9 @@ object TextOps {
       .select(col("doc_id"), explode(col("tc")).as(Seq("term", "f")))
     // Bounded driver scalar (the vec_quantize collect pattern): the doc
     // count feeds idf as a literal on both engines. Read it from the
-    // session-cached one-row stats frame (n_docs = count over the same
+    // session's driver-side BM25 constants (n_docs = count over the same
     // dl>0 per-doc frame) instead of re-counting the checkpoint per call.
-    val nDocs = Search.corpusStatsRow(spark, dir).head().getLong(0)
+    val nDocs = Search.bm25Consts(spark, dir).nDocs
     // df ≡ vocabTable.df (same per-doc maps, same distinct-(doc,term) count)
     val dfT = Search.vocabTable(spark, dir).select(col("term"), col("df"))
     val scored = pd.join(dfT, Seq("term"))

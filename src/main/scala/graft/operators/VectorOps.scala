@@ -59,10 +59,13 @@ object VectorOps {
   def scaledNProbe(nCells: Int): Int =
     math.max(NProbe, (NProbe.toLong * nCells / NumCells).toInt)
 
-  /** Embeddings with precomputed L2 norms (computed once, reused in joins). */
+  /** Embeddings with precomputed L2 norms, materialized once per (session,
+    * dir) in [[Search]]'s stats map beside the lexical statistics.
+    */
   def embWithNorm(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
+    Search.statsEntry(spark, "emb", dir)(
+      Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm")))
 
   /** Exact top-k for a (small, broadcast) query set over the full corpus.
     * Ranking is on the 6dp-ROUNDED score with vec_id tiebreak — identical
@@ -70,19 +73,34 @@ object VectorOps {
     * engines. metric: "cos" | "dot".
     */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int, metric: String): DataFrame = {
-    val q = queries.select(
-      col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val scored = corpus.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("score_raw", metric match {
-        case "dot" => dot(col("q_emb"), col("embedding"))
-        case _     => cosinePre(dot(col("q_emb"), col("embedding")), col("q_nrm"), col("nrm"))
-      })
-      .withColumn("score", round(col("score_raw"), 6))
     val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
+    scoredAgainst(corpus, queries, metric).withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("rk").cast("long").as("rk"),
         col("vec_id").as("neighbor_id"), col("score"))
+  }
+
+  /** [[topK]] for ONE query vector of `e` (an [[embWithNorm]] frame) as a
+    * local frame: a broadcast of the query row and a TakeOrdered at the plan
+    * root, two jobs, no exchange. The query joins as data, not literals, so
+    * the generated code is the same for every query vector.
+    */
+  def topKOf(e: DataFrame, queryVecId: Long, k: Int, metric: String): DataFrame =
+    graft.functions.Ranking.topKLocal(
+        scoredAgainst(e, e.filter(col("vec_id") === queryVecId), metric)
+          .select(col("vec_id").as("neighbor_id"), col("score")),
+        k, col("score").desc, col("neighbor_id"))
+      .select(col("rk"), col("neighbor_id"), col("score"))
+
+  /** Every (query, other vector) pair, 6dp-rounded score; queries broadcast. */
+  private def scoredAgainst(corpus: DataFrame, queries: DataFrame, metric: String): DataFrame = {
+    val q = queries.select(
+      col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
+    corpus.join(broadcast(q), col("vec_id") =!= col("q_id"))
+      .withColumn("score", round(metric match {
+        case "dot" => dot(col("q_emb"), col("embedding"))
+        case _     => cosinePre(dot(col("q_emb"), col("embedding")), col("q_nrm"), col("nrm"))
+      }, 6))
   }
 
   /** SURVEY §2 `knn_bruteforce`: exact cosine top-5 for queries vec_id<10. */

@@ -73,11 +73,4 @@ object Jobs {
   /** All jobs, newest first — the jobs table view. */
   def all(): Seq[Job] =
     jobs.values().asScala.toSeq.sortBy(_.id)(Ordering[String].reverse)
-
-  /** Drop finished jobs from the registry (operational hygiene). */
-  def clearFinished(): Unit =
-    jobs.entrySet().removeIf(e => e.getValue.state match {
-      case Done | Failed(_) => true
-      case _                => false
-    })
 }

@@ -96,7 +96,7 @@ class IndexPipelineSpec extends SparkSpec {
       IndexPipeline.build(docs, root, cfg)
       def search() = IndexPipeline.search(spark, root, cfg.name, chunk.getString(1), 5, cfg)
       val want = search().collect() // warms the serving caches
-      val (rows, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+      val (rows, jobs, _) = org.apache.spark.graft.JobCount(spark.sparkContext) {
         search().collect()
       }
       assert(jobs == 1, s"$backend: a warm search ran $jobs jobs")

@@ -9,6 +9,8 @@ import graft.sources.Tables
   * (BM25Okapi semantics from the reference's hybrid.py).
   */
 class SearchSpec extends SparkSpec {
+  import SearchSpec.round6
+
   private val dir = "/root/testdata/sf0.001"
 
   private lazy val corpus: Map[Long, Seq[String]] =
@@ -17,27 +19,8 @@ class SearchSpec extends SparkSpec {
         r.getString(1).trim.toLowerCase.split("\\s+").toSeq.filter(_.nonEmpty))
       .toMap
 
-  /** rank_bm25.BM25Okapi replica: k1=1.5, b=0.75, epsilon=0.25. */
-  private def bm25Reference(query: Seq[String]): Map[Long, Double] = {
-    val n = corpus.size
-    val avgdl = corpus.values.map(_.size).sum.toDouble / n
-    val df = corpus.values.flatMap(_.distinct).groupBy(identity).map { case (t, xs) => t -> xs.size }
-    val idfRaw = df.map { case (t, d) => t -> math.log((n - d + 0.5) / (d + 0.5)) }
-    val avgIdf = idfRaw.values.sum / idfRaw.size
-    val idf = idfRaw.map { case (t, v) => t -> (if (v < 0) 0.25 * avgIdf else v) }
-    corpus.flatMap { case (id, toks) =>
-      val dl = toks.size.toDouble
-      val terms = query.flatMap { t =>
-        val f = toks.count(_ == t).toDouble
-        if (f == 0 || !idf.contains(t)) None
-        else Some(idf(t) * (f * 2.5) / (f + 1.5 * (0.25 + 0.75 * (dl / avgdl))))
-      }
-      // NB: with a tiny vocabulary every idf is negative (and so is the
-      // BM25Okapi epsilon floor), so scores can legitimately be < 0 —
-      // membership is "has >= 1 matching term", not "score > 0".
-      if (terms.nonEmpty) Some(id -> terms.sum) else None
-    }
-  }
+  private def bm25Reference(query: Seq[String]): Map[Long, Double] =
+    SearchSpec.bm25Okapi(corpus, query)
 
   test("bm25_topk matches the BM25Okapi replica") {
     val query = Search.QueryText.toLowerCase.split("\\s+").toSeq
@@ -282,4 +265,159 @@ class SearchSpec extends SparkSpec {
     assert(general == fixed)
   }
 
+  /** The two lists hybridRrfFor fuses, as ids in rank order; the cosine
+    * list through the multi-query `topK`.
+    */
+  private def cosineList(vecId: Long): Seq[Long] = {
+    val e = graft.operators.VectorOps.embWithNorm(spark, dir)
+    graft.operators.VectorOps
+      .topK(e, e.filter(org.apache.spark.sql.functions.col("vec_id") === vecId),
+        Search.RrfListLen, "cos")
+      .collect().sortBy(_.getAs[Long]("rk")).map(_.getAs[Long]("neighbor_id")).toSeq
+  }
+  private def bm25List(text: String): Seq[Long] =
+    Search.bm25TopFor(spark, dir, text, Search.RrfListLen).collect()
+      .sortBy(_.getAs[Long]("rk")).map(_.getAs[Long]("doc_id")).toSeq
+  private def hybrid(s: org.apache.spark.sql.SparkSession, d: String, text: String,
+                     vecId: Long): Seq[(Long, Long, Double)] =
+    Search.hybridRrfFor(s, d, text, vecId).collect()
+      .map(r => (r.getAs[Long]("rk"), r.getAs[Long]("id"), r.getAs[Double]("rrf_score"))).toSeq
+
+  test("bm25 scores equal the BM25Okapi replica at 6 dp on edge-case queries") {
+    val df = corpus.values.flatMap(_.distinct).groupBy(identity)
+      .map { case (t, xs) => t -> xs.size }
+    val (common, commonDf) = df.maxBy { case (t, d) => (d, t) }
+    val n = corpus.size
+    assert(math.log((n - commonDf + 0.5) / (commonDf + 0.5)) < 0,
+      "fixture regression: want a term on the epsilon idf floor")
+    val queries = Seq("merge merge table", "MeRGe Table HASH", common,
+      "zzqx qqzv", "")
+    for (q <- queries) {
+      val want = bm25Reference(q.trim.toLowerCase.split("\\s+").toSeq.filter(_.nonEmpty))
+        .map { case (id, s) => id -> round6(s) }
+      val got = Search.bm25ScoredFor(spark, dir, q).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("score")).toMap
+      val diff = (got.keySet ++ want.keySet).filter(id => got.get(id) != want.get(id))
+      assert(diff.isEmpty, s"query '$q': got/want differ on ${diff.size} docs, e.g. " +
+        diff.take(3).map(id => s"$id: ${got.get(id)} vs ${want.get(id)}").mkString(", "))
+    }
+  }
+
+  test("hybridRrfFor fuses whichever list exists, and is empty when neither does") {
+    val absentVec = -1L
+    val oov = "zzqx qqzv"
+    val (cos, bm) = (cosineList(Search.RrfQueryVec), bm25List(Search.QueryText))
+    assert(cos.nonEmpty && bm.nonEmpty && cosineList(absentVec).isEmpty && bm25List(oov).isEmpty)
+    assert(hybrid(spark, dir, Search.QueryText, Search.RrfQueryVec) == SearchSpec.rrf(cos, bm))
+    assert(hybrid(spark, dir, Search.QueryText, absentVec) == SearchSpec.rrf(bm))
+    assert(hybrid(spark, dir, oov, Search.RrfQueryVec) == SearchSpec.rrf(cos))
+    val neither = Search.hybridRrfFor(spark, dir, oov, absentVec)
+    assert(neither.collect().isEmpty)
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    assert(neither.schema.map(f => (f.name, f.dataType)) ==
+      Seq(("rk", LongType), ("id", LongType), ("rrf_score", DoubleType)))
+  }
+
+  test("a warm hybrid query runs at most 4 Spark jobs and shuffles nothing") {
+    // a corpus of several files, so every cached frame has several
+    // partitions (one-partition plans never shuffle)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-serve").toString
+    Seq("documents", "embeddings").foreach(t =>
+      Tables.read(spark, dir, t).repartition(4).write.parquet(s"$tmp/$t.parquet"))
+    Search.prewarm(spark, tmp)
+    assert(graft.operators.VectorOps.embWithNorm(spark, tmp).rdd.getNumPartitions > 1)
+    def query() = hybrid(spark, tmp, "merge table value", 3L)
+    val want = query()
+    assert(want == SearchSpec.rrf(
+      SearchSpec.cosineTop(Tables.embeddings(spark, tmp).select("vec_id", "embedding").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq, 3L, Search.RrfListLen),
+      bm25List("merge table value")))
+    val (rows, jobs, shuffled) = org.apache.spark.graft.JobCount(spark.sparkContext)(query())
+    assert(rows == want && rows.nonEmpty)
+    assert(jobs <= 4, s"a warm hybrid query ran $jobs jobs")
+    assert(shuffled == 0L, s"a warm hybrid query wrote $shuffled shuffle bytes")
+  }
+
+  test("invalidateCaches: a hybrid query after an in-place rewrite sees the new vectors") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cold-twin").toString
+    Tables.documents(spark, dir).write.parquet(s"$tmp/documents.parquet")
+    Tables.embeddings(spark, dir).write.parquet(s"$tmp/embeddings.parquet")
+    val sess = spark.newSession()
+    val before = hybrid(sess, tmp, Search.QueryText, Search.RrfQueryVec)
+    assert(before == hybrid(spark, dir, Search.QueryText, Search.RrfQueryVec))
+    // negate every vector but the query's: its cosine ranking turns over
+    val old = Tables.embeddings(spark, tmp)
+    val flipped = old.collect().map { r =>
+      val v = r.getSeq[Float](r.fieldIndex("embedding"))
+      org.apache.spark.sql.Row.fromSeq(old.schema.fieldNames.toSeq.map {
+        case "embedding" if r.getAs[Long]("vec_id") != Search.RrfQueryVec => v.map(x => -x)
+        case c => r.get(r.fieldIndex(c))
+      })
+    }
+    spark.createDataFrame(java.util.Arrays.asList(flipped: _*), old.schema)
+      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+    Search.invalidateCaches(sess)
+    val after = hybrid(sess, tmp, Search.QueryText, Search.RrfQueryVec)
+    val vectors = Tables.embeddings(spark, tmp).select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val want = SearchSpec.rrf(
+      SearchSpec.cosineTop(vectors, Search.RrfQueryVec, Search.RrfListLen),
+      bm25List(Search.QueryText))
+    assert(after != before)
+    assert(after == want)
+  }
+}
+
+object SearchSpec {
+  def round6(d: Double): Double =
+    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** rank_bm25.BM25Okapi replica: k1=1.5, b=0.75, epsilon=0.25; a repeated
+    * query term counts once per occurrence, as `get_scores` does.
+    */
+  def bm25Okapi(corpus: Map[Long, Seq[String]], query: Seq[String]): Map[Long, Double] = {
+    val n = corpus.size
+    val avgdl = corpus.values.map(_.size).sum.toDouble / n
+    val df = corpus.values.flatMap(_.distinct).groupBy(identity).map { case (t, xs) => t -> xs.size }
+    val idfRaw = df.map { case (t, d) => t -> math.log((n - d + 0.5) / (d + 0.5)) }
+    val avgIdf = idfRaw.values.sum / idfRaw.size
+    val idf = idfRaw.map { case (t, v) => t -> (if (v < 0) 0.25 * avgIdf else v) }
+    corpus.flatMap { case (id, toks) =>
+      val dl = toks.size.toDouble
+      val terms = query.flatMap { t =>
+        val f = toks.count(_ == t).toDouble
+        if (f == 0 || !idf.contains(t)) None
+        else Some(idf(t) * (f * 2.5) / (f + 1.5 * (0.25 + 0.75 * (dl / avgdl))))
+      }
+      // NB: with a tiny vocabulary every idf is negative (and so is the
+      // BM25Okapi epsilon floor), so scores can legitimately be < 0 —
+      // membership is "has >= 1 matching term", not "score > 0".
+      if (terms.nonEmpty) Some(id -> terms.sum) else None
+    }
+  }
+
+  /** Reciprocal-rank fusion of ranked id lists as (rk, id, 6-dp score):
+    * Σ 1/(60 + rank), top [[Search.RrfOut]] by score desc then id.
+    */
+  def rrf(lists: Seq[Long]*): Seq[(Long, Long, Double)] =
+    lists.flatMap(_.zipWithIndex)
+      .groupMapReduce(_._1)(p => 1.0 / (Search.RrfK + p._2 + 1).toDouble)(_ + _)
+      .toSeq.sortBy { case (id, s) => (-s, id) }.take(Search.RrfOut)
+      .zipWithIndex.map { case ((id, s), i) => (i + 1L, id, round6(s)) }
+
+  /** Exact cosine top-k of one vector over the others (the f32-product,
+    * f64-sum arithmetic of the dot kernel), 6-dp scores, id tie-break.
+    */
+  def cosineTop(vectors: Seq[(Long, Array[Float])], q: Long, k: Int): Seq[Long] = {
+    def dot(a: Array[Float], b: Array[Float]): Double = {
+      var acc = 0.0; var i = 0
+      while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+      acc
+    }
+    val qv = vectors.find(_._1 == q).get._2
+    val qn = math.sqrt(dot(qv, qv))
+    vectors.filter(_._1 != q)
+      .map { case (id, v) => (id, round6(dot(qv, v) / (qn * math.sqrt(dot(v, v))))) }
+      .sortBy { case (id, s) => (-s, id) }.take(k).map(_._1)
+  }
 }
