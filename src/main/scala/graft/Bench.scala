@@ -64,13 +64,14 @@ object Bench {
   val AnchorTarget = 1000L
 
   /** COLD twins timed only in `--all` sweeps: each key re-times its base
-    * query after [[graft.operators.Dedup.invalidateCaches]] drops the
-    * session's checkpointed derived frames, so the artifact carries the
-    * first-touch price (cache build + query) beside the warm read (r13
-    * judge #5: the 14.4 s cold dedup_clusters_lsh lived only in SURVEY
-    * prose). Safe mid-sweep: every bench query rebuilds its frames from
-    * the registry, so no consumer holds a derived lazy frame across the
-    * invalidation, and the next dedup query simply repopulates the cache.
+    * query after [[Artifacts.invalidate]] drops every artifact of the
+    * session — checkpointed frames, lexical stats, served vectors and the
+    * IVF/PQ/PCA fits alike — so the artifact carries the first-touch price
+    * (artifact builds, model refits included, + query) beside the warm
+    * read (r13 judge #5: the 14.4 s cold dedup_clusters_lsh lived only in
+    * SURVEY prose). Safe mid-sweep: every bench query rebuilds its frames
+    * from the registry, so no consumer holds a derived lazy frame across
+    * the invalidation, and the next query simply repopulates the store.
     */
   val ColdTwins: Map[String, String] =
     Map("dedup_clusters_lsh_cold" -> "dedup_clusters_lsh",
@@ -147,16 +148,11 @@ object Bench {
         s"(step=$anchorStep) for ${anchored.keys.mkString(", ")}")
 
     def runOnce(name: String, dir: String): Double = {
-      // a cold twin invalidates the dedup frame caches OUTSIDE the timed
+      // a cold twin invalidates the session's artifacts OUTSIDE the timed
       // window (bookkeeping), then times its base query's first touch —
-      // which rebuilds the checkpoints it needs inside the measurement
+      // which rebuilds the artifacts it needs inside the measurement
       val base = ColdTwins.get(name)
-      base.foreach { _ =>
-        graft.operators.Dedup.invalidateCaches(spark)
-        graft.operators.VectorOps.invalidateCaches(spark)
-        graft.operators.Curation.invalidateCaches(spark)
-        graft.operators.Search.invalidateCaches(spark)
-      }
+      base.foreach(_ => Artifacts.invalidate(spark))
       val qname = base.getOrElse(name)
       val q = anchored.getOrElse(qname, SparkEntry.queries(qname))
       val t0 = System.nanoTime()

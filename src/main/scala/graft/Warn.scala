@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * logs. Warnings are diagnostics, never control flow — swapping the sink
   * can change what an operator REPORTS, not what it computes.
   *
-  * Sinks are SESSION-KEYED (the [[graft.operators.FrameCache]] identity
-  * convention, r12 judge #4): every warn site runs inside some
+  * Sinks are SESSION-KEYED (the [[graft.Artifacts]] identity convention,
+  * r12 judge #4): every warn site runs inside some
   * [[SparkSession]]'s query construction, and a process embedding two
   * concurrent sessions must not capture one session's scale warnings in
   * the other's sink. `set`/`clear` manage a per-session override; a

@@ -661,7 +661,7 @@ object IndexStore {
     val dir = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
     val p = new HPath(s"$dir/sources")
     if (p.getFileSystem(hadoopConf).exists(p))
-      Some(cachedServingFrame(spark, root, name, version, "sources",
+      Some(cachedArtifact(spark, root, name, version, "sources", Serving,
         manifestText)(spark.read.parquet(p.toString)))
     else None
   }
@@ -759,144 +759,42 @@ object IndexStore {
   def probe(index: DataFrame, cells: Seq[Int]): DataFrame =
     index.filter(col("cell").isin(cells: _*))
 
-  /** Driver-side LRU for the tiny model sidecars (centroids/codebooks),
-    * keyed by sidecar path + the manifest JSON's hash: a serving loop
-    * calling [[adcSearch]] / [[graft.pipeline.IndexPipeline.search]] per
-    * query was paying a Spark collect job per call for arrays that never
-    * change between builds (measured: the probed text search LOST to the
-    * flat scan at small corpus size on exactly this overhead). A rebuild
-    * rewrites the manifest (new createdAt/count ⇒ new key); an [[append]]
-    * keeps the frozen quantizers by contract, so serving its refreshed
-    * manifest re-reads the same sidecar once and re-caches. Sidecar-less
-    * or manifest-less dirs bypass the cache entirely (their load keeps
-    * failing/behaving as before). Known limit: two rebuilds of the same
-    * name with identical shape (same count/params/model) inside ONE
-    * second produce byte-identical manifests (created_at is
-    * second-resolution) and the first build's sidecars would be served —
-    * unreachable for any real build, noted for completeness.
+  /** `load` of one index artifact (`sub` of the version dir) through the
+    * session's [[graft.Artifacts]] store, keyed by the artifact path with
+    * the manifest text as its snapshot version: a rebuild or [[append]]
+    * rewrites the manifest (new createdAt/count), so the next read misses
+    * and replaces the entry. `manifestText` lets a caller that already read
+    * the manifest THIS query skip the re-read — pass only a same-query read.
+    * Manifest-less dirs (streaming-ingest targets) bypass the store, so
+    * their growing file set stays visible per query. The manifest is
+    * re-read after a miss's load, and a rebuild in between caches nothing.
+    * Known limit: two rebuilds of the same name with identical shape inside
+    * ONE second produce byte-identical manifests (created_at is
+    * second-resolution) — unreachable for any real build.
     *
-    * Eviction is BYTE-bounded ([[SidecarCacheMaxBytes]], with the entry
-    * cap as a secondary limit): "tiny" only holds at small nlist — at
-    * MaxCells·large-dim a centroid array is hundreds of MB and an
-    * entry-count cap alone could pin GBs of driver heap.
+    * Two kinds: [[Sidecar]] (centroid/codebook arrays, counted against the
+    * store's driver byte bound — "tiny" only holds at small nlist) and
+    * [[Serving]] (LAZY scans: a `spark.read.parquet` builds a fresh file
+    * index per call, and over a cell-partitioned index that partition-
+    * directory listing out-cost the probed scan itself at 63k chunks —
+    * PROBED_SEARCH: 0.52× before; the entry pins the resolved listing, no
+    * data).
     */
-  private val sidecarCache =
-    new java.util.LinkedHashMap[(String, String), AnyRef](16, 0.75f, true)
-  private var sidecarCacheBytes = 0L // guarded by sidecarCache's lock
-
-  /** Driver-heap cost of one cached sidecar. At MaxCells = 65536 and a
-    * 768-dim embedding a centroid array alone is ~400 MB — a bare
-    * entry-count cap could pin GBs, so eviction is BYTE-bounded (the
-    * entry cap stays as a secondary limit for many tiny artifacts).
-    */
-  private def sidecarBytes(a: AnyRef): Long = a match {
-    case x: Array[Array[Double]] =>
-      16L + x.iterator.map(c => 24L + 8L * c.length).sum
-    case x: Array[Array[Array[Double]]] =>
-      16L + x.iterator.map(b => 24L + b.iterator.map(c => 24L + 8L * c.length).sum).sum
-    case _ => 1L << 20 // unknown shape: assume 1 MB
+  private def cachedArtifact[A](spark: SparkSession, root: String, name: String,
+      version: Option[String], sub: String, kind: (String, Int),
+      manifestText: Option[String])(load: => A): A = {
+    def read() = scala.util.Try(manifestJson(root, name, version)).toOption
+    manifestText.orElse(read()) match {
+      case None => load
+      case Some(mj) =>
+        val path = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
+        graft.Artifacts.manifested(spark, kind._1, s"$path/$sub", mj, kind._2, read())(load)
+    }
   }
 
-  /** Byte ceiling for the sidecar cache (centroid/codebook arrays). */
-  val SidecarCacheMaxBytes: Long = 256L << 20
-  private val SidecarCacheMaxEntries = 16
-
-  /** Cache introspection for specs: (entries, accounted bytes). */
-  private[graft] def sidecarCacheStats: (Int, Long) =
-    sidecarCache.synchronized((sidecarCache.size(), sidecarCacheBytes))
-
-  private[graft] def sidecarCacheClear(): Unit = sidecarCache.synchronized {
-    sidecarCache.clear(); sidecarCacheBytes = 0L
-  }
-
-  private[graft] def sidecarPut(k: (String, String), a: AnyRef): Unit =
-    sidecarCache.synchronized {
-      val prev = sidecarCache.put(k, a)
-      sidecarCacheBytes +=
-        sidecarBytes(a) - Option(prev).map(sidecarBytes).getOrElse(0L)
-      // evict least-recently-used first (access-order map), never the
-      // entry just inserted — a single over-budget sidecar stays cached
-      // alone rather than thrashing every serve
-      val it = sidecarCache.entrySet().iterator()
-      while ((sidecarCacheBytes > SidecarCacheMaxBytes ||
-              sidecarCache.size() > SidecarCacheMaxEntries) &&
-             sidecarCache.size() > 1 && it.hasNext) {
-        val e = it.next()
-        if (e.getKey != k) {
-          sidecarCacheBytes -= sidecarBytes(e.getValue)
-          it.remove()
-        }
-      }
-    }
-
-  private def cachedSidecar[A <: AnyRef](root: String, name: String,
-      version: Option[String], kind: String,
-      manifestText: Option[String] = None)(load: => A): A =
-    manifestText.orElse(
-        scala.util.Try(manifestJson(root, name, version)).toOption) match {
-      case None => load // no manifest to key freshness on -> never cache
-      case Some(mj) =>
-        // the full manifest text is the freshness key (it is a few hundred
-        // bytes — a hash would admit stale-serve collisions for no gain)
-        val k = (version.fold(s"$root/$name/latest")(v =>
-          s"$root/$name/versions/$v") + "/" + kind, mj)
-        sidecarCache.synchronized(Option(sidecarCache.get(k))) match {
-          case Some(a) => a.asInstanceOf[A]
-          case None =>
-            val a = load
-            // the manifest read and the sidecar load are not atomic: a
-            // concurrent rebuild between them could durably cache the OLD
-            // sidecar under the NEW manifest key. Re-read the manifest and
-            // only cache when it is unchanged; serve the loaded arrays
-            // uncached otherwise (the next call re-loads fresh).
-            if (scala.util.Try(manifestJson(root, name, version)).toOption
-                  .contains(mj))
-              sidecarPut(k, a)
-            a
-        }
-    }
-
-  /** Bounded LRU of LAZY serving scans keyed by (session id, path,
-    * manifest text) — the same freshness key as the sidecar cache. A
-    * `spark.read.parquet` builds a fresh file index every call — over a
-    * cell-partitioned index that is a full partition-directory listing
-    * PER QUERY, which the probed-search measurement showed out-costing
-    * the probed scan itself at 63k chunks (PROBED_SEARCH: 0.52× before,
-    * the listing dominating the 1.6% read). The cached object is only the
-    * lazy plan + its resolved file listing — no data is pinned. The LRU
-    * is GLOBAL and hard-capped (a DataFrame strongly references its
-    * SparkSession, so a session-weak-keyed map could never evict — the
-    * WeakHashMap value→key caveat); a stopped session's entries age out
-    * under cap pressure, and the worst case is [[ServingCacheCap]]
-    * resolved listings pinned, never unbounded growth.
-    */
-  private val ServingCacheCap = 32
-  private val servingCache =
-    new java.util.LinkedHashMap[(SparkSession, String, String), DataFrame](
-        ServingCacheCap, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, String), DataFrame])
-        : Boolean = size() > ServingCacheCap
-    }
-  private def cachedServingFrame(spark: SparkSession, root: String,
-      name: String, version: Option[String], sub: String,
-      manifestText: Option[String])(build: => DataFrame): DataFrame =
-    manifestText.orElse(
-        scala.util.Try(manifestJson(root, name, version)).toOption) match {
-      case None => build // no manifest to key freshness on -> never cache
-      case Some(mj) =>
-        // the session rides in the key by REFERENCE (SparkSession does not
-        // override equals), so one session can never serve another's frame
-        val k = (spark, version.fold(s"$root/$name/latest")(v =>
-          s"$root/$name/versions/$v") + "/" + sub, mj)
-        servingCache.synchronized(Option(servingCache.get(k))) match {
-          case Some(df) => df
-          case None =>
-            val df = build
-            servingCache.synchronized(servingCache.put(k, df))
-            df
-        }
-    }
+  // (store kind, entries per session)
+  private val Sidecar = ("sidecar", 16)
+  private val Serving = ("serving", 32)
 
   /** [[load]] through the serving cache: repeat searches of one artifact
     * reuse the resolved file listing instead of re-listing the cell
@@ -911,14 +809,14 @@ object IndexStore {
   def loadServing(spark: SparkSession, root: String, name: String,
                   version: Option[String] = None,
                   manifestText: Option[String] = None): DataFrame =
-    cachedServingFrame(spark, root, name, version, "vectors", manifestText)(
+    cachedArtifact(spark, root, name, version, "vectors", Serving, manifestText)(
       load(spark, root, name, version))
 
   /** The coarse centroids persisted by an ivfpq build, cell order. */
   def loadCentroids(spark: SparkSession, root: String, name: String,
                     version: Option[String] = None,
                     manifestText: Option[String] = None): Array[Array[Double]] =
-    cachedSidecar(root, name, version, "centroids", manifestText) {
+    cachedArtifact(spark, root, name, version, "centroids", Sidecar, manifestText) {
       val dir = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
       spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
         .map(_.getSeq[Double](1).toArray)
@@ -928,7 +826,7 @@ object IndexStore {
   def loadCodebooks(spark: SparkSession, root: String, name: String,
                     version: Option[String] = None,
                     manifestText: Option[String] = None): Array[Array[Array[Double]]] =
-    cachedSidecar(root, name, version, "codebooks", manifestText) {
+    cachedArtifact(spark, root, name, version, "codebooks", Sidecar, manifestText) {
       val dir = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
       val rows = spark.read.parquet(s"$dir/codebooks").orderBy("m", "code").collect()
         .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))

@@ -184,21 +184,8 @@ object Curation {
     // operators × all bench passes replaces ~6 kernel passes. Same
     // space-for-recompute trade as [[Dedup.repShingles]] — the persisted
     // decontam hash table is what a production pipeline keeps anyway.
-    decontamContentsCache.getOrElseUpdate(frame)(frame.localCheckpoint(true))
+    graft.Artifacts.frame("decontam", frame)(frame)
   }
-
-  /** Session cache of the checkpointed decontam content-hash frame. */
-  private val decontamContentsCache = new graft.operators.FrameCache
-
-  /** Drop this session's cached decontam frame — the
-    * [[Dedup.invalidateCaches]] convention for the curation family.
-    */
-  def invalidateCaches(session: SparkSession): Unit =
-    decontamContentsCache.invalidate(session)
-
-  /** Spec hook: live curation-cache entries for `session`. */
-  private[graft] def cacheEntryCount(session: SparkSession): Int =
-    decontamContentsCache.size(session)
 
   /** Bloom sizing for [[curationDecontamBloom]]: 2^25 bits (4 MiB) at the
     * 4M-item estimate → theoretical FPP ~1e-3 at capacity and effectively

@@ -128,49 +128,27 @@ object Dedup {
     * pointing it per query was pure constant overhead (the r6→r5 bench
     * regression on dedup_verified/dedup_minhash). In a production
     * pipeline the verbatim-group frame is computed once per corpus
-    * snapshot and shared by every dedup pass over it — the dimCache /
-    * IVF-fit convention applied to a frame. Keyed by [[FrameCache]] on
-    * the FULL canonicalized-plan digest (so two reads of the same table
-    * hit while any semantically different input — another dir, a
-    * filtered frame — misses, with no 32-bit collision window), bounded
-    * per session, and explicitly releasable via [[invalidateCaches]].
+    * snapshot and shared by every dedup pass over it — the IVF-fit
+    * convention applied to a frame. Held in [[graft.Artifacts]], keyed on
+    * the FULL canonicalized-plan digest and the listed input files (so two
+    * reads of the same table hit while any semantically different input —
+    * another dir, a filtered frame, a rewritten table — misses, with no
+    * 32-bit collision window), bounded per session, and released with
+    * [[graft.Artifacts.invalidate]].
     */
-  private val normGroupsCache = new FrameCache
-
   private[graft] def normGroups(docs: DataFrame): DataFrame =
-    normGroupsCache.getOrElseUpdate(docs)(normGroupsUncached(docs))
-
-  /** Drop this session's cached verbatim-group / minhash-bucket frames
-    * and eagerly unpersist their checkpoint blocks — call between corpus
-    * snapshots once no consumer holds a lazy frame derived from them.
-    */
-  def invalidateCaches(session: SparkSession): Unit = {
-    normGroupsCache.invalidate(session)
-    repBucketsCache.invalidate(session)
-    repShinglesCache.invalidate(session)
-    shinglePairsCache.invalidate(session)
-    clustersCache.invalidate(session)
-    simhashBucketsCache.invalidate(session)
-    substringWinsCache.invalidate(session)
-    substringDupWinsCache.invalidate(session)
-  }
-
-  /** Spec hook: live cache entries for `session` across all eight frames. */
-  private[graft] def cacheEntryCount(session: SparkSession): Int =
-    normGroupsCache.size(session) + repBucketsCache.size(session) +
-      repShinglesCache.size(session) + shinglePairsCache.size(session) +
-      clustersCache.size(session) + simhashBucketsCache.size(session) +
-      substringWinsCache.size(session) + substringDupWinsCache.size(session)
-
-  private[graft] def shinglePairsCacheEntryCount(session: SparkSession): Int =
-    shinglePairsCache.size(session)
-
-  /** Spec hook: live cluster-table entries for `session` alone. */
-  private[graft] def clustersCacheEntryCount(session: SparkSession): Int =
-    clustersCache.size(session)
+    graft.Artifacts.frame("normGroups", docs) {
+      val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
+      docs
+        .select(col("doc_id"), norm.as("norm"))
+        .groupBy(col("norm"))
+        .agg(sort_array(collect_list(col("doc_id"))).as("members"))
+        .select(element_at(col("members"), 1).as("rep_id"), col("norm"),
+          col("members"))
+    }
 
   /** Per-distinct-content shingle sets `(rep_id, sh)`, empty sets dropped.
-    * Cached + eagerly checkpointed like [[normGroups]]: the verify stage
+    * Cached + materialized like [[normGroups]]: the verify stage
     * joins this frame on BOTH sides of every candidate pair, so without
     * materialization the shingle kernel re-tokenizes the whole distinct
     * corpus twice per query (and again in dedup_recall's exact arm). One
@@ -180,8 +158,6 @@ object Dedup {
     * frame, and it is what a production two-stage pipeline persists
     * between propose and verify anyway.
     */
-  private val repShinglesCache = new FrameCache
-
   /** The cache-BUILD plan (pre-checkpoint): this is where the shingle
     * kernel lives once consumers read the checkpoint — PlanContractSpec
     * pins `graft_word_shingles` HERE, and the checkpoint reuse (`Scan
@@ -192,23 +168,7 @@ object Dedup {
       .filter(size(col("sh")) > 0)
 
   private def repShingles(docs: DataFrame, groups: DataFrame): DataFrame =
-    repShinglesCache.getOrElseUpdate(docs)(
-      repShinglesBuild(groups).localCheckpoint(true))
-
-  private def normGroupsUncached(docs: DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-    val out = docs
-      .select(col("doc_id"), norm.as("norm"))
-      .groupBy(col("norm"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("members"))
-      .select(element_at(col("members"), 1).as("rep_id"), col("norm"),
-        col("members"))
-      .localCheckpoint(true)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(f"[cc] normGroups t=${(System.nanoTime() - t0) / 1e9}%.3f")
-    out
-  }
+    graft.Artifacts.frame("repShingles", docs)(repShinglesBuild(groups))
 
   /** A SPARSE graph with exactly the connected components of the
     * [[dedupNgramDf]] pair graph: one rep–rep edge per scored distinct-
@@ -247,7 +207,7 @@ object Dedup {
     * the bucket structs, so the whole stage is two shuffles — one keyed
     * on the shingle, one on the pair — with no join back to the corpus.
     *
-    * CACHED + eagerly checkpointed per (session, shingle-frame plan), the
+    * CACHED + materialized per (session, shingle-frame snapshot), the
     * [[normGroups]]/[[clustersFromPairs]] convention: four consumers
     * (ngram, ngram_grouped, clusters via component edges, recall's exact
     * arm) run this same stage, and it is the ONE stage that is quadratic
@@ -261,11 +221,8 @@ object Dedup {
     * checkpoint is output-sized ((id,id,score) survivors only — ~300 MB
     * at the skew corpus's 11.5M family pairs), never candidate-sized.
     */
-  private val shinglePairsCache = new FrameCache
-
   private def shinglePairs(shFrame: DataFrame): DataFrame =
-    shinglePairsCache.getOrElseUpdate(shFrame)(
-      shinglePairsBuild(shFrame).localCheckpoint(true))
+    graft.Artifacts.frame("shinglePairs", shFrame)(shinglePairsBuild(shFrame))
 
   /** The cache-BUILD plan (pre-checkpoint) — where the bucket explode
     * and pair-group shuffles live once consumers read the checkpoint.
@@ -355,16 +312,6 @@ object Dedup {
     * cross-doc duplicated by construction, so consumers handle them with
     * the closed-form full-coverage arm instead of window arithmetic.
     */
-  /** Session cache of the checkpointed positional window-hash frame (the
-    * substring family's kernel output) — see the `win` comment below.
-    */
-  private val substringWinsCache = new FrameCache
-
-  /** Session cache of the checkpointed duplicated-window-start frame (the
-    * post-aggregation survivors both substring consumers filter from).
-    */
-  private val substringDupWinsCache = new FrameCache
-
   private def substringDupWins(docs: DataFrame): (DataFrame, DataFrame) = {
     val L = SubstringLen
     val groups = normGroups(docs)
@@ -387,12 +334,11 @@ object Dedup {
     // query was the substring family's dominant cost (sf0.1: 1.53 s, the
     // slowest bench headliner) — one kernel pass per corpus snapshot is
     // the same "tokenize once, analyze many" shape the shingle caches pin.
-    val win = substringWinsCache.getOrElseUpdate(docs)(toked
+    val win = graft.Artifacts.frame("substringWins", docs)(toked
       .filter(col("ntok") >= L)
       .select(col("rep_id"), col("nm"), col("ntok"),
         posexplode(graft.functions.WordWindowHashes.column(col("norm"), L))
-          .as(Seq("pos", "h")))
-      .localCheckpoint(true))
+          .as(Seq("pos", "h"))))
     // cross-content duplicated hashes: ≥2 distinct contents. A hash seen
     // in ONE multi-member content only is cross-DOC duplicated too, but
     // those contents are fully covered by the nm>=2 arm in consumers, so
@@ -404,11 +350,10 @@ object Dedup {
     // the duplicated-window set is ALSO cached (r15): the ≥2-distinct-
     // contents aggregation + semi-join over the window frame re-ran per
     // query; the survivors (duplicated positions only) are output-sized.
-    val dupWins = substringDupWinsCache.getOrElseUpdate(docs)(
+    val dupWins = graft.Artifacts.frame("substringDupWins", docs)(
       win.filter(col("nm") === 1)
         .join(dup, Seq("h"), "left_semi")
-        .select(col("rep_id"), col("ntok"), col("pos"))
-        .localCheckpoint(true))
+        .select(col("rep_id"), col("ntok"), col("pos")))
     (toked, dupWins)
   }
 
@@ -606,22 +551,19 @@ object Dedup {
     * survival counts) and the checkpoint materializes the one shuffle
     * instead of re-running the kernel per branch.
     */
-  private val repBucketsCache = new FrameCache
-
   private def minhashRepBuckets(docs: DataFrame): (DataFrame, DataFrame) = {
     val groups = normGroups(docs)
     // Cached like normGroups: three operators (minhash, verified, the
     // verified component edges) re-ran the signature kernel + bucket
     // shuffle over the identical groups frame.
-    val buckets = repBucketsCache.getOrElseUpdate(docs)(
+    val buckets = graft.Artifacts.frame("repBuckets", docs)(
       groups
         .select(col("rep_id"),
           posexplode(graft.functions.MinHashConf.column(col("norm"))).as(Seq("band", "key")))
         .groupBy(col("band"), col("key"))
         .agg(graft.functions.BoundedSortedCollect
           .column(col("rep_id"), MaxBucketSize + 1).as("ids"))
-        .filter(size(col("ids")) <= MaxBucketSize)
-        .localCheckpoint(true))
+        .filter(size(col("ids")) <= MaxBucketSize))
     (groups, buckets)
   }
 
@@ -1375,16 +1317,6 @@ object Dedup {
     * ([[dedupSimhashGroupedDf]]): verbatim groups, thresholded rep-pair
     * hammings, and the per-content band-survival witness.
     */
-  /** Session cache of the checkpointed simhash band-bucket frame — the
-    * [[repBucketsCache]] convention applied to the simhash family (r15):
-    * dedup_simhash and dedup_simhash_grouped both consume this identical
-    * frame, and rebuilding the signature kernel + bucket aggregation +
-    * checkpoint per query doubled the family's bench cost (sf0.1:
-    * 1.13 + 1.20 s for two queries whose heavy stage is byte-identical).
-    * One signature pass per corpus snapshot, invalidated with the rest.
-    */
-  private val simhashBucketsCache = new FrameCache
-
   private def simhashRepParts(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val groups = normGroups(docs)
     val banded = groups
@@ -1399,13 +1331,16 @@ object Dedup {
     // ONE kernel execution with no signature checkpoint, and a dominant
     // chunk value ships at most cap+1 rows per map partition. Size-1
     // buckets are kept: they witness band survival for the within-group
-    // expansion.
-    val buckets = simhashBucketsCache.getOrElseUpdate(docs)(banded
+    // expansion. Session-cached like the minhash buckets (r15):
+    // dedup_simhash and dedup_simhash_grouped both consume this identical
+    // frame, and rebuilding the signature kernel + bucket aggregation +
+    // checkpoint per query doubled the family's bench cost (sf0.1:
+    // 1.13 + 1.20 s for two queries whose heavy stage is byte-identical).
+    val buckets = graft.Artifacts.frame("simhashBuckets", docs)(banded
       .groupBy(col("j"), col("chunk"))
       .agg(graft.functions.BoundedSortedCollectRows
         .column(struct(col("rep_id"), col("cs")), MaxBucketSize + 1).as("ids"))
-      .filter(size(col("ids")) <= MaxBucketSize)
-      .localCheckpoint(true))
+      .filter(size(col("ids")) <= MaxBucketSize))
     val ham = (0 until SimhashChunks).map(j =>
       bit_count(element_at(col("p.a.cs"), j + 1)
         .bitwiseXOR(element_at(col("p.b.cs"), j + 1)))).reduce(_ + _)
@@ -1535,7 +1470,7 @@ object Dedup {
     * [[dedupClusters]]; the same call clusters simhash, phash-media, or
     * embedding pair sets (every pair operator emits this shape).
     *
-    * Cached + eagerly checkpointed per pair-frame plan ([[FrameCache]],
+    * Cached + materialized per pair-frame snapshot ([[graft.Artifacts]],
     * the [[normGroups]] convention): the cluster table is the shared
     * input of dedup_clusters / cluster_stats / curation_weight /
     * curation_report / pipeline_filter, and before this cache each of
@@ -1543,17 +1478,28 @@ object Dedup {
     * at skewed sf1 that was ~6 rebuilds of the sweep's single most
     * expensive stage (measured r11: the rebuilds dominated the skew
     * Verify wall-clock). "Cluster once per corpus snapshot, then read"
-    * is also the production shape at 100 TB. The checkpoint additionally
-    * lets the loop's final persisted round be unpersisted eagerly —
+    * is also the production shape at 100 TB. The materialization
+    * additionally lets the loop's persisted RDDs be unpersisted eagerly —
     * pre-cache, every call leaked one label-table-sized persisted RDD
     * for the life of the session.
     */
-  def clustersFromPairs(rawPairs: DataFrame): DataFrame =
-    clustersCache.getOrElseUpdate(rawPairs)(clustersFromPairsUncached(rawPairs))
+  def clustersFromPairs(rawPairs: DataFrame): DataFrame = {
+    // released once the store has materialized the labels (a hit has none)
+    var loopState = Seq.empty[org.apache.spark.rdd.RDD[_]]
+    val out = graft.Artifacts.frame("clusters", rawPairs) {
+      val (labels, state) = clusterLabels(rawPairs)
+      loopState = state
+      labels
+    }
+    loopState.foreach(_.unpersist(blocking = false))
+    out
+  }
 
-  private val clustersCache = new FrameCache
-
-  private def clustersFromPairsUncached(rawPairs: DataFrame): DataFrame = {
+  /** The lazy `(doc_id, cluster_rep, keep)` labels of [[clustersFromPairs]]
+    * and the persisted loop RDDs they still read.
+    */
+  private def clusterLabels(rawPairs: DataFrame)
+      : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
     // The propagation loop runs on RDDs with ONE fixed HashPartitioner —
     // the canonical iterative-graph shape (GraphX's): the mirrored edge
     // list is hash-partitioned ONCE and persisted, so every round's
@@ -1657,15 +1603,9 @@ object Dedup {
       converged = changed == 0
       rounds += 1
     }
-    // Eager checkpoint BEFORE releasing the loop state: the cached frame
-    // must not depend on `pinned`'s blocks once they are gone.
     val out = labels.map { case (v, rep) => (v, rep, v == rep) }
       .toDF("doc_id", "cluster_rep", "keep")
-      .localCheckpoint(true)
-    raw.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    pinned.unpersist(blocking = false)
-    out
+    (out, Seq(raw, edges, pinned))
   }
 
   /** SURVEY §2 `dedup_cluster_stats`: the duplicate-cluster size
@@ -1699,6 +1639,15 @@ object Dedup {
     if (((k.toLong * 1315423911L + j.toLong * 2654435761L) % 1000000007L) % 2 == 0) 1.0
     else -1.0
 
+  /** Embedding dimensionality under `dir` (one-row lookup, cached per
+    * session and embeddings snapshot like the IVF/PQ/PCA model fits —
+    * every row of a table shares one dimension, and caching keeps the
+    * lookup job out of timed bench regions on repeat calls).
+    */
+  def embeddingDim(spark: SparkSession, dir: String): Int =
+    graft.Artifacts.table(spark, "dim", dir, "embeddings")(
+      Tables.embeddings(spark, dir).select(size(col("embedding"))).head.getInt(0))
+
   /** SURVEY §2 `dedup_embedding_lsh`: the random-hyperplane LSH scale path
     * for embedding near-dup — the SimHash idea applied to vectors (and the
     * standard alternative to [[VectorOps.annIvf]]'s IVF cells, with no fit
@@ -1724,17 +1673,6 @@ object Dedup {
     * every sign and collide with probability → 1; that regime is what
     * this operator exists for.
     */
-  private val dimCache = scala.collection.concurrent.TrieMap[String, Int]()
-
-  /** Embedding dimensionality under `dir` (one-row lookup, cached per dir
-    * like the IVF/PQ/PCA model fits — correct because every row of a table
-    * shares one dimension, and caching keeps the lookup job out of timed
-    * bench regions on repeat calls).
-    */
-  def embeddingDim(spark: SparkSession, dir: String): Int =
-    dimCache.getOrElseUpdate(dir,
-      Tables.embeddings(spark, dir).select(size(col("embedding"))).head.getInt(0))
-
   def dedupEmbeddingLsh(spark: SparkSession, dir: String): DataFrame =
     dedupEmbeddingLshDf(Tables.embeddings(spark, dir), embeddingDim(spark, dir))
 

@@ -81,36 +81,33 @@ object IvfModel {
 
   val Iters = 10
 
-  private val cache =
-    scala.collection.concurrent.TrieMap[(String, Int), Array[Array[Double]]]()
-
-  /** Centroids for the embeddings table under `dir` (cached per (dir, k) —
-    * plain doubles, no session reference, so ivf_build / ivf_search /
-    * ann_ivf in one run share one fit). Oracle-SQL generation calls this
-    * with the SAME (session, dir) threaded explicitly from Verify
-    * ([[graft.SparkEntry.oracleSqlFor]]), so the literals in the generated
-    * SQL are the fit the queries actually ran with — no global ordering
-    * assumptions.
+  /** Centroids for the embeddings table under `dir`, one fit per
+    * (session, embeddings snapshot, k) in [[graft.Artifacts]] — plain
+    * doubles, so ivf_build / ivf_search / ann_ivf in one run share one
+    * fit, and a table rewritten in place is refitted. Oracle-SQL
+    * generation calls this with the SAME (session, dir) threaded
+    * explicitly from Verify ([[graft.SparkEntry.oracleSqlFor]]), so the
+    * literals in the generated SQL are the fit the queries actually ran
+    * with — no global ordering assumptions.
     */
   def centroids(spark: SparkSession, dir: String,
                 k: Int = 0): Array[Array[Double]] = {
     val kk = if (k > 0) k else adaptiveK(spark, dir)
-    cache.getOrElseUpdate((dir, kk),
+    graft.Artifacts.table(spark, "ivfFit", dir, "embeddings", s"k=$kk")(
       fitFromDf(Tables.embeddings(spark, dir), "vec_id", "embedding", kk,
         knownTotal = corpusCount(spark, dir)))
   }
 
-  private val countCache = scala.collection.concurrent.TrieMap[String, Long]()
-
-  /** The embeddings-table row count under `dir`, one cached count job per
-    * dir — shared by [[adaptiveK]] and every dir-keyed fit entry point
+  /** The embeddings-table row count under `dir`, one count job per
+    * snapshot — shared by [[adaptiveK]] and every dir-keyed fit entry point
     * ([[centroids]], [[PqModel.codebooks]], [[PcaModel.model]]), so the
     * fits' [[hashOrderedTake]] bound check reuses the number instead of
     * re-scanning (r11 advisor: two full-scan count jobs per fit when the
     * total was already known).
     */
   def corpusCount(spark: SparkSession, dir: String): Long =
-    countCache.getOrElseUpdate(dir, Tables.embeddings(spark, dir).count())
+    graft.Artifacts.table(spark, "count", dir, "embeddings")(
+      Tables.embeddings(spark, dir).count())
 
   /** Corpus-adaptive nlist (see [[VectorOps.TargetCellSize]]): one cached
     * count job per dir; every gate scale factor lands on the historical
@@ -398,9 +395,9 @@ object IvfModel {
     * O(N·K) to O(N·√K).
     */
   def superModel(cents: Array[Array[Double]]): (Array[Array[Double]], Array[Int]) = {
-    // identity-keyed cache: the centroid arrays come out of [[cache]] (one
-    // instance per (dir, k)), and every consumer (hier build, hier ANN,
-    // dedup_semantic, the refine rounds) re-derives the SAME super layer —
+    // identity-keyed cache: the centroid arrays come out of [[centroids]]
+    // (one instance per snapshot and k), and every consumer (hier build,
+    // hier ANN, dedup_semantic, the refine rounds) re-derives the SAME super layer —
     // at k = 65536 that is a ~10 s driver fit per query without this.
     // WeakHashMap: a dropped centroid set releases its super layer too.
     // Pure function of cents, so caching cannot change any result.

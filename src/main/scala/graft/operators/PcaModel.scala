@@ -34,15 +34,13 @@ object PcaModel {
   /** (mean, components) — components(k)(j), k < [[Components]]. */
   type Model = (Array[Double], Array[Array[Double]])
 
-  private val cache = scala.collection.concurrent.TrieMap[String, Model]()
-
-  /** Fitted model for the embeddings table under `dir` (cached per dir —
-    * plain doubles, no session reference). Oracle-SQL generation receives
-    * the SAME (session, dir) from Verify, so the literals match the fit
-    * the query ran with.
+  /** Fitted model for the embeddings table under `dir`, one fit per
+    * (session, embeddings snapshot) in [[graft.Artifacts]]. Oracle-SQL
+    * generation receives the SAME (session, dir) from Verify, so the
+    * literals match the fit the query ran with.
     */
   def model(spark: SparkSession, dir: String): Model =
-    cache.getOrElseUpdate(dir,
+    graft.Artifacts.table(spark, "pcaFit", dir, "embeddings")(
       fitFromDf(Tables.embeddings(spark, dir), "vec_id", "embedding",
         knownTotal = IvfModel.corpusCount(spark, dir)))
 

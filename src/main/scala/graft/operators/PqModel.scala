@@ -34,16 +34,13 @@ object PqModel {
     */
   val Codes = 16
 
-  private val cache =
-    scala.collection.concurrent.TrieMap[String, Array[Array[Array[Double]]]]()
-
-  /** Codebooks for the embeddings table under `dir`, cached per dir —
-    * `(subspace)(code)(dim)` doubles, no session reference. Oracle-SQL
-    * generation receives the same fit via [[graft.SparkEntry.oracleSqlFor]]
-    * threading (session, dir) explicitly.
+  /** Codebooks for the embeddings table under `dir`, one fit per (session,
+    * embeddings snapshot) in [[graft.Artifacts]] — `(subspace)(code)(dim)`
+    * doubles. Oracle-SQL generation receives the same fit via
+    * [[graft.SparkEntry.oracleSqlFor]] threading (session, dir) explicitly.
     */
   def codebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    cache.getOrElseUpdate(dir,
+    graft.Artifacts.table(spark, "pqFit", dir, "embeddings")(
       fitFromDf(Tables.embeddings(spark, dir), "vec_id", "embedding",
         knownTotal = IvfModel.corpusCount(spark, dir)))
 

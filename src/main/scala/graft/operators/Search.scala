@@ -12,10 +12,11 @@ import graft.sources.Tables
   * (`app/api/eval_api.py:206-263` — recall@k, MRR, binary-relevance NDCG).
   *
   * Scale design (SURVEY §4): corpus statistics (per-doc term maps, the
-  * vocabulary with df, avgdl) are built once per (session, dir); a query
-  * reads its ≤ |q| idf values to the driver and scores every document in
-  * one narrow projection over the per-doc maps, so the corpus is never
-  * shuffled or joined — a scan, a projection and a TakeOrdered.
+  * vocabulary with df, avgdl) are built once per session and documents
+  * snapshot and held in [[graft.Artifacts]]; a query reads its ≤ |q| idf
+  * values to the driver and scores every document in one narrow
+  * projection over the per-doc maps, so the corpus is never shuffled or
+  * joined — a scan, a projection and a TakeOrdered.
   */
 object Search {
 
@@ -35,80 +36,13 @@ object Search {
     bm25TopFor(spark, dir, QueryText, k)
 
   // The per-doc term-count maps feed four downstream branches (corpus
-  // stats, df, idf, tf). Spark re-executes a shared subtree once per
-  // branch, so materialize it once per (session, dir) — the classic
-  // "build the inverted stats, then query them" shape; at 100 TB this is
-  // a persisted dataset, locally a localCheckpoint.
-  //
-  // Lifecycle: the checkpoint blocks live in the CONTEXT's block manager,
-  // so eviction is tied to context shutdown via a SparkListener (a weak
-  // map would never collect here: the cached DataFrame strongly references
-  // its session, i.e. the value reaches its own key).
-  private val perDocCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
-  // [[bm25Consts]]' driver-side numbers per (session, dir): held beside
-  // the frame map (reading a cached frame back would cost a query per
-  // call) and dropped with it
-  private val corpusConsts =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Bm25Consts]()
-
-  /** Config: how the shared per-doc term-stats frame is materialized.
-    * `local` (default) = `localCheckpoint(true)` — fastest, but the blocks
-    * live in executor memory with TRUNCATED lineage, so on a real cluster
-    * they die unrecoverably with their executor (fine in local mode, fragile
-    * under dynamic allocation). `parquet` = write/read a scratch parquet
-    * dataset — survives executor loss; the 100 TB setting. Scratch location
-    * comes from [[ScratchDirKey]] (default: java tmpdir).
-    */
-  val MaterializeKey = "spark.graft.search.materialize"
-  val ScratchDirKey = "spark.graft.search.scratchDir"
-
-  private[graft] def materialize(spark: SparkSession, df: DataFrame, name: String): DataFrame =
-    spark.conf.getOption(MaterializeKey).getOrElse("local") match {
-      case "parquet" =>
-        val base = spark.conf.getOption(ScratchDirKey).getOrElse(
-          sys.props("java.io.tmpdir") + "/graft-scratch")
-        // one fresh dir per materialization: no two entries share scratch data
-        val path = s"$base/${spark.sparkContext.applicationId}/$name-${java.util.UUID.randomUUID()}"
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
-      case _ => df.localCheckpoint(true)
-    }
-
-  /** The session's stats map, creating it (and registering the context-
-    * shutdown cleanup listener) on first touch — shared by every
-    * per-corpus [[statsEntry]].
-    */
-  private def statsCacheFor(spark: SparkSession)
-      : scala.collection.mutable.Map[String, DataFrame] =
-    perDocCache.computeIfAbsent(spark, s => {
-      val sc = s.sparkContext
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          perDocCache.keySet.removeIf(k => k.sparkContext eq sc)
-          corpusConsts.keySet.removeIf(k => k._1.sparkContext eq sc)
-        }
-      })
-      scala.collection.mutable.Map.empty
-    })
-
-  /** The session's `kind` entry of `dir`: `build`, materialized on first touch. */
-  private[operators] def statsEntry(spark: SparkSession, kind: String, dir: String)(
-      build: => DataFrame): DataFrame = {
-    val m = statsCacheFor(spark)
-    // \u0000 separator: a corpus dir is free-form
-    m.synchronized(m.getOrElseUpdate(kind + "\u0000" + dir, materialize(spark, build, kind)))
-  }
-
-  // `source` rides along for free (same scan, tiny column) so corpus_stats
-  // can aggregate per-source from the cached maps instead of re-running the
-  // tokenizer kernel over the corpus (r15 batch 3); bm25/tfidf consumers
-  // project it away at the checkpoint read.
+  // stats, df, idf, tf), so they are materialized once per documents
+  // snapshot in the session's artifact store. `source` rides along for
+  // free (same scan, tiny column) so corpus_stats can aggregate per-source
+  // from the cached maps instead of re-running the tokenizer kernel over
+  // the corpus (r15 batch 3); bm25/tfidf consumers project it away.
   private[operators] def perDocTerms(spark: SparkSession, dir: String): DataFrame =
-    statsEntry(spark, "perdoc", dir)(
+    graft.Artifacts.table(spark, "perdoc", dir, "documents")(
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"),
           graft.functions.TermCounts.column(col("text")).as("tc"))
@@ -181,42 +115,10 @@ object Search {
     * per corpus snapshot, then vocabulary-sized reads).
     */
   private[operators] def vocabTable(spark: SparkSession, dir: String): DataFrame =
-    statsEntry(spark, "vocab", dir)(
+    graft.Artifacts.table(spark, "vocab", dir, "documents")(
       perDocTerms(spark, dir).select(explode(col("tc")).as(Seq("term", "f")))
         .groupBy(col("term"))
         .agg(sum(col("f")).as("tf"), count(lit(1)).as("df")))
-
-  /** Drop the session's materialized frames (perDoc / vocab / gold / served
-    * vectors) and BM25 constants, and eagerly unpersist the frames'
-    * checkpoint blocks — the cold-twin hook: Bench's `--all` cold phase
-    * prices the first-touch build of the whole lexical-stats family through
-    * this, and a corpus rewritten in place is read afresh after it.
-    */
-  def invalidateCaches(spark: SparkSession): Unit = {
-    val m = statsCacheFor(spark)
-    m.synchronized {
-      m.values.foreach { df =>
-        df.queryExecution.analyzed.collectLeaves().foreach {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(blocking = false)
-          case _ => ()
-        }
-        // a parquet-mode entry's files are its own scratch dir (materialize)
-        df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent).distinct.foreach(p =>
-          p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true))
-      }
-      m.clear()
-    }
-    corpusConsts.keySet.removeIf(k => k._1 eq spark)
-  }
-
-  /** Stats entries held for `spark` (for specs: a serving session's
-    * caches must not grow with the queries it answers).
-    */
-  private[graft] def statsCacheSize(spark: SparkSession): Int = {
-    val m = statsCacheFor(spark)
-    m.synchronized(m.size) + corpusConsts.keySet.stream.filter(_._1 eq spark).count().toInt
-  }
 
   /** BM25Okapi's idf of a term in `df` of `nDocs` documents (may be < 0). */
   private def rawIdf(nDocs: Column, df: Column): Column =
@@ -229,11 +131,11 @@ object Search {
   private[operators] case class Bm25Consts(nDocs: Long, avgdl: Double, avgIdf: Double)
 
   /** [[Bm25Consts]] of `dir`: one per-doc and one vocabulary-wide
-    * aggregation per (session, dir), kept on the driver, so a query plan
-    * carries them as literals.
+    * aggregation per session and documents snapshot, kept on the driver,
+    * so a query plan carries them as literals.
     */
   private[operators] def bm25Consts(spark: SparkSession, dir: String): Bm25Consts =
-    corpusConsts.computeIfAbsent((spark, dir), _ => {
+    graft.Artifacts.table(spark, "bm25", dir, "documents") {
       val d = perDocTerms(spark, dir)
         .agg(count(lit(1)), sum(col("dl")).cast("double") / count(lit(1)).cast("double"))
         .head()
@@ -244,7 +146,7 @@ object Search {
       // an empty corpus has no vocabulary, so no query term ever reads these
       def num(r: Row, i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
       Bm25Consts(nDocs, num(d, 1), num(avgIdf, 0))
-    })
+    }
 
   /** The per-query idf table `(term, idf)` of the distinct in-vocabulary
     * `terms` — ≤ |terms| rows, derived on every call from the cached
@@ -441,7 +343,7 @@ object Search {
   // corpus self-join per call before. Inputs are cached, never
   // retrieval results.
   private def gold(spark: SparkSession, dir: String): DataFrame =
-    statsEntry(spark, "gold", dir) {
+    graft.Artifacts.table(spark, "gold", dir, "embeddings") {
       val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
       e.filter(col("vec_id").between(0, NGold - 1)).as("q")
         .join(e.as("o"),

@@ -59,11 +59,11 @@ object VectorOps {
   def scaledNProbe(nCells: Int): Int =
     math.max(NProbe, (NProbe.toLong * nCells / NumCells).toInt)
 
-  /** Embeddings with precomputed L2 norms, materialized once per (session,
-    * dir) in [[Search]]'s stats map beside the lexical statistics.
+  /** Embeddings with precomputed L2 norms, materialized once per session
+    * and embeddings snapshot in [[graft.Artifacts]].
     */
   def embWithNorm(spark: SparkSession, dir: String): DataFrame =
-    Search.statsEntry(spark, "emb", dir)(
+    graft.Artifacts.table(spark, "emb", dir, "embeddings")(
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm")))
 
@@ -159,7 +159,7 @@ object VectorOps {
     val corpusFrame = assignCells(
         Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), cents)
       .withColumn("nrm", norm(col("embedding")))
-    val corpus = assignCache.getOrElseUpdate(corpusFrame)(corpusFrame.localCheckpoint(true))
+    val corpus = served(corpusFrame)
     corpus.join(broadcast(qCells), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("score",
@@ -272,7 +272,7 @@ object VectorOps {
     // lesson). Session-cached like the ann_ivf assignment (r15).
     val asgFrame = assigned
       .select(col("vec_id"), col("embedding"), col("cell"))
-    val asg = assignCache.getOrElseUpdate(asgFrame)(asgFrame.localCheckpoint(true))
+    val asg = served(asgFrame)
     val e = capHotCells(asg, cents.length, MaxCellFactor)
       .withColumn("nrm", norm(col("embedding")))
     val drops = e.as("a").join(e.as("b"),
@@ -362,38 +362,28 @@ object VectorOps {
         explode(graft.functions.IvfProbes.column(col("embedding"), cents,
           r)).as("p"))
       .select(col("vec_id"), col("embedding"), col("p.cell").as("cell"))
-    assignCache.getOrElseUpdate(frame)(frame.localCheckpoint(true))
+    served(frame)
   }
 
-  /** Session cache of the checkpointed multi-probe assignment frames
-    * (flat and hier) — the [[IvfModel.centroids]] "fit once, serve many"
-    * convention extended to the assignment itself (r15): the assignment
-    * IS the index build (IndexStore persists exactly this frame), and
-    * rebuilding kernel + checkpoint per query re-ran the build for every
-    * search-shaped operator. Keyed on the full pre-checkpoint plan, which
-    * embeds the corpus path, the centroid table (content-hashed via
-    * DoubleMatrix.toString), and the probe count — any change misses.
-    * Invalidated with [[invalidateCaches]].
+  /** `frame` materialized once per session and input snapshot in
+    * [[graft.Artifacts]] — the multi-probe assignment frames (flat and
+    * hier), the assigned corpus and the PQ code tables: the
+    * [[IvfModel.centroids]] "fit once, serve many" convention extended to
+    * the assignment itself (r15). The assignment IS the index build
+    * (IndexStore persists exactly this frame), and rebuilding kernel +
+    * checkpoint per query re-ran the build for every search-shaped
+    * operator. Keyed on the full plan, which embeds the corpus path, the
+    * centroid table (content-hashed via DoubleMatrix.toString) and the
+    * probe count — any change misses.
     */
-  private val assignCache = new graft.operators.FrameCache(16)
+  private def served(frame: DataFrame): DataFrame =
+    graft.Artifacts.frame("assign", frame, ServedCap)(frame)
 
-  /** Session cache of the ≤ nCells-row per-cell count tables keyed on
-    * their assignment frame — see [[capHotCellsCounted]].
+  /** Per-session entries of the vector family's served tables: one
+    * corpus has several distinct assignment and code frames, so a full
+    * query sweep must not evict its own entries (r15).
     */
-  private val cellCountCache = new graft.operators.FrameCache(16)
-
-  /** Drop this session's cached assignment / cell-count frames and
-    * eagerly unpersist their checkpoint blocks — the
-    * [[Dedup.invalidateCaches]] convention for the vector family.
-    */
-  def invalidateCaches(session: SparkSession): Unit = {
-    assignCache.invalidate(session)
-    cellCountCache.invalidate(session)
-  }
-
-  /** Spec hook: live vector-cache entries for `session`. */
-  private[graft] def cacheEntryCount(session: SparkSession): Int =
-    assignCache.size(session) + cellCountCache.size(session)
+  private val ServedCap = 16
 
   /** The oracle-gated probe-dial example values: `ann_ivf_dial` /
     * `ann_ivf_hier_dial` run the dial surface at these settings against
@@ -479,7 +469,7 @@ object VectorOps {
         explode(graft.functions.IvfProbesHier.column(col("embedding"),
           supers, cents, memberOf, s, r)).as("p"))
       .select(col("vec_id"), col("embedding"), col("p.cell").as("cell"))
-    assignCache.getOrElseUpdate(frame)(frame.localCheckpoint(true))
+    served(frame)
   }
 
   /** The shared ann_ivf pair stage over a (vec_id, embedding, cell)
@@ -572,7 +562,7 @@ object VectorOps {
     // with the assignment itself session-cached, rebuilding this tiny
     // checkpoint per query was one gratuitous job per ANN query
     val ccFrame = multi.groupBy(col("cell")).agg(count(lit(1)).as("n"))
-    val cc = cellCountCache.getOrElseUpdate(ccFrame)(ccFrame.localCheckpoint(true))
+    val cc = graft.Artifacts.frame("cellCounts", ccFrame, ServedCap)(ccFrame)
     // the corpus total rides along as a constant-partition window sum, so
     // the threshold, the dropped-share stats, and the survivors' pair
     // estimate all come out of ONE driver job over the checkpointed
@@ -844,7 +834,7 @@ object VectorOps {
       .select(col("vec_id"),
         transform(graft.functions.PqCodes.column(col("embedding"), cb), p => p("code"))
           .as("codes"))
-    val codes = assignCache.getOrElseUpdate(codesFrame)(codesFrame.localCheckpoint(true))
+    val codes = served(codesFrame)
     val q = embWithNorm(spark, dir).filter(col("vec_id").between(0, 9))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     codes.join(broadcast(q), col("vec_id") =!= col("q_id"))
@@ -894,7 +884,7 @@ object VectorOps {
           .as("cell"),
         transform(graft.functions.PqCodes.column(col("embedding"), cb), p => p("code"))
           .as("codes"))
-    val corpus = assignCache.getOrElseUpdate(corpusFrame)(corpusFrame.localCheckpoint(true))
+    val corpus = served(corpusFrame)
     corpus.join(broadcast(qCells), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("score",

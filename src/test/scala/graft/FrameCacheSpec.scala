@@ -26,13 +26,13 @@ class FrameCacheSpec extends SparkSpec {
     // checkpointed frame (the r11 cross-suite DedupSpec failure: sf1 doc
     // ids surfacing in an sf0.001 query).
     val s = ownSession
-    Dedup.invalidateCaches(s)
+    Artifacts.invalidate(s)
     val a = graft.sources.Tables.documents(s, "/root/testdata/sf0.001")
     val b = graft.sources.Tables.documents(s, "/root/testdata/sf0.01")
     val ga = Dedup.normGroups(a)
     val gb = Dedup.normGroups(b)
     assert(!(ga eq gb), "different directories must MISS the cache")
-    assert(Dedup.cacheEntryCount(s) == 2)
+    assert(Artifacts.entryCount(s) == 2)
     // content check, not count: these corpora happen to have 500 docs each
     def contentSum(df: org.apache.spark.sql.DataFrame): Long =
       df.select(org.apache.spark.sql.functions.bit_xor(
@@ -46,7 +46,7 @@ class FrameCacheSpec extends SparkSpec {
     // across queries in one run
     val ga2 = Dedup.normGroups(graft.sources.Tables.documents(s, "/root/testdata/sf0.001"))
     assert(ga2 eq ga, "same directory re-read must HIT the cache")
-    Dedup.invalidateCaches(s)
+    Artifacts.invalidate(s)
   }
 
   test("same-schema literal frames with different rows get distinct entries") {
@@ -56,7 +56,7 @@ class FrameCacheSpec extends SparkSpec {
     // checkpoint (the r8 DedupSpec/DedupSubstringSpec cross-test failure).
     val s = ownSession
     import s.implicits._
-    Dedup.invalidateCaches(s)
+    Artifacts.invalidate(s)
     val a = Seq((1L, "alpha beta gamma"), (2L, "alpha beta gamma"))
       .toDF("doc_id", "text")
     val b = Seq((1L, "one two three"), (2L, "four five six"))
@@ -64,10 +64,10 @@ class FrameCacheSpec extends SparkSpec {
     val ga = Dedup.normGroups(a)
     val gb = Dedup.normGroups(b)
     assert(!(ga eq gb), "different literal data must MISS the cache")
-    assert(Dedup.cacheEntryCount(s) == 2)
+    assert(Artifacts.entryCount(s) == 2)
     assert(ga.count() == 1)
     assert(gb.count() == 2)
-    Dedup.invalidateCaches(s)
+    Artifacts.invalidate(s)
   }
 
   test("filtered input does not hit the full-corpus cache entry") {
@@ -81,20 +81,20 @@ class FrameCacheSpec extends SparkSpec {
       (5L, "unique text with its own words")
     ).toDF("doc_id", "text")
 
-    val before = Dedup.cacheEntryCount(s)
+    val before = Artifacts.entryCount(s)
     val full = Dedup.normGroups(docs)
-    assert(Dedup.cacheEntryCount(s) == before + 1)
+    assert(Artifacts.entryCount(s) == before + 1)
 
     // same plan → same entry, not a new one
     val again = Dedup.normGroups(docs)
     assert(again eq full, "identical plan must hit the cached frame")
-    assert(Dedup.cacheEntryCount(s) == before + 1)
+    assert(Artifacts.entryCount(s) == before + 1)
 
     // a filtered view is semantically different → its own entry with its
     // own (smaller) groups, never the full-corpus frame
     val filtered = Dedup.normGroups(docs.filter(col("doc_id") <= 2))
     assert(!(filtered eq full), "filtered input must MISS the corpus entry")
-    assert(Dedup.cacheEntryCount(s) == before + 2)
+    assert(Artifacts.entryCount(s) == before + 2)
     assert(full.count() == 3)
     assert(filtered.count() == 1)
     val members = filtered.select("members").head.getSeq[Long](0)
@@ -107,14 +107,14 @@ class FrameCacheSpec extends SparkSpec {
     val docs = Seq((1L, "a b c"), (2L, "a b c"), (3L, "x y z"))
       .toDF("doc_id", "text")
     Dedup.normGroups(docs)
-    assert(Dedup.cacheEntryCount(s) > 0)
-    Dedup.invalidateCaches(s)
-    assert(Dedup.cacheEntryCount(s) == 0)
+    assert(Artifacts.entryCount(s) > 0)
+    Artifacts.invalidate(s)
+    assert(Artifacts.entryCount(s) == 0)
     // a fresh build after invalidation computes and caches again
     val rebuilt = Dedup.normGroups(docs)
     assert(rebuilt.count() == 2)
-    assert(Dedup.cacheEntryCount(s) == 1)
-    Dedup.invalidateCaches(s)
+    assert(Artifacts.entryCount(s) == 1)
+    Artifacts.invalidate(s)
   }
 
   test("shingle pair table is computed once per snapshot and shared") {
@@ -127,7 +127,7 @@ class FrameCacheSpec extends SparkSpec {
     // is right.
     val s = ownSession
     import s.implicits._
-    Dedup.invalidateCaches(s)
+    Artifacts.invalidate(s)
     val docs = Seq(
       (1L, "the quick brown fox jumps high"),
       (2L, "the quick brown fox jumps low"),
@@ -137,14 +137,14 @@ class FrameCacheSpec extends SparkSpec {
     val raw = Dedup.dedupNgramDf(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1),
         math.rint(r.getDouble(2) * 100) / 100)).toSet
-    assert(Dedup.shinglePairsCacheEntryCount(s) == 1)
+    assert(Artifacts.entryCount(s, "shinglePairs") == 1)
     // docs 1/4 verbatim (within pair, jaccard 1.0); 1-2 and 2-4 share 3
     // of 5 distinct shingles (0.6); doc 3 pairs with nothing
     assert(raw == Set((1L, 4L, 1.0), (1L, 2L, 0.6), (2L, 4L, 0.6)))
     Dedup.dedupNgramGroupedDf(docs).collect()
-    assert(Dedup.shinglePairsCacheEntryCount(s) == 1,
+    assert(Artifacts.entryCount(s, "shinglePairs") == 1,
       "the grouped twin must HIT the shared pair-table entry")
-    Dedup.invalidateCaches(s)
+    Artifacts.invalidate(s)
   }
 
   test("cluster table is computed once per pair-frame plan and shared") {
@@ -158,10 +158,10 @@ class FrameCacheSpec extends SparkSpec {
     // get their own entries.
     val s = ownSession
     import s.implicits._
-    Dedup.invalidateCaches(s)
+    Artifacts.invalidate(s)
     val pairsA = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val a1 = Dedup.clustersFromPairs(pairsA)
-    assert(Dedup.clustersCacheEntryCount(s) == 1)
+    assert(Artifacts.entryCount(s, "clusters") == 1)
     val a2 = Dedup.clustersFromPairs(
       Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b"))
     assert(a2 eq a1, "identical pair frame must HIT the cluster cache")
@@ -171,22 +171,22 @@ class FrameCacheSpec extends SparkSpec {
       (10L, 10L, true), (11L, 10L, false)))
     val pairsB = Seq((5L, 6L)).toDF("doc_a", "doc_b")
     Dedup.clustersFromPairs(pairsB)
-    assert(Dedup.clustersCacheEntryCount(s) == 2,
+    assert(Artifacts.entryCount(s, "clusters") == 2,
       "a different pair frame must get its own entry")
-    Dedup.invalidateCaches(s)
+    Artifacts.invalidate(s)
   }
 
   test("entries beyond the per-session cap are reference-dropped") {
     val s = ownSession
     import s.implicits._
-    Dedup.invalidateCaches(s)
-    val n = graft.operators.FrameCache.MaxPerSession + 3
+    Artifacts.invalidate(s)
+    val n = Artifacts.MaxPerSession + 3
     (0 until n).foreach { i =>
       val docs = Seq((i.toLong, s"text number $i"), (i + 100L, s"text number $i"))
         .toDF("doc_id", "text")
       Dedup.normGroups(docs)
     }
-    assert(Dedup.cacheEntryCount(s) <= graft.operators.FrameCache.MaxPerSession)
-    Dedup.invalidateCaches(s)
+    assert(Artifacts.entryCount(s) <= Artifacts.MaxPerSession)
+    Artifacts.invalidate(s)
   }
 }

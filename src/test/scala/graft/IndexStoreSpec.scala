@@ -273,21 +273,32 @@ class IndexStoreSpec extends SparkSpec {
     // at MaxCells × large dim one centroid array is hundreds of MB — a
     // bare 16-entry cap could pin GBs of driver heap. Three ~128 MB
     // sidecars against the 256 MB ceiling must evict, LRU first.
-    IndexStore.sidecarCacheClear()
+    Artifacts.invalidate(spark)
     try {
       def big(fill: Double) = Array.fill(2048)(Array.fill(8192)(fill))
-      IndexStore.sidecarPut(("p1", "m1"), big(0.0))
-      IndexStore.sidecarPut(("p2", "m2"), big(1.0))
-      IndexStore.sidecarPut(("p3", "m3"), big(2.0))
-      val (n, bytes) = IndexStore.sidecarCacheStats
-      assert(bytes <= IndexStore.SidecarCacheMaxBytes,
-        s"$bytes accounted bytes exceed the ${IndexStore.SidecarCacheMaxBytes} cap")
+      def sidecarPut(k: (String, String), a: AnyRef): Unit =
+        Artifacts.manifested(spark, "sidecar", k._1, k._2, 16, Some(k._2))(a)
+      val first = big(0.0)
+      sidecarPut(("p1", "m1"), first)
+      sidecarPut(("p2", "m2"), big(1.0))
+      sidecarPut(("p3", "m3"), big(2.0))
+      val n = Artifacts.entryCount(spark, "sidecar")
+      val bytes = n * Artifacts.driverBytes(first)
+      assert(bytes <= Artifacts.MaxDriverBytes,
+        s"$bytes accounted bytes exceed the ${Artifacts.MaxDriverBytes} cap")
       assert(n < 3, s"$n entries cached; the third 128 MB insert must evict")
+      // a model fit counts against the same bound: a fit-sized entry
+      // evicts the sidecar that is left
+      Artifacts.table(spark, "ivfFit", "/nonexistent-corpus", "embeddings", "k=65536")(big(3.0))
+      val held = Artifacts.entryCount(spark, "sidecar", "ivfFit")
+      assert(held * Artifacts.driverBytes(first) <= Artifacts.MaxDriverBytes,
+        s"$held 128 MB entries exceed the ${Artifacts.MaxDriverBytes} cap")
+      assert(Artifacts.entryCount(spark, "ivfFit") == 1)
       // …and the entry cap still holds for many tiny sidecars
       (0 until 40).foreach(i =>
-        IndexStore.sidecarPut((s"t$i", "m"), Array(Array(1.0))))
-      assert(IndexStore.sidecarCacheStats._1 <= 16)
-    } finally IndexStore.sidecarCacheClear()
+        sidecarPut((s"t$i", "m"), Array(Array(1.0))))
+      assert(Artifacts.entryCount(spark, "sidecar") <= 16)
+    } finally Artifacts.invalidate(spark)
   }
 
   test("list and delete manage indexes like the reference endpoints") {

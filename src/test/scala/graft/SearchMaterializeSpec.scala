@@ -14,12 +14,12 @@ class SearchMaterializeSpec extends SparkSpec {
 
   test("materialize parquet mode round-trips rows and reads from files") {
     val sess = spark.newSession()
-    sess.conf.set(Search.MaterializeKey, "parquet")
-    sess.conf.set(Search.ScratchDirKey,
+    sess.conf.set(Artifacts.MaterializeKey, "parquet")
+    sess.conf.set(Artifacts.ScratchDirKey,
       java.nio.file.Files.createTempDirectory("graft-scratch").toString)
     import sess.implicits._
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s")
-    val out = Search.materialize(sess, df, "spec_roundtrip")
+    val out = Artifacts.materialize(sess, df, "spec_roundtrip")
     assert(out.collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
       Set((1L, "a"), (2L, "b"), (3L, "c")))
     val plan = out.queryExecution.executedPlan.toString
@@ -55,8 +55,8 @@ class SearchMaterializeSpec extends SparkSpec {
     docs.filter(col("doc_id") % 2 === 1).write.parquet(s"$b/documents.parquet")
     val sess = spark.newSession()
     val scratch = java.nio.file.Files.createTempDirectory("graft-scratch")
-    sess.conf.set(Search.MaterializeKey, "parquet")
-    sess.conf.set(Search.ScratchDirKey, scratch.toString)
+    sess.conf.set(Artifacts.MaterializeKey, "parquet")
+    sess.conf.set(Artifacts.ScratchDirKey, scratch.toString)
     // both corpora's statistics are built before either is queried
     Seq(a, b).foreach(Search.prewarm(sess, _))
     val query = Search.QueryText.toLowerCase.split("\\s+").toSeq
@@ -75,7 +75,7 @@ class SearchMaterializeSpec extends SparkSpec {
       assert(got == want, s"corpus $d")
     }
     // the entries' scratch data goes with them
-    Search.invalidateCaches(sess)
+    Artifacts.invalidate(sess)
     assert(java.nio.file.Files.walk(scratch).noneMatch(_.toString.endsWith(".parquet")))
   }
 
@@ -84,8 +84,8 @@ class SearchMaterializeSpec extends SparkSpec {
   // so the frame really is re-materialized through the parquet path.
   private lazy val sess2 = {
     val s = spark.newSession()
-    s.conf.set(Search.MaterializeKey, "parquet")
-    s.conf.set(Search.ScratchDirKey,
+    s.conf.set(Artifacts.MaterializeKey, "parquet")
+    s.conf.set(Artifacts.ScratchDirKey,
       java.nio.file.Files.createTempDirectory("graft-scratch").toString)
     s
   }

@@ -243,12 +243,12 @@ class SearchSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("rk"), r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
       .toSeq
     val first = top(Search.QueryText)
-    val afterOne = Search.statsCacheSize(sess)
+    val afterOne = Artifacts.entryCount(sess)
     val terms = corpus.values.flatten.toSeq.distinct.sorted
     val queries = terms.combinations(2).map(_.mkString(" ")).take(100).toSeq
     assert(queries.length == 100, "fixture regression: vocabulary too small")
     queries.foreach(top)
-    assert(Search.statsCacheSize(sess) == afterOne)
+    assert(Artifacts.entryCount(sess) == afterOne)
     assert(top(Search.QueryText) == first)
     assert(first.nonEmpty)
     // and a fresh session's answer equals the shared session's
@@ -356,7 +356,7 @@ class SearchSpec extends SparkSpec {
     }
     spark.createDataFrame(java.util.Arrays.asList(flipped: _*), old.schema)
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    Search.invalidateCaches(sess)
+    Artifacts.invalidate(sess)
     val after = hybrid(sess, tmp, Search.QueryText, Search.RrfQueryVec)
     val vectors = Tables.embeddings(spark, tmp).select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
