@@ -30,7 +30,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    plus its leaves (file roots, literal rows, RDD ids — the plan string
   *    alone prints neither paths nor rows); version = (path, size, mtime)
   *    of the files its file index has already listed;
-  *  - [[table]]: name = the qualified path of `dir/<table>.parquet`;
+  *  - [[files]]: name = a qualified path (a corpus table
+  *    `dir/<table>.parquet` through [[table]], an index model sidecar);
   *    version = one FileSystem listing of it (never `spark.read`, which
   *    would run a schema-inference job);
   *  - [[manifested]]: name = an index artifact path; version = the
@@ -99,14 +100,21 @@ object Artifacts {
     * such as fits with different k.
     */
   private[graft] def table[A](spark: SparkSession, kind: String, dir: String,
-      name: String, variant: String = "")(build: => A): A = {
-    val p = new Path(s"$dir/$name.parquet")
+      name: String, variant: String = "")(build: => A): A =
+    files(spark, kind, s"$dir/$name.parquet", variant)(build)
+
+  /** The `build` derived from the files at `path` (a file, or a directory
+    * listed one level deep), at most `cap` entries of `kind` per session.
+    */
+  private[graft] def files[A](spark: SparkSession, kind: String, path: String,
+      variant: String = "", cap: Int = Int.MaxValue)(build: => A): A = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val path = fs.makeQualified(p)
+    val qualified = fs.makeQualified(p)
     def listing(): String =
-      try listed(fs.listStatus(path).toSeq)
+      try listed(fs.listStatus(qualified).toSeq)
       catch { case _: java.io.FileNotFoundException => "" } // the build reports it
-    cached(spark, kind, s"$path\u0000$variant", listing(), Int.MaxValue, _ == listing()) {
+    cached(spark, kind, s"$qualified\u0000$variant", listing(), cap, _ == listing()) {
       build match {
         case df: Dataset[_] => materialize(spark, df.toDF(), kind).asInstanceOf[A]
         case v => v

@@ -4,8 +4,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -91,6 +93,10 @@ object IndexStore {
 
   private val VersionFmt = DateTimeFormatter.ofPattern("yyyyMMdd-HHmmss")
 
+  /** The dir of the latest index or of one version. */
+  private def dirOf(root: String, name: String, version: Option[String]): String =
+    version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
+
   // Manifest/meta/versions go through the Hadoop FileSystem resolved from
   // the index path itself, so the sidecar files land on the same store the
   // vectors do (HDFS/S3/local alike) — java.nio would silently write them
@@ -136,18 +142,12 @@ object IndexStore {
             sources: Option[DataFrame] = None,
             measuredRecall: Double = -1.0): Manifest = {
     val spark = vectors.sparkSession
-    // model sidecars written beside the vectors: centroids for every ivf*
-    // backend (a loader — and [[append]] — must be able to re-assign
-    // without the original fit inputs), codebooks for ivfpq
-    var centSidecar: Option[DataFrame] = None
-    var cbSidecar: Option[DataFrame] = None
-    // the fitted centroid length doubles as the manifest dim for every
-    // ivf* backend — no extra job over the input lineage
-    var dimFromFit: Option[Int] = None
+    // the fitted models, written as sidecars beside the vectors: centroids
+    // for every ivf* backend (a loader — and [[append]] — must be able to
+    // re-assign without the original fit inputs), codebooks for ivfpq
+    var fitted: Option[Array[Array[Double]]] = None
+    var books: Option[Array[Array[Array[Double]]]] = None
     import spark.implicits._
-    def centsDf(cents: Array[Array[Double]]): DataFrame =
-      cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
     val rows = docs match {
       case Some(d) =>
         vectors.drop("text").join(d.select(col("id"), col("text")), Seq("id"), "left")
@@ -160,8 +160,7 @@ object IndexStore {
         // iterated over to get its cells.
         val cents = graft.operators.IvfModel.fitFromDf(
           vectors.select(col("id"), col("vec")), "id", "vec", params.nlist)
-        centSidecar = Some(centsDf(cents))
-        dimFromFit = cents.headOption.map(_.length)
+        fitted = Some(cents)
         VectorOps.assignCells(
             rows.select(col("id"), col("vec").as("embedding"), col("text")), cents)
           .select(col("id"), col("embedding").as("vec"),
@@ -173,8 +172,7 @@ object IndexStore {
         // proportional nlist (quality pinned by ivf_hier_agreement).
         val cents = graft.operators.IvfModel.fitFromDf(
           vectors.select(col("id"), col("vec")), "id", "vec", params.nlist)
-        centSidecar = Some(centsDf(cents))
-        dimFromFit = cents.headOption.map(_.length)
+        fitted = Some(cents)
         val (supers, memberOf) = graft.operators.IvfModel.superModel(cents)
         // the build-side super dial: the persisted tuning when set, else
         // the nlist rule (the same resolution a dialed serving job makes)
@@ -198,12 +196,8 @@ object IndexStore {
         val cents = graft.operators.IvfModel.fitFromDf(
           vectors.select(col("id"), col("vec")), "id", "vec", params.nlist)
         val cb = graft.operators.PqModel.fitFromDf(vectors, "id", "vec")
-        centSidecar = Some(centsDf(cents))
-        dimFromFit = cents.headOption.map(_.length)
-        cbSidecar = Some(
-          cb.zipWithIndex.flatMap { case (book, m) =>
-            book.zipWithIndex.map { case (c, code) => (m, code, c.toSeq) }
-          }.toSeq.toDF("m", "code", "cent"))
+        fitted = Some(cents)
+        books = Some(cb)
         rows.select(col("id"),
           element_at(graft.functions.IvfProbes.column(col("vec"), cents, 1), 1)("cell")
             .cast("int").as("cell"),
@@ -228,16 +222,20 @@ object IndexStore {
     // FILE copy of what was just written (r14: the old two-target write
     // loop re-ran the whole corpus pass — and its shuffle — per target,
     // doubling the dominant stage of every build). The manifest count is
-    // read back from the written parquet FOOTERS (a metadata-only count —
-    // no row is decoded and the corpus pass never re-runs; the r14 form
-    // still paid a full second pass for `assigned.count()` before the
-    // write).
+    // a Spark count over the written files: parquet answers it from the
+    // row-group metadata, so no row is decoded and the corpus pass never
+    // re-runs, and the footers are read by the executors — a driver-side
+    // footer walk would be one read per file at 100 TB.
     writeVectors(assigned, backend, params.nlist, s"$vDir/vectors")
     locally {
-      centSidecar.foreach(
-        _.coalesce(1).write.mode("overwrite").parquet(s"$vDir/centroids"))
-      cbSidecar.foreach(
-        _.coalesce(1).write.mode("overwrite").parquet(s"$vDir/codebooks"))
+      fitted.foreach(cents =>
+        cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "centroid")
+          .coalesce(1).write.mode("overwrite").parquet(s"$vDir/centroids"))
+      books.foreach(cb =>
+        cb.zipWithIndex.flatMap { case (book, m) =>
+          book.zipWithIndex.map { case (c, code) => (m, code, c.toSeq) }
+        }.toSeq.toDF("m", "code", "cent")
+          .coalesce(1).write.mode("overwrite").parquet(s"$vDir/codebooks"))
       // per-doc provenance, the reference's `<index>.sources.json`
       // (answerless_search.py:60-71,104-111): (doc_id, origin_*, ...)
       sources.foreach(_.write.mode("overwrite").parquet(s"$vDir/sources"))
@@ -247,7 +245,7 @@ object IndexStore {
     // dim: the fitted centroid length for ivf* (already driver-side);
     // flat reads one row back from the written file — either way the
     // input lineage is never re-executed
-    val dim = dimFromFit.getOrElse(
+    val dim = fitted.flatMap(_.headOption).map(_.length).getOrElse(
       written.select(size(col("vec"))).first().getInt(0))
     val createdAt = ZonedDateTime.now(ZoneOffset.UTC)
       .format(DateTimeFormatter.ISO_LOCAL_DATE_TIME).take(19)
@@ -257,6 +255,10 @@ object IndexStore {
     val latestDir = s"$root/$name/latest"
     for (ds <- Seq("vectors", "centroids", "codebooks", "sources"))
       copyDirOver(s"$vDir/$ds", s"$latestDir/$ds")
+    // the fits are already on the driver: seed their sidecar entries, so
+    // the next search or append reads no sidecar
+    fitted.foreach(cents => sidecar(spark, latestDir, "centroids")(_ => cents))
+    books.foreach(cb => sidecar(spark, latestDir, "codebooks")(_ => cb))
     writeString(s"$latestDir/manifest.json", manifest.toJson)
     val meta =
       s"""{"version": "$version", "created_at": "$createdAt", "embed_model": "$model",
@@ -351,48 +353,54 @@ object IndexStore {
     }
   }
 
-  /** Copy every data file under `src` into `dst` at its relative path —
-    * the file-level form of a `mode("append")` write, used to land an
-    * already-written delta into `latest` without recomputing its lineage.
-    * Spark part-file names carry a job-unique id, so copied names cannot
-    * collide with resident files.
+  /** Copy `files` (from [[dataFilesUnder]]) into `dst` at their relative
+    * paths — the file-level form of a `mode("append")` write, used to land
+    * an already-written delta into `latest` without recomputing its
+    * lineage. Spark part-file names carry a job-unique id, so copied names
+    * cannot collide with resident files. The copies run in parallel on the
+    * common fork-join pool: each is a few store round trips (an object
+    * store's are network calls), and nothing orders them.
     */
-  private def mergeDirInto(src: String, dst: String): Unit = {
-    val s = new HPath(src)
-    val fs = s.getFileSystem(hadoopConf)
-    val dfs = new HPath(dst).getFileSystem(hadoopConf)
-    val it = fs.listFiles(s, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = f.getPath.toString.stripPrefix(
-        fs.makeQualified(s).toString).stripPrefix("/")
-      val base = f.getPath.getName
-      if (!base.startsWith("_") && !base.startsWith(".")) {
-        val d = new HPath(s"$dst/$rel")
-        dfs.mkdirs(d.getParent)
-        org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, dfs, d,
-          false, hadoopConf)
-      }
+  private def mergeInto(files: Seq[(String, FileStatus)], dst: String): Unit = {
+    val conf = hadoopConf
+    val dfs = new HPath(dst).getFileSystem(conf)
+    files.asJava.parallelStream().forEach { case (rel, f) =>
+      org.apache.hadoop.fs.FileUtil.copy(f.getPath.getFileSystem(conf), f, dfs,
+        new HPath(s"$dst/$rel"), false, true, conf)
     }
   }
 
-  /** Data-file paths under `dir`, relative, sorted — the same walk and
-    * underscore/dot skip rule as [[mergeDirInto]], so a merge journal
-    * lists exactly the files the merge will copy.
+  /** The data files under `dir` as (relative path, status), sorted by
+    * path: one `listStatus` per directory, skipping underscore and dot
+    * names as parquet readers do. The one walk of an appended delta: its
+    * merge journal, its merge and its row count all read this list.
     */
-  private def dataFilesUnder(dir: String): Seq[String] = {
-    val s = new HPath(dir)
-    val fs = s.getFileSystem(hadoopConf)
-    val q = fs.makeQualified(s).toString
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(s, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val base = f.getPath.getName
-      if (!base.startsWith("_") && !base.startsWith("."))
-        out += f.getPath.toString.stripPrefix(q).stripPrefix("/")
-    }
-    out.sorted.toSeq
+  private def dataFilesUnder(dir: String): Seq[(String, FileStatus)] = {
+    val top = new HPath(dir)
+    val fs = top.getFileSystem(hadoopConf)
+    def walk(p: HPath, prefix: String): Seq[(String, FileStatus)] =
+      fs.listStatus(p).toSeq.flatMap { f =>
+        val base = f.getPath.getName
+        if (base.startsWith("_") || base.startsWith(".")) Nil
+        else if (f.isDirectory) walk(f.getPath, s"$prefix$base/")
+        else Seq(s"$prefix$base" -> f)
+      }
+    walk(top, "").sortBy(_._1)
+  }
+
+  /** Rows in parquet `files`, summed from their footers: metadata only, on
+    * the driver. The read options come from the session's Hadoop conf,
+    * built once: `ParquetFileReader.open` builds default options per file,
+    * ~8 ms a file against ~0.3 ms on a 4-core host.
+    */
+  private def footerRows(files: Seq[FileStatus]): Long = {
+    val conf = hadoopConf
+    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    files.map { f =>
+      val r = new org.apache.parquet.hadoop.ParquetFileReader(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf), opts)
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   /** The append merge journal lives INSIDE latest/vectors under an
@@ -526,7 +534,8 @@ object IndexStore {
     // roll back any crashed file-merge FIRST, so the manifest read below —
     // and everything this append builds on it — sees a consistent artifact
     healPendingMerge(root, name)
-    val old = manifest(root, name)
+    val preManifest = manifestJson(root, name)
+    val old = parseManifest(preManifest)
     val parent = versions(root, name).lastOption.getOrElse("none")
     val rows = withText(newVectors)
     val assigned = old.backend match {
@@ -556,10 +565,20 @@ object IndexStore {
 
     // same bounded-files-per-cell layout discipline as build(); the
     // delta's lineage (assignment + layout shuffle) runs ONCE, into the
-    // version dir, and `added` is read back from the written footers
-    // (metadata-only — no second assignment pass).
+    // version dir. Its files are listed once, and `added` is the sum of
+    // their parquet footers' row counts, read on the driver: a delta is
+    // a few files, so this costs no Spark job and no second assignment
+    // pass.
     writeVectors(assigned, old.backend, old.params.nlist, s"$vDir/vectors")
-    val added = spark.read.parquet(s"$vDir/vectors").count()
+    val delta = dataFilesUnder(s"$vDir/vectors")
+    if (delta.isEmpty) {
+      // a cell-partitioned write of 0 rows leaves no data file, so the
+      // version could never be loaded (a flat write leaves one empty file)
+      new HPath(vDir).getFileSystem(hadoopConf).delete(new HPath(vDir), true)
+      throw new IllegalArgumentException(
+        s"append to $name: the delta has no rows, and a ${old.backend} version needs a data file")
+    }
+    val added = footerRows(delta.map(_._2))
     val createdAt = ZonedDateTime.now(ZoneOffset.UTC)
       .format(DateTimeFormatter.ISO_LOCAL_DATE_TIME).take(19)
     val updated = old.copy(count = old.count + added, createdAt = createdAt)
@@ -571,19 +590,16 @@ object IndexStore {
     // either the pre-append state (after [[healPendingMerge]] rolls the
     // journal back on the next append) or the fully-landed append — never
     // silent duplicate rows from a re-run of a half-merged delta.
-    val preManifest = manifestJson(root, name)
     writeString(mergeJournalPath(latest), mergeJournalJson(
-      version, preManifest, dataFilesUnder(s"$vDir/vectors")))
-    mergeDirInto(s"$vDir/vectors", s"$latest/vectors")
+      version, preManifest, delta.map(_._1)))
+    mergeInto(delta, s"$latest/vectors")
     // carry the model sidecars into the version dir so it is servable on
-    // its own (they are tiny)
-    val fs = new HPath(latest).getFileSystem(hadoopConf)
-    for (side <- Seq("centroids", "codebooks")
-         if fs.exists(new HPath(s"$latest/$side")))
-      spark.read.parquet(s"$latest/$side")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vDir/$side")
+    // its own (a file copy: they are tiny)
+    for (side <- Seq("centroids", "codebooks"))
+      copyDirOver(s"$latest/$side", s"$vDir/$side")
     writeString(s"$latest/manifest.json", updated.toJson)
-    fs.delete(new HPath(mergeJournalPath(latest)), false)
+    val jp = new HPath(mergeJournalPath(latest))
+    jp.getFileSystem(hadoopConf).delete(jp, false)
     // The version dir holds ONLY the delta, so its manifest must describe
     // the delta (count == rows in the dir — `load(version)` then agrees
     // with its own manifest), flagged `delta: true` with the parent and
@@ -610,7 +626,7 @@ object IndexStore {
     */
   def load(spark: SparkSession, root: String, name: String,
            version: Option[String] = None): DataFrame = {
-    val dir = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
+    val dir = dirOf(root, name, version)
     spark.read.parquet(s"$dir/vectors")
   }
 
@@ -658,16 +674,16 @@ object IndexStore {
   def loadSources(spark: SparkSession, root: String, name: String,
                   version: Option[String] = None,
                   manifestText: Option[String] = None): Option[DataFrame] = {
-    val dir = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
+    val dir = dirOf(root, name, version)
     val p = new HPath(s"$dir/sources")
     if (p.getFileSystem(hadoopConf).exists(p))
-      Some(cachedArtifact(spark, root, name, version, "sources", Serving,
-        manifestText)(spark.read.parquet(p.toString)))
+      Some(serving(spark, root, name, version, "sources", manifestText)(
+        spark.read.parquet(p.toString)))
     else None
   }
 
   def manifestJson(root: String, name: String, version: Option[String] = None): String = {
-    val dir = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
+    val dir = dirOf(root, name, version)
     readString(s"$dir/manifest.json")
   }
 
@@ -760,41 +776,46 @@ object IndexStore {
     index.filter(col("cell").isin(cells: _*))
 
   /** `load` of one index artifact (`sub` of the version dir) through the
-    * session's [[graft.Artifacts]] store, keyed by the artifact path with
-    * the manifest text as its snapshot version: a rebuild or [[append]]
-    * rewrites the manifest (new createdAt/count), so the next read misses
-    * and replaces the entry. `manifestText` lets a caller that already read
-    * the manifest THIS query skip the re-read — pass only a same-query read.
-    * Manifest-less dirs (streaming-ingest targets) bypass the store, so
-    * their growing file set stays visible per query. The manifest is
-    * re-read after a miss's load, and a rebuild in between caches nothing.
-    * Known limit: two rebuilds of the same name with identical shape inside
-    * ONE second produce byte-identical manifests (created_at is
-    * second-resolution) — unreachable for any real build.
+    * session's [[graft.Artifacts]] store (kind "serving", 32 entries per
+    * session), keyed by the artifact path with the manifest text as its
+    * snapshot version: a rebuild or [[append]] rewrites the manifest (new
+    * createdAt/count), so the next read misses and replaces the entry.
+    * `manifestText` lets a caller that already read the manifest THIS
+    * query skip the re-read — pass only a same-query read. Manifest-less
+    * dirs (streaming-ingest targets) bypass the store, so their growing
+    * file set stays visible per query. The manifest is re-read after a
+    * miss's load, and a rebuild in between caches nothing. Known limit:
+    * two rebuilds of the same name with identical shape inside ONE second
+    * produce byte-identical manifests (created_at is second-resolution) —
+    * unreachable for any real build.
     *
-    * Two kinds: [[Sidecar]] (centroid/codebook arrays, counted against the
-    * store's driver byte bound — "tiny" only holds at small nlist) and
-    * [[Serving]] (LAZY scans: a `spark.read.parquet` builds a fresh file
-    * index per call, and over a cell-partitioned index that partition-
+    * The entries are LAZY scans: a `spark.read.parquet` builds a fresh
+    * file index per call, and over a cell-partitioned index that partition-
     * directory listing out-cost the probed scan itself at 63k chunks —
     * PROBED_SEARCH: 0.52× before; the entry pins the resolved listing, no
-    * data).
+    * data.
     */
-  private def cachedArtifact[A](spark: SparkSession, root: String, name: String,
-      version: Option[String], sub: String, kind: (String, Int),
-      manifestText: Option[String])(load: => A): A = {
+  private def serving[A](spark: SparkSession, root: String, name: String,
+      version: Option[String], sub: String, manifestText: Option[String])(load: => A): A = {
     def read() = scala.util.Try(manifestJson(root, name, version)).toOption
     manifestText.orElse(read()) match {
       case None => load
       case Some(mj) =>
-        val path = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
-        graft.Artifacts.manifested(spark, kind._1, s"$path/$sub", mj, kind._2, read())(load)
+        graft.Artifacts.manifested(spark, "serving", s"${dirOf(root, name, version)}/$sub",
+          mj, 32, read())(load)
     }
   }
 
-  // (store kind, entries per session)
-  private val Sidecar = ("sidecar", 16)
-  private val Serving = ("serving", 32)
+  /** The model sidecar `dir/<sub>` decoded by `read`, through the session's
+    * [[graft.Artifacts]] store (kind "sidecar", 16 entries per session,
+    * counted against its driver byte bound: "tiny" only holds at small
+    * nlist), keyed by the sidecar's OWN files: [[append]] never rewrites
+    * them, so no append evicts the entry, and a rebuild writes new part
+    * files, so the next read misses. [[build]] seeds the entry from the
+    * fit it holds.
+    */
+  private def sidecar[A](spark: SparkSession, dir: String, sub: String)(read: String => A): A =
+    graft.Artifacts.files(spark, "sidecar", s"$dir/$sub", cap = 16)(read(s"$dir/$sub"))
 
   /** [[load]] through the serving cache: repeat searches of one artifact
     * reuse the resolved file listing instead of re-listing the cell
@@ -809,26 +830,26 @@ object IndexStore {
   def loadServing(spark: SparkSession, root: String, name: String,
                   version: Option[String] = None,
                   manifestText: Option[String] = None): DataFrame =
-    cachedArtifact(spark, root, name, version, "vectors", Serving, manifestText)(
+    serving(spark, root, name, version, "vectors", manifestText)(
       load(spark, root, name, version))
 
-  /** The coarse centroids persisted by an ivfpq build, cell order. */
+  /** The coarse centroids persisted by an ivf* build, cell order. The
+    * entry is keyed by the sidecar's files, so `manifestText` is not read.
+    */
   def loadCentroids(spark: SparkSession, root: String, name: String,
                     version: Option[String] = None,
                     manifestText: Option[String] = None): Array[Array[Double]] =
-    cachedArtifact(spark, root, name, version, "centroids", Sidecar, manifestText) {
-      val dir = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
-      spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
-        .map(_.getSeq[Double](1).toArray)
-    }
+    sidecar(spark, dirOf(root, name, version), "centroids")(
+      spark.read.parquet(_).orderBy("cell").collect().map(_.getSeq[Double](1).toArray))
 
-  /** The PQ codebooks persisted by an ivfpq build, (m, code) order. */
+  /** The PQ codebooks persisted by an ivfpq build, (m, code) order. The
+    * entry is keyed by the sidecar's files, so `manifestText` is not read.
+    */
   def loadCodebooks(spark: SparkSession, root: String, name: String,
                     version: Option[String] = None,
                     manifestText: Option[String] = None): Array[Array[Array[Double]]] =
-    cachedArtifact(spark, root, name, version, "codebooks", Sidecar, manifestText) {
-      val dir = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
-      val rows = spark.read.parquet(s"$dir/codebooks").orderBy("m", "code").collect()
+    sidecar(spark, dirOf(root, name, version), "codebooks") { p =>
+      val rows = spark.read.parquet(p).orderBy("m", "code").collect()
         .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
       rows.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2)).toArray
     }
@@ -860,11 +881,11 @@ object IndexStore {
   private[graft] def adcRanked(spark: SparkSession, root: String, name: String,
                                queries: DataFrame, k: Int, nprobe: Int,
                                version: Option[String]): DataFrame = {
-    // ONE manifest read per call: the text keys every cache below and the
-    // parsed form resolves the serving dial
+    // ONE manifest read per call: the text keys the serving scan and the
+    // parsed form resolves the serving dial (the sidecars key on their files)
     val mj = scala.util.Try(manifestJson(root, name, version)).toOption
-    val cents = loadCentroids(spark, root, name, version, mj)
-    val cb = loadCodebooks(spark, root, name, version, mj)
+    val cents = loadCentroids(spark, root, name, version)
+    val cb = loadCodebooks(spark, root, name, version)
     val np = if (nprobe >= 1) nprobe
              else mj.flatMap(j => scala.util.Try(parseManifest(j)).toOption)
                .map(_.servingProbes).filter(_ >= 1).getOrElse(VectorOps.NProbe)
@@ -902,7 +923,7 @@ object IndexStore {
     */
   def export(root: String, name: String, outPath: String,
              version: Option[String] = None): Seq[String] = {
-    val dir = version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
+    val dir = dirOf(root, name, version)
     val prefix = version.fold(s"${name}_latest")(v => s"${name}_v$v")
     val p = new HPath(dir)
     val fs = p.getFileSystem(hadoopConf)

@@ -82,12 +82,17 @@ object VectorOps {
 
   /** [[topK]] for ONE query vector of `e` (an [[embWithNorm]] frame) as a
     * local frame: a broadcast of the query row and a TakeOrdered at the plan
-    * root, two jobs, no exchange. The query joins as data, not literals, so
-    * the generated code is the same for every query vector.
+    * root, two jobs, no exchange. The query joins as data, not literals, and
+    * its id is matched against a one-element array: generated code holds a
+    * non-primitive literal as an object reference, where a long literal is
+    * compiled into the source. So the generated code is the same for every
+    * query vector. (A one-row relation joined to `e` would cost a third job,
+    * its own broadcast.)
     */
   def topKOf(e: DataFrame, queryVecId: Long, k: Int, metric: String): DataFrame =
     graft.functions.Ranking.topKLocal(
-        scoredAgainst(e, e.filter(col("vec_id") === queryVecId), metric)
+        scoredAgainst(e, e.filter(array_contains(typedLit(Seq(queryVecId)), col("vec_id"))),
+            metric)
           .select(col("vec_id").as("neighbor_id"), col("score")),
         k, col("score").desc, col("neighbor_id"))
       .select(col("rk"), col("neighbor_id"), col("score"))

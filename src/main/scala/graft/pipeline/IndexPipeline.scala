@@ -277,7 +277,7 @@ object IndexPipeline {
         // full scan — correct, just unpruned.
         val index = IndexStore.loadServing(spark, root, name, version, mj)
         scoreTopK(scala.util.Try(
-            IndexStore.loadCentroids(spark, root, name, version, mj)).toOption
+            IndexStore.loadCentroids(spark, root, name, version)).toOption
           .filter(_.nonEmpty) match {
           case Some(cents) =>
             val np = if (cfg.nprobe >= 1) cfg.nprobe

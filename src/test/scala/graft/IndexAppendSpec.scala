@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.index.IndexStore
@@ -202,6 +204,81 @@ class IndexAppendSpec extends SparkSpec {
       .forall(id => !ids.contains(id)), "rolled-back rows still visible")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
       s"$root/idx/latest/vectors/_graft_merge.json")), "journal not cleared")
+  }
+
+  test("append counts its delta from the written files: manifest, load and the delta version agree") {
+    spark.conf.set("graft.index.maxRowsPerCellFile", "2")
+    try for (backend <- Seq("flat", "ivf")) {
+      val root = java.nio.file.Files.createTempDirectory(s"graft_app_count_$backend").toString
+      val a = embs.filter(col("id") < 150)
+      val b = embs.filter(col("id") >= 150 && col("id") < 190)
+      IndexStore.build(a, root, "idx", backend)
+      val m = IndexStore.append(b, root, "idx")
+      val v = IndexStore.versions(root, "idx").last
+      val parts = {
+        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/idx/versions/$v/vectors"))
+        try s.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+        finally s.close()
+      }
+      // the ceiling splits the delta into many files, so the count sums many footers
+      assert(parts >= b.count() / 2, s"$backend: $parts delta files")
+      val want = a.count() + b.count()
+      assert(m.count == want)
+      assert(IndexStore.manifest(root, "idx").count == want)
+      assert(IndexStore.load(spark, root, "idx").count() == want)
+      assert(IndexStore.manifest(root, "idx", Some(v)).count == b.count())
+      assert(IndexStore.load(spark, root, "idx", Some(v)).count() == b.count())
+      assert(IndexStore.versionMeta(root, "idx", v).get.contains(s""""appended": ${b.count()}"""))
+    } finally spark.conf.unset("graft.index.maxRowsPerCellFile")
+  }
+
+  test("a 0-row delta: flat records an empty version, a cell-partitioned index refuses it") {
+    for (backend <- Seq("flat", "ivf", "ivfpq")) {
+      val root = java.nio.file.Files.createTempDirectory(s"graft_app_zero_$backend").toString
+      val a = embs.filter(col("id") < 150)
+      IndexStore.build(a, root, "idx", backend)
+      val n = a.count()
+      val empty = embs.filter(col("id") < 0)
+      if (backend == "flat") {
+        assert(IndexStore.append(empty, root, "idx").count == n)
+        val v = IndexStore.versions(root, "idx").last
+        assert(IndexStore.manifest(root, "idx", Some(v)).count == 0)
+        assert(IndexStore.load(spark, root, "idx", Some(v)).count() == 0)
+      } else intercept[Exception](IndexStore.append(empty, root, "idx"))
+      assert(IndexStore.manifest(root, "idx").count == n, backend)
+      assert(IndexStore.load(spark, root, "idx").count() == n, backend)
+      // the next append lands whole
+      val b = embs.filter(col("id") >= 150 && col("id") < 160)
+      val m = IndexStore.append(b, root, "idx")
+      assert(m.count == n + b.count(), backend)
+      assert(IndexStore.load(spark, root, "idx").count() == m.count, backend)
+    }
+  }
+
+  test("a small-delta append after a build and a search runs at most 3 Spark jobs") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_app_jobs").toString
+    val cfg = IndexPipeline.Config(name = "idx", backend = "ivf")
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+      .orderBy(col("doc_id")).limit(200)
+    IndexPipeline.build(docs, root, cfg)
+    val probe = IndexPipeline.chunked(docs.limit(1), cfg).head().getAs[String]("text")
+    assert(IndexPipeline.search(spark, root, "idx", probe, 5, cfg).collect().length == 5)
+    // a delta of several partitions, embedded before the counted window
+    def delta(first: Long) = IndexPipeline.vectorize(
+        (0L until 6L).map(i => (first + i, s"fresh delta document $i about zeppelin fjords " * 3))
+          .toDF("doc_id", "text"), cfg)
+      .repartition(3).localCheckpoint()
+    IndexStore.append(delta(91000000L), root, "idx")
+    val second = delta(92000000L)
+    assert(second.rdd.getNumPartitions > 1)
+    val before = IndexStore.manifest(root, "idx").count
+    val (m, jobs, _) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+      IndexStore.append(second, root, "idx")
+    }
+    assert(m.count == before + second.count())
+    assert(jobs <= 3, s"a small-delta append ran $jobs Spark jobs")
   }
 
   /** Build 200 corpus docs on `backend`, append one fresh doc through

@@ -185,6 +185,67 @@ class IndexStoreSpec extends SparkSpec {
     assert(!(second eq first), "rebuild must refresh the sidecar cache")
   }
 
+  test("model sidecars stay fresh with no invalidate: rebuilds refresh, appends keep the build's arrays") {
+    // served sidecars must equal what is on disk
+    def onDisk(root: String, name: String, side: String): Seq[Seq[Double]] = {
+      val df = spark.read.parquet(s"$root/$name/latest/$side")
+      if (side == "centroids") df.orderBy("cell").collect().map(_.getSeq[Double](1)).toSeq
+      else df.orderBy("m", "code").collect().map(_.getSeq[Double](2)).toSeq
+    }
+    def renamed(df: org.apache.spark.sql.DataFrame, tag: String) =
+      df.withColumn("id", concat(lit(tag), col("id")))
+    for (backend <- Seq("ivf", "ivfpq")) {
+      val root = Files.createTempDirectory("graft-idx").toString
+      IndexStore.build(vectors.limit(60), root, "fr", backend,
+        params = IndexStore.Params(nlist = 4, nprobe = 2))
+      assert(IndexStore.loadCentroids(spark, root, "fr").length == 4)
+      // the same name rebuilt over other rows with another nlist
+      IndexStore.build(vectors, root, "fr", backend,
+        params = IndexStore.Params(nlist = 6, nprobe = 2))
+      val cents = IndexStore.loadCentroids(spark, root, "fr")
+      assert(cents.length == 6, s"$backend: stale centroids after a rebuild")
+      assert(cents.map(_.toSeq).toSeq == onDisk(root, "fr", "centroids"))
+      // appends never rewrite the sidecars: the build's arrays stay served
+      IndexStore.append(renamed(vectors.limit(5), "a"), root, "fr")
+      IndexStore.append(renamed(vectors.limit(7), "b"), root, "fr")
+      assert(IndexStore.loadCentroids(spark, root, "fr") eq cents,
+        s"$backend: an append evicted the centroid entry")
+      if (backend == "ivfpq") {
+        val books = IndexStore.loadCodebooks(spark, root, "fr")
+        assert(books.flatten.map(_.toSeq).toSeq == onDisk(root, "fr", "codebooks"))
+        IndexStore.append(renamed(vectors.limit(3), "c"), root, "fr")
+        assert(IndexStore.loadCodebooks(spark, root, "fr") eq books,
+          "an append evicted the codebook entry")
+        IndexStore.build(vectors.limit(80), root, "fr", backend,
+          params = IndexStore.Params(nlist = 6, nprobe = 2))
+        val rebuilt = IndexStore.loadCodebooks(spark, root, "fr")
+        assert(!(rebuilt eq books))
+        assert(rebuilt.flatten.map(_.toSeq).toSeq == onDisk(root, "fr", "codebooks"))
+      }
+    }
+  }
+
+  test("a search right after a build reads no model sidecar") {
+    for (backend <- Seq("ivf", "ivfpq")) {
+      val root = Files.createTempDirectory("graft-idx").toString
+      IndexStore.build(vectors, root, "nb", backend,
+        params = IndexStore.Params(nlist = 4, nprobe = 2))
+      val mj = IndexStore.manifestJson(root, "nb")
+      val (cents, jobs, _) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+        IndexStore.loadCentroids(spark, root, "nb", None, Some(mj))
+      }
+      assert(cents.length == 4)
+      assert(jobs == 0, s"$backend: loadCentroids right after a build ran $jobs jobs")
+      if (backend == "ivfpq") {
+        val (books, cbJobs, _) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+          IndexStore.loadCodebooks(spark, root, "nb", None, Some(mj))
+        }
+        assert(books.nonEmpty)
+        assert(cbJobs == 0, s"loadCodebooks right after a build ran $cbJobs jobs")
+      }
+    }
+  }
+
   test("loadServing reuses one lazy scan per artifact and sees appends") {
     val root = Files.createTempDirectory("graft-idx").toString
     IndexStore.build(vectors, root, "lv", "ivf",

@@ -318,6 +318,24 @@ class SearchSpec extends SparkSpec {
       Seq(("rk", LongType), ("id", LongType), ("rrf_score", DoubleType)))
   }
 
+  test("a cosine list for a query id not seen before compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val e = graft.operators.VectorOps.embWithNorm(spark, dir)
+    val ids = e.select("vec_id").orderBy("vec_id").limit(8).collect().map(_.getLong(0))
+    def list(id: Long) = graft.operators.VectorOps.topKOf(e, id, Search.RrfListLen, "cos")
+      .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    ids.take(3).foreach(list) // warm-up
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val lists = ids.drop(3).map(id => id -> list(id))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "an unseen query id compiled new code")
+    val vecs = Tables.embeddings(spark, dir).select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
+    lists.foreach { case (id, got) =>
+      assert(got.map(_._1) == SearchSpec.cosineTop(vecs, id, Search.RrfListLen))
+    }
+  }
+
   test("a warm hybrid query runs at most 4 Spark jobs and shuffles nothing") {
     // a corpus of several files, so every cached frame has several
     // partitions (one-partition plans never shuffle)
