@@ -1,31 +1,26 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graft.RankedTopKStrategy
 
 /** Distributed global top-k with dense 1..k ranks.
   *
   * `row_number() OVER (ORDER BY …)` forces the WHOLE frame through one
-  * task; `orderBy(...).limit(k)` plans as TakeOrdered (per-partition heaps
-  * merged at the driver), after which ranking the k survivors is trivial.
-  * With a deterministic total order the two produce identical rows — this
-  * is the only form that survives a corpus-sized input.
+  * task. [[topK]] instead keeps each partition's top k in a bounded heap
+  * and merges the heaps, then numbers the k survivors: with a
+  * deterministic total order the rows are those of the window form, and
+  * only ≤ k rows per partition ever leave their task.
   */
 object Ranking {
-  def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
-    df.orderBy(order: _*).limit(k)
-      .withColumn("rk", row_number().over(Window.orderBy(order: _*)).cast("long"))
 
-  /** [[topK]]'s rows, computed now as a local frame. With the TakeOrdered
-    * at the plan root the per-partition heaps merge on the driver, one job
-    * and no shuffle; under [[topK]]'s window they are shuffled first.
+  /** `df`'s first `k` rows in `order`, with a non-null long `rk` = 1..k
+    * appended. Lazy: a plan node (`RankedTopK`), planned by a strategy
+    * this call adds to `df`'s session on first use. Collected at the plan
+    * root, alone or under a projection, it runs as one stage with no
+    * exchange: the heaps merge on the driver and the projection runs on
+    * the k survivors. Below a join, union or aggregate the survivors are
+    * shuffled into one partition and merged there.
     */
-  def topKLocal(df: DataFrame, k: Int, order: Column*): DataFrame = {
-    val rows = df.orderBy(order: _*).limit(k).collect().zipWithIndex
-      .map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      df.schema.add("rk", LongType, nullable = false))
-  }
+  def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
+    RankedTopKStrategy.topK(df, k, order)
 }

@@ -871,15 +871,22 @@ object IndexStore {
                 queries: DataFrame, k: Int,
                 nprobe: Int = -1,
                 version: Option[String] = None): DataFrame =
-    adcRanked(spark, root, name, queries, k, nprobe, version)
-      .select(col("q_id"), col("rk"), col("neighbor_id"), col("score"))
+    adcScored(spark, root, name, queries, nprobe, version)
+      .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))))
+      .filter(col("rk") <= k)
+      .select(col("q_id"), col("rk").cast("long").as("rk"),
+        col("id").as("neighbor_id"), col("score"))
 
-  /** [[adcSearch]] with each hit's chunk `text` carried from the probed
-    * rows (null when the rows have none) — the ivfpq text search's
-    * previews, read in the same pruned scan that scores the codes.
+  /** [[adcSearch]]'s rows before ranking: `(q_id, id, score, text)` for
+    * every code row of each query's probed cells, with the chunk `text`
+    * read in the same pruned scan (null when the rows have none). The
+    * ivfpq text search ranks its one query's rows with
+    * [[graft.functions.Ranking.topK]]; [[adcSearch]] ranks per query.
     */
-  private[graft] def adcRanked(spark: SparkSession, root: String, name: String,
-                               queries: DataFrame, k: Int, nprobe: Int,
+  private[graft] def adcScored(spark: SparkSession, root: String, name: String,
+                               queries: DataFrame, nprobe: Int,
                                version: Option[String]): DataFrame = {
     // ONE manifest read per call: the text keys the serving scan and the
     // parsed form resolves the serving dial (the sidecars key on their files)
@@ -894,18 +901,15 @@ object IndexStore {
         graft.functions.VectorFunctions.norm(col("vec")).as("q_nrm"),
         explode(graft.functions.IvfProbes.column(col("vec"), cents, np)).as("p"))
       .select(col("q_id"), col("q_emb"), col("q_nrm"), col("p.cell").cast("int").as("cell"))
-    val cells = qCells.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq
+    // ≤ nprobe cells per query of the small, broadcast query side: the
+    // driver dedups them, where a distinct() would shuffle
+    val cells = qCells.select(col("cell")).collect().map(_.getInt(0)).distinct.sorted.toSeq
     probe(withText(loadServing(spark, root, name, version, mj)), cells)
       .join(broadcast(qCells), Seq("cell"))
       .filter(col("id") =!= col("q_id"))
-      .withColumn("score",
-        graft.functions.PqAdcScore.column(col("q_emb"), col("q_nrm"), col("codes"), cb))
-      .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk").cast("long").as("rk"),
-        col("id").as("neighbor_id"), col("score"), col("text"))
+      .select(col("q_id"), col("id"),
+        graft.functions.PqAdcScore.column(col("q_emb"), col("q_nrm"), col("codes"), cb)
+          .as("score"), col("text"))
   }
 
   /** Export an index version (or latest) as a single zip archive — the

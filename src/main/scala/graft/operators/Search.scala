@@ -68,12 +68,13 @@ object Search {
   }
 
   /** Ranked BM25 top-k `(rk, doc_id, score)` for ANY query text — the
-    * reference's search box as a library call. A TakeOrdered on the
-    * (6dp-rounded score, doc_id) order; its two jobs run here, and the k
-    * rows come back as a local frame.
+    * reference's search box as a library call, ranked by
+    * [[graft.functions.Ranking.topK]] on the (6dp-rounded score, doc_id)
+    * order. The query's idf job runs here; the frame is lazy, and collected
+    * it ranks in one more job of one stage, with no exchange.
     */
   def bm25TopFor(spark: SparkSession, dir: String, query: String, k: Int): DataFrame =
-    graft.functions.Ranking.topKLocal(
+    graft.functions.Ranking.topK(
         bm25ScoredFor(spark, dir, query), k, col("score").desc, col("doc_id"))
       .select(col("rk"), col("doc_id"), col("score"))
 
@@ -312,14 +313,29 @@ object Search {
     * session's cached corpus state in four jobs with no shuffle and fused
     * on the driver (score desc, then id; 6 dp HALF_UP), so the jobs run
     * when this is called and the `(rk, id, rrf_score)` frame is local.
+    *
+    * The two lists are independent, so they run at once: the cosine list
+    * on a common fork-join pool thread under the caller's Spark local
+    * properties and session (its jobs join the caller's job group, and
+    * cancelling that group cancels both lists), the bm25 list on the
+    * caller's thread. A failure of either list is thrown from here, after
+    * both have ended.
     */
   def hybridRrfFor(spark: SparkSession, dir: String, queryText: String,
                    queryVecId: Long, listLen: Int = RrfListLen,
                    out: Int = RrfOut): DataFrame = {
-    val vec = VectorOps.topKOf(VectorOps.embWithNorm(spark, dir), queryVecId, listLen, "cos")
-      .select(col("neighbor_id"), col("rk"))
-    val bm = bm25TopFor(spark, dir, queryText, listLen).select(col("doc_id"), col("rk"))
-    val fused = (vec.collect() ++ bm.collect())
+    import org.apache.spark.sql.graft.Bridge
+    val vec = Bridge.fork(spark) {
+      VectorOps.topKOf(VectorOps.embWithNorm(spark, dir), queryVecId, listLen, "cos")
+        .select(col("neighbor_id"), col("rk")).collect()
+    }
+    val bm = try bm25TopFor(spark, dir, queryText, listLen).select(col("doc_id"), col("rk"))
+      .collect()
+    catch { case scala.util.control.NonFatal(e) =>
+      scala.util.Try(Bridge.await(vec)).failed.foreach(e.addSuppressed)
+      throw e
+    }
+    val fused = (Bridge.await(vec) ++ bm)
       .groupMapReduce(_.getLong(0))(r => 1.0 / (RrfK.toDouble + r.getLong(1).toDouble))(_ + _)
       .toSeq.sortBy { case (id, s) => (-s, id) }.take(out)
     val rows = fused.zipWithIndex.map { case ((id, s), i) =>

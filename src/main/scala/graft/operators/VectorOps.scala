@@ -80,9 +80,10 @@ object VectorOps {
         col("vec_id").as("neighbor_id"), col("score"))
   }
 
-  /** [[topK]] for ONE query vector of `e` (an [[embWithNorm]] frame) as a
-    * local frame: a broadcast of the query row and a TakeOrdered at the plan
-    * root, two jobs, no exchange. The query joins as data, not literals, and
+  /** [[topK]] for ONE query vector of `e` (an [[embWithNorm]] frame),
+    * ranked by [[graft.functions.Ranking.topK]]: collected, it runs two
+    * jobs, the query row's broadcast and one stage that scores and ranks,
+    * with no exchange. The query joins as data, not literals, and
     * its id is matched against a one-element array: generated code holds a
     * non-primitive literal as an object reference, where a long literal is
     * compiled into the source. So the generated code is the same for every
@@ -90,7 +91,7 @@ object VectorOps {
     * its own broadcast.)
     */
   def topKOf(e: DataFrame, queryVecId: Long, k: Int, metric: String): DataFrame =
-    graft.functions.Ranking.topKLocal(
+    graft.functions.Ranking.topK(
         scoredAgainst(e, e.filter(array_contains(typedLit(Seq(queryVecId)), col("vec_id"))),
             metric)
           .select(col("vec_id").as("neighbor_id"), col("score")),

@@ -217,8 +217,11 @@ object IndexPipeline {
     * `preview` is the reference's slice (first [[graft.operators.Search
     * .PreviewLen]] chars + '…', `answerless_search.py:139-163`) of the
     * chunk text that rides in each index row: the top-k carries `text`
-    * out of the same scan, so flat and ivf search is one lazy plan — scan,
-    * score, top-k, preview cut on the k survivors — with no join. Rows
+    * out of the same scan, so a search is one lazy plan — scan, score,
+    * [[graft.functions.Ranking.topK]], preview cut on the k survivors —
+    * with no join. Collected, a warm flat or ivf search is one job of one
+    * stage with no exchange; ivfpq adds the jobs that find its probed
+    * cells and broadcast the query, and shuffles nothing either. Rows
     * without text (an (id, vec)-only append, a streamed vectors-only dir,
     * an artifact written before text moved into the rows) keep their hit
     * with a null preview.
@@ -245,24 +248,20 @@ object IndexPipeline {
     val backend = mj
       .flatMap(""""backend":\s*"(\w+)"""".r.findFirstMatchIn(_))
       .map(_.group(1)).getOrElse("flat")
-    // exact inner-product top-k over whatever slice of the index reaches
-    // the scan (the full dataset for flat; the probed cells for ivf*)
-    def scoreTopK(slice: DataFrame): DataFrame = {
+    // exact inner-product scores over whatever slice of the index reaches
+    // the scan (the full dataset for flat; the probed cells for ivf)
+    def scored(slice: DataFrame): DataFrame = {
       val qlit = array(qv.map(x => lit(x)).toIndexedSeq: _*)
-      val scored = IndexStore.withText(slice).select(col("id"),
+      IndexStore.withText(slice).select(col("id"),
         round(VectorFunctions.dot(qlit, col("vec")), 6).as("score"), col("text"))
-      graft.functions.Ranking.topK(scored, k, col("score").desc, col("id"))
     }
-    val hits = backend match {
+    val hits = graft.functions.Ranking.topK(backend match {
       case "ivfpq" =>
-        // the index holds PQ codes, not vectors: probe + ADC-score; the
-        // per-query window leaves the k hits in rank order inside the
-        // query's one partition
+        // the index holds PQ codes, not vectors: probe + ADC-score
         import spark.implicits._
         val qdf = Seq(("__query__", qv)).toDF("id", "vec")
-        IndexStore.adcRanked(spark, root, name, qdf, k, cfg.nprobe, version)
-          .select(col("rk"), col("neighbor_id").as("id"), col("score"), col("text"))
-          .sortWithinPartitions(col("rk"))
+        IndexStore.adcScored(spark, root, name, qdf, cfg.nprobe, version)
+          .select(col("id"), col("score"), col("text"))
       case b if b.startsWith("ivf") =>
         // IVF text search PROBES: nearest nprobe coarse cells from the
         // tiny persisted centroid sidecar (driver arithmetic), pushed as
@@ -276,7 +275,7 @@ object IndexPipeline {
         // that still carries an ivf-manifest) fall back to the exact
         // full scan — correct, just unpruned.
         val index = IndexStore.loadServing(spark, root, name, version, mj)
-        scoreTopK(scala.util.Try(
+        scored(scala.util.Try(
             IndexStore.loadCentroids(spark, root, name, version)).toOption
           .filter(_.nonEmpty) match {
           case Some(cents) =>
@@ -291,8 +290,8 @@ object IndexPipeline {
           case None => index
         })
       case _ =>
-        scoreTopK(IndexStore.loadServing(spark, root, name, version, mj))
-    }
+        scored(IndexStore.loadServing(spark, root, name, version, mj))
+    }, k, col("score").desc, col("id"))
     val preview = when(length(col("text")) > graft.operators.Search.PreviewLen,
         concat(substring(col("text"), 1, graft.operators.Search.PreviewLen), lit("…")))
       .otherwise(col("text"))

@@ -1,13 +1,18 @@
 package org.apache.spark.sql.graft
 
+import java.util.concurrent.{Callable, ExecutionException, ForkJoinPool, Future}
+
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.util.Utils
 
 /** Minimal bridge into the `private[sql]` Column ⇄ Expression converters so
   * graft's native Catalyst expressions can be used as ordinary Columns in
-  * any session (no SparkSessionExtensions registration required). Lives in
-  * an `org.apache.spark.sql` subpackage on purpose — the supported pattern
+  * any session (no SparkSessionExtensions registration required), and into
+  * the `private[spark]` thread-local job properties, so work handed to a
+  * pool thread stays in its caller's job group. Lives in an
+  * `org.apache.spark.sql` subpackage on purpose — the supported pattern
   * for Spark-native extension libraries.
   */
 object Bridge {
@@ -21,4 +26,30 @@ object Bridge {
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** Starts `body` on the common fork-join pool under a copy of the
+    * calling thread's Spark local properties (job group, description,
+    * scheduler pool) and with `spark` as the active session, so its jobs
+    * belong to the caller's job group; the pool thread's own are restored
+    * after. [[await]] returns its value or throws its exception.
+    */
+  def fork[A](spark: SparkSession)(body: => A): Future[A] = {
+    val sc = spark.sparkContext
+    val props = Utils.cloneProperties(sc.getLocalProperties)
+    ForkJoinPool.commonPool().submit(new Callable[A] {
+      override def call(): A = {
+        val (ownProps, ownSession) = (sc.getLocalProperties, SparkSession.getActiveSession)
+        sc.setLocalProperties(props)
+        SparkSession.setActiveSession(spark)
+        try body finally {
+          sc.setLocalProperties(ownProps)
+          ownSession.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+        }
+      }
+    })
+  }
+
+  /** The value of a [[fork]]ed body, or the exception it threw. */
+  def await[A](f: Future[A]): A =
+    try f.get() catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
 }

@@ -96,10 +96,11 @@ class IndexPipelineSpec extends SparkSpec {
       IndexPipeline.build(docs, root, cfg)
       def search() = IndexPipeline.search(spark, root, cfg.name, chunk.getString(1), 5, cfg)
       val want = search().collect() // warms the serving caches
-      val (rows, jobs, _) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+      val (rows, jobs, shuffled) = org.apache.spark.graft.JobCount(spark.sparkContext) {
         search().collect()
       }
       assert(jobs == 1, s"$backend: a warm search ran $jobs jobs")
+      assert(shuffled == 0L, s"$backend: a warm search wrote $shuffled shuffle bytes")
       assert(rows.toSeq == want.toSeq)
       assert(rows.map(_.getAs[Long]("rk")).toSeq == (1L to 5L))
       assert(rows.head.getAs[String]("id") == chunk.getString(0))
@@ -235,8 +236,20 @@ class IndexPipelineSpec extends SparkSpec {
     val someChunk = graft.operators.Chunking
       .chunkFixedDf(docs, cfg.chunkSize, cfg.chunkOverlap)
       .select("chunk_id", "chunk").collect()(7)
-    val hits = IndexPipeline.search(spark, root, "e2e_pq",
-      someChunk.getString(1), 5, cfg).collect()
+    val (hits, _, shuffled) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+      IndexPipeline.search(spark, root, "e2e_pq", someChunk.getString(1), 5, cfg).collect()
+    }
+    assert(shuffled == 0L, s"an ivfpq search wrote $shuffled shuffle bytes")
+    // the rows of the multi-query form, which ranks by a per-query window
+    val s = spark
+    import s.implicits._
+    val qv = graft.functions.Encoders.get(cfg.model)
+      .openPartition(cfg.dim, cfg.normalize)(someChunk.getString(1))
+    val windowed = IndexStore.adcSearch(spark, root, "e2e_pq",
+        Seq(("__query__", qv)).toDF("id", "vec"), 5, cfg.nprobe).collect()
+      .map(r => (r.getAs[Long]("rk"), r.getAs[String]("neighbor_id"), r.getAs[Double]("score")))
+    assert(hits.map(r => (r.getAs[Long]("rk"), r.getAs[String]("id"),
+      r.getAs[Double]("score"))).toSeq == windowed.sortBy(_._1).toSeq)
     assert(hits.length == 5)
     assert(hits.map(_.getAs[Long]("rk")).toSeq == (1L to 5L))
     // PQ is lossy, so rank-1 self-retrieval isn't guaranteed like flat —

@@ -336,7 +336,7 @@ class SearchSpec extends SparkSpec {
     }
   }
 
-  test("a warm hybrid query runs at most 4 Spark jobs and shuffles nothing") {
+  test("a warm hybrid query runs exactly 4 Spark jobs and shuffles nothing") {
     // a corpus of several files, so every cached frame has several
     // partitions (one-partition plans never shuffle)
     val tmp = java.nio.file.Files.createTempDirectory("graft-serve").toString
@@ -352,8 +352,35 @@ class SearchSpec extends SparkSpec {
       bm25List("merge table value")))
     val (rows, jobs, shuffled) = org.apache.spark.graft.JobCount(spark.sparkContext)(query())
     assert(rows == want && rows.nonEmpty)
-    assert(jobs <= 4, s"a warm hybrid query ran $jobs jobs")
+    // the cosine list runs on a pool thread: its 2 jobs are counted only
+    // if they carry the caller's job group
+    assert(jobs == 4, s"a warm hybrid query ran $jobs jobs")
     assert(shuffled == 0L, s"a warm hybrid query wrote $shuffled shuffle bytes")
+  }
+
+  test("hybridRrfFor throws either list's failure and keeps the caller's job group") {
+    import org.scalatest.concurrent.TimeLimits.failAfter
+    import org.scalatest.time.SpanSugar._
+    // one corpus dir lacks documents (the bm25 list fails on the calling
+    // thread), the other embeddings (the cosine list fails on the pool)
+    def without(table: String): String = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-hybrid-fail").toString
+      Seq("documents", "embeddings").filter(_ != table).foreach(t =>
+        Tables.read(spark, dir, t).write.parquet(s"$tmp/$t.parquet"))
+      tmp
+    }
+    val sc = spark.sparkContext
+    for (missing <- Seq("documents", "embeddings")) {
+      val d = without(missing)
+      sc.setJobGroup("hybrid-fail", "caller")
+      try {
+        val e = failAfter(120.seconds) {
+          intercept[Exception](Search.hybridRrfFor(spark, d, Search.QueryText, Search.RrfQueryVec))
+        }
+        assert(e.getMessage.contains(s"$missing.parquet"), e.getMessage)
+        assert(sc.getLocalProperty("spark.jobGroup.id") == "hybrid-fail")
+      } finally sc.clearJobGroup()
+    }
   }
 
   test("invalidateCaches: a hybrid query after an in-place rewrite sees the new vectors") {
