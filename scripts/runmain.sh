@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Dev-only launcher: run a graft main on the compiled classes WITHOUT sbt,
-# so several sweeps (Verify / Bench / SkewReport) can run concurrently —
+# so several sweeps (Verify / Bench / VerifyApprox) can run concurrently —
 # sbt serializes on the project lock. Mirrors build.sbt's forked-JVM flags
 # (JDK17 add-opens + UTC). Usage:
 #   scripts/runmain.sh [-Xmx…] graft.Verify <sfDir> <outDir> [names…]

@@ -108,24 +108,7 @@ object Bench {
     // records `"passes":1` so a --once number is never read as a
     // steady-state min.
     val passes = if (args.contains("--once")) 1 else Passes
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The testdata is one smallish file per table; the 128 MB default
-      // would scan each on a single core. At cluster scale this is sized
-      // to executor memory instead (SURVEY §4). Note the floor this can't
-      // move: every testdata file has ONE parquet row group, so the
-      // columnar decode of a table (e.g. lineitem, 10.8 MB) is a single
-      // task no matter the split size — real 100 TB inputs split by row
-      // group / file and don't have this ceiling.
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // events.parquet is INT64 TIMESTAMP(NANOS); see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // Anchored audit-pin substitution (see [[AnchorPinMaxRows]]): past the

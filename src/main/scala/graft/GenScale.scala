@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -113,14 +113,7 @@ object GenScale {
       a == "--skew" || a == "--adversarial" || a == "--clustered")
     val factor = if (rest.length > 0) rest(0).toInt else 10
     val embFactor = if (rest.length > 1) rest(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
 

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: executes each audited query at sf0.01 through its
   * OWN QueryExecution (so the dumped plan is the AQE-FINALIZED one,
   * `isFinalPlan=true` — a noop write would execute a different
@@ -41,16 +39,7 @@ object Plans {
       if (args.contains("--sf1set")) Sf1Contracted
       else if (args.length > 1) args.drop(1).toSeq
       else Audited.distinct
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -13,23 +12,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // events.parquet is INT64 TIMESTAMP(NANOS); see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 113 queries' localCheckpoint blocks are reclaimed by the
-      // ContextCleaner only after a GC notices the RDDs are unreachable;
-      // the default periodic-GC interval (30 min) never fires inside a
-      // sweep run, so blocks pile up until a 512 MB page allocation OOMs
-      // the heap (r10: the skewed-sf1 Verify died exactly this way).
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

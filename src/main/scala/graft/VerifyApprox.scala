@@ -278,14 +278,7 @@ object VerifyApprox {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outPath) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     val json = reportJson(spark, sfDir)
     Files.writeString(Paths.get(outPath), json + "\n")

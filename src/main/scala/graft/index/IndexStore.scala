@@ -38,8 +38,8 @@ object IndexStore {
   case class Chunking(mode: String, size: Int, overlap: Int)
 
   /** Index-shape parameters persisted in the manifest. `assignProbes` /
-    * `superProbes` are the TUNED probe dials ([[graft.ProbeDialReport]]'s
-    * per-corpus `--target` output): -1 = "the nlist rule at serve time",
+    * `superProbes` are the TUNED probe dials (a per-corpus choice, see
+    * PROBE_DIAL_r13.json): -1 = "the nlist rule at serve time",
     * ≥ 1 = an explicit dial a serving job inherits without re-tuning
     * (r13 judge #3 — the dial is a corpus property and must travel with
     * the artifact).
@@ -864,7 +864,7 @@ object IndexStore {
     * `nprobe = -1` (the default) resolves from the ARTIFACT's manifest —
     * the tuned assign dial when the build persisted one, else the
     * build-time nprobe ([[Manifest.servingProbes]]): a serving job
-    * inherits the ProbeDialReport-tuned setting without re-tuning or
+    * inherits the tuned setting without re-tuning or
     * guessing (r13 judge #3). An explicit `nprobe ≥ 1` still overrides.
     */
   def adcSearch(spark: SparkSession, root: String, name: String,

@@ -334,23 +334,18 @@ object VectorOps {
     * Skew-guarded by the [[MaxCellFactor]] hot-cell cap.
     */
   def annIvf(spark: SparkSession, dir: String): DataFrame =
-    annIvf(spark, dir, dedup = true)
+    annIvf(spark, dir, -1)
 
   /** `assignProbes` overrides the [[scaledAssignProbes]] rule when ≥ 1 —
     * the probe DIAL (r12 judge #1): past the cluster-subdivision point
     * (latent clusters larger than [[IvfModel.TargetCellSize]] split
     * across several cells) pair recall is a probe-coverage choice the
     * nlist-only rule cannot see, so corpora in that regime set the dial
-    * explicitly (measured curve: PROBE_DIAL artifact / SURVEY §8).
+    * explicitly (measured curve: PROBE_DIAL_r13.json).
     */
-  def annIvf(spark: SparkSession, dir: String, assignProbes: Int): DataFrame =
-    annIvf(spark, dir, dedup = true, assignProbes)
-
-  private[graft] def annIvf(spark: SparkSession, dir: String,
-      dedup: Boolean, assignProbes: Int = -1): DataFrame = {
+  def annIvf(spark: SparkSession, dir: String, assignProbes: Int): DataFrame = {
     val cents = IvfModel.centroids(spark, dir)
-    cellLocalPairs(flatMulti(spark, dir, cents, assignProbes),
-      cents.length, dedup)
+    cellLocalPairs(flatMulti(spark, dir, cents, assignProbes), cents.length)
   }
 
   /** The checkpointed (vec_id, embedding, cell) flat multi-probe
@@ -430,12 +425,12 @@ object VectorOps {
     * pinned numerically by `ann_hier_recall`.
     */
   def annIvfHier(spark: SparkSession, dir: String): DataFrame =
-    annIvfHier(spark, dir, dedup = true)
+    annIvfHier(spark, dir, -1, -1)
 
   /** Probe-dial form of [[annIvfHier]] — see the [[annIvf]] dial note. */
   def annIvfHier(spark: SparkSession, dir: String,
       assignProbes: Int): DataFrame =
-    annIvfHier(spark, dir, dedup = true, assignProbes)
+    annIvfHier(spark, dir, assignProbes, -1)
 
   /** Two-dial form: `superProbes` additionally overrides the
     * [[scaledSuperProbes]] coarse-level rule. The two dials price
@@ -448,15 +443,10 @@ object VectorOps {
     * candidates flat ±1%).
     */
   def annIvfHier(spark: SparkSession, dir: String,
-      assignProbes: Int, superProbes: Int): DataFrame =
-    annIvfHier(spark, dir, dedup = true, assignProbes, superProbes)
-
-  private[graft] def annIvfHier(spark: SparkSession, dir: String,
-      dedup: Boolean, assignProbes: Int = -1,
-      superProbes: Int = -1): DataFrame = {
+      assignProbes: Int, superProbes: Int): DataFrame = {
     val cents = IvfModel.centroids(spark, dir)
     cellLocalPairs(hierMulti(spark, dir, cents, assignProbes, superProbes),
-      cents.length, dedup)
+      cents.length)
   }
 
   /** [[flatMulti]]'s two-level twin: the checkpointed hier multi-probe
@@ -486,20 +476,7 @@ object VectorOps {
     * ≥ τ survivor set as (id, id, scalar) rows. A pair that shares both
     * probed cells is scored twice (identical value) and collapsed here.
     */
-  /** `dedup = false` is the measurement-harness variant ([[UncapReport]]):
-    * full candidate generation, scoring, and thresholding, but the
-    * survivor stream goes straight to the sink instead of through the
-    * pair-dedup exchange. On a corpus whose ≥ τ survivor set is itself
-    * huge — e.g. verbatim-duplicated content, where every copy-pair
-    * scores 1.0 and the TRUE answer is quadratic in the duplication
-    * factor — that final exchange's cost is output-size-bound, not
-    * IVF-mechanics-bound, and on a single machine its spill is the one
-    * stage that cannot fit. Semantically the scan form is the same pair
-    * set with the ≤ [[scaledAssignProbes]]-fold shared-cell re-scorings
-    * left in (spec-pinned: dropDuplicates over it equals the dedup form).
-    */
-  private[graft] def cellLocalPairs(multi: DataFrame, nCells: Int,
-      dedup: Boolean): DataFrame = {
+  private[graft] def cellLocalPairs(multi: DataFrame, nCells: Int): DataFrame = {
     val (capped, cand) = capHotCellsCounted(multi, nCells, MaxCellFactor)
     val e = capped.withColumn("nrm", norm(col("embedding")))
     // Self-announce a pair stage whose candidate set is enormous (the
@@ -523,14 +500,14 @@ object VectorOps {
           f"answer; consider the grouped dedup family " +
           f"(dedup_*_grouped), whose output is linear in distinct " +
           f"contents.")
-    val scored = e.as("a").join(e.as("b"),
+    e.as("a").join(e.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("c", cosinePre(dot(col("a.embedding"), col("b.embedding")),
         col("a.nrm"), col("b.nrm")))
       .filter(col("c") >= Dedup.EmbeddingCosThreshold)
       .select(col("a.vec_id").as("vec_id_a"), col("b.vec_id").as("vec_id_b"),
         round(col("c"), 6).as("cos_sim"))
-    if (dedup) scored.dropDuplicates("vec_id_a", "vec_id_b") else scored
+      .dropDuplicates("vec_id_a", "vec_id_b")
   }
 
   /** Candidate-pair count above which [[cellLocalPairs]] announces that
@@ -1291,52 +1268,6 @@ object VectorOps {
         greatest(col("a_id"), col("vec_id")).as("vec_id_b"))
       .dropDuplicates("vec_id_a", "vec_id_b")
   }
-
-  /** The approx side of a [[sampledPairRecall]] measurement computed
-    * WITHOUT building the full pair frame: post-cap cell-local pairs
-    * restricted at the JOIN to pairs touching the anchor slice. The
-    * filtered-full-frame route cannot push the `a-or-b` anchor predicate
-    * below the self-join (an OR across join sides), so each measurement
-    * pays the entire Σ |cell|² candidate stage — at 512k clustered
-    * vectors that is minutes per probe dial; this form joins the
-    * ≤ (n/step)·probes anchor assignments (broadcast) against the capped
-    * corpus frame instead: O(n/step · |cell|) work, seconds. Same pair
-    * set by construction — a pair (x, y) with an anchor endpoint shares
-    * a post-cap cell iff the anchor's row meets the other endpoint's row
-    * in that cell ([[ProbeDialReport]]'s per-dial recall; spec-pinned
-    * equal to the filtered-full-frame recall at gate SF).
-    */
-  private[graft] def anchorCellPairs(multi: DataFrame, nCells: Int,
-      step: Long): DataFrame = {
-    val e = capHotCells(multi, nCells, MaxCellFactor)
-      .withColumn("nrm", norm(col("embedding")))
-    val anchors = e.filter(pmod(col("vec_id"), lit(step)) === 0)
-      .select(col("cell").as("a_cell"), col("vec_id").as("a_id"),
-        col("embedding").as("a_emb"), col("nrm").as("a_nrm"))
-    e.join(broadcast(anchors),
-        col("cell") === col("a_cell") && col("vec_id") =!= col("a_id"))
-      .withColumn("c", cosinePre(dot(col("a_emb"), col("embedding")),
-        col("a_nrm"), col("nrm")))
-      .filter(col("c") >= Dedup.EmbeddingCosThreshold)
-      .select(least(col("a_id"), col("vec_id")).as("vec_id_a"),
-        greatest(col("a_id"), col("vec_id")).as("vec_id_b"))
-      .dropDuplicates("vec_id_a", "vec_id_b")
-  }
-
-  /** [[sampledPairRecall]] against a pre-built multi-probe assignment
-    * frame, using [[anchorCellPairs]] as the approx side — the probe-dial
-    * sweep's per-dial recall measurement.
-    */
-  private[graft] def dialedPairRecall(spark: SparkSession, dir: String,
-      multi: DataFrame, nCells: Int, step: Long): DataFrame =
-    dialedPairRecall(anchorExactPairs(spark, dir, step), multi, nCells, step)
-
-  /** Sweep form: `exact` is the (checkpointed-once) anchor-exact pair
-    * frame, shared across the dials instead of re-scored per dial.
-    */
-  private[graft] def dialedPairRecall(exact: DataFrame, multi: DataFrame,
-      nCells: Int, step: Long): DataFrame =
-    pairRecall(exact, anchorCellPairs(multi, nCells, step))
 
   private def pairRecall(exactPairs: DataFrame, approxPairs: DataFrame): DataFrame = {
     val exact = exactPairs

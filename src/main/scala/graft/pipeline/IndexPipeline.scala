@@ -24,9 +24,9 @@ object IndexPipeline {
     * manifest records [[graft.operators.VectorOps.NProbe]] and serving
     * resolves through [[IndexStore.Manifest.servingProbes]] — which is the
     * TUNED `assignProbes` dial when one was persisted. Build with an
-    * explicit `assignProbes`/`superProbes` (a [[graft.ProbeDialReport]]
-    * `--target` result) and every later search over the artifact inherits
-    * the dial without re-tuning (r13 judge #3).
+    * explicit `assignProbes`/`superProbes` (a dial tuned per corpus, see
+    * PROBE_DIAL_r13.json) and every later search over the artifact
+    * inherits the dial without re-tuning (r13 judge #3).
     */
   case class Config(
       name: String,

@@ -30,12 +30,12 @@ object Tables {
     *    true floor — a bare `div` truncates toward zero and would round
     *    pre-1970 nanos the wrong way.
     *  - tz-naive timestamp[us], which Spark 4 infers as TIMESTAMP_NTZ:
-    *    cast to TimestampType. Our session builders pin
+    *    cast to TimestampType. [[graft.Session]] pins
     *    spark.sql.session.timeZone=UTC, so the naive wall clock maps to
     *    the same instants DuckDB sees reading the same file.
     *
-    * The nanosAsLong conf is also set in the Bench/Verify session builders;
-    * it is re-asserted here (idempotently) because callers — the driver's
+    * The nanosAsLong conf is also set by [[graft.Session.local]]; it is
+    * re-asserted here (idempotently) because callers — the driver's
     * smoke check, notebooks — read through sessions we don't build, and the
     * flag must hold at action time for the lazy scan to resolve.
     */

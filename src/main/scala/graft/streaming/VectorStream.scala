@@ -52,7 +52,7 @@ object VectorStream {
     * probe count the same way batch serving does — an explicit
     * `nprobe ≥ 1` wins, else the manifest's
     * [[graft.index.IndexStore.Manifest.servingProbes]] (the
-    * ProbeDialReport-tuned dial when the build persisted one, else the
+    * tuned dial when the build persisted one, else the
     * build nprobe). This closes the dial handoff end-to-end: a stream
     * server pointed at a tuned artifact serves AT the tuned dial with no
     * code knowing the number.

@@ -152,7 +152,7 @@ class CapWarnSpec extends SparkSpec {
       .select(col("id").as("vec_id"),
         array(lit(0.1f), lit(0.2f)).as("embedding"), lit(0).as("cell"))
     val msgs = capturing {
-      VectorOps.cellLocalPairs(multi, 1, dedup = true)
+      VectorOps.cellLocalPairs(multi, 1)
     }
     val mine = msgs.filter(_.contains("candidate pairs"))
     assert(mine.size === 1, s"expected one pair-candidate warning, got: $msgs")

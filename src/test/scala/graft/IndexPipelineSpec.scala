@@ -263,7 +263,7 @@ class IndexPipelineSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-pipe-dial").toString
     val docs = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).limit(50)
-    // a ProbeDialReport-style tuned dial persisted through the pipeline
+    // a per-corpus tuned dial persisted through the pipeline
     // config; the default search (cfg.nprobe = -1) must inherit it from
     // the manifest rather than the library NProbe
     val cfg = IndexPipeline.Config(name = "e2e_dial", backend = "ivfpq",

@@ -54,8 +54,8 @@ class IndexPqSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_dial").toString
     val vectors = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    // a non-rule dial (8 ≠ the build nprobe 4), as a ProbeDialReport
-    // --target run would choose it for this corpus
+    // a non-rule dial (8 ≠ the build nprobe 4), as a per-corpus tuning
+    // would choose it
     IndexStore.build(vectors, root, "dialidx", "ivfpq",
       params = IndexStore.Params(VectorOps.NumCells, VectorOps.NProbe,
         assignProbes = 8),

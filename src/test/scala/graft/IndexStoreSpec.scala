@@ -92,7 +92,7 @@ class IndexStoreSpec extends SparkSpec {
 
   test("tuned probe dials + measured recall round-trip through the manifest") {
     val root = Files.createTempDirectory("graft-idx").toString
-    // a ProbeDialReport `--target` result persisted at build time
+    // a per-corpus tuned dial persisted at build time
     IndexStore.build(vectors, root, "dialed", "ivf",
       params = IndexStore.Params(nlist = 4, nprobe = 2,
         assignProbes = 5, superProbes = 3),

@@ -6,21 +6,57 @@ import graft.index.IndexStore
 import graft.pipeline.IndexPipeline
 import graft.sources.Readers
 
-/** Replay the reference's OWN demo workflow on its shipped fixture files
-  * (`test_data/product_spec_v{1,2}.csv` + `gold_nimbus.csv`): upload v1,
-  * search it with the gold questions, evaluate, upload v2, and verify the
-  * versioned artifacts — the exact loop a reference user runs through the
-  * FastAPI surface, driven through this library instead. The embedder is
-  * the deterministic stub, so METRIC VALUES are not comparable to the
+/** Replay the reference's OWN demo workflow on stand-ins of its fixture
+  * files (`test_data/product_spec_v{1,2}.csv` + `gold_nimbus.csv`, same
+  * shape: `doc_id`/`text` rows of several sentences, and gold questions
+  * whose `expected_id`s are `{doc}#{j}` chunk ids of the v1 build): upload
+  * v1, search it with the gold questions, evaluate, upload v2, and verify
+  * the versioned artifacts — the exact loop a reference user runs through
+  * the FastAPI surface, driven through this library instead. The embedder
+  * is the deterministic stub, so METRIC VALUES are not comparable to the
   * reference's real-encoder numbers; the workflow mechanics (ingest with
   * text_column, `{doc}#{j}` ids matching the gold file, versioning,
   * ranked hits, eval plumbing) are.
   */
 class ReferenceFixtureSpec extends SparkSpec {
-  private val fixtures = "/root/reference/test_data"
+
+  /** Writes the three stand-in CSVs into a fresh temp dir. The longest v1
+    * rows run past one and two chunk strides (80 chars at the default
+    * 100/20 window), so the gold file names `#1` and `#2` chunks too.
+    */
+  private def writeFixtures(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("ref_fixture_data")
+    def csv(name: String, lines: String*): Unit =
+      java.nio.file.Files.writeString(dir.resolve(name), lines.mkString("\n") + "\n")
+    csv("product_spec_v1.csv",
+      "doc_id,text",
+      "1,\"Nimbus is a cloud storage appliance. It ships with two drive bays.\"",
+      "2,\"The Nimbus battery lasts twelve hours on a full charge. Charging " +
+        "takes ninety minutes with the bundled adapter. A low battery " +
+        "warning shows at ten percent.\"",
+      "3,\"Nimbus supports Wi-Fi 6 and Bluetooth 5. Pairing uses the " +
+        "companion app.\"",
+      "4,\"Warranty covers parts and labour for two years. Extended cover " +
+        "can be bought within thirty days of purchase. Claims need the " +
+        "original receipt and the serial number printed under the base " +
+        "plate. Water damage is not covered.\"")
+    csv("product_spec_v2.csv",
+      "doc_id,text",
+      "1,\"Nimbus 2 is a cloud storage appliance. It ships with four drive bays.\"",
+      "2,\"The Nimbus 2 battery lasts sixteen hours on a full charge. " +
+        "Charging takes an hour with the bundled adapter.\"",
+      "3,\"Nimbus 2 supports Wi-Fi 7 and Bluetooth 5.3.\"")
+    csv("gold_nimbus.csv",
+      "question,expected_id",
+      "how many drive bays does nimbus have,1#0",
+      "how long does charging take,2#1",
+      "which wireless standards are supported,3#0",
+      "what does a warranty claim need,4#2")
+    dir.toString
+  }
 
   test("upload v1 → gold eval → upload v2 → two live versions") {
-    assume(new java.io.File(s"$fixtures/product_spec_v1.csv").isFile)
+    val fixtures = writeFixtures()
     val root = java.nio.file.Files.createTempDirectory("ref_fixture").toString
     val cfg = IndexPipeline.Config(name = "nimbus")
 

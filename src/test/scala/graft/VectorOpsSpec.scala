@@ -208,80 +208,22 @@ class VectorOpsSpec extends SparkSpec {
     assert(s3.getDouble(3) > 0.0 && s3.getDouble(3) <= 1.0)
   }
 
-  test("dialedPairRecall (anchor-join form) equals the filtered-full-frame " +
-    "recall at rule and non-rule dials") {
-    // the probe-dial sweep's per-dial recall must be the SAME measurement
-    // as sampledPairRecall over the full pair frame — the anchor-join
-    // form just avoids building the Σ|cell|² candidate stage per dial
+  test("ann_ivf_hier pair recall does not drop as the assign or super " +
+    "dial grows") {
+    // a larger dial can only add candidate coverage: more assign probes
+    // put each vector in more cells, more super probes widen the coarse
+    // argmin over cells
     val d01 = "/root/testdata/sf0.01"
-    val cents = graft.operators.IvfModel.centroids(spark, d01)
     val step = 7L // anchors off any trivial alignment
-    for (dial <- Seq(-1, 4)) {
-      val mh = VectorOps.hierMulti(spark, d01, cents, dial)
-      val a = VectorOps.dialedPairRecall(spark, d01, mh, cents.length, step)
-        .collect()(0)
-      val b = VectorOps.sampledPairRecall(spark, d01,
-        VectorOps.annIvfHier(spark, d01, dedup = true, dial), step)
-        .collect()(0)
-      for (i <- 0 to 2)
-        assert(a.getLong(i) === b.getLong(i), s"dial $dial col $i")
-      assert(a.getDouble(3) === b.getDouble(3), s"dial $dial recall")
-    }
-    // a larger dial can only add candidate coverage: recall monotone
-    val r2 = VectorOps.dialedPairRecall(spark, d01,
-      VectorOps.hierMulti(spark, d01, cents, 2), cents.length, step)
-      .collect()(0).getDouble(3)
-    val r6 = VectorOps.dialedPairRecall(spark, d01,
-      VectorOps.hierMulti(spark, d01, cents, 6), cents.length, step)
-      .collect()(0).getDouble(3)
+    def recall(pairs: org.apache.spark.sql.DataFrame): Double =
+      VectorOps.sampledPairRecall(spark, d01, pairs, step)
+        .collect()(0).getDouble(3)
+    val r2 = recall(VectorOps.annIvfHier(spark, d01, 2))
+    val r6 = recall(VectorOps.annIvfHier(spark, d01, 6))
     assert(r6 >= r2, s"recall must not drop with more probes: $r2 -> $r6")
-    // the SUPER dial: two-dial operator == the two-dial assignment frame,
-    // and widening the coarse argmin can only add cells to visit
-    val a2 = VectorOps.dialedPairRecall(spark, d01,
-      VectorOps.hierMulti(spark, d01, cents, 4, 3), cents.length, step)
-      .collect()(0)
-    val b2 = VectorOps.sampledPairRecall(spark, d01,
-      VectorOps.annIvfHier(spark, d01, dedup = true, 4, 3), step)
-      .collect()(0)
-    for (i <- 0 to 2) assert(a2.getLong(i) === b2.getLong(i), s"super col $i")
-    assert(a2.getDouble(3) === b2.getDouble(3), "super recall")
-    val s1 = VectorOps.dialedPairRecall(spark, d01,
-      VectorOps.hierMulti(spark, d01, cents, 4, 1), cents.length, step)
-      .collect()(0).getDouble(3)
-    assert(a2.getDouble(3) >= s1,
-      s"recall must not drop with more super-probes: $s1 -> ${a2.getDouble(3)}")
-  }
-
-  test("anchorCellPairs == cellLocalPairs restricted to anchor-touching " +
-    "pairs (synthetic frames, exact set equality)") {
-    // stronger than the recall-equality pin: on deterministic synthetic
-    // assignment frames (shared cells, multi-probe duplicates, a hot
-    // cell that the cap drops, anchor-anchor pairs scored from both
-    // ends) the anchor-join builder must reproduce EXACTLY the full
-    // pair stage's survivor set filtered to pairs with >= 1 anchor
-    // endpoint — same cap, same threshold, same canonicalization.
-    val s = spark
-    import s.implicits._
-    for ((nCells, step) <- Seq((4, 3L), (7, 2L), (5, 4L))) {
-      // vectors on a ring: cos similarity varies smoothly, so the tau
-      // threshold actually separates pairs instead of passing everything
-      val rows = (0L until 60L).flatMap { i =>
-        val ang = i.toDouble / 60.0 * math.Pi
-        val vec = Array(math.cos(ang).toFloat, math.sin(ang).toFloat)
-        // two probes each: own cell + a neighbor cell; cell 0 is made hot
-        val c1 = (i % nCells).toInt
-        val c2 = (if (i % 3 == 0) 0 else (i + 1) % nCells).toInt
-        Seq((i, vec, c1), (i, vec, c2))
-      }
-      val multi = rows.toDF("vec_id", "embedding", "cell")
-      val full = VectorOps.cellLocalPairs(multi, nCells, dedup = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val fullAnchor = full.filter(p => p._1 % step == 0 || p._2 % step == 0)
-      val anch = VectorOps.anchorCellPairs(multi, nCells, step)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(anch === fullAnchor, s"nCells=$nCells step=$step")
-      assert(anch.nonEmpty, s"degenerate case: nCells=$nCells step=$step")
-    }
+    val s1 = recall(VectorOps.annIvfHier(spark, d01, 4, 1))
+    val s3 = recall(VectorOps.annIvfHier(spark, d01, 4, 3))
+    assert(s3 >= s1, s"recall must not drop with more super-probes: $s1 -> $s3")
   }
 
   test("anchorExactPairs at step=1 equals the dedup_embedding audit pair set") {
@@ -432,22 +374,5 @@ class VectorOpsSpec extends SparkSpec {
       (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"), r.getAs[Double]("d2"),
         r.getAs[Double]("z"), r.getAs[Boolean]("is_outlier"))).toSet
     assert(got == want)
-  }
-  test("pair scan form dedups to exactly the raw ann_ivf / ann_ivf_hier sets") {
-    // The UncapReport harness times the scan form (no final pair-dedup
-    // exchange) past PairTimingMaxCandidates; this pins that the only
-    // difference IS the dedup: collapsing the scan's ≤ probes-fold
-    // shared-cell re-scorings reproduces the raw pair set exactly.
-    def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("vec_id_a"), r.getAs[Long]("vec_id_b"),
-        r.getAs[Double]("cos_sim"))).toSet
-    val rawFlat = asSet(VectorOps.annIvf(spark, dir))
-    val scanFlat = asSet(VectorOps.annIvf(spark, dir, dedup = false)
-      .dropDuplicates("vec_id_a", "vec_id_b"))
-    assert(scanFlat == rawFlat)
-    val rawHier = asSet(VectorOps.annIvfHier(spark, dir))
-    val scanHier = asSet(VectorOps.annIvfHier(spark, dir, dedup = false)
-      .dropDuplicates("vec_id_a", "vec_id_b"))
-    assert(scanHier == rawHier)
   }
 }
