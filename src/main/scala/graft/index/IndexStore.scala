@@ -21,17 +21,26 @@ import graft.operators.VectorOps
   * `versions/<ts>/` archive with `meta.json`) re-expressed as a parquet
   * dataset instead of a faiss binary.
   *
-  * Layout: `root/<name>/latest/vectors/` (+ `manifest.json`) and
-  * `root/<name>/versions/<ts>/vectors/` (+ `manifest.json`, `meta.json`).
-  * Each vectors row is `(id, vec | codes, cell, text)`: the chunk text
-  * (the reference's `.docs.json` map) rides in the same row as its
-  * vector, nullable for rows written without text, so a search reads its
-  * previews from the rows it scores — one scan, pruned with the cells.
+  * Layout: `root/<name>/latest/` holds `manifest.json`, the base
+  * `vectors/` a [[build]] wrote, and `deltas/`, the runs every later
+  * [[append]] landed; `root/<name>/versions/<ts>/` holds one write's
+  * `vectors/` (a build's cell layout, or an append's delta run) beside
+  * `manifest.json` and `meta.json`. Each vectors row is
+  * `(id, vec | codes, cell, text)`: the chunk text (the reference's
+  * `.docs.json` map) rides in the same row as its vector, nullable for
+  * rows written without text, so a search reads its previews from the
+  * rows it scores — one scan, pruned with the cells.
   *
-  * Scale: an IVF index is written `partitionBy("cell")`, so probing
+  * Scale: an IVF build is written `partitionBy("cell")`, so probing
   * `nprobe` cells is a partition-pruned scan reading nprobe/nlist of the
-  * data — the parquet-native analogue of faiss IVF cell lists. The flat
-  * index is a plain dataset scanned fully (exact search).
+  * base — the parquet-native analogue of faiss IVF cell lists. The flat
+  * index is a plain dataset scanned fully (exact search). An append's
+  * delta is one run sorted by `cell`, with `cell` a data column: a small
+  * delta is one file, whatever number of cells it touches, because on
+  * every store the file is the write's unit of cost (a create, a
+  * NameNode round trip, a PUT). The trade: a probe prunes the runs by
+  * their parquet statistics, not by directory, until a compaction folds
+  * `deltas/` into the cells.
   */
 object IndexStore {
 
@@ -221,12 +230,10 @@ object IndexStore {
     // exactly once, into the version dir; `latest` is then a byte-level
     // FILE copy of what was just written (r14: the old two-target write
     // loop re-ran the whole corpus pass — and its shuffle — per target,
-    // doubling the dominant stage of every build). The manifest count is
-    // a Spark count over the written files: parquet answers it from the
-    // row-group metadata, so no row is decoded and the corpus pass never
-    // re-runs, and the footers are read by the executors — a driver-side
-    // footer walk would be one read per file at 100 TB.
-    writeVectors(assigned, backend, params.nlist, s"$vDir/vectors")
+    // doubling the dominant stage of every build). The manifest count —
+    // and a flat index's dim — come from the write itself: nothing is
+    // read back.
+    val (count, writtenDim) = writeVectors(assigned, backend, params.nlist, s"$vDir/vectors")
     locally {
       fitted.foreach(cents =>
         cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "centroid")
@@ -240,20 +247,20 @@ object IndexStore {
       // (answerless_search.py:60-71,104-111): (doc_id, origin_*, ...)
       sources.foreach(_.write.mode("overwrite").parquet(s"$vDir/sources"))
     }
-    val written = spark.read.parquet(s"$vDir/vectors")
-    val count = written.count()
-    // dim: the fitted centroid length for ivf* (already driver-side);
-    // flat reads one row back from the written file — either way the
-    // input lineage is never re-executed
-    val dim = fitted.flatMap(_.headOption).map(_.length).getOrElse(
-      written.select(size(col("vec"))).first().getInt(0))
+    // dim: the fitted centroid length for ivf* (already driver-side), the
+    // written vectors' length for flat
+    val dim = fitted.flatMap(_.headOption).map(_.length).orElse(writtenDim)
+      .getOrElse(throw new IllegalArgumentException(
+        s"build $name: no vectors to take the dim from"))
     val createdAt = ZonedDateTime.now(ZoneOffset.UTC)
       .format(DateTimeFormatter.ISO_LOCAL_DATE_TIME).take(19)
     val manifest = Manifest(dim, count, model, normalize, backend, params,
       chunking, metric, createdAt, measuredRecall)
     writeString(s"$vDir/manifest.json", manifest.toJson)
     val latestDir = s"$root/$name/latest"
-    for (ds <- Seq("vectors", "centroids", "codebooks", "sources"))
+    // a build replaces latest whole: the previous build's append runs
+    // (`deltas`, never in a version dir) and any sidecar this build lacks go
+    for (ds <- Seq("vectors", "deltas", "centroids", "codebooks", "sources"))
       copyDirOver(s"$vDir/$ds", s"$latestDir/$ds")
     // the fits are already on the driver: seed their sidecar entries, so
     // the next search or append reads no sidecar
@@ -297,7 +304,10 @@ object IndexStore {
     math.max(1, spark.sessionState.conf.numShufflePartitions /
       math.max(1, nlist))
 
-  /** The vectors layout write, shared by [[build]] and [[append]].
+  /** The vectors layout write of [[build]]. Returns the rows written and
+    * the largest `vec` length among them (None without `vec` or rows),
+    * observed in the write's result stage: counted once per committed
+    * row, where a re-run map task cannot count twice, and never read back.
     *
     * FEW files per cell, not one per (writer task × cell): partitionBy
     * from W tasks writes up to W files in every cell directory — at nlist
@@ -320,7 +330,7 @@ object IndexStore {
     * the W-files-per-cell listing cost this layout exists to avoid.
     */
   private def writeVectors(assigned: DataFrame, backend: String,
-      nlist: Int, dest: String): Unit = {
+      nlist: Int, dest: String): (Long, Option[Int]) = {
     val spark = assigned.sparkSession
     val ivf = backend.startsWith("ivf")
     val laidOut =
@@ -332,25 +342,40 @@ object IndexStore {
             pmod(xxhash64(col("id")), lit(s.toLong)))
         else assigned.repartition(col("cell"))
       }
-    val w = laidOut.write.mode("overwrite")
+    val obs = org.apache.spark.sql.Observation()
+    val dim = if (assigned.columns.contains("vec")) max(size(col("vec")))
+              else lit(null).cast("int")
+    val w = laidOut.observe(obs, count(lit(1)).as("rows"), dim.as("dim"))
+      .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRowsPerCellFile(spark))
     (if (ivf) w.partitionBy("cell") else w).parquet(dest)
+    val m = obs.get
+    (m("rows").asInstanceOf[Long], Option(m("dim")).map(_.asInstanceOf[Int]))
   }
 
-  /** Replace `dst` with a file-level copy of `src` (no-op when `src` does
-    * not exist — optional sidecars). Local FS / HDFS: a byte copy; object
-    * stores: server-side copies. Either way no Spark job, no decode, no
-    * recompute — the lineage that produced `src` never re-runs.
+  /** The delta write of [[append]]: one run of parquet files sorted by
+    * `cell`, a data column, through one shuffle keyed by `cell` that AQE
+    * coalesces. A delta below the advisory partition size lands as one
+    * file, however many cells it touches; a large one keeps its write
+    * parallelism, and `maxRecordsPerFile` still bounds any one file.
+    */
+  private def writeRun(assigned: DataFrame, dest: String): Unit =
+    assigned.hint("rebalance", col("cell")).sortWithinPartitions("cell")
+      .write.mode("overwrite")
+      .option("maxRecordsPerFile", maxRowsPerCellFile(assigned.sparkSession))
+      .parquet(dest)
+
+  /** Replace `dst` with a file-level copy of the data files under `src`,
+    * through [[mergeInto]]; when `src` does not exist (an optional
+    * sidecar), `dst` is just removed. No Spark job, no decode, no
+    * recompute — the lineage that produced `src` never re-runs — but every
+    * byte streams through this JVM, on every store: Hadoop's copy reads
+    * and re-writes, it is not a server-side copy.
     */
   private def copyDirOver(src: String, dst: String): Unit = {
-    val s = new HPath(src)
-    val fs = s.getFileSystem(hadoopConf)
-    if (fs.exists(s)) {
-      val d = new HPath(dst)
-      val dfs = d.getFileSystem(hadoopConf)
-      dfs.delete(d, true)
-      org.apache.hadoop.fs.FileUtil.copy(fs, s, dfs, d, false, hadoopConf)
-    }
+    val d = new HPath(dst)
+    d.getFileSystem(hadoopConf).delete(d, true)
+    mergeInto(dataFilesUnder(src), dst)
   }
 
   /** Copy `files` (from [[dataFilesUnder]]) into `dst` at their relative
@@ -372,8 +397,9 @@ object IndexStore {
 
   /** The data files under `dir` as (relative path, status), sorted by
     * path: one `listStatus` per directory, skipping underscore and dot
-    * names as parquet readers do. The one walk of an appended delta: its
-    * merge journal, its merge and its row count all read this list.
+    * names as parquet readers do; empty when `dir` does not exist. The one
+    * walk of an appended delta: its merge journal, its merge and its row
+    * count all read this list.
     */
   private def dataFilesUnder(dir: String): Seq[(String, FileStatus)] = {
     val top = new HPath(dir)
@@ -385,27 +411,29 @@ object IndexStore {
         else if (f.isDirectory) walk(f.getPath, s"$prefix$base/")
         else Seq(s"$prefix$base" -> f)
       }
-    walk(top, "").sortBy(_._1)
+    try walk(top, "").sortBy(_._1)
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
 
-  /** Rows in parquet `files`, summed from their footers: metadata only, on
-    * the driver. The read options come from the session's Hadoop conf,
+  /** Rows in each parquet file of `files`, from its footer: metadata only,
+    * on the driver. The read options come from the session's Hadoop conf,
     * built once: `ParquetFileReader.open` builds default options per file,
     * ~8 ms a file against ~0.3 ms on a 4-core host.
     */
-  private def footerRows(files: Seq[FileStatus]): Long = {
+  private def footerRows(files: Seq[FileStatus]): Seq[Long] = {
     val conf = hadoopConf
     val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     files.map { f =>
       val r = new org.apache.parquet.hadoop.ParquetFileReader(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf), opts)
       try r.getRecordCount finally r.close()
-    }.sum
+    }
   }
 
   /** The append merge journal lives INSIDE latest/vectors under an
     * underscore name, so parquet readers skip it and a plain directory
-    * copy of the artifact carries its own recovery state.
+    * copy of the artifact carries its own recovery state. The files it
+    * names are in latest/deltas.
     */
   private def mergeJournalPath(latest: String): String =
     s"$latest/vectors/_graft_merge.json"
@@ -423,7 +451,7 @@ object IndexStore {
 
   /** Roll back a crashed [[append]] file-merge, if its journal is present:
     * delete whichever of the journaled delta files were already copied
-    * into latest/vectors, restore the journaled pre-merge manifest, drop
+    * into latest/deltas, restore the journaled pre-merge manifest, drop
     * the journal. Idempotent; no-op when no journal exists. Called at the
     * start of every append, so a failed append's re-run cannot double the
     * rows the crashed attempt already copied (each attempt writes a NEW
@@ -443,7 +471,7 @@ object IndexStore {
         .map(_.group(1)).getOrElse("").split(",").iterator
         .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
       files.foreach { rel =>
-        fs.delete(new HPath(s"$latest/vectors/$rel"), false)
+        fs.delete(new HPath(s"$latest/deltas/$rel"), false)
       }
       "\"manifest_b64\": \"([^\"]*)\"".r.findFirstMatchIn(j).foreach { m =>
         writeString(s"$latest/manifest.json", new String(
@@ -508,13 +536,19 @@ object IndexStore {
 
   /** Incremental index growth: assign `newVectors` (`id`, `vec`,
     * optionally `text` — null when absent, like [[build]]) with the
-    * PERSISTED centroids/codebooks — no refit — append them to the latest
-    * cell partitions, and record a new version whose `vectors/` holds just
-    * the appended DELTA (parent + delta reconstructs the version; `latest`
-    * stays the full index). This is how a growing corpus joins a 100 TB
-    * index: a narrow assignment map over the new rows plus a partitioned
-    * append — the existing index is never rewritten, reshuffled, or read
-    * (beyond its tiny model sidecars).
+    * PERSISTED centroids/codebooks — no refit — write them as one run
+    * sorted by cell ([[writeRun]]: a small delta is one file) into a new
+    * version whose `vectors/` holds just the appended DELTA (parent + delta
+    * reconstructs the version), and copy that run's files into
+    * `latest/deltas/`, beside the base cells (`latest` stays the full
+    * index, see [[load]]). This is how a growing corpus joins a 100 TB
+    * index: a narrow assignment map over the new rows plus a few new files
+    * — the existing index is never rewritten, reshuffled, or read (beyond
+    * its tiny model sidecars).
+    *
+    * A delta of 0 rows records an empty version on a flat index; an ivf*
+    * index refuses it with an `IllegalArgumentException` and leaves no
+    * version behind.
     *
     * Assignment uses the exact coarse argmin for every ivf* backend
     * (including ivf_hier, whose build-side two-level probe is a
@@ -563,36 +597,37 @@ object IndexStore {
     val latest = s"$root/$name/latest"
     val vDir = s"$root/$name/versions/$version"
 
-    // same bounded-files-per-cell layout discipline as build(); the
-    // delta's lineage (assignment + layout shuffle) runs ONCE, into the
+    // the delta's lineage (assignment + one shuffle) runs ONCE, into the
     // version dir. Its files are listed once, and `added` is the sum of
     // their parquet footers' row counts, read on the driver: a delta is
     // a few files, so this costs no Spark job and no second assignment
-    // pass.
-    writeVectors(assigned, old.backend, old.params.nlist, s"$vDir/vectors")
-    val delta = dataFilesUnder(s"$vDir/vectors")
-    if (delta.isEmpty) {
-      // a cell-partitioned write of 0 rows leaves no data file, so the
-      // version could never be loaded (a flat write leaves one empty file)
+    // pass. Only files with rows are merged (a write of 0 rows leaves one
+    // empty file).
+    writeRun(assigned, s"$vDir/vectors")
+    val written = dataFilesUnder(s"$vDir/vectors")
+    val perFile = footerRows(written.map(_._2))
+    val added = perFile.sum
+    if (added == 0 && old.backend != "flat") {
       new HPath(vDir).getFileSystem(hadoopConf).delete(new HPath(vDir), true)
       throw new IllegalArgumentException(
-        s"append to $name: the delta has no rows, and a ${old.backend} version needs a data file")
+        s"append to $name: the delta has no rows, and only a flat index records an empty version")
     }
-    val added = footerRows(delta.map(_._2))
+    val delta = written.zip(perFile).collect { case (f, n) if n > 0 => f }
     val createdAt = ZonedDateTime.now(ZoneOffset.UTC)
       .format(DateTimeFormatter.ISO_LOCAL_DATE_TIME).take(19)
     val updated = old.copy(count = old.count + added, createdAt = createdAt)
     // JOURNALED file-merge into latest (the file form of a mode("append")
     // write, which committed atomically at the job level — a bare
     // file-by-file copy does not): record the delta's file list and the
-    // pre-merge manifest in a journal inside latest/vectors, copy, rewrite
-    // the manifest, then drop the journal. A crash at ANY point leaves
-    // either the pre-append state (after [[healPendingMerge]] rolls the
-    // journal back on the next append) or the fully-landed append — never
-    // silent duplicate rows from a re-run of a half-merged delta.
+    // pre-merge manifest in a journal inside latest/vectors, copy into
+    // latest/deltas, rewrite the manifest, then drop the journal. A crash
+    // at ANY point leaves either the pre-append state (after
+    // [[healPendingMerge]] rolls the journal back on the next append) or
+    // the fully-landed append — never silent duplicate rows from a re-run
+    // of a half-merged delta.
     writeString(mergeJournalPath(latest), mergeJournalJson(
       version, preManifest, delta.map(_._1)))
-    mergeInto(delta, s"$latest/vectors")
+    mergeInto(delta, s"$latest/deltas")
     // carry the model sidecars into the version dir so it is servable on
     // its own (a file copy: they are tiny)
     for (side <- Seq("centroids", "codebooks"))
@@ -622,12 +657,26 @@ object IndexStore {
 
   /** Read an index (latest or a specific version). The scan is lazy: with
     * an IVF layout, a subsequent `.filter(col("cell").isin(...))` prunes
-    * partitions before any IO.
+    * the base's partitions before any IO. When the dir holds appended runs
+    * (`deltas/`, see [[append]]), the read is the base scan `unionByName`
+    * the runs' scan, and the same filter reaches the runs as a pushed data
+    * filter: they are sorted by cell, so parquet statistics skip the row
+    * groups of other cells. Without runs the read is the base scan alone.
     */
   def load(spark: SparkSession, root: String, name: String,
            version: Option[String] = None): DataFrame = {
     val dir = dirOf(root, name, version)
-    spark.read.parquet(s"$dir/vectors")
+    val base = spark.read.parquet(s"$dir/vectors")
+    if (dataFilesUnder(s"$dir/deltas").isEmpty) base
+    else {
+      // the runs carry the base's columns, so they are read at its schema
+      // with no schema-inference job; `text` is kept for a base written
+      // before chunk text moved into the rows
+      val schema = if (base.columns.contains("text")) base.schema
+                   else base.schema.add("text", "string")
+      base.unionByName(spark.read.schema(schema).parquet(s"$dir/deltas"),
+        allowMissingColumns = true)
+    }
   }
 
   /** Materialize a version AS OF its write: a full-build version loads
@@ -637,9 +686,9 @@ object IndexStore {
     * full build and unioning every delta on the way forward. Equal to
     * `load(latest)` for the NEWEST version, and to the point-in-time
     * index for any earlier one — the r9 judge's missing chain-walk API.
-    * The union is lazy (plain parquet scans; an IVF layout keeps its
-    * `cell` column, so downstream partition pruning still applies);
-    * chain length = append count, bounded and tiny.
+    * The union is lazy (plain parquet scans; every dir keeps its `cell`
+    * column, so a cell filter partition-prunes the build and is a pushed
+    * data filter on each delta run); chain length = append count.
     */
   def loadResolved(spark: SparkSession, root: String, name: String,
                    version: String): DataFrame = {

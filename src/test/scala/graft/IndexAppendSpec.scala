@@ -11,9 +11,9 @@ import graft.sources.Tables
 
 /** IndexStore.append: incremental growth with FROZEN quantizers — new
   * vectors are assigned with the persisted centroids/codebooks (no refit),
-  * appended to the latest cell partitions, and recorded as a delta
-  * version with parent provenance. Queries probing only cells the append
-  * never touched must see bit-identical results.
+  * landed in latest as one cell-sorted run beside the build's cells, and
+  * recorded as a delta version with parent provenance. Queries probing
+  * only cells the append never touched must see bit-identical results.
   */
 class IndexAppendSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -356,6 +356,112 @@ class IndexAppendSpec extends SparkSpec {
     val bIds = expect.keySet
     idx.filter(col("id").isin(bIds.toSeq: _*)).collect().foreach { r =>
       assert(r.getAs[Int]("cell") == expect(r.getAs[Long]("id")))
+    }
+  }
+
+  /** The data files under `root/idx/latest`, as paths relative to it. */
+  private def latestFiles(root: String): Set[String] = {
+    val top = java.nio.file.Paths.get(s"$root/idx/latest")
+    val s = java.nio.file.Files.walk(top)
+    try s.iterator().asScala.filter { p =>
+      val base = p.getFileName.toString
+      java.nio.file.Files.isRegularFile(p) && !base.startsWith("_") && !base.startsWith(".")
+    }.map(p => top.relativize(p).toString).toSet
+    finally s.close()
+  }
+
+  /** Build 200 corpus docs on `backend`, then append the next 9 corpus
+    * docs three at a time through `vectorize`. Returns the root, the
+    * config, the 9 docs and latest's data files before the appends.
+    */
+  private def threeAppends(backend: String)
+      : (String, IndexPipeline.Config, Seq[(Long, String)], Set[String]) = {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory(s"graft_app_runs_$backend").toString
+    val cfg = IndexPipeline.Config(name = "idx", backend = backend)
+    val docs = Tables.documents(spark, dir)
+      .select(col("doc_id").cast("long"), col("text")).orderBy(col("doc_id")).limit(209)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    IndexPipeline.build(docs.take(200).toDF("doc_id", "text"), root, cfg)
+    val before = latestFiles(root)
+    val fresh = docs.drop(200)
+    fresh.grouped(3).foreach(d =>
+      IndexStore.append(IndexPipeline.vectorize(d.toDF("doc_id", "text"), cfg), root, "idx"))
+    (root, cfg, fresh, before)
+  }
+
+  test("three 3-doc appends to an ivf index add three data files to latest, none in a cell") {
+    val (root, _, _, before) = threeAppends("ivf")
+    val after = latestFiles(root)
+    val added = after -- before
+    assert(added.size == 3, s"appends added ${added.toSeq.sorted}")
+    assert(added.forall(_.startsWith("deltas/")), s"appends added ${added.toSeq.sorted}")
+    assert(after.filter(_.startsWith("vectors/")) == before.filter(_.startsWith("vectors/")),
+      "an append wrote into the build's cells")
+    // each delta spans several cells: a file per touched cell would be more
+    val touched = IndexStore.versions(root, "idx").tail.map(v =>
+      IndexStore.load(spark, root, "idx", Some(v)).select("cell").distinct().count()).sum
+    assert(touched > 3, s"fixture regression: the deltas touch $touched cells")
+    assert(IndexStore.load(spark, root, "idx").count() == IndexStore.manifest(root, "idx").count)
+  }
+
+  test("after three appends, flat and ivf top-10 equal a driver replica over loadResolved") {
+    def round6(d: Double): Double =
+      java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    for (backend <- Seq("flat", "ivf")) {
+      val (root, cfg, fresh, _) = threeAppends(backend)
+      val rows = IndexStore.loadResolved(spark, root, "idx", IndexStore.versions(root, "idx").last)
+        .select("id", "vec", "cell").collect()
+        .map(r => (r.getString(0), r.getSeq[Float](1).toArray, r.getInt(2))).toSeq
+      assert(rows.length == IndexStore.manifest(root, "idx").count)
+      val encode = graft.functions.Encoders.get(cfg.model).openPartition(cfg.dim, cfg.normalize)
+      // the cells a search probes: the serving dial of nearest centroids
+      // by squared L2, ties by cell order; every cell on a flat index
+      def cells(qv: Array[Float]): Set[Int] =
+        if (backend == "flat") Set(0)
+        else {
+          val cents = IndexStore.loadCentroids(spark, root, "idx")
+          val np = IndexStore.manifest(root, "idx").servingProbes
+          cents.indices.map(c => (c, cents(c).indices.map { d =>
+            val diff = qv(d) - cents(c)(d); diff * diff }.sum))
+            .sortBy(_._2).take(math.min(np, cents.length)).map(_._1).toSet
+        }
+      val s = spark
+      import s.implicits._
+      val queries = IndexPipeline.chunked(fresh.toDF("doc_id", "text"), cfg)
+        .select("text").as[String].collect().toSeq.take(6)
+      assert(queries.nonEmpty)
+      queries.foreach { q =>
+        val qv = encode(q)
+        val probed = cells(qv)
+        val want = rows.filter(r => probed(r._3))
+          .map { case (id, v, _) =>
+            (id, round6(qv.indices.map(i => qv(i).toDouble * v(i).toDouble).sum))
+          }
+          .sortBy { case (id, sc) => (-sc, id) }.take(10)
+        val got = IndexPipeline.search(spark, root, "idx", q, 10, cfg).collect().toSeq
+          .map(r => (r.getAs[String]("id"), r.getAs[Double]("score")))
+        assert(got == want, s"$backend: search differs from the replica for '${q.take(40)}'")
+      }
+      // the base scan and the runs' scan still serve a warm search in one
+      // job with no exchange; an ivf probe prunes the base's cell dirs and
+      // reaches the runs as a data filter
+      def search() = IndexPipeline.search(spark, root, "idx", queries.head, 10, cfg)
+      search().collect()
+      val (_, jobs, shuffled) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+        search().collect()
+      }
+      assert(jobs == 1 && shuffled == 0L, s"$backend: a warm search ran $jobs jobs, $shuffled shuffle bytes")
+      val scans = search().queryExecution.sparkPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+      assert(scans.length == 2, s"$backend: ${scans.length} scans")
+      if (backend == "ivf") {
+        assert(scans.exists(_.partitionFilters.nonEmpty), s"no cell-pruned scan: $scans")
+        assert(scans.exists(_.dataFilters.exists(_.references.exists(_.name == "cell"))),
+          s"no cell data filter on the runs: $scans")
+      }
     }
   }
 }

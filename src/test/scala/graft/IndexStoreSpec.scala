@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.index.IndexStore
@@ -370,6 +372,45 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.delete(root, "ix_a"))
     assert(IndexStore.list(root) == Seq("ix_b"))
     assert(!IndexStore.delete(root, "ix_a")) // already gone -> no-op
+  }
+
+  test("a build takes its manifest count from its own write and reads nothing back") {
+    // rows in the parquet files under `dir`, from their footers
+    def footerTotal(dir: String): (Int, Long) = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val s = Files.walk(java.nio.file.Paths.get(dir))
+      val files = try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .toVector finally s.close()
+      (files.length, files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toString), conf))
+        try r.getRecordCount finally r.close()
+      }.sum)
+    }
+    spark.conf.set("graft.index.maxRowsPerCellFile", "2")
+    try for (backend <- Seq("flat", "ivf", "ivfpq")) {
+      val root = Files.createTempDirectory("graft-idx").toString
+      val (m, jobs, _) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+        IndexStore.build(vectors, root, "wc", backend,
+          params = IndexStore.Params(nlist = 4, nprobe = 2))
+      }
+      assert(m.count == 100 && m.dim == 8, backend)
+      val v = IndexStore.versions(root, "wc").head
+      for (dir <- Seq(s"$root/wc/versions/$v/vectors", s"$root/wc/latest/vectors")) {
+        val (files, rows) = footerTotal(dir)
+        // the ceiling splits the write into many files, so the count is
+        // taken over every one of them
+        assert(files >= 50, s"$backend: $files files under $dir")
+        assert(rows == m.count, s"$backend: $rows rows in the files of $dir, manifest ${m.count}")
+      }
+      assert(IndexStore.manifest(root, "wc").count == m.count)
+      // the same builds ran 5, 11 and 17 jobs when the count was read
+      // back: a schema-inference job and a count (plus a first() for a
+      // flat dim)
+      val readBack = Map("flat" -> 5, "ivf" -> 11, "ivfpq" -> 17)(backend)
+      assert(jobs <= readBack - 3, s"$backend: a build ran $jobs Spark jobs")
+    } finally spark.conf.unset("graft.index.maxRowsPerCellFile")
   }
 
 }
