@@ -4,13 +4,12 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.VectorOps
 
@@ -21,15 +20,21 @@ import graft.operators.VectorOps
   * `versions/<ts>/` archive with `meta.json`) re-expressed as a parquet
   * dataset instead of a faiss binary.
   *
-  * Layout: `root/<name>/latest/` holds `manifest.json`, the base
-  * `vectors/` a [[build]] wrote, and `deltas/`, the runs every later
-  * [[append]] landed; `root/<name>/versions/<ts>/` holds one write's
-  * `vectors/` (a build's cell layout, or an append's delta run) beside
-  * `manifest.json` and `meta.json`. Each vectors row is
-  * `(id, vec | codes, cell, text)`: the chunk text (the reference's
-  * `.docs.json` map) rides in the same row as its vector, nullable for
-  * rows written without text, so a search reads its previews from the
-  * rows it scores — one scan, pruned with the cells.
+  * Layout: `root/<name>/versions/<ts>/` holds one write: `vectors/` (a
+  * build's cell layout, or an append's delta run), the model sidecars of a
+  * build, `manifest.json` and `meta.json`. `root/<name>/latest/` holds
+  * only `manifest.json`, a pointer: besides the index's shape it names
+  * `base`, the build version whose `vectors/` and sidecars it serves, and
+  * `runs`, the append versions whose runs it unions, oldest first. Every
+  * write puts its version dir in place first and commits by rewriting
+  * that one file, so each byte is written once and no reader sees a
+  * version before latest names it; a version dir newer than the newest
+  * one latest names is an unfinished write, deleted by the next build or
+  * append.
+  * Each vectors row is `(id, vec | codes, cell, text)`: the chunk text
+  * (the reference's `.docs.json` map) rides in the same row as its
+  * vector, nullable for rows written without text, so a search reads its
+  * previews from the rows it scores — one scan, pruned with the cells.
   *
   * Scale: an IVF build is written `partitionBy("cell")`, so probing
   * `nprobe` cells is a partition-pruned scan reading nprobe/nlist of the
@@ -39,8 +44,9 @@ import graft.operators.VectorOps
   * delta is one file, whatever number of cells it touches, because on
   * every store the file is the write's unit of cost (a create, a
   * NameNode round trip, a PUT). The trade: a probe prunes the runs by
-  * their parquet statistics, not by directory, until a compaction folds
-  * `deltas/` into the cells.
+  * their parquet statistics, not by directory, and each run is one more
+  * root path of the runs' scan, until a compaction folds them into a new
+  * base.
   */
 object IndexStore {
 
@@ -101,10 +107,62 @@ object IndexStore {
   }
 
   private val VersionFmt = DateTimeFormatter.ofPattern("yyyyMMdd-HHmmss")
+  private val VersionId = """(\d{8}-\d{6})(?:-(\d+))?""".r
+
+  /** A version id's place in write order: its timestamp, then its
+    * same-second suffix as a number (`…-2` before `…-10`).
+    */
+  private def writeOrder(v: String): (String, Int) = v match {
+    case VersionId(ts, n) => (ts, Option(n).fold(0)(_.toInt))
+    case other => (other, 0)
+  }
 
   /** The dir of the latest index or of one version. */
   private def dirOf(root: String, name: String, version: Option[String]): String =
     version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
+
+  /** The files a manifest names: `base`, the build version that holds
+    * `vectors/` and the model sidecars; `runs`, the append versions whose
+    * delta runs it unions, oldest first; `schema`, the rows' DDL, so a
+    * read infers nothing.
+    */
+  private case class Pointer(base: String, runs: Seq[String], schema: Option[String]) {
+    def newest: String = runs.lastOption.getOrElse(base)
+    def json: String =
+      s""", "base": "$base", "runs": [${runs.map("\"" + _ + "\"").mkString(", ")}]""" +
+        schema.fold("")(d => s""", "schema": "$d"""")
+  }
+
+  /** The pointer in manifest text; None for a manifest written before
+    * `latest` became a pointer.
+    */
+  private def pointerOf(j: String): Option[Pointer] =
+    "\"base\": \"([^\"]+)\"".r.findFirstMatchIn(j).map { b =>
+      val runs = "\"runs\": \\[([^\\]]*)\\]".r.findFirstMatchIn(j).toSeq
+        .flatMap(_.group(1).split(",")).map(_.trim.stripPrefix("\"").stripSuffix("\""))
+        .filter(_.nonEmpty)
+      Pointer(b.group(1), runs,
+        "\"schema\": \"([^\"]*)\"".r.findFirstMatchIn(j).map(_.group(1)))
+    }
+
+  /** `dir`'s manifest text; None when it has none (a streaming-ingest
+    * target, a hand-written dir). Any other read failure propagates.
+    */
+  private def manifestAt(dir: String): Option[String] =
+    try Some(readString(s"$dir/manifest.json"))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The dir whose `vectors/` and sidecars `version` (latest when None)
+    * serves as its base: the version its manifest names — read from
+    * `manifestText` when the caller already holds it — or the dir itself
+    * when it names none.
+    */
+  private def baseDir(root: String, name: String, version: Option[String],
+      manifestText: Option[String]): String = {
+    val dir = dirOf(root, name, version)
+    manifestText.orElse(manifestAt(dir)).flatMap(pointerOf)
+      .fold(dir)(p => s"$root/$name/versions/${p.base}")
+  }
 
   // Manifest/meta/versions go through the Hadoop FileSystem resolved from
   // the index path itself, so the sidecar files land on the same store the
@@ -133,7 +191,7 @@ object IndexStore {
   /** Build + persist an index over `vectors` (`id`, `vec array<float>`,
     * optionally `text`). backend: "flat" (single cell, unpartitioned) or
     * "ivf" (deterministic sampled k-means cells, partitioned by cell).
-    * Writes latest + a timestamped version.
+    * Writes a timestamped version, then points latest at it.
     *
     * Chunk text — the map the reference persists as `.docs.json` +
     * `.ids.json` beside the index (`pipeline.py:65-69,136-139`) so search
@@ -151,6 +209,7 @@ object IndexStore {
             sources: Option[DataFrame] = None,
             measuredRecall: Double = -1.0): Manifest = {
     val spark = vectors.sparkSession
+    rollBack(root, name)
     // the fitted models, written as sidecars beside the vectors: centroids
     // for every ivf* backend (a loader — and [[append]] — must be able to
     // re-assign without the original fit inputs), codebooks for ivfpq
@@ -227,13 +286,11 @@ object IndexStore {
     val version = freshVersion(root, name)
     val vDir = s"$root/$name/versions/$version"
     // The EXPENSIVE lineage (chunk → embed → assign → layout shuffle) runs
-    // exactly once, into the version dir; `latest` is then a byte-level
-    // FILE copy of what was just written (r14: the old two-target write
-    // loop re-ran the whole corpus pass — and its shuffle — per target,
-    // doubling the dominant stage of every build). The manifest count —
-    // and a flat index's dim — come from the write itself: nothing is
-    // read back.
-    val (count, writtenDim) = writeVectors(assigned, backend, params.nlist, s"$vDir/vectors")
+    // exactly once, into the version dir, and nothing is copied or read
+    // back: the manifest count — and a flat index's dim — come from the
+    // write itself.
+    val (count, writtenDim, schema) =
+      writeVectors(assigned, backend, params.nlist, s"$vDir/vectors")
     locally {
       fitted.foreach(cents =>
         cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "centroid")
@@ -256,24 +313,21 @@ object IndexStore {
       .format(DateTimeFormatter.ISO_LOCAL_DATE_TIME).take(19)
     val manifest = Manifest(dim, count, model, normalize, backend, params,
       chunking, metric, createdAt, measuredRecall)
-    writeString(s"$vDir/manifest.json", manifest.toJson)
-    val latestDir = s"$root/$name/latest"
-    // a build replaces latest whole: the previous build's append runs
-    // (`deltas`, never in a version dir) and any sidecar this build lacks go
-    for (ds <- Seq("vectors", "deltas", "centroids", "codebooks", "sources"))
-      copyDirOver(s"$vDir/$ds", s"$latestDir/$ds")
-    // the fits are already on the driver: seed their sidecar entries, so
-    // the next search or append reads no sidecar
-    fitted.foreach(cents => sidecar(spark, latestDir, "centroids")(_ => cents))
-    books.foreach(cb => sidecar(spark, latestDir, "codebooks")(_ => cb))
-    writeString(s"$latestDir/manifest.json", manifest.toJson)
+    val json = manifest.toJsonWith(Pointer(version, Nil, Some(schema)).json)
+    writeString(s"$vDir/manifest.json", json)
     val meta =
       s"""{"version": "$version", "created_at": "$createdAt", "embed_model": "$model",
          | "chunking": "${chunking.mode}", "chunk_size": ${chunking.size},
          | "chunk_overlap": ${chunking.overlap}, "index_backend": "$backend",
          | "vector_count": $count,
          | "metrics": {"recall@k": null, "mrr": null, "ndcg": null}}""".stripMargin
-    writeString(s"$root/$name/versions/$version/meta.json", meta)
+    writeString(s"$vDir/meta.json", meta)
+    // the fits are already on the driver: seed their sidecar entries, so
+    // the next search or append reads no sidecar
+    fitted.foreach(cents => sidecar(spark, vDir, "centroids")(_ => cents))
+    books.foreach(cb => sidecar(spark, vDir, "codebooks")(_ => cb))
+    // the commit: latest now names this version
+    writeString(s"$root/$name/latest/manifest.json", json)
     manifest
   }
 
@@ -304,10 +358,9 @@ object IndexStore {
     math.max(1, spark.sessionState.conf.numShufflePartitions /
       math.max(1, nlist))
 
-  /** The vectors layout write of [[build]]. Returns the rows written and
-    * the largest `vec` length among them (None without `vec` or rows),
-    * observed in the write's result stage: counted once per committed
-    * row, where a re-run map task cannot count twice, and never read back.
+  /** The vectors layout write of [[build]]. Returns [[observedWrite]]'s
+    * rows and dim, and the schema the rows read back at, as DDL: the
+    * written columns, with `cell` last when it is a partition column.
     *
     * FEW files per cell, not one per (writer task × cell): partitionBy
     * from W tasks writes up to W files in every cell directory — at nlist
@@ -330,7 +383,7 @@ object IndexStore {
     * the W-files-per-cell listing cost this layout exists to avoid.
     */
   private def writeVectors(assigned: DataFrame, backend: String,
-      nlist: Int, dest: String): (Long, Option[Int]) = {
+      nlist: Int, dest: String): (Long, Option[Int], String) = {
     val spark = assigned.sparkSession
     val ivf = backend.startsWith("ivf")
     val laidOut =
@@ -342,15 +395,10 @@ object IndexStore {
             pmod(xxhash64(col("id")), lit(s.toLong)))
         else assigned.repartition(col("cell"))
       }
-    val obs = org.apache.spark.sql.Observation()
-    val dim = if (assigned.columns.contains("vec")) max(size(col("vec")))
-              else lit(null).cast("int")
-    val w = laidOut.observe(obs, count(lit(1)).as("rows"), dim.as("dim"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRowsPerCellFile(spark))
-    (if (ivf) w.partitionBy("cell") else w).parquet(dest)
-    val m = obs.get
-    (m("rows").asInstanceOf[Long], Option(m("dim")).map(_.asInstanceOf[Int]))
+    val (rows, dim) = observedWrite(laidOut, dest, ivf)
+    val (cell, data) = assigned.schema.fields.map(_.copy(nullable = true))
+      .partition(f => ivf && f.name == "cell")
+    (rows, dim, StructType(data ++ cell).toDDL)
   }
 
   /** The delta write of [[append]]: one run of parquet files sorted by
@@ -358,146 +406,63 @@ object IndexStore {
     * coalesces. A delta below the advisory partition size lands as one
     * file, however many cells it touches; a large one keeps its write
     * parallelism, and `maxRecordsPerFile` still bounds any one file.
+    * Returns the rows written.
     */
-  private def writeRun(assigned: DataFrame, dest: String): Unit =
-    assigned.hint("rebalance", col("cell")).sortWithinPartitions("cell")
+  private def writeRun(assigned: DataFrame, dest: String): Long =
+    observedWrite(assigned.hint("rebalance", col("cell")).sortWithinPartitions("cell"),
+      dest, byCell = false)._1
+
+  /** Write `laidOut` to `dest` as parquet, `partitionBy("cell")` when
+    * `byCell`, each file at most the session's row ceiling. Returns the
+    * rows written and the largest `vec` length among them (None without
+    * `vec` or rows), observed in the write's result stage: counted once per
+    * committed row, where a re-run map task cannot count twice, and never
+    * read back.
+    */
+  private def observedWrite(laidOut: DataFrame, dest: String,
+      byCell: Boolean): (Long, Option[Int]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val dim = if (laidOut.columns.contains("vec")) max(size(col("vec")))
+              else lit(null).cast("int")
+    val w = laidOut.observe(obs, count(lit(1)).as("rows"), dim.as("dim"))
       .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRowsPerCellFile(assigned.sparkSession))
-      .parquet(dest)
-
-  /** Replace `dst` with a file-level copy of the data files under `src`,
-    * through [[mergeInto]]; when `src` does not exist (an optional
-    * sidecar), `dst` is just removed. No Spark job, no decode, no
-    * recompute — the lineage that produced `src` never re-runs — but every
-    * byte streams through this JVM, on every store: Hadoop's copy reads
-    * and re-writes, it is not a server-side copy.
-    */
-  private def copyDirOver(src: String, dst: String): Unit = {
-    val d = new HPath(dst)
-    d.getFileSystem(hadoopConf).delete(d, true)
-    mergeInto(dataFilesUnder(src), dst)
+      .option("maxRecordsPerFile", maxRowsPerCellFile(laidOut.sparkSession))
+    (if (byCell) w.partitionBy("cell") else w).parquet(dest)
+    val m = obs.get
+    (m("rows").asInstanceOf[Long], Option(m("dim")).map(_.asInstanceOf[Int]))
   }
 
-  /** Copy `files` (from [[dataFilesUnder]]) into `dst` at their relative
-    * paths — the file-level form of a `mode("append")` write, used to land
-    * an already-written delta into `latest` without recomputing its
-    * lineage. Spark part-file names carry a job-unique id, so copied names
-    * cannot collide with resident files. The copies run in parallel on the
-    * common fork-join pool: each is a few store round trips (an object
-    * store's are network calls), and nothing orders them.
+  /** Delete the version dirs of unfinished writes, before a build or an
+    * append starts its own: every dir newer, in write order, than the
+    * newest version latest names — every dir when there is no latest
+    * manifest. A write commits by moving latest, so such a dir is a write
+    * that crashed or failed before its commit, and no reader ever saw it.
+    * A latest written before it became a pointer names no version; its
+    * versions are kept.
     */
-  private def mergeInto(files: Seq[(String, FileStatus)], dst: String): Unit = {
-    val conf = hadoopConf
-    val dfs = new HPath(dst).getFileSystem(conf)
-    files.asJava.parallelStream().forEach { case (rel, f) =>
-      org.apache.hadoop.fs.FileUtil.copy(f.getPath.getFileSystem(conf), f, dfs,
-        new HPath(s"$dst/$rel"), false, true, conf)
+  private def rollBack(root: String, name: String): Unit = {
+    val latest = manifestAt(dirOf(root, name, None))
+    if (latest.forall(pointerOf(_).isDefined)) {
+      val newest = latest.flatMap(pointerOf).map(p => writeOrder(p.newest))
+      val fs = new HPath(root).getFileSystem(hadoopConf)
+      for (v <- versions(root, name)
+           if VersionId.matches(v) && newest.forall(Ordering[(String, Int)].gt(writeOrder(v), _)))
+        fs.delete(new HPath(s"$root/$name/versions/$v"), true)
     }
   }
 
-  /** The data files under `dir` as (relative path, status), sorted by
-    * path: one `listStatus` per directory, skipping underscore and dot
-    * names as parquet readers do; empty when `dir` does not exist. The one
-    * walk of an appended delta: its merge journal, its merge and its row
-    * count all read this list.
-    */
-  private def dataFilesUnder(dir: String): Seq[(String, FileStatus)] = {
-    val top = new HPath(dir)
-    val fs = top.getFileSystem(hadoopConf)
-    def walk(p: HPath, prefix: String): Seq[(String, FileStatus)] =
-      fs.listStatus(p).toSeq.flatMap { f =>
-        val base = f.getPath.getName
-        if (base.startsWith("_") || base.startsWith(".")) Nil
-        else if (f.isDirectory) walk(f.getPath, s"$prefix$base/")
-        else Seq(s"$prefix$base" -> f)
-      }
-    try walk(top, "").sortBy(_._1)
-    catch { case _: java.io.FileNotFoundException => Nil }
-  }
-
-  /** Rows in each parquet file of `files`, from its footer: metadata only,
-    * on the driver. The read options come from the session's Hadoop conf,
-    * built once: `ParquetFileReader.open` builds default options per file,
-    * ~8 ms a file against ~0.3 ms on a 4-core host.
-    */
-  private def footerRows(files: Seq[FileStatus]): Seq[Long] = {
-    val conf = hadoopConf
-    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
-    files.map { f =>
-      val r = new org.apache.parquet.hadoop.ParquetFileReader(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf), opts)
-      try r.getRecordCount finally r.close()
-    }
-  }
-
-  /** The append merge journal lives INSIDE latest/vectors under an
-    * underscore name, so parquet readers skip it and a plain directory
-    * copy of the artifact carries its own recovery state. The files it
-    * names are in latest/deltas.
-    */
-  private def mergeJournalPath(latest: String): String =
-    s"$latest/vectors/_graft_merge.json"
-
-  // the pre-merge manifest travels base64'd: it is multi-line JSON, and
-  // embedding it verbatim would make the journal unparseable by the
-  // regex field pulls this file uses everywhere else
-  private def mergeJournalJson(version: String, preManifest: String,
-      files: Seq[String]): String =
-    s"""{"version": "$version",
-       | "manifest_b64": "${java.util.Base64.getEncoder
-          .encodeToString(preManifest.getBytes(UTF_8))}",
-       | "files": [${files.map(f => "\"" + f + "\"").mkString(", ")}]}"""
-      .stripMargin
-
-  /** Roll back a crashed [[append]] file-merge, if its journal is present:
-    * delete whichever of the journaled delta files were already copied
-    * into latest/deltas, restore the journaled pre-merge manifest, drop
-    * the journal. Idempotent; no-op when no journal exists. Called at the
-    * start of every append, so a failed append's re-run cannot double the
-    * rows the crashed attempt already copied (each attempt writes a NEW
-    * delta version with fresh part-file uuids, so leftovers would be
-    * silent duplicates — manifest count and search results both wrong).
-    * Readers between the crash and the next append may see the partial
-    * delta (single-writer artifact discipline, as in the reference);
-    * they can never see duplicates.
-    */
-  private[index] def healPendingMerge(root: String, name: String): Unit = {
-    val latest = s"$root/$name/latest"
-    val jp = new HPath(mergeJournalPath(latest))
-    val fs = jp.getFileSystem(hadoopConf)
-    if (fs.exists(jp)) {
-      val j = readString(jp.toString)
-      val files = "\"files\": \\[([^\\]]*)\\]".r.findFirstMatchIn(j)
-        .map(_.group(1)).getOrElse("").split(",").iterator
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-      files.foreach { rel =>
-        fs.delete(new HPath(s"$latest/deltas/$rel"), false)
-      }
-      "\"manifest_b64\": \"([^\"]*)\"".r.findFirstMatchIn(j).foreach { m =>
-        writeString(s"$latest/manifest.json", new String(
-          java.util.Base64.getDecoder.decode(m.group(1)), UTF_8))
-      }
-      // the crashed append's delta version never landed: drop its dir so
-      // the next delta's parent chain cannot thread through it (a real
-      // crash leaves it manifest-less anyway — unreadable garbage)
-      "\"version\": \"([^\"]*)\"".r.findFirstMatchIn(j).foreach { m =>
-        fs.delete(new HPath(s"$root/$name/versions/${m.group(1)}"), true)
-      }
-      fs.delete(jp, false)
-    }
-  }
-
-  /** A version id not yet taken: second-resolution UTC timestamp, with a
-    * `-N` suffix when two writes land in the same second (build + append
-    * in quick succession must not collide).
+  /** A version id that sorts after every existing one: the second-
+    * resolution UTC timestamp, or, when the newest version is of this
+    * second (or later, on a clock that stepped back), its timestamp with
+    * the next `-N` suffix — build + append in quick succession must not
+    * collide.
     */
   private def freshVersion(root: String, name: String): String = {
-    val base = ZonedDateTime.now(ZoneOffset.UTC).format(VersionFmt)
-    val fs = new HPath(root).getFileSystem(hadoopConf)
-    Iterator.from(0)
-      .map(i => if (i == 0) base else s"$base-$i")
-      .find(v => !fs.exists(new HPath(s"$root/$name/versions/$v")))
-      .get
+    val now = ZonedDateTime.now(ZoneOffset.UTC).format(VersionFmt)
+    versions(root, name).lastOption.map(writeOrder) match {
+      case Some((ts, n)) if ts >= now => s"$ts-${n + 1}"
+      case _ => now
+    }
   }
 
   /** Parse a manifest written by [[Manifest.toJson]] (own format: unique
@@ -536,19 +501,20 @@ object IndexStore {
 
   /** Incremental index growth: assign `newVectors` (`id`, `vec`,
     * optionally `text` — null when absent, like [[build]]) with the
-    * PERSISTED centroids/codebooks — no refit — write them as one run
+    * PERSISTED centroids/codebooks — no refit — and write them as one run
     * sorted by cell ([[writeRun]]: a small delta is one file) into a new
-    * version whose `vectors/` holds just the appended DELTA (parent + delta
-    * reconstructs the version), and copy that run's files into
-    * `latest/deltas/`, beside the base cells (`latest` stays the full
-    * index, see [[load]]). This is how a growing corpus joins a 100 TB
-    * index: a narrow assignment map over the new rows plus a few new files
-    * — the existing index is never rewritten, reshuffled, or read (beyond
-    * its tiny model sidecars).
+    * version whose `vectors/` holds just the appended DELTA, then point
+    * latest at the parent's base and runs plus this one. This is how a
+    * growing corpus joins a 100 TB index: a narrow assignment map over the
+    * new rows plus a few new files — the existing index is never
+    * rewritten, reshuffled, copied or read (beyond its tiny model
+    * sidecars, which the delta version resolves through its base).
     *
     * A delta of 0 rows records an empty version on a flat index; an ivf*
     * index refuses it with an `IllegalArgumentException` and leaves no
-    * version behind.
+    * version behind. An index whose latest names no versions (written
+    * before latest became a pointer) is refused with an
+    * `IllegalStateException`: rebuild it.
     *
     * Assignment uses the exact coarse argmin for every ivf* backend
     * (including ivf_hier, whose build-side two-level probe is a
@@ -565,24 +531,24 @@ object IndexStore {
     */
   def append(newVectors: DataFrame, root: String, name: String): Manifest = {
     val spark = newVectors.sparkSession
-    // roll back any crashed file-merge FIRST, so the manifest read below —
-    // and everything this append builds on it — sees a consistent artifact
-    healPendingMerge(root, name)
-    val preManifest = manifestJson(root, name)
-    val old = parseManifest(preManifest)
-    val parent = versions(root, name).lastOption.getOrElse("none")
+    rollBack(root, name)
+    val latestJson = manifestJson(root, name)
+    val old = parseManifest(latestJson)
+    val at = pointerOf(latestJson).getOrElse(throw new IllegalStateException(
+      s"append to $name: its latest manifest names no versions (written before " +
+        "latest became a pointer); rebuild the index"))
     val rows = withText(newVectors)
     val assigned = old.backend match {
       case "ivfpq" =>
-        val cents = loadCentroids(spark, root, name)
-        val cb = loadCodebooks(spark, root, name)
+        val cents = loadCentroids(spark, root, name, None, Some(latestJson))
+        val cb = loadCodebooks(spark, root, name, None, Some(latestJson))
         rows.select(col("id"),
           element_at(graft.functions.IvfProbes.column(col("vec"), cents, 1), 1)("cell")
             .cast("int").as("cell"),
           transform(graft.functions.PqCodes.column(col("vec"), cb), p => p("code"))
             .as("codes"), col("text"))
       case b if b.startsWith("ivf") =>
-        val cents = loadCentroids(spark, root, name)
+        val cents = loadCentroids(spark, root, name, None, Some(latestJson))
         VectorOps.assignCells(
             rows.select(col("id"), col("vec").as("embedding"), col("text")), cents)
           .select(col("id"), col("embedding").as("vec"),
@@ -594,115 +560,96 @@ object IndexStore {
           s"Unknown backend: $other (supported: flat, ivf, ivf_hier, ivfpq)")
     }
     val version = freshVersion(root, name)
-    val latest = s"$root/$name/latest"
     val vDir = s"$root/$name/versions/$version"
-
     // the delta's lineage (assignment + one shuffle) runs ONCE, into the
-    // version dir. Its files are listed once, and `added` is the sum of
-    // their parquet footers' row counts, read on the driver: a delta is
-    // a few files, so this costs no Spark job and no second assignment
-    // pass. Only files with rows are merged (a write of 0 rows leaves one
-    // empty file).
-    writeRun(assigned, s"$vDir/vectors")
-    val written = dataFilesUnder(s"$vDir/vectors")
-    val perFile = footerRows(written.map(_._2))
-    val added = perFile.sum
+    // version dir, and its rows are counted by that write
+    val added = writeRun(assigned, s"$vDir/vectors")
     if (added == 0 && old.backend != "flat") {
       new HPath(vDir).getFileSystem(hadoopConf).delete(new HPath(vDir), true)
       throw new IllegalArgumentException(
         s"append to $name: the delta has no rows, and only a flat index records an empty version")
     }
-    val delta = written.zip(perFile).collect { case (f, n) if n > 0 => f }
     val createdAt = ZonedDateTime.now(ZoneOffset.UTC)
       .format(DateTimeFormatter.ISO_LOCAL_DATE_TIME).take(19)
     val updated = old.copy(count = old.count + added, createdAt = createdAt)
-    // JOURNALED file-merge into latest (the file form of a mode("append")
-    // write, which committed atomically at the job level — a bare
-    // file-by-file copy does not): record the delta's file list and the
-    // pre-merge manifest in a journal inside latest/vectors, copy into
-    // latest/deltas, rewrite the manifest, then drop the journal. A crash
-    // at ANY point leaves either the pre-append state (after
-    // [[healPendingMerge]] rolls the journal back on the next append) or
-    // the fully-landed append — never silent duplicate rows from a re-run
-    // of a half-merged delta.
-    writeString(mergeJournalPath(latest), mergeJournalJson(
-      version, preManifest, delta.map(_._1)))
-    mergeInto(delta, s"$latest/deltas")
-    // carry the model sidecars into the version dir so it is servable on
-    // its own (a file copy: they are tiny)
-    for (side <- Seq("centroids", "codebooks"))
-      copyDirOver(s"$latest/$side", s"$vDir/$side")
-    writeString(s"$latest/manifest.json", updated.toJson)
-    val jp = new HPath(mergeJournalPath(latest))
-    jp.getFileSystem(hadoopConf).delete(jp, false)
-    // The version dir holds ONLY the delta, so its manifest must describe
-    // the delta (count == rows in the dir — `load(version)` then agrees
-    // with its own manifest), flagged `delta: true` with the parent and
-    // the post-append total alongside. The r8 judge caught the old
-    // behavior (total-count manifest beside delta-only vectors) as a
-    // loader-visible contradiction.
-    val deltaJson = old.copy(count = added, createdAt = createdAt).toJsonWith(
-      s""", "delta": true, "parent": "$parent", "total_count": ${updated.count}""")
-    writeString(s"$vDir/manifest.json", deltaJson)
+    val pointer = at.copy(runs = at.runs :+ version)
+    // The version dir holds ONLY the delta, so its manifest describes the
+    // delta (count == rows in the dir — `load(version)` then agrees with
+    // its own manifest), flagged `delta: true` with the parent and the
+    // post-append total alongside; its pointer resolves the whole index as
+    // of this write ([[loadResolved]]).
+    writeString(s"$vDir/manifest.json", old.copy(count = added, createdAt = createdAt)
+      .toJsonWith(s""", "delta": true, "parent": "${at.newest}", "total_count": ${updated.count}""" +
+        pointer.json))
     val meta =
       s"""{"version": "$version", "created_at": "$createdAt", "embed_model": "${old.model}",
          | "chunking": "${old.chunking.mode}", "chunk_size": ${old.chunking.size},
          | "chunk_overlap": ${old.chunking.overlap}, "index_backend": "${old.backend}",
          | "vector_count": ${updated.count},
-         | "parent": "$parent", "appended": $added,
+         | "parent": "${at.newest}", "appended": $added,
          | "metrics": {"recall@k": null, "mrr": null, "ndcg": null}}""".stripMargin
     writeString(s"$vDir/meta.json", meta)
+    // the commit: latest now names this run too
+    writeString(s"$root/$name/latest/manifest.json", updated.toJsonWith(pointer.json))
     updated
   }
 
-  /** Read an index (latest or a specific version). The scan is lazy: with
-    * an IVF layout, a subsequent `.filter(col("cell").isin(...))` prunes
-    * the base's partitions before any IO. When the dir holds appended runs
-    * (`deltas/`, see [[append]]), the read is the base scan `unionByName`
-    * the runs' scan, and the same filter reaches the runs as a pushed data
-    * filter: they are sorted by cell, so parquet statistics skip the row
-    * groups of other cells. Without runs the read is the base scan alone.
+  /** Read an index: the latest, or one version's own `vectors/` (an
+    * append version's: just its delta run). The latest is what its
+    * manifest names ([[loadResolved]]'s read). Every scan is lazy and
+    * reads at the schema the manifest records, so it starts no Spark job.
     */
   def load(spark: SparkSession, root: String, name: String,
            version: Option[String] = None): DataFrame = {
     val dir = dirOf(root, name, version)
-    val base = spark.read.parquet(s"$dir/vectors")
-    if (dataFilesUnder(s"$dir/deltas").isEmpty) base
-    else {
-      // the runs carry the base's columns, so they are read at its schema
-      // with no schema-inference job; `text` is kept for a base written
-      // before chunk text moved into the rows
-      val schema = if (base.columns.contains("text")) base.schema
-                   else base.schema.add("text", "string")
-      base.unionByName(spark.read.schema(schema).parquet(s"$dir/deltas"),
-        allowMissingColumns = true)
-    }
+    val j = manifestAt(dir)
+    if (version.isEmpty) resolved(spark, s"$root/$name", dir, j)
+    else scan(spark, j.flatMap(pointerOf).flatMap(_.schema), dir)
   }
 
-  /** Materialize a version AS OF its write: a full-build version loads
-    * as-is; a delta version ([[append]] writes only the appended rows
-    * under `versions/<ts>/vectors`, flagged `"delta": true` with its
-    * parent) resolves by walking the `parent` chain back to the nearest
-    * full build and unioning every delta on the way forward. Equal to
-    * `load(latest)` for the NEWEST version, and to the point-in-time
-    * index for any earlier one — the r9 judge's missing chain-walk API.
-    * The union is lazy (plain parquet scans; every dir keeps its `cell`
-    * column, so a cell filter partition-prunes the build and is a pushed
-    * data filter on each delta run); chain length = append count.
+  /** Materialize a version AS OF its write: its manifest names the build
+    * it grew from and the append runs up to it, read like the latest
+    * ([[load]]). Equal to `load(latest)` for the NEWEST version, and to
+    * the point-in-time index for any earlier one.
     */
   def loadResolved(spark: SparkSession, root: String, name: String,
                    version: String): DataFrame = {
-    val j = manifestJson(root, name, Some(version))
-    val df = load(spark, root, name, Some(version))
-    if (!j.contains("\"delta\": true")) df
-    else {
-      val parent = "\"parent\": \"([^\"]+)\"".r.findFirstMatchIn(j)
-        .getOrElse(sys.error(s"delta manifest for $name/$version has no parent"))
-        .group(1)
-      require(parent != "none", s"delta version $name/$version has no resolvable parent")
-      loadResolved(spark, root, name, parent).unionByName(df, allowMissingColumns = true)
-    }
+    val dir = dirOf(root, name, Some(version))
+    resolved(spark, s"$root/$name", dir, manifestAt(dir))
   }
+
+  /** The index `manifest` (the text at `dir`) names: the base scan, or the
+    * base scan union the runs' scan. With an IVF layout a later
+    * `.filter(col("cell").isin(...))` prunes the base's partitions before
+    * any IO and reaches the runs as a pushed data filter: they are sorted
+    * by cell, so parquet statistics skip the row groups of other cells.
+    * A manifest that names no pointer reads `dir`'s own `vectors/` — a
+    * streaming-ingest target, a hand-written dir — unless `dir` holds
+    * appended runs in the layout before latest became a pointer, which is
+    * refused rather than served without them.
+    */
+  private def resolved(spark: SparkSession, index: String, dir: String,
+      manifest: Option[String]): DataFrame =
+    manifest.flatMap(pointerOf) match {
+      case Some(p) =>
+        val base = scan(spark, p.schema, s"$index/versions/${p.base}")
+        if (p.runs.isEmpty) base
+        else base.union(spark.read.schema(base.schema)
+          .parquet(p.runs.map(r => s"$index/versions/$r/vectors"): _*))
+      case None =>
+        val legacyRuns = new HPath(s"$dir/deltas")
+        if (manifest.exists(_.contains("\"delta\": true")) ||
+            legacyRuns.getFileSystem(hadoopConf).exists(legacyRuns))
+          throw new IllegalStateException(
+            s"$dir holds appended runs in the layout before latest became a pointer; rebuild the index")
+        scan(spark, None, dir)
+    }
+
+  /** The parquet scan of `dir/vectors`, at `schema` (DDL) when the
+    * manifest records it, else inferred with a Spark job.
+    */
+  private def scan(spark: SparkSession, schema: Option[String], dir: String): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(s"$dir/vectors")
 
   /** The index's chunk text as a lazy `(id, text)` scan of the vector
     * rows ([[loadServing]]), rows without text left out; None for an
@@ -717,14 +664,14 @@ object IndexStore {
     else Some(rows.filter(col("text").isNotNull).select(col("id"), col("text")))
   }
 
-  /** The per-doc provenance sidecar, if present — served through the same
-    * cache as the vectors (searchWithSource joins it per query).
+  /** The per-doc provenance sidecar of the base, if present — served
+    * through the same cache as the vectors (searchWithSource joins it per
+    * query).
     */
   def loadSources(spark: SparkSession, root: String, name: String,
                   version: Option[String] = None,
                   manifestText: Option[String] = None): Option[DataFrame] = {
-    val dir = dirOf(root, name, version)
-    val p = new HPath(s"$dir/sources")
+    val p = new HPath(s"${baseDir(root, name, version, manifestText)}/sources")
     if (p.getFileSystem(hadoopConf).exists(p))
       Some(serving(spark, root, name, version, "sources", manifestText)(
         spark.read.parquet(p.toString)))
@@ -758,8 +705,8 @@ object IndexStore {
   def listDetailed(root: String): Seq[(String, String, Boolean)] =
     list(root).map { name =>
       val fs = new HPath(root).getFileSystem(hadoopConf)
-      (name, manifestJson(root, name),
-        fs.exists(new HPath(s"$root/$name/latest/sources")))
+      val mj = manifestJson(root, name)
+      (name, mj, fs.exists(new HPath(s"${baseDir(root, name, None, Some(mj))}/sources")))
     }
 
   /** Delete an index (latest + all versions) — the reference's index
@@ -794,27 +741,26 @@ object IndexStore {
   def versionArtifacts(root: String, name: String, version: String): Seq[(String, Long)] = {
     val dir = s"$root/$name/versions/$version"
     val p = new HPath(dir)
-    val fs = p.getFileSystem(hadoopConf)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val qdir = fs.makeQualified(p).toString
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile)
-          out += ((s.getPath.toString.stripPrefix(qdir).stripPrefix("/"), s.getLen))
-      }
-      out.sortBy(_._1).toSeq
-    }
+    if (p.getFileSystem(hadoopConf).exists(p)) filesUnder(dir) else Seq.empty
   }
 
-  /** Version ids, newest last (lexicographic == chronological). */
+  /** The files under `dir` as (path relative to it, size bytes), sorted. */
+  private def filesUnder(dir: String): Seq[(String, Long)] = {
+    val p = new HPath(dir)
+    val fs = p.getFileSystem(hadoopConf)
+    val qdir = fs.makeQualified(p).toString
+    val it = fs.listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter(_.isFile)
+      .map(f => (f.getPath.toString.stripPrefix(qdir).stripPrefix("/"), f.getLen))
+      .toSeq.sortBy(_._1)
+  }
+
+  /** Version ids in write order, newest last. */
   def versions(root: String, name: String): Seq[String] = {
     val p = new HPath(s"$root/$name/versions")
     val fs = p.getFileSystem(hadoopConf)
     if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
+    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq.sortBy(writeOrder)
   }
 
   /** Probe an IVF index: restrict the scan to the query's nprobe nearest
@@ -858,10 +804,10 @@ object IndexStore {
   /** The model sidecar `dir/<sub>` decoded by `read`, through the session's
     * [[graft.Artifacts]] store (kind "sidecar", 16 entries per session,
     * counted against its driver byte bound: "tiny" only holds at small
-    * nlist), keyed by the sidecar's OWN files: [[append]] never rewrites
-    * them, so no append evicts the entry, and a rebuild writes new part
-    * files, so the next read misses. [[build]] seeds the entry from the
-    * fit it holds.
+    * nlist), keyed by the sidecar's OWN files in the base version dir:
+    * [[append]] never rewrites them, so no append evicts the entry, and a
+    * rebuild writes a new base, so the next read misses. [[build]] seeds
+    * the entry from the fit it holds.
     */
   private def sidecar[A](spark: SparkSession, dir: String, sub: String)(read: String => A): A =
     graft.Artifacts.files(spark, "sidecar", s"$dir/$sub", cap = 16)(read(s"$dir/$sub"))
@@ -882,22 +828,24 @@ object IndexStore {
     serving(spark, root, name, version, "vectors", manifestText)(
       load(spark, root, name, version))
 
-  /** The coarse centroids persisted by an ivf* build, cell order. The
-    * entry is keyed by the sidecar's files, so `manifestText` is not read.
+  /** The coarse centroids persisted by the ivf* build that `version`
+    * (latest when None) names as its base, cell order. `manifestText`, a
+    * same-query read of that manifest, saves re-reading it.
     */
   def loadCentroids(spark: SparkSession, root: String, name: String,
                     version: Option[String] = None,
                     manifestText: Option[String] = None): Array[Array[Double]] =
-    sidecar(spark, dirOf(root, name, version), "centroids")(
+    sidecar(spark, baseDir(root, name, version, manifestText), "centroids")(
       spark.read.parquet(_).orderBy("cell").collect().map(_.getSeq[Double](1).toArray))
 
-  /** The PQ codebooks persisted by an ivfpq build, (m, code) order. The
-    * entry is keyed by the sidecar's files, so `manifestText` is not read.
+  /** The PQ codebooks persisted by the ivfpq build that `version` (latest
+    * when None) names as its base, (m, code) order; `manifestText` as in
+    * [[loadCentroids]].
     */
   def loadCodebooks(spark: SparkSession, root: String, name: String,
                     version: Option[String] = None,
                     manifestText: Option[String] = None): Array[Array[Array[Double]]] =
-    sidecar(spark, dirOf(root, name, version), "codebooks") { p =>
+    sidecar(spark, baseDir(root, name, version, manifestText), "codebooks") { p =>
       val rows = spark.read.parquet(p).orderBy("m", "code").collect()
         .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
       rows.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2)).toArray
@@ -937,11 +885,11 @@ object IndexStore {
   private[graft] def adcScored(spark: SparkSession, root: String, name: String,
                                queries: DataFrame, nprobe: Int,
                                version: Option[String]): DataFrame = {
-    // ONE manifest read per call: the text keys the serving scan and the
-    // parsed form resolves the serving dial (the sidecars key on their files)
+    // ONE manifest read per call: the text keys the serving scan, names
+    // the sidecars' base and its parsed form resolves the serving dial
     val mj = scala.util.Try(manifestJson(root, name, version)).toOption
-    val cents = loadCentroids(spark, root, name, version)
-    val cb = loadCodebooks(spark, root, name, version)
+    val cents = loadCentroids(spark, root, name, version, mj)
+    val cb = loadCodebooks(spark, root, name, version, mj)
     val np = if (nprobe >= 1) nprobe
              else mj.flatMap(j => scala.util.Try(parseManifest(j)).toOption)
                .map(_.servingProbes).filter(_ >= 1).getOrElse(VectorOps.NProbe)
@@ -964,10 +912,14 @@ object IndexStore {
   /** Export an index version (or latest) as a single zip archive — the
     * reference's download endpoint (`app/api/download_api.py:27-55`: zip
     * the version dir's files under a `{name}_v{version}/` /
-    * `{name}_latest/` prefix). Everything goes through the Hadoop FS API,
-    * so source artifacts and the destination archive can live on any store
-    * (HDFS/S3/local); entries are sorted for a deterministic archive.
-    * Returns the entry names written.
+    * `{name}_latest/` prefix). The archive holds the exported manifest's
+    * dir and every version dir that manifest names, at their paths under
+    * the index dir, so [[extractArchive]] into an index dir yields a
+    * loadable index: latest, a build version, or an append version with
+    * its base and the runs before it. Everything goes through the Hadoop
+    * FS API, so source artifacts and the destination archive can live on
+    * any store (HDFS/S3/local); entries are sorted for a deterministic
+    * archive. Returns the entry names written.
     *
     * Scale note: the archive is a sequential driver-side stream by design —
     * this is the "ship an index to a serving host" surface, not a data-path
@@ -976,36 +928,33 @@ object IndexStore {
     */
   def export(root: String, name: String, outPath: String,
              version: Option[String] = None): Seq[String] = {
+    val index = s"$root/$name"
     val dir = dirOf(root, name, version)
     val prefix = version.fold(s"${name}_latest")(v => s"${name}_v$v")
-    val p = new HPath(dir)
-    val fs = p.getFileSystem(hadoopConf)
-    require(fs.exists(p), s"no such index dir: $dir")
-    val qdir = fs.makeQualified(p).toString
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile) files += s.getPath.toString.stripPrefix(qdir).stripPrefix("/")
-    }
+    val fs = new HPath(index).getFileSystem(hadoopConf)
+    require(fs.exists(new HPath(dir)), s"no such index dir: $dir")
+    val named = manifestAt(dir).flatMap(pointerOf).toSeq
+      .flatMap(p => p.base +: p.runs).map(v => s"versions/$v")
+    val files = (dir.stripPrefix(s"$index/") +: named).distinct.flatMap(rel =>
+      filesUnder(s"$index/$rel").map { case (f, _) => s"$rel/$f" })
     val outP = new HPath(outPath)
     val outFs = outP.getFileSystem(hadoopConf)
     val zos = new java.util.zip.ZipOutputStream(outFs.create(outP, true))
     val entries = files.sorted.map { rel =>
       val entry = s"$prefix/$rel"
       zos.putNextEntry(new java.util.zip.ZipEntry(entry))
-      val in = fs.open(new HPath(s"$dir/$rel"))
+      val in = fs.open(new HPath(s"$index/$rel"))
       try in.transferTo(zos) finally in.close()
       zos.closeEntry()
       entry
-    }.toSeq
+    }
     zos.close()
     entries
   }
 
   /** Unpack an archive written by [[export]] into `destDir`, stripping the
     * archive's `{name}_…/` prefix — the receiving side of the ship-an-index
-    * surface: extract a flat/IVF version dir anywhere and [[load]] it.
+    * surface: extract into an index dir (`root/<name>`) and [[load]] it.
     * Rejects entries that would escape `destDir` (zip-slip guard).
     */
   def extractArchive(archivePath: String, destDir: String): Seq[String] = {

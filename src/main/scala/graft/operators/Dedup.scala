@@ -1457,13 +1457,8 @@ object Dedup {
     * with the cheapest possible round wins; on an adversarially deep
     * graph the jump variant is the known fix.
     */
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val t0 = System.nanoTime()
-    val out = clustersFromPairs(ngramComponentEdgesDf(Tables.documents(spark, dir)))
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(f"[cc] construct total t=${(System.nanoTime() - t0) / 1e9}%.3f")
-    out
-  }
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    clustersFromPairs(ngramComponentEdgesDf(Tables.documents(spark, dir)))
 
   /** Connected components over ANY undirected near-dup pair frame
     * (`doc_a`, `doc_b`) — the generic cluster/keeper primitive behind
@@ -1517,7 +1512,6 @@ object Dedup {
     // imperative case the RDD API exists for.
     val spark = rawPairs.sparkSession
     import spark.implicits._
-    val tE = System.nanoTime()
     val nParts = spark.sessionState.conf.numShufflePartitions
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // (src, dst) both directions, keyed by src. The ONE Catalyst plan
@@ -1535,8 +1529,6 @@ object Dedup {
     val part = new org.apache.spark.HashPartitioner(
       math.max(1, math.min(nParts, (nEdges / 500000L).toInt + 1)))
     val edges = raw.partitionBy(part).persist(lvl)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(f"[cc] edges t=${(System.nanoTime() - tE) / 1e9}%.3f n=$nEdges")
     // Seed labels by PER-PARTITION union-find (path-compressed, union-by-
     // min so the root IS the component's min id) — the two-phase CC
     // design: each partition contracts its local subgraph in one
@@ -1551,7 +1543,6 @@ object Dedup {
     // Init correctness: any seed where label(v) is the id of SOME vertex
     // in v's component (and ≤ v) preserves the loop's invariant and
     // fixpoint; the local root qualifies.
-    val tL = System.nanoTime()
     val localCC = edges.mapPartitions { it =>
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
@@ -1578,12 +1569,9 @@ object Dedup {
     // view over it after round 1 — unpersisting the view frees nothing).
     var pinned: org.apache.spark.rdd.RDD[_] = labels
     labels.count()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(f"[cc] init t=${(System.nanoTime() - tL) / 1e9}%.3f")
     var converged = false
     var rounds = 0
     while (!converged && rounds < 50) {
-      val t0 = System.nanoTime()
       // label(src) rides to each neighbor dst; per-dst min is map-side
       // combined before the (only) shuffle of the round.
       val viaNeighbors = edges.join(labels, part)
@@ -1595,8 +1583,6 @@ object Dedup {
         .mapValues { case (prev, o) => (prev, math.min(prev, o.getOrElse(prev))) }
         .persist(lvl)
       val changed = updated.filter { case (_, (prev, next)) => prev != next }.count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round=$rounds changed=$changed t=${(System.nanoTime() - t0) / 1e9}%.3f")
       pinned.unpersist(blocking = false)
       pinned = updated
       labels = updated.mapValues(_._2)

@@ -276,7 +276,7 @@ object IndexPipeline {
         // full scan — correct, just unpruned.
         val index = IndexStore.loadServing(spark, root, name, version, mj)
         scored(scala.util.Try(
-            IndexStore.loadCentroids(spark, root, name, version)).toOption
+            IndexStore.loadCentroids(spark, root, name, version, mj)).toOption
           .filter(_.nonEmpty) match {
           case Some(cents) =>
             val np = if (cfg.nprobe >= 1) cfg.nprobe

@@ -141,13 +141,23 @@ class IndexAppendSpec extends SparkSpec {
     }
   }
 
-  test("a crashed file-merge heals on the next append — no duplicate rows") {
-    // the append merge is a file-by-file copy, not a job-level commit: a
-    // crash mid-merge leaves some of the delta's files in latest, and the
-    // RE-RUN writes a new delta (fresh part uuids) whose full merge would
-    // duplicate the crashed attempt's rows. The journal written before
-    // the copy makes the next append roll the partial merge back first.
-    val root = java.nio.file.Files.createTempDirectory("graft_app_heal").toString
+  /** Rewrite latest's manifest to `json`, as a write that crashed before
+    * its commit leaves it: its version dir complete, the pointer unmoved.
+    */
+  private def unmovePointer(root: String, json: String): Unit = {
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/idx/latest/manifest.json"),
+      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // the nio write bypassed Hadoop's LocalFileSystem, whose stale .crc
+    // sidecar would fail the checksummed read-back
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$root/idx/latest/.manifest.json.crc"))
+  }
+
+  private def servedIds(root: String): Seq[Long] =
+    IndexStore.load(spark, root, "idx").select(col("id")).collect().map(_.getLong(0)).toSeq
+
+  test("an append that crashed before its commit is invisible, and the next append removes it") {
+    val root = java.nio.file.Files.createTempDirectory("graft_app_crash").toString
     val a = embs.filter(col("id") < 150)
     val b = embs.filter(col("id") >= 150 && col("id") < 250)
     val c = embs.filter(col("id") >= 250 && col("id") < 300)
@@ -155,55 +165,61 @@ class IndexAppendSpec extends SparkSpec {
     IndexStore.build(a, root, "idx", "ivf")
     IndexStore.append(b, root, "idx")
     val preC = IndexStore.manifestJson(root, "idx")
-
-    // land append(c) for real, then reconstruct the crashed-merge state:
-    // its delta files sit in latest (the "already copied" half), the
-    // journal a crash would have left behind lists them with the
-    // pre-merge manifest, and the manifest is still the pre-merge one
+    val before = servedIds(root).sorted
+    // append(c) lands its version dir whole; the crash comes before the
+    // pointer moves
     IndexStore.append(c, root, "idx")
-    val vs = IndexStore.versions(root, "idx")
-    val cVec = java.nio.file.Paths.get(s"$root/idx/versions/${vs.last}/vectors")
-    val rels = {
-      val s = java.nio.file.Files.walk(cVec)
-      try {
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        s.forEach { p =>
-          val base = p.getFileName.toString
-          if (java.nio.file.Files.isRegularFile(p) &&
-              !base.startsWith("_") && !base.startsWith("."))
-            out += cVec.relativize(p).toString
-        }
-        out.sorted.toSeq
-      } finally s.close()
-    }
-    assert(rels.nonEmpty)
-    val b64 = java.util.Base64.getEncoder.encodeToString(
-      preC.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val journal =
-      s"""{"version": "${vs.last}",
-         | "manifest_b64": "$b64",
-         | "files": [${rels.map(f => "\"" + f + "\"").mkString(", ")}]}"""
-        .stripMargin
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/idx/latest/vectors/_graft_merge.json"),
-      journal.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/idx/latest/manifest.json"),
-      preC.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-    // the next append heals: c's half-merged files are rolled back, then
-    // d lands — latest holds exactly a+b+d, no duplicates, journal gone
+    val orphan = IndexStore.versions(root, "idx").last
+    unmovePointer(root, preC)
+    val unchanged = servedIds(root).sorted == before
+    assert(unchanged, "readers see the uncommitted append")
+    assert(IndexStore.manifest(root, "idx").count == before.length)
+    // the next append serves a+b+d, with no duplicates, and removes the orphan
     val m = IndexStore.append(d, root, "idx")
     val want = a.count() + b.count() + d.count()
     assert(m.count == want, s"manifest count ${m.count}, want $want")
-    val ids = IndexStore.load(spark, root, "idx")
-      .select(col("id")).collect().map(_.getLong(0))
+    val ids = servedIds(root)
     assert(ids.length == want, s"${ids.length} rows served, want $want")
-    assert(ids.distinct.length == ids.length, "duplicate rows after heal")
-    assert(c.collect().map(_.getLong(0))
-      .forall(id => !ids.contains(id)), "rolled-back rows still visible")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
-      s"$root/idx/latest/vectors/_graft_merge.json")), "journal not cleared")
+    assert(ids.distinct.length == ids.length, "duplicate rows after the crash")
+    val cIds = c.collect().map(_.getLong(0)).toSet
+    assert(!ids.exists(cIds), "the crashed rows are served")
+    // the orphan is gone from disk (its id may be reused within a second)
+    val vs = IndexStore.versions(root, "idx")
+    assert(vs.length == 3, s"versions $vs after removing $orphan")
+    assert(vs.forall(v => IndexStore.load(spark, root, "idx", Some(v)).select(col("id"))
+      .collect().forall(r => !cIds(r.getLong(0)))), "the crashed rows stayed on disk")
+  }
+
+  test("a rebuild that crashed before its commit is invisible: latest serves the previous build") {
+    val root = java.nio.file.Files.createTempDirectory("graft_build_crash").toString
+    val a = embs.filter(col("id") < 150)
+    val b = embs.filter(col("id") >= 150 && col("id") < 250)
+    val d = embs.filter(col("id") >= 250)
+    IndexStore.build(a, root, "idx", "ivf")
+    IndexStore.append(b, root, "idx")
+    val pre = IndexStore.manifestJson(root, "idx")
+    val before = servedIds(root).sorted
+    val cents = IndexStore.loadCentroids(spark, root, "idx").map(_.toSeq).toSeq
+    // a rebuild over other rows lands its version dir whole; the crash
+    // comes before the pointer moves
+    IndexStore.build(embs.filter(col("id") >= 100), root, "idx", "ivf")
+    val orphan = IndexStore.versions(root, "idx").last
+    unmovePointer(root, pre)
+    val unchanged = servedIds(root).sorted == before
+    assert(unchanged, "readers see the uncommitted rebuild")
+    assert(IndexStore.loadCentroids(spark, root, "idx").map(_.toSeq).toSeq == cents,
+      "the uncommitted rebuild's centroids are served")
+    val m = IndexStore.append(d, root, "idx")
+    val want = a.count() + b.count() + d.count()
+    assert(m.count == want, s"manifest count ${m.count}, want $want")
+    val ids = servedIds(root)
+    assert(ids.length == want && ids.distinct.length == ids.length,
+      s"${ids.length} rows served (${ids.distinct.length} distinct), want $want")
+    // the orphan is gone from disk (its id may be reused within a second)
+    val vs = IndexStore.versions(root, "idx")
+    assert(vs.length == 3, s"versions $vs after removing $orphan")
+    assert(vs.tail.forall(v => IndexStore.manifestJson(root, "idx", Some(v)).contains("\"delta\": true")),
+      "the uncommitted build stayed on disk")
   }
 
   test("append counts its delta from the written files: manifest, load and the delta version agree") {
@@ -359,20 +375,24 @@ class IndexAppendSpec extends SparkSpec {
     }
   }
 
-  /** The data files under `root/idx/latest`, as paths relative to it. */
-  private def latestFiles(root: String): Set[String] = {
-    val top = java.nio.file.Paths.get(s"$root/idx/latest")
+  /** The parquet data files under `root/idx`, as paths relative to it. */
+  private def dataFiles(root: String): Set[String] = {
+    val top = java.nio.file.Paths.get(s"$root/idx")
     val s = java.nio.file.Files.walk(top)
     try s.iterator().asScala.filter { p =>
       val base = p.getFileName.toString
-      java.nio.file.Files.isRegularFile(p) && !base.startsWith("_") && !base.startsWith(".")
+      java.nio.file.Files.isRegularFile(p) && base.endsWith(".parquet") && !base.startsWith(".")
     }.map(p => top.relativize(p).toString).toSet
     finally s.close()
   }
 
+  /** The names in `root/idx/latest`, dot files left out. */
+  private def latestNames(root: String): Set[String] =
+    new java.io.File(s"$root/idx/latest").list().filterNot(_.startsWith(".")).toSet
+
   /** Build 200 corpus docs on `backend`, then append the next 9 corpus
     * docs three at a time through `vectorize`. Returns the root, the
-    * config, the 9 docs and latest's data files before the appends.
+    * config, the 9 docs and the index's data files before the appends.
     */
   private def threeAppends(backend: String)
       : (String, IndexPipeline.Config, Seq[(Long, String)], Set[String]) = {
@@ -384,25 +404,44 @@ class IndexAppendSpec extends SparkSpec {
       .select(col("doc_id").cast("long"), col("text")).orderBy(col("doc_id")).limit(209)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     IndexPipeline.build(docs.take(200).toDF("doc_id", "text"), root, cfg)
-    val before = latestFiles(root)
+    val before = dataFiles(root)
     val fresh = docs.drop(200)
     fresh.grouped(3).foreach(d =>
       IndexStore.append(IndexPipeline.vectorize(d.toDF("doc_id", "text"), cfg), root, "idx"))
     (root, cfg, fresh, before)
   }
 
-  test("three 3-doc appends to an ivf index add three data files to latest, none in a cell") {
+  test("three 3-doc appends to an ivf index add three data files under versions/, none in the base's cells") {
     val (root, _, _, before) = threeAppends("ivf")
-    val after = latestFiles(root)
+    val after = dataFiles(root)
     val added = after -- before
+    val base = s"versions/${IndexStore.versions(root, "idx").head}/"
     assert(added.size == 3, s"appends added ${added.toSeq.sorted}")
-    assert(added.forall(_.startsWith("deltas/")), s"appends added ${added.toSeq.sorted}")
-    assert(after.filter(_.startsWith("vectors/")) == before.filter(_.startsWith("vectors/")),
+    assert(added.forall(f => f.startsWith("versions/") && !f.startsWith(base)),
+      s"appends added ${added.toSeq.sorted}")
+    assert(after.filter(_.startsWith(base)) == before.filter(_.startsWith(base)),
       "an append wrote into the build's cells")
+    assert(latestNames(root) == Set("manifest.json"), s"latest holds ${latestNames(root)}")
     // each delta spans several cells: a file per touched cell would be more
     val touched = IndexStore.versions(root, "idx").tail.map(v =>
       IndexStore.load(spark, root, "idx", Some(v)).select("cell").distinct().count()).sum
     assert(touched > 3, s"fixture regression: the deltas touch $touched cells")
+    assert(IndexStore.load(spark, root, "idx").count() == IndexStore.manifest(root, "idx").count)
+  }
+
+  test("latest holds only its manifest: every data file of a build and its appends lies under versions/") {
+    val root = java.nio.file.Files.createTempDirectory("graft_app_pointer").toString
+    IndexStore.build(embs.filter(col("id") < 200), root, "idx", "ivf")
+    def check(when: String): Unit = {
+      assert(latestNames(root) == Set("manifest.json"), s"$when: latest holds ${latestNames(root)}")
+      val files = dataFiles(root)
+      assert(files.nonEmpty && files.forall(_.startsWith("versions/")),
+        s"$when: data files outside versions/: ${files.filterNot(_.startsWith("versions/"))}")
+    }
+    check("after the build")
+    Seq(200, 203, 206).foreach(from =>
+      IndexStore.append(embs.filter(col("id") >= from && col("id") < from + 3), root, "idx"))
+    check("after three appends")
     assert(IndexStore.load(spark, root, "idx").count() == IndexStore.manifest(root, "idx").count)
   }
 

@@ -30,8 +30,7 @@ class IndexExportSpec extends SparkSpec {
 
     // receiving host: extract under a fresh root and load
     val root2 = Files.createTempDirectory("graft-exp2").toString
-    val dest = s"$root2/exp_flat/latest"
-    val extracted = IndexStore.extractArchive(zipPath, dest)
+    val extracted = IndexStore.extractArchive(zipPath, s"$root2/exp_flat")
     assert(extracted.toSet === entries.map(_.stripPrefix("exp_flat_latest/")).toSet)
     val loaded = IndexStore.load(spark, root2, "exp_flat")
     assert(loaded.count() === 60)
@@ -56,9 +55,29 @@ class IndexExportSpec extends SparkSpec {
     assert(entries.exists(_.contains("cell=")))
 
     val root2 = Files.createTempDirectory("graft-exp2").toString
-    IndexStore.extractArchive(zipPath, s"$root2/exp_v/versions/$v")
+    IndexStore.extractArchive(zipPath, s"$root2/exp_v")
     val loaded = IndexStore.load(spark, root2, "exp_v", Some(v))
     assert(loaded.count() === 60)
+  }
+
+  test("export after an append ships the base and the runs: latest and the append version load whole") {
+    val root = Files.createTempDirectory("graft-exp").toString
+    IndexStore.build(vectors.limit(40), root, "exp_app", "ivf",
+      params = IndexStore.Params(nlist = 4, nprobe = 2))
+    IndexStore.append(vectors.filter("cast(id as int) >= 40"), root, "exp_app")
+    val v = IndexStore.versions(root, "exp_app").last
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("id").collect().map(_.getString(0)).sorted.toSeq
+    for (version <- Seq(None, Some(v))) {
+      val zipPath = s"$root/exp_app_${version.isDefined}.zip"
+      IndexStore.export(root, "exp_app", zipPath, version)
+      val root2 = Files.createTempDirectory("graft-exp2").toString
+      IndexStore.extractArchive(zipPath, s"$root2/exp_app")
+      val shipped = version.fold(IndexStore.load(spark, root2, "exp_app"))(
+        IndexStore.loadResolved(spark, root2, "exp_app", _))
+      assert(ids(shipped) == ids(vectors), s"$version")
+      assert(IndexStore.loadCentroids(spark, root2, "exp_app", version).length == 4)
+    }
+    assert(IndexStore.load(spark, root, "exp_app", Some(v)).count() == 20)
   }
 
   test("versionMeta and versionArtifacts serve the versions API") {

@@ -18,6 +18,15 @@ class IndexStoreSpec extends SparkSpec {
       .toDF("id", "vec")
   }
 
+  /** The version dir that holds `name`'s base `vectors/` and sidecars: the
+    * `base` its latest manifest names.
+    */
+  private def baseDir(root: String, name: String): String = {
+    val base = "\"base\": \"([^\"]+)\"".r
+      .findFirstMatchIn(IndexStore.manifestJson(root, name)).get.group(1)
+    s"$root/$name/versions/$base"
+  }
+
   test("flat index round-trips vectors and writes a manifest + version") {
     val root = Files.createTempDirectory("graft-idx").toString
     val m = IndexStore.build(vectors, root, "flat_test", "flat", model = "stub-model")
@@ -44,7 +53,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(m.backend == "ivf" && m.params.nlist == 4)
 
     // partitioned layout on disk: cell=N subdirectories
-    val dirs = new java.io.File(s"$root/ivf_test/latest/vectors").listFiles()
+    val dirs = new java.io.File(s"${baseDir(root, "ivf_test")}/vectors").listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell="))
     assert(dirs.nonEmpty)
 
@@ -63,7 +72,7 @@ class IndexStoreSpec extends SparkSpec {
     val m = IndexStore.build(vectors, root, "hier_test", "ivf_hier",
       params = IndexStore.Params(nlist = 4, nprobe = 2))
     assert(m.backend == "ivf_hier")
-    val dirs = new java.io.File(s"$root/hier_test/latest/vectors").listFiles()
+    val dirs = new java.io.File(s"${baseDir(root, "hier_test")}/vectors").listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell="))
     assert(dirs.nonEmpty, "hier build must keep the cell-partitioned layout")
     // every vector is assigned, and the cells agree with the flat build
@@ -171,6 +180,24 @@ class IndexStoreSpec extends SparkSpec {
       m.params.efSearch == 64)
   }
 
+  test("an index written before latest became a pointer reads as its own vectors, and its appended runs are refused") {
+    val root = Files.createTempDirectory("graft-idx").toString
+    val latest = s"$root/old/latest"
+    vectors.withColumn("cell", lit(0)).write.parquet(s"$latest/vectors")
+    Files.write(java.nio.file.Paths.get(s"$latest/manifest.json"),
+      """{"dim": 8, "count": 100, "model": "none", "normalize": false,
+        | "backend": "flat", "params": {"nlist": 1, "nprobe": 1},
+        | "chunking": {"mode": "fixed", "size": 100, "overlap": 20},
+        | "metric": "ip", "created_at": "2026-01-01T00:00:00"}""".stripMargin
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(IndexStore.load(spark, root, "old").count() == 100)
+    // runs the older layout kept beside the base are never dropped silently
+    vectors.limit(5).withColumn("cell", lit(0)).write.parquet(s"$latest/deltas")
+    val e = intercept[IllegalStateException](IndexStore.load(spark, root, "old"))
+    assert(e.getMessage.contains("rebuild"))
+    intercept[IllegalStateException](IndexStore.append(vectors.limit(3), root, "old"))
+  }
+
   test("sidecar cache: repeat loads are driver-map hits, rebuilds refresh") {
     val root = Files.createTempDirectory("graft-idx").toString
     IndexStore.build(vectors, root, "sc", "ivf",
@@ -190,7 +217,7 @@ class IndexStoreSpec extends SparkSpec {
   test("model sidecars stay fresh with no invalidate: rebuilds refresh, appends keep the build's arrays") {
     // served sidecars must equal what is on disk
     def onDisk(root: String, name: String, side: String): Seq[Seq[Double]] = {
-      val df = spark.read.parquet(s"$root/$name/latest/$side")
+      val df = spark.read.parquet(s"${baseDir(root, name)}/$side")
       if (side == "centroids") df.orderBy("cell").collect().map(_.getSeq[Double](1)).toSeq
       else df.orderBy("m", "code").collect().map(_.getSeq[Double](2)).toSeq
     }
@@ -277,7 +304,7 @@ class IndexStoreSpec extends SparkSpec {
       params = IndexStore.Params(nlist = 4, nprobe = 2))
     val bound = math.max(1,
       spark.sessionState.conf.numShufflePartitions / 4)
-    val cellDirs = new java.io.File(s"$root/onefile/latest/vectors")
+    val cellDirs = new java.io.File(s"${baseDir(root, "onefile")}/vectors")
       .listFiles().filter(_.isDirectory).filter(_.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty)
     cellDirs.foreach { d =>
@@ -297,7 +324,7 @@ class IndexStoreSpec extends SparkSpec {
     try {
       IndexStore.build(vectors.repartition(8), root, "giant", "ivf",
         params = IndexStore.Params(nlist = 4, nprobe = 2))
-      val cellDirs = new java.io.File(s"$root/giant/latest/vectors")
+      val cellDirs = new java.io.File(s"${baseDir(root, "giant")}/vectors")
         .listFiles().filter(_.isDirectory).filter(_.getName.startsWith("cell="))
       assert(cellDirs.nonEmpty)
       val salt = math.max(1, spark.sessionState.conf.numShufflePartitions / 4)
@@ -396,14 +423,12 @@ class IndexStoreSpec extends SparkSpec {
           params = IndexStore.Params(nlist = 4, nprobe = 2))
       }
       assert(m.count == 100 && m.dim == 8, backend)
-      val v = IndexStore.versions(root, "wc").head
-      for (dir <- Seq(s"$root/wc/versions/$v/vectors", s"$root/wc/latest/vectors")) {
-        val (files, rows) = footerTotal(dir)
-        // the ceiling splits the write into many files, so the count is
-        // taken over every one of them
-        assert(files >= 50, s"$backend: $files files under $dir")
-        assert(rows == m.count, s"$backend: $rows rows in the files of $dir, manifest ${m.count}")
-      }
+      val dir = s"$root/wc/versions/${IndexStore.versions(root, "wc").head}/vectors"
+      val (files, rows) = footerTotal(dir)
+      // the ceiling splits the write into many files, so the count is
+      // taken over every one of them
+      assert(files >= 50, s"$backend: $files files under $dir")
+      assert(rows == m.count, s"$backend: $rows rows in the files of $dir, manifest ${m.count}")
       assert(IndexStore.manifest(root, "wc").count == m.count)
       // the same builds ran 5, 11 and 17 jobs when the count was read
       // back: a schema-inference job and a count (plus a first() for a
@@ -411,6 +436,38 @@ class IndexStoreSpec extends SparkSpec {
       val readBack = Map("flat" -> 5, "ivf" -> 11, "ivfpq" -> 17)(backend)
       assert(jobs <= readBack - 3, s"$backend: a build ran $jobs Spark jobs")
     } finally spark.conf.unset("graft.index.maxRowsPerCellFile")
+  }
+
+  test("a cold load right after an ivf build reads at the manifest's schema and starts no job") {
+    val root = Files.createTempDirectory("graft-idx").toString
+    IndexStore.build(vectors, root, "cold", "ivf",
+      params = IndexStore.Params(nlist = 4, nprobe = 2))
+    val (idx, jobs, _) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+      IndexStore.load(spark, root, "cold")
+    }
+    assert(jobs == 0, s"a cold load ran $jobs Spark jobs")
+    // the recorded schema is the one inference finds, and the cell filter
+    // still prunes partitions
+    assert(idx.schema.toDDL == spark.read.parquet(s"${baseDir(root, "cold")}/vectors").schema.toDDL)
+    val cell = idx.select("cell").head().getInt(0)
+    val probed = IndexStore.probe(idx, Seq(cell))
+    assert(probed.count() == idx.filter(col("cell") === cell).count() && probed.count() > 0)
+    assert(probed.queryExecution.executedPlan.toString.contains("PartitionFilters"))
+  }
+
+  test("version ids sort in write order, same-second suffixes numerically") {
+    val root = Files.createTempDirectory("graft-idx").toString
+    val written = "20260101-000000" +: (1 to 11).map(i => s"20260101-000000-$i")
+    // created out of order, so no listing order can pass for write order
+    scala.util.Random.shuffle(written).foreach { v =>
+      val d = java.nio.file.Paths.get(s"$root/ord/versions/$v")
+      Files.createDirectories(d)
+      Files.write(d.resolve("meta.json"),
+        s"""{"version": "$v"}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    assert(IndexStore.versions(root, "ord") == written)
+    assert(IndexStore.versionsMeta(root, "ord") ==
+      written.reverse.map(v => s"""{"version": "$v"}"""))
   }
 
 }
