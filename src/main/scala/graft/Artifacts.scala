@@ -220,7 +220,7 @@ object Artifacts {
     spark.conf.getOption(MaterializeKey).getOrElse("local") match {
       case "parquet" =>
         val path = s"${scratchRoot(spark)}/$name-${java.util.UUID.randomUUID()}"
-        df.write.parquet(path)
+        df.write.options(NioLocalFileSystem.WriteOptions).parquet(path)
         spark.read.parquet(path)
       case _ => df.localCheckpoint(true)
     }

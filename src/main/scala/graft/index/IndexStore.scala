@@ -11,6 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.NioLocalFileSystem
 import graft.operators.VectorOps
 
 /** Parquet-backed vector-index persistence with manifest + timestamped
@@ -148,8 +149,8 @@ object IndexStore {
   /** `dir`'s manifest text; None when it has none (a streaming-ingest
     * target, a hand-written dir). Any other read failure propagates.
     */
-  private def manifestAt(dir: String): Option[String] =
-    try Some(readString(s"$dir/manifest.json"))
+  private def manifestAt(dir: String, conf: Configuration = hadoopConf): Option[String] =
+    try Some(readString(s"$dir/manifest.json", conf))
     catch { case _: java.io.FileNotFoundException => None }
 
   /** The dir whose `vectors/` and sidecars `version` (latest when None)
@@ -167,22 +168,32 @@ object IndexStore {
   // Manifest/meta/versions go through the Hadoop FileSystem resolved from
   // the index path itself, so the sidecar files land on the same store the
   // vectors do (HDFS/S3/local alike) — java.nio would silently write them
-  // to the driver's local disk on a cluster.
+  // to the driver's local disk on a cluster. A read resolves it with the
+  // active session's Hadoop conf; a build or an append with its writer's
+  // own session ([[writeConf]]), on whatever thread it runs.
   private def hadoopConf: Configuration =
     SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
-  private def writeString(path: String, content: String): Unit = {
+  /** The Hadoop conf of `spark`'s index writes: the one its DataFrame
+    * writes get (the session's Hadoop conf with its SQL-conf keys, such as
+    * a umask), plus the keys that set a local file's mode in-process
+    * ([[graft.NioLocalFileSystem]]).
+    */
+  private def writeConf(spark: SparkSession): Configuration =
+    spark.sessionState.newHadoopConfWithOptions(NioLocalFileSystem.WriteOptions)
+
+  private def writeString(conf: Configuration, path: String, content: String): Unit = {
     val p = new HPath(path)
-    val fs = p.getFileSystem(hadoopConf)
+    val fs = p.getFileSystem(conf)
     val out = fs.create(p, true)
     try out.write(content.getBytes(UTF_8)) finally out.close()
   }
 
-  private def readString(path: String): String = {
+  private def readString(path: String, conf: Configuration = hadoopConf): String = {
     val p = new HPath(path)
-    val fs = p.getFileSystem(hadoopConf)
+    val fs = p.getFileSystem(conf)
     val in = fs.open(p)
     try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
     finally in.close()
@@ -209,7 +220,8 @@ object IndexStore {
             sources: Option[DataFrame] = None,
             measuredRecall: Double = -1.0): Manifest = {
     val spark = vectors.sparkSession
-    rollBack(root, name)
+    val conf = writeConf(spark)
+    rollBack(conf, root, name)
     // the fitted models, written as sidecars beside the vectors: centroids
     // for every ivf* backend (a loader — and [[append]] — must be able to
     // re-assign without the original fit inputs), codebooks for ivfpq
@@ -283,7 +295,7 @@ object IndexStore {
         throw new IllegalArgumentException(
           s"Unknown backend: $other (supported: flat, ivf, ivf_hier, ivfpq)")
     }
-    val version = freshVersion(root, name)
+    val version = freshVersion(conf, root, name)
     val vDir = s"$root/$name/versions/$version"
     // The EXPENSIVE lineage (chunk → embed → assign → layout shuffle) runs
     // exactly once, into the version dir, and nothing is copied or read
@@ -294,15 +306,18 @@ object IndexStore {
     locally {
       fitted.foreach(cents =>
         cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$vDir/centroids"))
+          .coalesce(1).write.mode("overwrite").options(NioLocalFileSystem.WriteOptions)
+          .parquet(s"$vDir/centroids"))
       books.foreach(cb =>
         cb.zipWithIndex.flatMap { case (book, m) =>
           book.zipWithIndex.map { case (c, code) => (m, code, c.toSeq) }
         }.toSeq.toDF("m", "code", "cent")
-          .coalesce(1).write.mode("overwrite").parquet(s"$vDir/codebooks"))
+          .coalesce(1).write.mode("overwrite").options(NioLocalFileSystem.WriteOptions)
+          .parquet(s"$vDir/codebooks"))
       // per-doc provenance, the reference's `<index>.sources.json`
       // (answerless_search.py:60-71,104-111): (doc_id, origin_*, ...)
-      sources.foreach(_.write.mode("overwrite").parquet(s"$vDir/sources"))
+      sources.foreach(_.write.mode("overwrite").options(NioLocalFileSystem.WriteOptions)
+        .parquet(s"$vDir/sources"))
     }
     // dim: the fitted centroid length for ivf* (already driver-side), the
     // written vectors' length for flat
@@ -314,20 +329,20 @@ object IndexStore {
     val manifest = Manifest(dim, count, model, normalize, backend, params,
       chunking, metric, createdAt, measuredRecall)
     val json = manifest.toJsonWith(Pointer(version, Nil, Some(schema)).json)
-    writeString(s"$vDir/manifest.json", json)
+    writeString(conf, s"$vDir/manifest.json", json)
     val meta =
       s"""{"version": "$version", "created_at": "$createdAt", "embed_model": "$model",
          | "chunking": "${chunking.mode}", "chunk_size": ${chunking.size},
          | "chunk_overlap": ${chunking.overlap}, "index_backend": "$backend",
          | "vector_count": $count,
          | "metrics": {"recall@k": null, "mrr": null, "ndcg": null}}""".stripMargin
-    writeString(s"$vDir/meta.json", meta)
+    writeString(conf, s"$vDir/meta.json", meta)
     // the fits are already on the driver: seed their sidecar entries, so
     // the next search or append reads no sidecar
     fitted.foreach(cents => sidecar(spark, vDir, "centroids")(_ => cents))
     books.foreach(cb => sidecar(spark, vDir, "codebooks")(_ => cb))
     // the commit: latest now names this version
-    writeString(s"$root/$name/latest/manifest.json", json)
+    writeString(conf, s"$root/$name/latest/manifest.json", json)
     manifest
   }
 
@@ -425,7 +440,7 @@ object IndexStore {
     val dim = if (laidOut.columns.contains("vec")) max(size(col("vec")))
               else lit(null).cast("int")
     val w = laidOut.observe(obs, count(lit(1)).as("rows"), dim.as("dim"))
-      .write.mode("overwrite")
+      .write.mode("overwrite").options(NioLocalFileSystem.WriteOptions)
       .option("maxRecordsPerFile", maxRowsPerCellFile(laidOut.sparkSession))
     (if (byCell) w.partitionBy("cell") else w).parquet(dest)
     val m = obs.get
@@ -440,12 +455,12 @@ object IndexStore {
     * A latest written before it became a pointer names no version; its
     * versions are kept.
     */
-  private def rollBack(root: String, name: String): Unit = {
-    val latest = manifestAt(dirOf(root, name, None))
+  private def rollBack(conf: Configuration, root: String, name: String): Unit = {
+    val latest = manifestAt(dirOf(root, name, None), conf)
     if (latest.forall(pointerOf(_).isDefined)) {
       val newest = latest.flatMap(pointerOf).map(p => writeOrder(p.newest))
-      val fs = new HPath(root).getFileSystem(hadoopConf)
-      for (v <- versions(root, name)
+      val fs = new HPath(root).getFileSystem(conf)
+      for (v <- versionsIn(conf, root, name)
            if VersionId.matches(v) && newest.forall(Ordering[(String, Int)].gt(writeOrder(v), _)))
         fs.delete(new HPath(s"$root/$name/versions/$v"), true)
     }
@@ -457,9 +472,9 @@ object IndexStore {
     * the next `-N` suffix — build + append in quick succession must not
     * collide.
     */
-  private def freshVersion(root: String, name: String): String = {
+  private def freshVersion(conf: Configuration, root: String, name: String): String = {
     val now = ZonedDateTime.now(ZoneOffset.UTC).format(VersionFmt)
-    versions(root, name).lastOption.map(writeOrder) match {
+    versionsIn(conf, root, name).lastOption.map(writeOrder) match {
       case Some((ts, n)) if ts >= now => s"$ts-${n + 1}"
       case _ => now
     }
@@ -531,8 +546,9 @@ object IndexStore {
     */
   def append(newVectors: DataFrame, root: String, name: String): Manifest = {
     val spark = newVectors.sparkSession
-    rollBack(root, name)
-    val latestJson = manifestJson(root, name)
+    val conf = writeConf(spark)
+    rollBack(conf, root, name)
+    val latestJson = readString(s"${dirOf(root, name, None)}/manifest.json", conf)
     val old = parseManifest(latestJson)
     val at = pointerOf(latestJson).getOrElse(throw new IllegalStateException(
       s"append to $name: its latest manifest names no versions (written before " +
@@ -559,13 +575,13 @@ object IndexStore {
         throw new IllegalArgumentException(
           s"Unknown backend: $other (supported: flat, ivf, ivf_hier, ivfpq)")
     }
-    val version = freshVersion(root, name)
+    val version = freshVersion(conf, root, name)
     val vDir = s"$root/$name/versions/$version"
     // the delta's lineage (assignment + one shuffle) runs ONCE, into the
     // version dir, and its rows are counted by that write
     val added = writeRun(assigned, s"$vDir/vectors")
     if (added == 0 && old.backend != "flat") {
-      new HPath(vDir).getFileSystem(hadoopConf).delete(new HPath(vDir), true)
+      new HPath(vDir).getFileSystem(conf).delete(new HPath(vDir), true)
       throw new IllegalArgumentException(
         s"append to $name: the delta has no rows, and only a flat index records an empty version")
     }
@@ -578,7 +594,7 @@ object IndexStore {
     // its own manifest), flagged `delta: true` with the parent and the
     // post-append total alongside; its pointer resolves the whole index as
     // of this write ([[loadResolved]]).
-    writeString(s"$vDir/manifest.json", old.copy(count = added, createdAt = createdAt)
+    writeString(conf, s"$vDir/manifest.json", old.copy(count = added, createdAt = createdAt)
       .toJsonWith(s""", "delta": true, "parent": "${at.newest}", "total_count": ${updated.count}""" +
         pointer.json))
     val meta =
@@ -588,9 +604,9 @@ object IndexStore {
          | "vector_count": ${updated.count},
          | "parent": "${at.newest}", "appended": $added,
          | "metrics": {"recall@k": null, "mrr": null, "ndcg": null}}""".stripMargin
-    writeString(s"$vDir/meta.json", meta)
+    writeString(conf, s"$vDir/meta.json", meta)
     // the commit: latest now names this run too
-    writeString(s"$root/$name/latest/manifest.json", updated.toJsonWith(pointer.json))
+    writeString(conf, s"$root/$name/latest/manifest.json", updated.toJsonWith(pointer.json))
     updated
   }
 
@@ -756,9 +772,11 @@ object IndexStore {
   }
 
   /** Version ids in write order, newest last. */
-  def versions(root: String, name: String): Seq[String] = {
+  def versions(root: String, name: String): Seq[String] = versionsIn(hadoopConf, root, name)
+
+  private def versionsIn(conf: Configuration, root: String, name: String): Seq[String] = {
     val p = new HPath(s"$root/$name/versions")
-    val fs = p.getFileSystem(hadoopConf)
+    val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq.sortBy(writeOrder)
   }
