@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
 object IndexStats {
 
   /** One row: chunks, len_min, len_max, len_avg, len_p95 (reference field
-    * names) over the chunks that carry text. Errors if the index rows
-    * have no text column.
+    * names) over the chunks that carry text.
     */
   def stats(spark: SparkSession, root: String, name: String,
             version: Option[String] = None): DataFrame =
@@ -35,8 +34,6 @@ object IndexStats {
   private def chunkLens(spark: SparkSession, root: String, name: String,
                         version: Option[String]): DataFrame =
     IndexStore.loadDocs(spark, root, name, version)
-      .getOrElse(throw new IllegalStateException(
-        s"index '$name' has no chunk text — rebuild it to get stats"))
       .select(length(col("text")).cast("long").as("len"))
 
   /** Exact stats over any single `len` column. The p95 is

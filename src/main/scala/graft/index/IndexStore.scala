@@ -31,7 +31,9 @@ import graft.operators.VectorOps
   * that one file, so each byte is written once and no reader sees a
   * version before latest names it; a version dir newer than the newest
   * one latest names is an unfinished write, deleted by the next build or
-  * append.
+  * append. This is the one layout: every read and write goes through
+  * latest's pointer, and a dir with no manifest, or whose manifest names
+  * no base, is refused ([[pointed]]) — delete it and rebuild.
   * Each vectors row is `(id, vec | codes, cell, text)`: the chunk text
   * (the reference's `.docs.json` map) rides in the same row as its
   * vector, nullable for rows written without text, so a search reads its
@@ -105,6 +107,13 @@ object IndexStore {
       */
     def servingProbes: Int =
       if (params.assignProbes >= 1) params.assignProbes else params.nprobe
+
+    /** The probes of a search that asks for `nprobe`: itself when ≥ 1,
+      * else [[servingProbes]], else the library default.
+      */
+    private[graft] def probes(nprobe: Int): Int =
+      if (nprobe >= 1) nprobe
+      else Some(servingProbes).filter(_ >= 1).getOrElse(VectorOps.NProbe)
   }
 
   private val VersionFmt = DateTimeFormatter.ofPattern("yyyyMMdd-HHmmss")
@@ -122,48 +131,84 @@ object IndexStore {
   private def dirOf(root: String, name: String, version: Option[String]): String =
     version.fold(s"$root/$name/latest")(v => s"$root/$name/versions/$v")
 
+  /** A stream's place in an index: the id of the streaming query whose
+    * batch the pointer's commit wrote, and that batch's id
+    * ([[graft.streaming.IndexIngest]]).
+    */
+  private[graft] case class Mark(query: String, batch: Long)
+
   /** The files a manifest names: `base`, the build version that holds
     * `vectors/` and the model sidecars; `runs`, the append versions whose
     * delta runs it unions, oldest first; `schema`, the rows' DDL, so a
-    * read infers nothing.
+    * read infers nothing; `mark`, the stream batch it holds, if any.
     */
-  private case class Pointer(base: String, runs: Seq[String], schema: Option[String]) {
+  private case class Pointer(base: String, runs: Seq[String], schema: String,
+      mark: Option[Mark]) {
     def newest: String = runs.lastOption.getOrElse(base)
     def json: String =
-      s""", "base": "$base", "runs": [${runs.map("\"" + _ + "\"").mkString(", ")}]""" +
-        schema.fold("")(d => s""", "schema": "$d"""")
+      s""", "base": "$base", "runs": [${runs.map("\"" + _ + "\"").mkString(", ")}], "schema": "$schema"""" +
+        mark.fold("")(m => s""", "stream": {"query": "${m.query}", "batch": ${m.batch}}""")
+    /** Whether this pointer already holds `m`'s batch of its stream. */
+    def holds(m: Mark): Boolean = mark.exists(r => r.query == m.query && r.batch >= m.batch)
   }
 
-  /** The pointer in manifest text; None for a manifest written before
-    * `latest` became a pointer.
-    */
-  private def pointerOf(j: String): Option[Pointer] =
-    "\"base\": \"([^\"]+)\"".r.findFirstMatchIn(j).map { b =>
+  /** The pointer in manifest text; None when it names no base or schema. */
+  private def pointerOf(j: String): Option[Pointer] = {
+    def str(k: String) = ("\"" + k + "\": \"([^\"]*)\"").r.findFirstMatchIn(j).map(_.group(1))
+    for (base <- str("base"); schema <- str("schema")) yield {
       val runs = "\"runs\": \\[([^\\]]*)\\]".r.findFirstMatchIn(j).toSeq
         .flatMap(_.group(1).split(",")).map(_.trim.stripPrefix("\"").stripSuffix("\""))
         .filter(_.nonEmpty)
-      Pointer(b.group(1), runs,
-        "\"schema\": \"([^\"]*)\"".r.findFirstMatchIn(j).map(_.group(1)))
+      val mark = "\"stream\": \\{\"query\": \"([^\"]*)\", \"batch\": (\\d+)\\}".r
+        .findFirstMatchIn(j).map(m => Mark(m.group(1), m.group(2).toLong))
+      Pointer(base, runs, schema, mark)
     }
+  }
 
-  /** `dir`'s manifest text; None when it has none (a streaming-ingest
-    * target, a hand-written dir). Any other read failure propagates.
+  /** `dir`'s manifest text; None when it has none. Any other read failure
+    * propagates.
     */
   private def manifestAt(dir: String, conf: Configuration = hadoopConf): Option[String] =
     try Some(readString(s"$dir/manifest.json", conf))
     catch { case _: java.io.FileNotFoundException => None }
 
-  /** The dir whose `vectors/` and sidecars `version` (latest when None)
-    * serves as its base: the version its manifest names — read from
-    * `manifestText` when the caller already holds it — or the dir itself
-    * when it names none.
+  /** The manifest text of `version` (latest when None) and the pointer it
+    * names — `manifestText`, a same-query read, when the caller holds one.
+    * The one check of an index's layout: a dir with no manifest, or whose
+    * manifest names no base, is refused. Such a dir was never built, or
+    * was written before `latest` became a pointer.
+    */
+  private def pointed(root: String, name: String, version: Option[String],
+      manifestText: Option[String] = None,
+      conf: Configuration = hadoopConf): (String, Pointer) = {
+    val dir = dirOf(root, name, version)
+    manifestText.orElse(manifestAt(dir, conf)).flatMap(j => pointerOf(j).map(j -> _))
+      .getOrElse(throw new IllegalStateException(
+        s"$dir has no manifest that names its base version (never built, or written " +
+          "before latest became a pointer): delete the index and rebuild it"))
+  }
+
+  /** [[pointed]]'s manifest text: the manifest of an index in the one
+    * layout every read serves.
+    */
+  private[graft] def checkedManifest(root: String, name: String,
+      version: Option[String]): String = pointed(root, name, version)._1
+
+  /** Whether `root/name` has a `latest` dir: written by a committed build,
+    * or a layout [[pointed]] refuses.
+    */
+  private[graft] def exists(root: String, name: String,
+      conf: Configuration = hadoopConf): Boolean = {
+    val p = new HPath(dirOf(root, name, None))
+    p.getFileSystem(conf).exists(p)
+  }
+
+  /** The version dir whose `vectors/` and sidecars `version` (latest when
+    * None) serves as its base.
     */
   private def baseDir(root: String, name: String, version: Option[String],
-      manifestText: Option[String]): String = {
-    val dir = dirOf(root, name, version)
-    manifestText.orElse(manifestAt(dir)).flatMap(pointerOf)
-      .fold(dir)(p => s"$root/$name/versions/${p.base}")
-  }
+      manifestText: Option[String]): String =
+    s"$root/$name/versions/${pointed(root, name, version, manifestText)._2.base}"
 
   // Manifest/meta/versions go through the Hadoop FileSystem resolved from
   // the index path itself, so the sidecar files land on the same store the
@@ -211,6 +256,9 @@ object IndexStore {
     * (`id`, `text`) is given, from `docs` left-joined onto the vectors by
     * id (for callers that hold vectors and chunk text apart). With
     * neither, `text` is null.
+    *
+    * A `root/name` that holds a `latest` dir in another layout is refused
+    * ([[pointed]]) before anything is deleted.
     */
   def build(vectors: DataFrame, root: String, name: String, backend: String,
             params: Params = Params(VectorOps.NumCells, VectorOps.NProbe),
@@ -218,41 +266,39 @@ object IndexStore {
             model: String = "none", normalize: Boolean = false,
             metric: String = "ip", docs: Option[DataFrame] = None,
             sources: Option[DataFrame] = None,
-            measuredRecall: Double = -1.0): Manifest = {
+            measuredRecall: Double = -1.0): Manifest =
+    build(vectors, root, name, backend, params, chunking, model, normalize, metric,
+      docs, sources, measuredRecall, None)
+
+  /** [[build]], its commit holding `mark`, a stream's batch. */
+  private[graft] def build(vectors: DataFrame, root: String, name: String, backend: String,
+      params: Params, chunking: Chunking, model: String, normalize: Boolean,
+      metric: String, docs: Option[DataFrame], sources: Option[DataFrame],
+      measuredRecall: Double, mark: Option[Mark]): Manifest = {
     val spark = vectors.sparkSession
     val conf = writeConf(spark)
-    rollBack(conf, root, name)
-    // the fitted models, written as sidecars beside the vectors: centroids
-    // for every ivf* backend (a loader — and [[append]] — must be able to
-    // re-assign without the original fit inputs), codebooks for ivfpq
-    var fitted: Option[Array[Array[Double]]] = None
-    var books: Option[Array[Array[Array[Double]]]] = None
+    rollBack(conf, root, name,
+      if (exists(root, name, conf)) Some(pointed(root, name, None, conf = conf)._2) else None)
     import spark.implicits._
     val rows = docs match {
       case Some(d) =>
         vectors.drop("text").join(d.select(col("id"), col("text")), Seq("id"), "left")
       case None => withText(vectors)
     }
+    // the fitted models, written as sidecars beside the vectors: centroids
+    // for every ivf* backend (a loader — and [[append]] — must be able to
+    // re-assign without the original fit inputs), codebooks for ivfpq.
+    // Both fits are the deterministic bounded-sample Lloyd's: the corpus
+    // is never shuffled or iterated over to get its cells.
+    lazy val cents = graft.operators.IvfModel.fitFromDf(
+      vectors.select(col("id"), col("vec")), "id", "vec", params.nlist)
+    lazy val books = graft.operators.PqModel.fitFromDf(vectors, "id", "vec")
     val assigned = backend match {
-      case "ivf" =>
-        // Deterministic bounded-sample fit (IvfModel), then a narrow
-        // broadcast assignment pass — the corpus is never shuffled or
-        // iterated over to get its cells.
-        val cents = graft.operators.IvfModel.fitFromDf(
-          vectors.select(col("id"), col("vec")), "id", "vec", params.nlist)
-        fitted = Some(cents)
-        VectorOps.assignCells(
-            rows.select(col("id"), col("vec").as("embedding"), col("text")), cents)
-          .select(col("id"), col("embedding").as("vec"),
-            col("cell").cast("int").as("cell"), col("text"))
       case "ivf_hier" =>
         // Same layout as "ivf", assignment via the two-level coarse probe
         // (graft.functions.IvfProbesHier): O(N·√nlist) instead of
         // O(N·nlist) per vector — the build form for a corpus-
         // proportional nlist (quality pinned by ivf_hier_agreement).
-        val cents = graft.operators.IvfModel.fitFromDf(
-          vectors.select(col("id"), col("vec")), "id", "vec", params.nlist)
-        fitted = Some(cents)
         val (supers, memberOf) = graft.operators.IvfModel.superModel(cents)
         // the build-side super dial: the persisted tuning when set, else
         // the nlist rule (the same resolution a dialed serving job makes)
@@ -267,34 +313,10 @@ object IndexStore {
               supers, cents, memberOf, sp, 1)).as("p"))
           .select(col("id"), col("vec"),
             col("p")("cell").cast("int").as("cell"), col("text"))
-      case "ivfpq" =>
-        // The 100 TB serving layout: coarse cells for pruning + PQ CODES
-        // instead of raw vectors (SubSpaces longs per row, 64× smaller).
-        // Both fits are the deterministic bounded-sample Lloyd's; the
-        // models are persisted as tiny parquet sidecars so a loader on any
-        // host can reconstruct the quantizers exactly.
-        val cents = graft.operators.IvfModel.fitFromDf(
-          vectors.select(col("id"), col("vec")), "id", "vec", params.nlist)
-        val cb = graft.operators.PqModel.fitFromDf(vectors, "id", "vec")
-        fitted = Some(cents)
-        books = Some(cb)
-        rows.select(col("id"),
-          element_at(graft.functions.IvfProbes.column(col("vec"), cents, 1), 1)("cell")
-            .cast("int").as("cell"),
-          transform(graft.functions.PqCodes.column(col("vec"), cb), p => p("code"))
-            .as("codes"), col("text"))
-      case "flat" =>
-        rows.select(col("id"), col("vec"), lit(0).as("cell"), col("text"))
-      case other =>
-        // Mirror the reference's loader contract (ingest/backends/
-        // loader.py:10 `raise ValueError(f"Unknown backend: {name}")`)
-        // instead of silently degrading to flat. The reference's HNSW
-        // surface is config-only dead code (its loader raises on it too);
-        // graph-ANN is deliberately not implemented here — ivf/ivf_hier/
-        // ivfpq cover every reachable serving shape.
-        throw new IllegalArgumentException(
-          s"Unknown backend: $other (supported: flat, ivf, ivf_hier, ivfpq)")
+      case _ => layout(rows, backend, cents, books)
     }
+    val fitted = if (backend.startsWith("ivf")) Some(cents) else None
+    val pq = if (backend == "ivfpq") Some(books) else None
     val version = freshVersion(conf, root, name)
     val vDir = s"$root/$name/versions/$version"
     // The EXPENSIVE lineage (chunk → embed → assign → layout shuffle) runs
@@ -308,7 +330,7 @@ object IndexStore {
         cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "centroid")
           .coalesce(1).write.mode("overwrite").options(NioLocalFileSystem.WriteOptions)
           .parquet(s"$vDir/centroids"))
-      books.foreach(cb =>
+      pq.foreach(cb =>
         cb.zipWithIndex.flatMap { case (book, m) =>
           book.zipWithIndex.map { case (c, code) => (m, code, c.toSeq) }
         }.toSeq.toDF("m", "code", "cent")
@@ -328,7 +350,7 @@ object IndexStore {
       .format(DateTimeFormatter.ISO_LOCAL_DATE_TIME).take(19)
     val manifest = Manifest(dim, count, model, normalize, backend, params,
       chunking, metric, createdAt, measuredRecall)
-    val json = manifest.toJsonWith(Pointer(version, Nil, Some(schema)).json)
+    val json = manifest.toJsonWith(Pointer(version, Nil, schema, mark).json)
     writeString(conf, s"$vDir/manifest.json", json)
     val meta =
       s"""{"version": "$version", "created_at": "$createdAt", "embed_model": "$model",
@@ -340,16 +362,49 @@ object IndexStore {
     // the fits are already on the driver: seed their sidecar entries, so
     // the next search or append reads no sidecar
     fitted.foreach(cents => sidecar(spark, vDir, "centroids")(_ => cents))
-    books.foreach(cb => sidecar(spark, vDir, "codebooks")(_ => cb))
+    pq.foreach(cb => sidecar(spark, vDir, "codebooks")(_ => cb))
     // the commit: latest now names this version
     writeString(conf, s"$root/$name/latest/manifest.json", json)
     manifest
   }
 
   /** `df` with a string `text` column: its own when present, else null. */
-  private[graft] def withText(df: DataFrame): DataFrame =
+  private def withText(df: DataFrame): DataFrame =
     if (df.columns.contains("text")) df
     else df.withColumn("text", lit(null).cast("string"))
+
+  /** `rows` (`id`, `vec`, `text`) as `backend`'s vector rows: `cell` 0 for
+    * flat; for ivf and ivf_hier the exact coarse argmin over `cents`, by a
+    * narrow broadcast assignment pass; for ivfpq that cell plus PQ `codes`
+    * from `books` in place of `vec` — the 100 TB serving layout,
+    * SubSpaces longs per row, 64× smaller. The models are read only by the
+    * backends that use them.
+    */
+  private def layout(rows: DataFrame, backend: String, cents: => Array[Array[Double]],
+      books: => Array[Array[Array[Double]]]): DataFrame = backend match {
+    case "ivf" | "ivf_hier" =>
+      VectorOps.assignCells(
+          rows.select(col("id"), col("vec").as("embedding"), col("text")), cents)
+        .select(col("id"), col("embedding").as("vec"),
+          col("cell").cast("int").as("cell"), col("text"))
+    case "ivfpq" =>
+      rows.select(col("id"),
+        element_at(graft.functions.IvfProbes.column(col("vec"), cents, 1), 1)("cell")
+          .cast("int").as("cell"),
+        transform(graft.functions.PqCodes.column(col("vec"), books), p => p("code"))
+          .as("codes"), col("text"))
+    case "flat" =>
+      rows.select(col("id"), col("vec"), lit(0).as("cell"), col("text"))
+    case other =>
+      // Mirror the reference's loader contract (ingest/backends/
+      // loader.py:10 `raise ValueError(f"Unknown backend: {name}")`)
+      // instead of silently degrading to flat. The reference's HNSW
+      // surface is config-only dead code (its loader raises on it too);
+      // graph-ANN is deliberately not implemented here — ivf/ivf_hier/
+      // ivfpq cover every reachable serving shape.
+      throw new IllegalArgumentException(
+        s"Unknown backend: $other (supported: flat, ivf, ivf_hier, ivfpq)")
+  }
 
   /** Default per-file row ceiling for the vectors layout — ~1 GB parquet
     * files at a few-hundred-dim float32 embedding row (1M rows × ~1 KB).
@@ -449,21 +504,17 @@ object IndexStore {
 
   /** Delete the version dirs of unfinished writes, before a build or an
     * append starts its own: every dir newer, in write order, than the
-    * newest version latest names — every dir when there is no latest
-    * manifest. A write commits by moving latest, so such a dir is a write
-    * that crashed or failed before its commit, and no reader ever saw it.
-    * A latest written before it became a pointer names no version; its
-    * versions are kept.
+    * newest version `latest` names — every dir when there is no latest.
+    * A write commits by moving latest, so such a dir is a write that
+    * crashed or failed before its commit, and no reader ever saw it.
     */
-  private def rollBack(conf: Configuration, root: String, name: String): Unit = {
-    val latest = manifestAt(dirOf(root, name, None), conf)
-    if (latest.forall(pointerOf(_).isDefined)) {
-      val newest = latest.flatMap(pointerOf).map(p => writeOrder(p.newest))
-      val fs = new HPath(root).getFileSystem(conf)
-      for (v <- versionsIn(conf, root, name)
-           if VersionId.matches(v) && newest.forall(Ordering[(String, Int)].gt(writeOrder(v), _)))
-        fs.delete(new HPath(s"$root/$name/versions/$v"), true)
-    }
+  private def rollBack(conf: Configuration, root: String, name: String,
+      latest: Option[Pointer]): Unit = {
+    val newest = latest.map(p => writeOrder(p.newest))
+    val fs = new HPath(root).getFileSystem(conf)
+    for (v <- versionsIn(conf, root, name)
+         if VersionId.matches(v) && newest.forall(Ordering[(String, Int)].gt(writeOrder(v), _)))
+      fs.delete(new HPath(s"$root/$name/versions/$v"), true)
   }
 
   /** A version id that sorts after every existing one: the second-
@@ -527,9 +578,7 @@ object IndexStore {
     *
     * A delta of 0 rows records an empty version on a flat index; an ivf*
     * index refuses it with an `IllegalArgumentException` and leaves no
-    * version behind. An index whose latest names no versions (written
-    * before latest became a pointer) is refused with an
-    * `IllegalStateException`: rebuild it.
+    * version behind. An index in another layout is refused ([[pointed]]).
     *
     * Assignment uses the exact coarse argmin for every ivf* backend
     * (including ivf_hier, whose build-side two-level probe is a
@@ -544,51 +593,40 @@ object IndexStore {
     *
     * Returns the updated manifest (count includes the appended rows).
     */
-  def append(newVectors: DataFrame, root: String, name: String): Manifest = {
+  def append(newVectors: DataFrame, root: String, name: String): Manifest =
+    append(newVectors, root, name, None)
+
+  /** [[append]], its commit holding `mark`, a stream's batch; a batch the
+    * pointer already holds, or one with no rows, writes nothing and
+    * returns the index's manifest. Without `mark` the commit carries the
+    * pointer's own mark forward.
+    */
+  private[graft] def append(newVectors: DataFrame, root: String, name: String,
+      mark: Option[Mark]): Manifest = {
     val spark = newVectors.sparkSession
     val conf = writeConf(spark)
-    rollBack(conf, root, name)
-    val latestJson = readString(s"${dirOf(root, name, None)}/manifest.json", conf)
+    val (latestJson, at) = pointed(root, name, None, conf = conf)
+    rollBack(conf, root, name, Some(at))
     val old = parseManifest(latestJson)
-    val at = pointerOf(latestJson).getOrElse(throw new IllegalStateException(
-      s"append to $name: its latest manifest names no versions (written before " +
-        "latest became a pointer); rebuild the index"))
-    val rows = withText(newVectors)
-    val assigned = old.backend match {
-      case "ivfpq" =>
-        val cents = loadCentroids(spark, root, name, None, Some(latestJson))
-        val cb = loadCodebooks(spark, root, name, None, Some(latestJson))
-        rows.select(col("id"),
-          element_at(graft.functions.IvfProbes.column(col("vec"), cents, 1), 1)("cell")
-            .cast("int").as("cell"),
-          transform(graft.functions.PqCodes.column(col("vec"), cb), p => p("code"))
-            .as("codes"), col("text"))
-      case b if b.startsWith("ivf") =>
-        val cents = loadCentroids(spark, root, name, None, Some(latestJson))
-        VectorOps.assignCells(
-            rows.select(col("id"), col("vec").as("embedding"), col("text")), cents)
-          .select(col("id"), col("embedding").as("vec"),
-            col("cell").cast("int").as("cell"), col("text"))
-      case "flat" =>
-        rows.select(col("id"), col("vec"), lit(0).as("cell"), col("text"))
-      case other => // unreachable via build(), but a hand-written manifest could carry it
-        throw new IllegalArgumentException(
-          s"Unknown backend: $other (supported: flat, ivf, ivf_hier, ivfpq)")
-    }
+    if (mark.exists(at.holds)) return old
+    val assigned = layout(withText(newVectors), old.backend,
+      loadCentroids(spark, root, name, None, Some(latestJson)),
+      loadCodebooks(spark, root, name, None, Some(latestJson)))
     val version = freshVersion(conf, root, name)
     val vDir = s"$root/$name/versions/$version"
     // the delta's lineage (assignment + one shuffle) runs ONCE, into the
     // version dir, and its rows are counted by that write
     val added = writeRun(assigned, s"$vDir/vectors")
-    if (added == 0 && old.backend != "flat") {
+    if (added == 0 && (mark.isDefined || old.backend != "flat")) {
       new HPath(vDir).getFileSystem(conf).delete(new HPath(vDir), true)
+      if (mark.isDefined) return old
       throw new IllegalArgumentException(
         s"append to $name: the delta has no rows, and only a flat index records an empty version")
     }
     val createdAt = ZonedDateTime.now(ZoneOffset.UTC)
       .format(DateTimeFormatter.ISO_LOCAL_DATE_TIME).take(19)
     val updated = old.copy(count = old.count + added, createdAt = createdAt)
-    val pointer = at.copy(runs = at.runs :+ version)
+    val pointer = at.copy(runs = at.runs :+ version, mark = mark.orElse(at.mark))
     // The version dir holds ONLY the delta, so its manifest describes the
     // delta (count == rows in the dir — `load(version)` then agrees with
     // its own manifest), flagged `delta: true` with the parent and the
@@ -616,12 +654,14 @@ object IndexStore {
     * reads at the schema the manifest records, so it starts no Spark job.
     */
   def load(spark: SparkSession, root: String, name: String,
-           version: Option[String] = None): DataFrame = {
-    val dir = dirOf(root, name, version)
-    val j = manifestAt(dir)
-    if (version.isEmpty) resolved(spark, s"$root/$name", dir, j)
-    else scan(spark, j.flatMap(pointerOf).flatMap(_.schema), dir)
-  }
+           version: Option[String] = None): DataFrame =
+    rows(spark, root, name, version, pointed(root, name, version)._2)
+
+  /** [[load]]'s read of the rows `p`, `version`'s pointer, names. */
+  private def rows(spark: SparkSession, root: String, name: String,
+      version: Option[String], p: Pointer): DataFrame =
+    if (version.isEmpty) resolved(spark, s"$root/$name", p)
+    else scan(spark, p.schema, dirOf(root, name, version))
 
   /** Materialize a version AS OF its write: its manifest names the build
     * it grew from and the append runs up to it, read like the latest
@@ -629,56 +669,34 @@ object IndexStore {
     * the point-in-time index for any earlier one.
     */
   def loadResolved(spark: SparkSession, root: String, name: String,
-                   version: String): DataFrame = {
-    val dir = dirOf(root, name, Some(version))
-    resolved(spark, s"$root/$name", dir, manifestAt(dir))
+                   version: String): DataFrame =
+    resolved(spark, s"$root/$name", pointed(root, name, Some(version))._2)
+
+  /** The index `p` names: the base scan, or the base scan union the runs'
+    * scan. With an IVF layout a later `.filter(col("cell").isin(...))`
+    * prunes the base's partitions before any IO and reaches the runs as a
+    * pushed data filter: they are sorted by cell, so parquet statistics
+    * skip the row groups of other cells.
+    */
+  private def resolved(spark: SparkSession, index: String, p: Pointer): DataFrame = {
+    val base = scan(spark, p.schema, s"$index/versions/${p.base}")
+    if (p.runs.isEmpty) base
+    else base.union(spark.read.schema(base.schema)
+      .parquet(p.runs.map(r => s"$index/versions/$r/vectors"): _*))
   }
 
-  /** The index `manifest` (the text at `dir`) names: the base scan, or the
-    * base scan union the runs' scan. With an IVF layout a later
-    * `.filter(col("cell").isin(...))` prunes the base's partitions before
-    * any IO and reaches the runs as a pushed data filter: they are sorted
-    * by cell, so parquet statistics skip the row groups of other cells.
-    * A manifest that names no pointer reads `dir`'s own `vectors/` — a
-    * streaming-ingest target, a hand-written dir — unless `dir` holds
-    * appended runs in the layout before latest became a pointer, which is
-    * refused rather than served without them.
-    */
-  private def resolved(spark: SparkSession, index: String, dir: String,
-      manifest: Option[String]): DataFrame =
-    manifest.flatMap(pointerOf) match {
-      case Some(p) =>
-        val base = scan(spark, p.schema, s"$index/versions/${p.base}")
-        if (p.runs.isEmpty) base
-        else base.union(spark.read.schema(base.schema)
-          .parquet(p.runs.map(r => s"$index/versions/$r/vectors"): _*))
-      case None =>
-        val legacyRuns = new HPath(s"$dir/deltas")
-        if (manifest.exists(_.contains("\"delta\": true")) ||
-            legacyRuns.getFileSystem(hadoopConf).exists(legacyRuns))
-          throw new IllegalStateException(
-            s"$dir holds appended runs in the layout before latest became a pointer; rebuild the index")
-        scan(spark, None, dir)
-    }
-
-  /** The parquet scan of `dir/vectors`, at `schema` (DDL) when the
-    * manifest records it, else inferred with a Spark job.
-    */
-  private def scan(spark: SparkSession, schema: Option[String], dir: String): DataFrame =
-    schema.fold(spark.read)(spark.read.schema).parquet(s"$dir/vectors")
+  /** The parquet scan of `dir/vectors` at `schema` (DDL). */
+  private def scan(spark: SparkSession, schema: String, dir: String): DataFrame =
+    spark.read.schema(schema).parquet(s"$dir/vectors")
 
   /** The index's chunk text as a lazy `(id, text)` scan of the vector
-    * rows ([[loadServing]]), rows without text left out; None for an
-    * artifact whose rows carry no `text` column (written before chunk
-    * text moved into the rows — a rebuild restores it).
+    * rows ([[loadServing]]), rows without text left out.
     */
   def loadDocs(spark: SparkSession, root: String, name: String,
                version: Option[String] = None,
-               manifestText: Option[String] = None): Option[DataFrame] = {
-    val rows = loadServing(spark, root, name, version, manifestText)
-    if (!rows.columns.contains("text")) None
-    else Some(rows.filter(col("text").isNotNull).select(col("id"), col("text")))
-  }
+               manifestText: Option[String] = None): DataFrame =
+    loadServing(spark, root, name, version, manifestText)
+      .filter(col("text").isNotNull).select(col("id"), col("text"))
 
   /** The per-doc provenance sidecar of the base, if present — served
     * through the same cache as the vectors (searchWithSource joins it per
@@ -687,10 +705,10 @@ object IndexStore {
   def loadSources(spark: SparkSession, root: String, name: String,
                   version: Option[String] = None,
                   manifestText: Option[String] = None): Option[DataFrame] = {
-    val p = new HPath(s"${baseDir(root, name, version, manifestText)}/sources")
+    val (mj, at) = pointed(root, name, version, manifestText)
+    val p = new HPath(s"$root/$name/versions/${at.base}/sources")
     if (p.getFileSystem(hadoopConf).exists(p))
-      Some(serving(spark, root, name, version, "sources", manifestText)(
-        spark.read.parquet(p.toString)))
+      Some(serving(spark, root, name, version, "sources", mj)(spark.read.parquet(p.toString)))
     else None
   }
 
@@ -790,17 +808,14 @@ object IndexStore {
 
   /** `load` of one index artifact (`sub` of the version dir) through the
     * session's [[graft.Artifacts]] store (kind "serving", 32 entries per
-    * session), keyed by the artifact path with the manifest text as its
-    * snapshot version: a rebuild or [[append]] rewrites the manifest (new
-    * createdAt/count), so the next read misses and replaces the entry.
-    * `manifestText` lets a caller that already read the manifest THIS
-    * query skip the re-read — pass only a same-query read. Manifest-less
-    * dirs (streaming-ingest targets) bypass the store, so their growing
-    * file set stays visible per query. The manifest is re-read after a
-    * miss's load, and a rebuild in between caches nothing. Known limit:
-    * two rebuilds of the same name with identical shape inside ONE second
-    * produce byte-identical manifests (created_at is second-resolution) —
-    * unreachable for any real build.
+    * session), keyed by the artifact path with `manifestText`, the
+    * version's manifest as this query read it, as its snapshot version: a
+    * rebuild or [[append]] rewrites the manifest (new createdAt/count), so
+    * the next read misses and replaces the entry. The manifest is re-read
+    * after a miss's load, and a rebuild in between caches nothing. Known
+    * limit: two rebuilds of the same name with identical shape inside ONE
+    * second produce byte-identical manifests (created_at is
+    * second-resolution) — unreachable for any real build.
     *
     * The entries are LAZY scans: a `spark.read.parquet` builds a fresh
     * file index per call, and over a cell-partitioned index that partition-
@@ -809,14 +824,10 @@ object IndexStore {
     * data.
     */
   private def serving[A](spark: SparkSession, root: String, name: String,
-      version: Option[String], sub: String, manifestText: Option[String])(load: => A): A = {
-    def read() = scala.util.Try(manifestJson(root, name, version)).toOption
-    manifestText.orElse(read()) match {
-      case None => load
-      case Some(mj) =>
-        graft.Artifacts.manifested(spark, "serving", s"${dirOf(root, name, version)}/$sub",
-          mj, 32, read())(load)
-    }
+      version: Option[String], sub: String, manifestText: String)(load: => A): A = {
+    val dir = dirOf(root, name, version)
+    graft.Artifacts.manifested(spark, "serving", s"$dir/$sub", manifestText, 32,
+      manifestAt(dir))(load)
   }
 
   /** The model sidecar `dir/<sub>` decoded by `read`, through the session's
@@ -836,15 +847,15 @@ object IndexStore {
     * the manifest, which changes the cache key. `manifestText` lets a
     * caller that already read the manifest THIS query skip the re-read —
     * pass only a same-query read (an older text would key to the older
-    * entry). Manifest-LESS dirs (streaming-ingest targets) are never
-    * cached, so their growing file set stays visible per query. Use in
-    * serving loops; [[load]] stays the uncached read.
+    * entry). An index in another layout is refused ([[pointed]]), as by
+    * [[load]]. Use in serving loops; [[load]] stays the uncached read.
     */
   def loadServing(spark: SparkSession, root: String, name: String,
                   version: Option[String] = None,
-                  manifestText: Option[String] = None): DataFrame =
-    serving(spark, root, name, version, "vectors", manifestText)(
-      load(spark, root, name, version))
+                  manifestText: Option[String] = None): DataFrame = {
+    val (mj, p) = pointed(root, name, version, manifestText)
+    serving(spark, root, name, version, "vectors", mj)(rows(spark, root, name, version, p))
+  }
 
   /** The coarse centroids persisted by the ivf* build that `version`
     * (latest when None) names as its base, cell order. `manifestText`, a
@@ -905,12 +916,10 @@ object IndexStore {
                                version: Option[String]): DataFrame = {
     // ONE manifest read per call: the text keys the serving scan, names
     // the sidecars' base and its parsed form resolves the serving dial
-    val mj = scala.util.Try(manifestJson(root, name, version)).toOption
-    val cents = loadCentroids(spark, root, name, version, mj)
-    val cb = loadCodebooks(spark, root, name, version, mj)
-    val np = if (nprobe >= 1) nprobe
-             else mj.flatMap(j => scala.util.Try(parseManifest(j)).toOption)
-               .map(_.servingProbes).filter(_ >= 1).getOrElse(VectorOps.NProbe)
+    val mj = checkedManifest(root, name, version)
+    val cents = loadCentroids(spark, root, name, version, Some(mj))
+    val cb = loadCodebooks(spark, root, name, version, Some(mj))
+    val np = parseManifest(mj).probes(nprobe)
     val qCells = queries.select(
         col("id").as("q_id"), col("vec").as("q_emb"),
         graft.functions.VectorFunctions.norm(col("vec")).as("q_nrm"),
@@ -919,7 +928,7 @@ object IndexStore {
     // ≤ nprobe cells per query of the small, broadcast query side: the
     // driver dedups them, where a distinct() would shuffle
     val cells = qCells.select(col("cell")).collect().map(_.getInt(0)).distinct.sorted.toSeq
-    probe(withText(loadServing(spark, root, name, version, mj)), cells)
+    probe(loadServing(spark, root, name, version, Some(mj)), cells)
       .join(broadcast(qCells), Seq("cell"))
       .filter(col("id") =!= col("q_id"))
       .select(col("q_id"), col("id"),
@@ -934,7 +943,8 @@ object IndexStore {
     * dir and every version dir that manifest names, at their paths under
     * the index dir, so [[extractArchive]] into an index dir yields a
     * loadable index: latest, a build version, or an append version with
-    * its base and the runs before it. Everything goes through the Hadoop
+    * its base and the runs before it; an index in another layout is
+    * refused ([[pointed]]). Everything goes through the Hadoop
     * FS API, so source artifacts and the destination archive can live on
     * any store (HDFS/S3/local); entries are sorted for a deterministic
     * archive. Returns the entry names written.
@@ -951,8 +961,8 @@ object IndexStore {
     val prefix = version.fold(s"${name}_latest")(v => s"${name}_v$v")
     val fs = new HPath(index).getFileSystem(hadoopConf)
     require(fs.exists(new HPath(dir)), s"no such index dir: $dir")
-    val named = manifestAt(dir).flatMap(pointerOf).toSeq
-      .flatMap(p => p.base +: p.runs).map(v => s"versions/$v")
+    val p = pointed(root, name, version)._2
+    val named = (p.base +: p.runs).map(v => s"versions/$v")
     val files = (dir.stripPrefix(s"$index/") +: named).distinct.flatMap(rel =>
       filesUnder(s"$index/$rel").map { case (f, _) => s"$rel/$f" })
     val outP = new HPath(outPath)

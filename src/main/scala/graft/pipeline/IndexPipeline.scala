@@ -85,16 +85,24 @@ object IndexPipeline {
     * reference's `.docs.json`).
     */
   def build(docs: DataFrame, root: String, cfg: Config): IndexStore.Manifest =
-    IndexStore.build(
-      vectorize(docs, cfg), root, cfg.name, cfg.backend,
-      params = cfg.params,
-      chunking = IndexStore.Chunking(cfg.chunkMode, cfg.chunkSize, cfg.chunkOverlap),
-      model = cfg.model, normalize = cfg.normalize, metric = "ip")
+    store(vectorize(docs, cfg), root, cfg)
+
+  /** [[IndexStore.build]] of `vectors` into `root/cfg.name`, every index
+    * and manifest field taken from `cfg` — the pipeline's one build call.
+    * `mark` is the stream batch the commit holds ([[graft.streaming.IndexIngest]]).
+    */
+  private[graft] def store(vectors: DataFrame, root: String, cfg: Config,
+      sources: Option[DataFrame] = None,
+      mark: Option[IndexStore.Mark] = None): IndexStore.Manifest =
+    IndexStore.build(vectors, root, cfg.name, cfg.backend, cfg.params,
+      IndexStore.Chunking(cfg.chunkMode, cfg.chunkSize, cfg.chunkOverlap),
+      cfg.model, cfg.normalize, "ip", None, sources, -1.0, mark)
 
   /** [[build]] with progress events (reference `pipeline.py:46-66,174-185`:
     * named stage markers, DONE on success, "ERROR: …" then failure) plus
     * scheduler-level job/stage events via [[BuildProgress]]. Same result
-    * as [[build]]; `onEvent` is the SSE-bus seam.
+    * as [[build]]; `onEvent` is the SSE-bus seam. The plan is lazy, so
+    * the markers name the stages in order and the jobs run under the last.
     */
   def buildWithProgress(docs: DataFrame, root: String, cfg: Config,
                         onEvent: String => Unit,
@@ -102,17 +110,10 @@ object IndexPipeline {
     BuildProgress.withProgress(docs.sparkSession, jobId, onEvent) {
       try {
         onEvent("Chunking")
-        val ch = chunked(docs, cfg)
         onEvent(s"Embedding with ${cfg.model} (dim=${cfg.dim})")
-        val vecs = Embedder.embed(ch, cfg.dim, cfg.normalize,
-            graft.functions.Encoders.get(cfg.model))
-          .toDF().select(col("id"), col("vec"), col("text"))
+        val vecs = vectorize(docs, cfg)
         onEvent(s"Building index [${cfg.backend}]")
-        val manifest = IndexStore.build(
-          vecs, root, cfg.name, cfg.backend,
-          params = cfg.params,
-          chunking = IndexStore.Chunking(cfg.chunkMode, cfg.chunkSize, cfg.chunkOverlap),
-          model = cfg.model, normalize = cfg.normalize, metric = "ip")
+        val manifest = store(vecs, root, cfg)
         onEvent("DONE")
         manifest
       } catch {
@@ -154,19 +155,17 @@ object IndexPipeline {
       .filter(length(trim(col("text"))) > 0)
     val sources = docs.select(col("doc_id"),
       lit(path).as("origin_path"), lit(format).as("content_type"))
-    IndexStore.build(
-      vectorize(docs, cfg), root, cfg.name, cfg.backend,
-      params = cfg.params,
-      chunking = IndexStore.Chunking(cfg.chunkMode, cfg.chunkSize, cfg.chunkOverlap),
-      model = "stub-hash-projection", normalize = cfg.normalize,
-      metric = "ip", sources = Some(sources))
+    store(vectorize(docs, cfg), root, cfg, Some(sources))
   }
 
   /** Search plus the reference's `source` enrichment
     * (`answerless_search.py:73-111 _build_source`): each hit carries its
     * parsed (doc, chunk) key and the doc's provenance from the sources
-    * sidecar when present. Hit lists are tiny — the provenance join
-    * broadcasts them against the sidecar scan.
+    * sidecar when present: every hit stays, with null provenance when its
+    * doc has no sidecar row (a chunk appended or streamed after the
+    * build). A join that keeps every hit cannot broadcast the hits, so
+    * Spark broadcasts the sidecar when it is small, one short row per doc,
+    * and sort-merges it otherwise.
     */
   def searchWithSource(spark: SparkSession, root: String, name: String,
                        query: String, k: Int, cfg: Config = Config("q"),
@@ -176,7 +175,7 @@ object IndexPipeline {
       .withColumn("chunk", split(col("id"), "#").getItem(1).cast("long"))
     (IndexStore.loadSources(spark, root, name, version) match {
       case Some(src) =>
-        src.withColumnRenamed("doc_id", "doc").join(broadcast(hits), Seq("doc"))
+        hits.join(src.withColumnRenamed("doc_id", "doc"), Seq("doc"), "left")
           .select(hits.columns.filter(_ != "doc").map(col) :+ col("doc") :+
             col("origin_path") :+ col("content_type"): _*)
       case None =>
@@ -195,10 +194,7 @@ object IndexPipeline {
   def getChunk(spark: SparkSession, root: String, name: String,
                chunkId: String, query: Option[String] = None,
                version: Option[String] = None): DataFrame = {
-    val docs = IndexStore.loadDocs(spark, root, name, version)
-      .getOrElse(throw new IllegalStateException(
-        s"index '$name' has no chunk text — rebuild it to fetch chunks"))
-    val base = docs.filter(col("id") === chunkId)
+    val base = IndexStore.loadDocs(spark, root, name, version).filter(col("id") === chunkId)
       .select(col("id").as("doc_id"), col("text"))
     val terms = query.toSeq
       .flatMap(_.trim.toLowerCase.split("\\s+")).filter(_.nonEmpty).distinct
@@ -222,9 +218,9 @@ object IndexPipeline {
     * with no join. Collected, a warm flat or ivf search is one job of one
     * stage with no exchange; ivfpq adds the jobs that find its probed
     * cells and broadcast the query, and shuffles nothing either. Rows
-    * without text (an (id, vec)-only append, a streamed vectors-only dir,
-    * an artifact written before text moved into the rows) keep their hit
-    * with a null preview.
+    * without text (an (id, vec)-only append) keep their hit with a null
+    * preview. An index in another layout than latest's pointer is
+    * refused, as by [[IndexStore.load]].
     */
   def search(spark: SparkSession, root: String, name: String,
              query: String, k: Int, cfg: Config = Config("q"),
@@ -234,28 +230,19 @@ object IndexPipeline {
       .openPartition(cfg.dim, cfg.normalize)(query)
     // Dispatch on the PERSISTED backend (the manifest travels with the
     // artifact), not the caller's cfg — a shipped index searches correctly
-    // whatever the caller assumes. Indexes without a manifest (e.g. the
-    // streaming-ingest append path writes rows but no manifest) search as flat.
-    // ONE manifest read per search: its text keys the serving caches and
-    // its parsed form resolves the dial default. Backend dispatch stays
-    // LENIENT (a bare regex over the text): a reformatted or partial
-    // manifest a tool rewrote must still dispatch to its real backend —
-    // falling back to "flat" on an ivfpq artifact would reference a `vec`
-    // column the code table does not have. A vectors-only dir with no
-    // manifest at all searches as flat at the library defaults, as before.
-    val mj = scala.util.Try(IndexStore.manifestJson(root, name, version)).toOption
-    val mf = mj.flatMap(j => scala.util.Try(IndexStore.parseManifest(j)).toOption)
-    val backend = mj
-      .flatMap(""""backend":\s*"(\w+)"""".r.findFirstMatchIn(_))
-      .map(_.group(1)).getOrElse("flat")
+    // whatever the caller assumes. ONE manifest read per search: its text
+    // keys the serving caches and its parsed form resolves the dial default.
+    val mj = IndexStore.checkedManifest(root, name, version)
+    val mf = IndexStore.parseManifest(mj)
     // exact inner-product scores over whatever slice of the index reaches
     // the scan (the full dataset for flat; the probed cells for ivf)
     def scored(slice: DataFrame): DataFrame = {
       val qlit = array(qv.map(x => lit(x)).toIndexedSeq: _*)
-      IndexStore.withText(slice).select(col("id"),
+      slice.select(col("id"),
         round(VectorFunctions.dot(qlit, col("vec")), 6).as("score"), col("text"))
     }
-    val hits = graft.functions.Ranking.topK(backend match {
+    def index = IndexStore.loadServing(spark, root, name, version, Some(mj))
+    val hits = graft.functions.Ranking.topK(mf.backend match {
       case "ivfpq" =>
         // the index holds PQ codes, not vectors: probe + ADC-score
         import spark.implicits._
@@ -271,26 +258,13 @@ object IndexPipeline {
         // result is the exact top-k WITHIN the probed cells). The probe
         // count resolves like adcSearch: explicit cfg.nprobe, else the
         // manifest's serving default (the tuned dial when persisted).
-        // Sidecar-less builds (e.g. a streaming-ingest vectors-only dir
-        // that still carries an ivf-manifest) fall back to the exact
-        // full scan — correct, just unpruned.
-        val index = IndexStore.loadServing(spark, root, name, version, mj)
-        scored(scala.util.Try(
-            IndexStore.loadCentroids(spark, root, name, version, mj)).toOption
-          .filter(_.nonEmpty) match {
-          case Some(cents) =>
-            val np = if (cfg.nprobe >= 1) cfg.nprobe
-              else mf.map(_.servingProbes).filter(_ >= 1)
-                .getOrElse(graft.operators.VectorOps.NProbe)
-            val cells = cents.indices
-              .map(c => (c, cents(c).indices.map { d =>
-                val diff = qv(d) - cents(c)(d); diff * diff }.sum))
-              .sortBy(_._2).take(math.min(np, cents.length)).map(_._1)
-            IndexStore.probe(index, cells)
-          case None => index
-        })
-      case _ =>
-        scored(IndexStore.loadServing(spark, root, name, version, mj))
+        val cents = IndexStore.loadCentroids(spark, root, name, version, Some(mj))
+        val cells = cents.indices
+          .map(c => (c, cents(c).indices.map { d =>
+            val diff = qv(d) - cents(c)(d); diff * diff }.sum))
+          .sortBy(_._2).take(math.min(mf.probes(cfg.nprobe), cents.length)).map(_._1)
+        scored(IndexStore.probe(index, cells))
+      case _ => scored(index)
     }, k, col("score").desc, col("id"))
     val preview = when(length(col("text")) > graft.operators.Search.PreviewLen,
         concat(substring(col("text"), 1, graft.operators.Search.PreviewLen), lit("…")))

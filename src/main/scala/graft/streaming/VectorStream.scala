@@ -72,12 +72,9 @@ object VectorStream {
     val m = IndexStore.manifest(root, name, version)
     require(m.backend == "ivfpq",
       s"adcCandidatesFrom serves ivfpq artifacts; '$name' is ${m.backend}")
-    val np = if (nprobe >= 1) nprobe
-             else if (m.servingProbes >= 1) m.servingProbes
-             else VectorOps.NProbe
     adcCandidates(queries, IndexStore.loadServing(spark, root, name, version),
       IndexStore.loadCentroids(spark, root, name, version),
-      IndexStore.loadCodebooks(spark, root, name, version), np)
+      IndexStore.loadCodebooks(spark, root, name, version), m.probes(nprobe))
   }
 
   /** Streaming embedding near-dup candidates — the continuous form of the

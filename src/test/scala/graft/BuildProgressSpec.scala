@@ -43,6 +43,21 @@ class BuildProgressSpec extends SparkSpec {
     assert(es.exists(_.startsWith("stage ")), s"no stage events in: $es")
   }
 
+  test("buildWithProgress names its stages in order and builds what build builds") {
+    val events = new ConcurrentLinkedQueue[String]()
+    val root = Files.createTempDirectory("graft-prog").toString
+    val cfg = IndexPipeline.Config("prog_ivf", backend = "ivf", nlist = 4,
+      model = graft.functions.HashedNgramEncoder.name, dim = 32)
+    val m = IndexPipeline.buildWithProgress(docs, root, cfg, events.add(_))
+    val markers = events.asScala.toSeq
+      .filterNot(e => e.startsWith("spark job") || e.startsWith("stage "))
+    assert(markers == Seq("Chunking", s"Embedding with ${cfg.model} (dim=32)",
+      "Building index [ivf]", "DONE"))
+    val plain = IndexPipeline.build(docs, root, cfg.copy(name = "plain_ivf"))
+    assert(m.copy(createdAt = "") == plain.copy(createdAt = ""))
+    assert(m.model == cfg.model && m.dim == 32 && m.params.nlist == 4)
+  }
+
   test("a failing build emits ERROR and rethrows") {
     val events = new ConcurrentLinkedQueue[String]()
     val s = spark

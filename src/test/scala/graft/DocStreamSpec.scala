@@ -4,6 +4,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.DocStream
 
+case class IngestDoc(doc_id: Long, text: String)
+
 /** Streaming quality filter == the batch scorer on the same rows. */
 class DocStreamSpec extends SparkSpec {
 

@@ -338,20 +338,6 @@ class IndexAppendSpec extends SparkSpec {
       assert(hits.head.getAs[String]("preview") == null)
       assert(hits.tail.forall(_.getAs[String]("preview") != null))
     }
-    // rows with no text column at all (a hand-written vectors-only dir)
-    // search the same way
-    val root = java.nio.file.Files.createTempDirectory("graft_app_no_text").toString
-    val cfg = IndexPipeline.Config(name = "bare")
-    val vecs = IndexPipeline.vectorize(Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text")).orderBy(col("doc_id")).limit(20), cfg)
-    vecs.select(col("id"), col("vec"), lit(0).as("cell"))
-      .write.parquet(s"$root/bare/latest/vectors")
-    val (id, text) = vecs.select("id", "text").collect()
-      .map(r => (r.getString(0), r.getString(1))).groupBy(_._2)
-      .collectFirst { case (_, Array(only)) => only }.get
-    val hits = IndexPipeline.search(spark, root, "bare", text, 5, cfg).collect()
-    assert(hits.length == 5 && hits.head.getAs[String]("id") == id)
-    assert(hits.forall(_.getAs[String]("preview") == null))
   }
 
   test("ivf append partitions new rows into existing cell layout") {

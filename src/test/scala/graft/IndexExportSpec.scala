@@ -37,8 +37,7 @@ class IndexExportSpec extends SparkSpec {
     assert(IndexStore.manifestJson(root2, "exp_flat").contains("\"dim\": 8"))
     // the chunk text passed beside the vectors ships inside the rows
     val docs = IndexStore.loadDocs(spark, root2, "exp_flat")
-    assert(docs.isDefined)
-    assert(docs.get.collect().map(r => (r.getString(0), r.getString(1))).toSet ===
+    assert(docs.collect().map(r => (r.getString(0), r.getString(1))).toSet ===
       (0L until 60L).map(i => (i.toString, s"text-$i")).toSet)
   }
 

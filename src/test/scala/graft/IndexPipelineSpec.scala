@@ -186,6 +186,40 @@ class IndexPipelineSpec extends SparkSpec {
     assert(src.head.getAs[Long]("chunk") >= 0L)
   }
 
+  test("searchWithSource keeps every hit: one with no provenance row has null origin") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-pipe").toString
+    val f = Files.createTempFile("docs", ".csv")
+    Files.writeString(f,
+      "doc_id,text\n0,the quick brown fox jumps\n1,pack my box with five dozen jugs\n")
+    val cfg = IndexPipeline.Config(name = "src_app")
+    IndexPipeline.buildFromFile(spark, f.toString, "csv", root, cfg)
+    val appended = "the quick brown fox jumps over the lazy dog"
+    IndexStore.append(IndexPipeline.vectorize(Seq((900L, appended)).toDF("doc_id", "text"), cfg),
+      root, cfg.name)
+    val hits = IndexPipeline.search(spark, root, cfg.name, appended, 3)
+      .collect().map(_.getAs[String]("id")).toSeq
+    assert(hits.head == "900#0" && hits.length == 3)
+    val src = IndexPipeline.searchWithSource(spark, root, cfg.name, appended, 3).collect()
+    assert(src.map(_.getAs[String]("id")).toSeq == hits)
+    val origin = src.map(r => r.getAs[String]("id") -> r.getAs[String]("origin_path")).toMap
+    assert(origin("900#0") == null)
+    assert(hits.tail.forall(origin(_) == f.toString))
+  }
+
+  test("buildFromFile records the model it embeds with") {
+    val root = Files.createTempDirectory("graft-pipe").toString
+    val f = Files.createTempFile("docs", ".csv")
+    Files.writeString(f, "text\nthe quick brown fox jumps\npack my box with five dozen jugs\n")
+    val cfg = IndexPipeline.Config(name = "model_csv", model = graft.functions.HashedNgramEncoder.name)
+    val m = IndexPipeline.buildFromFile(spark, f.toString, "csv", root, cfg)
+    assert(m.model == cfg.model)
+    assert(IndexStore.manifest(root, cfg.name).model == cfg.model)
+    val hits = IndexPipeline.search(spark, root, cfg.name, "pack my box with five dozen jugs", 1, cfg)
+    assert(hits.collect().head.getAs[Double]("score") > 0.999999)
+  }
+
   test("sentence chunk mode flows through build, manifest, and self-retrieval") {
     val root = Files.createTempDirectory("graft-pipe").toString
     val docs = graft.sources.Tables.documents(spark, dir)
@@ -201,7 +235,7 @@ class IndexPipelineSpec extends SparkSpec {
       .filter(length(col("chunk")) > 0)
       .select(col("chunk_id"), col("chunk")).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    val got = IndexStore.loadDocs(spark, root, "e2e_sent").get.collect()
+    val got = IndexStore.loadDocs(spark, root, "e2e_sent").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(got === want && got.nonEmpty)
 

@@ -30,7 +30,7 @@ class IndexStatsSpec extends SparkSpec {
     val cfg = IndexPipeline.Config(name = "stats_ix", backend = "flat")
     IndexPipeline.build(docs, root, cfg)
 
-    val lens = IndexStore.loadDocs(spark, root, "stats_ix").get
+    val lens = IndexStore.loadDocs(spark, root, "stats_ix")
       .collect().map(_.getAs[String]("text").length.toLong).toSeq
     val row = IndexStats.stats(spark, root, "stats_ix").collect()(0)
     assert(row.getAs[Long]("chunks") == lens.length)
@@ -47,7 +47,7 @@ class IndexStatsSpec extends SparkSpec {
     val docs = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).limit(60)
     IndexPipeline.build(docs, root, IndexPipeline.Config(name = "hist_ix"))
-    val lens = IndexStore.loadDocs(spark, root, "hist_ix").get
+    val lens = IndexStore.loadDocs(spark, root, "hist_ix")
       .collect().map(_.getAs[String]("text").length.toLong).toSeq
     val hist = IndexStats.histogram(spark, root, "hist_ix").collect()
     assert(hist.map(_.getAs[Long]("n")).sum == lens.length)

@@ -180,22 +180,41 @@ class IndexStoreSpec extends SparkSpec {
       m.params.efSearch == 64)
   }
 
-  test("an index written before latest became a pointer reads as its own vectors, and its appended runs are refused") {
+  test("a dir with no manifest, or whose manifest names no base, is refused with one message and nothing is deleted") {
     val root = Files.createTempDirectory("graft-idx").toString
-    val latest = s"$root/old/latest"
-    vectors.withColumn("cell", lit(0)).write.parquet(s"$latest/vectors")
-    Files.write(java.nio.file.Paths.get(s"$latest/manifest.json"),
+    // the layout before latest became a pointer: latest held the rows and
+    // a manifest that names no base, beside its version copies
+    val old = s"$root/old/latest"
+    vectors.withColumn("cell", lit(0)).write.parquet(s"$old/vectors")
+    Files.write(java.nio.file.Paths.get(s"$old/manifest.json"),
       """{"dim": 8, "count": 100, "model": "none", "normalize": false,
         | "backend": "flat", "params": {"nlist": 1, "nprobe": 1},
         | "chunking": {"mode": "fixed", "size": 100, "overlap": 20},
         | "metric": "ip", "created_at": "2026-01-01T00:00:00"}""".stripMargin
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    assert(IndexStore.load(spark, root, "old").count() == 100)
-    // runs the older layout kept beside the base are never dropped silently
-    vectors.limit(5).withColumn("cell", lit(0)).write.parquet(s"$latest/deltas")
-    val e = intercept[IllegalStateException](IndexStore.load(spark, root, "old"))
-    assert(e.getMessage.contains("rebuild"))
-    intercept[IllegalStateException](IndexStore.append(vectors.limit(3), root, "old"))
+    vectors.withColumn("cell", lit(0)).write.parquet(s"$root/old/versions/20260101-000000/vectors")
+    // the dir a file-sink stream wrote: rows and no manifest
+    vectors.withColumn("cell", lit(0)).write.parquet(s"$root/bare/latest/vectors")
+    def files(): Set[String] = {
+      val top = java.nio.file.Paths.get(root)
+      Files.walk(top).iterator.asScala.map(top.relativize(_).toString).toSet
+    }
+    val before = files()
+    for (name <- Seq("old", "bare")) {
+      val dir = s"$root/$name/latest"
+      val refusals = Seq[() => Any](
+        () => IndexStore.load(spark, root, name),
+        () => IndexStore.loadServing(spark, root, name),
+        () => graft.pipeline.IndexPipeline.search(spark, root, name, "x", 3),
+        () => IndexStore.append(vectors.limit(3), root, name),
+        () => IndexStore.export(root, name, s"$root/$name.zip"),
+        () => IndexStore.build(vectors, root, name, "flat"))
+      val messages = refusals.map(f => intercept[IllegalStateException](f()).getMessage)
+      assert(messages.distinct == Seq(s"$dir has no manifest that names its base version " +
+        "(never built, or written before latest became a pointer): delete the index and rebuild it"),
+        name)
+    }
+    assert(files() == before, "a refusal deleted or wrote files")
   }
 
   test("sidecar cache: repeat loads are driver-map hits, rebuilds refresh") {

@@ -64,7 +64,7 @@ class JobsSpec extends SparkSpec {
       root, IndexPipeline.Config("jobs_csv", chunkSize = 200, chunkOverlap = 10),
       textColumn = None)
     // the index rows carry the assembled row text as chunk text
-    val sidecar = IndexStore.loadDocs(spark, root, "jobs_csv").get
+    val sidecar = IndexStore.loadDocs(spark, root, "jobs_csv")
       .collect().map(_.getString(1)).toSet
     assert(sidecar === Set("paris | 100 |  x ", "lyon | 50"))
   }
