@@ -13,9 +13,10 @@ without them, so sbt does not inherit them; `perfbench/run.py` then finds it
 up to date.
 
 Prints, per op kind: the ops, and per op the Spark jobs, the job time (wall
-time with at least one job running), the driver time between the op's
-first job start and last job end with no job running, and the process
-starts, with `chmod` ones apart. Jobs are attributed through the
+time with at least one job running), the summed job time (each job's own
+time, added up: above the job time by as much as jobs overlapped), the driver
+time between the op's first job start and last job end with no job running,
+and the process starts, with `chmod` ones apart. Jobs are attributed through the
 `graftbench.op` local property that a `--trace 1` run sets on its staged
 ops (`c<cycle>.<kind><n>`, counted under `<kind>`). Jobs without it (setup,
 warm-up, the untraced pass of a `--trace 1` run, all of a `--trace 0` run)
@@ -172,22 +173,24 @@ def report(jobs, starts):
         k["ops"] += 0 if untraced else 1
         k["jobs"] += len(ivs)
         k["job_ms"] += busy
+        k["sum_ms"] += sum(e - t for t, e in ivs)
         k["gap_ms"] += 0 if untraced else max(e for _, e in ivs) - min(t for t, _ in ivs) - busy
         k["procs"] += procs[op]
         k["chmods"] += chmods[op]
-    cols = f"{'jobs':>8} {'job ms':>10} {'driver ms':>10} {'procs':>7} {'chmod':>7}"
+    cols = f"{'jobs':>8} {'job ms':>10} {'sum ms':>10} {'driver ms':>10} {'procs':>7} {'chmod':>7}"
     print(f"per op{'':<36} {'ops':>4} {cols}")
     for name, k in kinds.items():
         if k["ops"]:
             n = k["ops"]
             print(f"{name:<42} {n:>4} {k['jobs'] / n:>8.1f} {k['job_ms'] / n:>10.1f} "
-                  f"{k['gap_ms'] / n:>10.1f} {k['procs'] / n:>7.1f} {k['chmods'] / n:>7.1f}")
-    print(f"in all, jobs without an op{'':<21} {'jobs':>8} {'job ms':>10} {'':>10} "
-          f"{'procs':>7} {'chmod':>7}")
+                  f"{k['sum_ms'] / n:>10.1f} {k['gap_ms'] / n:>10.1f} "
+                  f"{k['procs'] / n:>7.1f} {k['chmods'] / n:>7.1f}")
+    print(f"in all, jobs without an op{'':<21} {'jobs':>8} {'job ms':>10} {'sum ms':>10} "
+          f"{'':>10} {'procs':>7} {'chmod':>7}")
     for name, k in kinds.items():
         if not k["ops"]:
             print(f"{name[len('(untraced) '):][:47]:<47} {k['jobs']:>8} {k['job_ms']:>10.1f} "
-                  f"{'':>10} {k['procs']:>7} {k['chmods']:>7}")
+                  f"{k['sum_ms']:>10.1f} {'':>10} {k['procs']:>7} {k['chmods']:>7}")
     print(f"process starts before the first job: {procs[None]} ({chmods[None]} chmod); "
           f"in all: {len(starts)} ({sum(is_chmod(c) for _, c in starts)} chmod)")
 

@@ -3,16 +3,21 @@ package graft.index
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
+import java.util.concurrent.Future
+
+import scala.util.Try
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 
 import graft.NioLocalFileSystem
-import graft.operators.VectorOps
+import graft.operators.{IvfModel, PqModel, VectorOps}
 
 /** Parquet-backed vector-index persistence with manifest + timestamped
   * versions — the reference's artifact layout
@@ -275,72 +280,89 @@ object IndexStore {
       params: Params, chunking: Chunking, model: String, normalize: Boolean,
       metric: String, docs: Option[DataFrame], sources: Option[DataFrame],
       measuredRecall: Double, mark: Option[Mark]): Manifest = {
+    if (!Backends.contains(backend)) throw unknownBackend(backend)
     val spark = vectors.sparkSession
     val conf = writeConf(spark)
     rollBack(conf, root, name,
       if (exists(root, name, conf)) Some(pointed(root, name, None, conf = conf)._2) else None)
     import spark.implicits._
-    val rows = docs match {
-      case Some(d) =>
-        vectors.drop("text").join(d.select(col("id"), col("text")), Seq("id"), "left")
-      case None => withText(vectors)
-    }
-    // the fitted models, written as sidecars beside the vectors: centroids
-    // for every ivf* backend (a loader — and [[append]] — must be able to
-    // re-assign without the original fit inputs), codebooks for ivfpq.
-    // Both fits are the deterministic bounded-sample Lloyd's: the corpus
-    // is never shuffled or iterated over to get its cells.
-    lazy val cents = graft.operators.IvfModel.fitFromDf(
-      vectors.select(col("id"), col("vec")), "id", "vec", params.nlist)
-    lazy val books = graft.operators.PqModel.fitFromDf(vectors, "id", "vec")
-    val assigned = backend match {
-      case "ivf_hier" =>
-        // Same layout as "ivf", assignment via the two-level coarse probe
-        // (graft.functions.IvfProbesHier): O(N·√nlist) instead of
-        // O(N·nlist) per vector — the build form for a corpus-
-        // proportional nlist (quality pinned by ivf_hier_agreement).
-        val (supers, memberOf) = graft.operators.IvfModel.superModel(cents)
-        // the build-side super dial: the persisted tuning when set, else
-        // the nlist rule (the same resolution a dialed serving job makes)
-        val sp = if (params.superProbes >= 1) params.superProbes
-                 else VectorOps.scaledSuperProbes(cents.length)
-        // explode evaluates the probe ONCE per row and drops empty-probe
-        // rows (all probed supers memberless) — the try_element_at +
-        // isNotNull-filter form it replaces triple-evaluated the probe
-        // (project + filter + pushed scan filter; see ivfBuildHier)
-        rows.select(col("id"), col("vec"), col("text"),
-            explode(graft.functions.IvfProbesHier.column(col("vec"),
-              supers, cents, memberOf, sp, 1)).as("p"))
-          .select(col("id"), col("vec"),
-            col("p")("cell").cast("int").as("cell"), col("text"))
-      case _ => layout(rows, backend, cents, books)
-    }
-    val fitted = if (backend.startsWith("ivf")) Some(cents) else None
-    val pq = if (backend == "ivfpq") Some(books) else None
     val version = freshVersion(conf, root, name)
     val vDir = s"$root/$name/versions/$version"
-    // The EXPENSIVE lineage (chunk → embed → assign → layout shuffle) runs
-    // exactly once, into the version dir, and nothing is copied or read
-    // back: the manifest count — and a flat index's dim — come from the
-    // write itself.
-    val (count, writtenDim, schema) =
-      writeVectors(assigned, backend, params.nlist, s"$vDir/vectors")
-    locally {
-      fitted.foreach(cents =>
+    // The sidecars need nothing the vectors write produces, so each is
+    // written on a pool thread beside the build's own path (the fit
+    // sample, the fits, the vectors write), and every one has ended before
+    // the build commits or throws.
+    val forks = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+    def beside(write: => Unit): Unit = forks += Bridge.fork(spark)(write)
+    val (fitted, pq, (count, writtenDim, schema)) = try {
+      // per-doc provenance, the reference's `<index>.sources.json`
+      // (answerless_search.py:60-71,104-111): (doc_id, origin_*, ...)
+      sources.foreach(s => beside(s.write.mode("overwrite")
+        .options(NioLocalFileSystem.WriteOptions).parquet(s"$vDir/sources")))
+      // the fitted models, written as sidecars beside the vectors:
+      // centroids for every ivf* backend (a loader — and [[append]] — must
+      // be able to re-assign without the original fit inputs), codebooks
+      // for ivfpq. Both fits are the deterministic bounded-sample Lloyd's
+      // on one take: the PQ sample is the first SampleSize rows of the IVF
+      // sample, which is never smaller. The corpus is never shuffled or
+      // iterated over to get its cells.
+      val ivf = backend.startsWith("ivf")
+      val sample =
+        if (ivf) IvfModel.sampleOf(vectors, "id", "vec", IvfModel.sampleSize(params.nlist))
+        else Array.empty[Array[Double]]
+      val fitted = if (!ivf) None else Some(IvfModel.fitFromSample(
+        vectors.select(col("id"), col("vec")), "id", "vec", params.nlist, sample))
+      val pq = if (backend == "ivfpq")
+        Some(PqModel.fitFromSample(sample.take(IvfModel.SampleSize))) else None
+      fitted.foreach(cents => beside(
         cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "centroid")
           .coalesce(1).write.mode("overwrite").options(NioLocalFileSystem.WriteOptions)
-          .parquet(s"$vDir/centroids"))
-      pq.foreach(cb =>
+          .parquet(s"$vDir/centroids")))
+      pq.foreach(cb => beside(
         cb.zipWithIndex.flatMap { case (book, m) =>
           book.zipWithIndex.map { case (c, code) => (m, code, c.toSeq) }
         }.toSeq.toDF("m", "code", "cent")
           .coalesce(1).write.mode("overwrite").options(NioLocalFileSystem.WriteOptions)
-          .parquet(s"$vDir/codebooks"))
-      // per-doc provenance, the reference's `<index>.sources.json`
-      // (answerless_search.py:60-71,104-111): (doc_id, origin_*, ...)
-      sources.foreach(_.write.mode("overwrite").options(NioLocalFileSystem.WriteOptions)
-        .parquet(s"$vDir/sources"))
-    }
+          .parquet(s"$vDir/codebooks")))
+      val rows = docs match {
+        case Some(d) =>
+          vectors.drop("text").join(d.select(col("id"), col("text")), Seq("id"), "left")
+        case None => withText(vectors)
+      }
+      val assigned = backend match {
+        case "ivf_hier" =>
+          // Same layout as "ivf", assignment via the two-level coarse probe
+          // (graft.functions.IvfProbesHier): O(N·√nlist) instead of
+          // O(N·nlist) per vector — the build form for a corpus-
+          // proportional nlist (quality pinned by ivf_hier_agreement).
+          val cents = fitted.get
+          val (supers, memberOf) = IvfModel.superModel(cents)
+          // the build-side super dial: the persisted tuning when set, else
+          // the nlist rule (the same resolution a dialed serving job makes)
+          val sp = if (params.superProbes >= 1) params.superProbes
+                   else VectorOps.scaledSuperProbes(cents.length)
+          // explode evaluates the probe ONCE per row and drops empty-probe
+          // rows (all probed supers memberless) — the try_element_at +
+          // isNotNull-filter form it replaces triple-evaluated the probe
+          // (project + filter + pushed scan filter; see ivfBuildHier)
+          rows.select(col("id"), col("vec"), col("text"),
+              explode(graft.functions.IvfProbesHier.column(col("vec"),
+                supers, cents, memberOf, sp, 1)).as("p"))
+            .select(col("id"), col("vec"),
+              col("p")("cell").cast("int").as("cell"), col("text"))
+        case _ => layout(rows, backend, fitted.get, pq.get)
+      }
+      // The input's lineage (read → chunk → embed) runs once for a flat
+      // build, into the version dir. An ivf* build runs it once more,
+      // before the write, for the fit sample — twice more when the frame
+      // has more than MergeFactor partitions and the sample counts it
+      // first ([[IvfModel.hashOrderedTake]]). A sources sidecar re-reads
+      // the input beside the write. Nothing is copied or read back: the
+      // manifest count — and a flat index's dim — come from the write
+      // itself.
+      (fitted, pq, writeVectors(assigned, backend, params.nlist, s"$vDir/vectors"))
+    } catch { case NonFatal(e) => joinAll(forks, Some(e)); throw e }
+    joinAll(forks)
     // dim: the fitted centroid length for ivf* (already driver-side), the
     // written vectors' length for flat
     val dim = fitted.flatMap(_.headOption).map(_.length).orElse(writtenDim)
@@ -367,6 +389,29 @@ object IndexStore {
     writeString(conf, s"$root/$name/latest/manifest.json", json)
     manifest
   }
+
+  /** Waits for every fork, then throws `failed` or else the first fork's
+    * failure, each later failure added to it as suppressed.
+    */
+  private def joinAll(forks: Iterable[Future[Unit]], failed: Option[Throwable] = None): Unit = {
+    val errs = failed.toSeq ++ forks.flatMap(f => Try(Bridge.await(f)).failed.toOption)
+    errs.headOption.foreach { e =>
+      errs.tail.filterNot(_ eq e).foreach(e.addSuppressed)
+      throw e
+    }
+  }
+
+  /** The backends [[build]] writes. */
+  private val Backends = Seq("flat", "ivf", "ivf_hier", "ivfpq")
+
+  // Mirrors the reference's loader contract (ingest/backends/loader.py:10
+  // `raise ValueError(f"Unknown backend: {name}")`) instead of silently
+  // degrading to flat. The reference's HNSW surface is config-only dead
+  // code (its loader raises on it too); graph-ANN is deliberately not
+  // implemented here — ivf/ivf_hier/ivfpq cover every reachable serving
+  // shape.
+  private def unknownBackend(backend: String) = new IllegalArgumentException(
+    s"Unknown backend: $backend (supported: ${Backends.mkString(", ")})")
 
   /** `df` with a string `text` column: its own when present, else null. */
   private def withText(df: DataFrame): DataFrame =
@@ -395,15 +440,7 @@ object IndexStore {
           .as("codes"), col("text"))
     case "flat" =>
       rows.select(col("id"), col("vec"), lit(0).as("cell"), col("text"))
-    case other =>
-      // Mirror the reference's loader contract (ingest/backends/
-      // loader.py:10 `raise ValueError(f"Unknown backend: {name}")`)
-      // instead of silently degrading to flat. The reference's HNSW
-      // surface is config-only dead code (its loader raises on it too);
-      // graph-ANN is deliberately not implemented here — ivf/ivf_hier/
-      // ivfpq cover every reachable serving shape.
-      throw new IllegalArgumentException(
-        s"Unknown backend: $other (supported: flat, ivf, ivf_hier, ivfpq)")
+    case other => throw unknownBackend(other)
   }
 
   /** Default per-file row ceiling for the vectors layout — ~1 GB parquet

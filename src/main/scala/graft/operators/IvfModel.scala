@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -122,39 +125,52 @@ object IvfModel {
         VectorOps.TargetCellSize).toInt))
   }
 
+  /** The rows [[hashOrderedTake]]'s driver merge may receive per sampled
+    * row. A TakeOrdered hands the driver each partition's local top-n, so
+    * a frame of at most this many partitions, or of at most this many
+    * times n rows, is taken as it is; a larger one is pre-filtered to
+    * about this many times n rows first.
+    */
+  val MergeFactor = 4
+
   /** The rows with the n globally-smallest (xxhash64(idCol), idCol) — the
     * shared deterministic fit-sample selection — with the driver fetch
     * bounded at O(n) rows. A plain `orderBy(...).limit(n).collect()`
     * compiles to TakeOrderedAndProject, whose driver merge receives each
-    * partition's LOCAL top-n: partitions × n rows — at 4.2M vectors / 32
-    * partitions / n = 262144 that is ~2 GB and aborts on
+    * partition's LOCAL top-n: min(total, partitions × n) rows — at 4.2M
+    * vectors / 32 partitions / n = 262144 that is ~2 GB and aborts on
     * spark.driver.maxResultSize (found r11 by the uncap4m evidence arm;
-    * at 1000 executors it would be tens of GB). The fix is a
-    * hash-threshold pre-filter: keep rows whose xxhash64 falls below the
-    * uniform hash space's ≈4n/total quantile, doubling the cut
-    * deterministically until the filtered set provably contains the
-    * global top-n (≥ n rows pass the STRICT cut, so every excluded row
-    * ranks after at least n included rows). The ordered take then merges
-    * ~4n rows instead of partitions × n. Output is IDENTICAL to the
-    * unfiltered take by construction — spec-pinned — so every fit
-    * derived from this sample is unchanged. Costs at most two narrow
-    * column-pruned count jobs — `knownTotal ≥ 0` (the dir-keyed
+    * at 1000 executors it would be tens of GB).
+    *
+    * A frame whose planned partition count is known without a job
+    * ([[plannedPartitions]]) and is at most [[MergeFactor]] is already
+    * bounded at MergeFactor·n merged rows: one job, the plain take.
+    * Otherwise a hash-threshold pre-filter keeps rows whose xxhash64 falls
+    * below the uniform hash space's ≈MergeFactor·n/total quantile,
+    * doubling the cut deterministically until the filtered set provably
+    * contains the global top-n (≥ n rows pass the STRICT cut, so every
+    * excluded row ranks after at least n included rows). The ordered take
+    * then merges ~MergeFactor·n rows instead of partitions × n. Output is
+    * IDENTICAL to the unfiltered take by construction — spec-pinned — so
+    * every fit derived from this sample is unchanged. Costs at most two
+    * narrow column-pruned count jobs — `knownTotal ≥ 0` (the dir-keyed
     * [[corpusCount]], threaded by every embeddings-table entry point)
-    * replaces the first; small frames (total ≤ 4n) skip straight to the
-    * plain take. If the doubling loop ever exhausts (frac ≥ 1.0 — only
-    * possible under extreme hash collision mass, e.g. mass-duplicate
-    * ids), the fallback IS the unbounded partitions×n merge this method
-    * exists to prevent, so it warns loudly before proceeding — a
-    * recurrence of the uncap4m driver-merge abort must be attributable
+    * replaces the first; small frames (total ≤ MergeFactor·n) skip
+    * straight to the plain take. If the doubling loop ever exhausts
+    * (frac ≥ 1.0 — only possible under extreme hash collision mass, e.g.
+    * mass-duplicate ids), the fallback IS the unbounded partitions×n merge
+    * this method exists to prevent, so it warns loudly before proceeding —
+    * a recurrence of the uncap4m driver-merge abort must be attributable
     * (r11 advisor).
     */
   private[graft] def hashOrderedTake(base: DataFrame, idCol: String,
       n: Int, knownTotal: Long = -1L): Array[org.apache.spark.sql.Row] = {
     def take(d: DataFrame) =
       d.orderBy(xxhash64(col(idCol)), col(idCol)).limit(n).collect()
+    if (plannedPartitions(base).exists(_ <= MergeFactor)) return take(base)
     val total = if (knownTotal >= 0L) knownTotal else base.count()
-    if (total <= 4L * n) return take(base)
-    var frac = 4.0 * n / total
+    if (total <= MergeFactor.toLong * n) return take(base)
+    var frac = MergeFactor.toDouble * n / total
     while (frac < 1.0) {
       val cut = (BigDecimal(frac) * BigDecimal(2).pow(64) +
         BigDecimal(Long.MinValue)).toLong
@@ -170,6 +186,22 @@ object IvfModel {
         s"receives partitions x $n rows and may abort on " +
         s"spark.driver.maxResultSize.")
     take(base)
+  }
+
+  /** The partition count of `df`'s planned RDD, when building it starts
+    * no job: None when the physical plan holds an exchange (under AQE,
+    * stages run to plan the rest), a subquery (run before the plan
+    * executes) or a cached frame not yet filled (its plan runs to fill
+    * it). A narrow plan's RDD is built without running anything.
+    */
+  private[graft] def plannedPartitions(df: DataFrame): Option[Int] = {
+    val plan = df.queryExecution.executedPlan
+    val runsJobs = plan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case s: InMemoryTableScanExec => !s.relation.cacheBuilder.isCachedColumnBuffersLoaded
+      case p => p.subqueries.nonEmpty
+    }
+    if (runsJobs) None else Some(plan.execute().getNumPartitions)
   }
 
   /** The deterministic bounded fit sample of any (id, array<float>) frame:
@@ -190,8 +222,16 @@ object IvfModel {
     * ≤ [[MaxRefineRounds]] narrow assignment passes).
     */
   def fitFromDf(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      knownTotal: Long = -1L): Array[Array[Double]] = {
-    val sample = sampleOf(df, idCol, vecCol, sampleSize(k), knownTotal)
+      knownTotal: Long = -1L): Array[Array[Double]] =
+    fitFromSample(df, idCol, vecCol, k,
+      sampleOf(df, idCol, vecCol, sampleSize(k), knownTotal))
+
+  /** [[fitFromDf]] on `sample`, the frame's [[sampleOf]] at [[sampleSize]]
+    * rows, taken by the caller: its first [[SampleSize]] rows are the PQ
+    * fit's sample too ([[PqModel.fitFromSample]]), so one take feeds both.
+    */
+  private[graft] def fitFromSample(df: DataFrame, idCol: String, vecCol: String,
+      k: Int, sample: Array[Array[Double]]): Array[Array[Double]] = {
     val seed = if (k <= FlatFitMaxK) fit(sample, k) else fitHier(sample, k)
     if (k <= DriverFitMaxK) seed
     else refineDistributed(df, idCol, vecCol, seed)

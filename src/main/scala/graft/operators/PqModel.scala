@@ -50,8 +50,16 @@ object PqModel {
     */
   def fitFromDf(df: org.apache.spark.sql.DataFrame, idCol: String, vecCol: String,
                 subSpaces: Int = SubSpaces, codes: Int = Codes,
-                knownTotal: Long = -1L): Array[Array[Array[Double]]] = {
-    val sample = IvfModel.sampleOf(df, idCol, vecCol, IvfModel.SampleSize, knownTotal)
+                knownTotal: Long = -1L): Array[Array[Array[Double]]] =
+    fitFromSample(IvfModel.sampleOf(df, idCol, vecCol, IvfModel.SampleSize, knownTotal),
+      subSpaces, codes)
+
+  /** [[fitFromDf]] on `sample`, the frame's first [[IvfModel.SampleSize]]
+    * rows in [[IvfModel.sampleOf]]'s order: a prefix of the IVF fit's
+    * sample, which is never smaller.
+    */
+  private[graft] def fitFromSample(sample: Array[Array[Double]],
+      subSpaces: Int = SubSpaces, codes: Int = Codes): Array[Array[Array[Double]]] = {
     require(sample.nonEmpty, "PQ fit needs a non-empty sample")
     val dim = sample.head.length
     require(dim % subSpaces == 0, s"dim $dim not divisible into $subSpaces subspaces")

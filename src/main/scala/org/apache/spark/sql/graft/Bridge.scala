@@ -5,7 +5,7 @@ import java.util.concurrent.{Callable, ExecutionException, ForkJoinPool, Future}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.util.Utils
+import org.apache.spark.util.{CallSite, Utils}
 
 /** Minimal bridge into the `private[sql]` Column ⇄ Expression converters so
   * graft's native Catalyst expressions can be used as ordinary Columns in
@@ -31,11 +31,16 @@ object Bridge {
     * calling thread's Spark local properties (job group, description,
     * scheduler pool) and with `spark` as the active session, so its jobs
     * belong to the caller's job group; the pool thread's own are restored
-    * after. [[await]] returns its value or throws its exception.
+    * after. Its jobs carry the caller's call site too, as a pool thread's
+    * own stack names no caller. [[await]] returns its value or throws its
+    * exception.
     */
   def fork[A](spark: SparkSession)(body: => A): Future[A] = {
     val sc = spark.sparkContext
     val props = Utils.cloneProperties(sc.getLocalProperties)
+    val site = sc.getCallSite()
+    props.setProperty(CallSite.SHORT_FORM, site.shortForm)
+    props.setProperty(CallSite.LONG_FORM, site.longForm)
     ForkJoinPool.commonPool().submit(new Callable[A] {
       override def call(): A = {
         val (ownProps, ownSession) = (sc.getLocalProperties, SparkSession.getActiveSession)

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.index.IndexStore
+import graft.operators.{IvfModel, PqModel}
 
 class IndexStoreSpec extends SparkSpec {
 
@@ -451,10 +452,66 @@ class IndexStoreSpec extends SparkSpec {
       assert(IndexStore.manifest(root, "wc").count == m.count)
       // the same builds ran 5, 11 and 17 jobs when the count was read
       // back: a schema-inference job and a count (plus a first() for a
-      // flat dim)
-      val readBack = Map("flat" -> 5, "ivf" -> 11, "ivfpq" -> 17)(backend)
-      assert(jobs <= readBack - 3, s"$backend: a build ran $jobs Spark jobs")
+      // flat dim). Now a flat build is its vectors write; an ivf build
+      // adds the fit sample before it (3 jobs on this local frame, which
+      // has fewer rows than the sample, so Spark drops the limit and
+      // sorts it globally; no count, as the frame has MergeFactor
+      // partitions) and the centroids sidecar beside it, 2 + 3 + 1; ivfpq
+      // adds only the codebooks sidecar, as its fit reuses that sample.
+      val ceiling = Map("flat" -> 1, "ivf" -> 6, "ivfpq" -> 7)(backend)
+      assert(jobs <= ceiling, s"$backend: a build ran $jobs Spark jobs")
     } finally spark.conf.unset("graft.index.maxRowsPerCellFile")
+  }
+
+  test("an ivfpq build takes one fit sample: its centroids and codebooks equal the separate fits") {
+    val s = spark
+    import s.implicits._
+    // more rows than SampleSize, and an nlist whose IVF sample is larger
+    // still, so the PQ sample is a strict prefix of the IVF sample
+    val vs = (0L until 6000L).map(i =>
+      (i.toString, Array.tabulate(8)(d => (math.sin(i * 31 + d) * 10).toFloat)))
+      .toDF("id", "vec")
+    val nlist = 100
+    assert(IvfModel.sampleSize(nlist) > IvfModel.SampleSize)
+    val root = Files.createTempDirectory("graft-idx").toString
+    IndexStore.build(vs, root, "one", "ivfpq", params = IndexStore.Params(nlist, 2))
+    def bits(rows: Seq[Seq[Double]]) = rows.map(_.map(java.lang.Double.doubleToLongBits))
+    val side = baseDir(root, "one")
+    val cents = spark.read.parquet(s"$side/centroids").orderBy("cell")
+      .collect().map(_.getSeq[Double](1)).toSeq
+    val books = spark.read.parquet(s"$side/codebooks").orderBy("m", "code")
+      .collect().map(_.getSeq[Double](2)).toSeq
+    assert(cents.length == nlist)
+    assert(bits(cents) == bits(IvfModel.fitFromDf(vs, "id", "vec", nlist).map(_.toSeq).toSeq))
+    assert(bits(books) == bits(PqModel.fitFromDf(vs, "id", "vec").flatten.map(_.toSeq).toSeq))
+  }
+
+  test("a build whose sources write fails throws its error, leaves no job running and keeps latest") {
+    val sc = spark.sparkContext
+    val root = Files.createTempDirectory("graft-idx").toString
+    val params = IndexStore.Params(nlist = 4, nprobe = 2)
+    IndexStore.build(vectors, root, "sf", "ivf", params)
+    val before = IndexStore.manifestJson(root, "sf")
+    val bad = vectors.select(col("id").as("doc_id"),
+      raise_error(lit("sources write failed")).cast("string").as("origin_path"))
+    val e = intercept[Exception] {
+      IndexStore.build(vectors, root, "sf", "ivf", params, sources = Some(bad))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("sources write failed")), e)
+    org.apache.spark.graft.JobCount.settle(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    // the failed build never committed: latest serves the first build
+    assert(IndexStore.manifestJson(root, "sf") == before)
+    assert(IndexStore.load(spark, root, "sf").count() == 100)
+    assert(IndexStore.versions(root, "sf").length == 2, "the failed build's version dir")
+    // the next build removes that dir and commits its own
+    val good = vectors.select(col("id").as("doc_id"), lit("p").as("origin_path"))
+    val m = IndexStore.build(vectors, root, "sf", "ivf", params, sources = Some(good))
+    assert(m.count == 100 && IndexStore.versions(root, "sf").length == 2)
+    assert(IndexStore.manifestJson(root, "sf") != before)
+    assert(IndexStore.load(spark, root, "sf").count() == 100)
+    assert(IndexStore.loadSources(spark, root, "sf").get.count() == 100)
   }
 
   test("a cold load right after an ivf build reads at the manifest's schema and starts no job") {

@@ -17,8 +17,13 @@ class IvfModelSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, xxhash64}
     val df = (1L to 5000L).map(i => (i, Array(i.toFloat))).toDF("id", "vec")
       .repartition(8)
-    val fast = IvfModel.hashOrderedTake(df.select(col("id"), col("vec")), "id", 100)
-      .map(_.getLong(0)).toSeq
+    val (fastRows, sites) = org.apache.spark.graft.JobCount.sites(spark.sparkContext) {
+      IvfModel.hashOrderedTake(df.select(col("id"), col("vec")), "id", 100)
+    }
+    val fast = fastRows.map(_.getLong(0)).toSeq
+    // 8 partitions behind an exchange: the partition count is not known
+    // without a job, so the take counts the frame first
+    assert(sites.exists(_.startsWith("count at")), s"jobs: $sites")
     val plain = df.select(col("id"), col("vec"))
       .orderBy(xxhash64(col("id")), col("id")).limit(100)
       .collect().map(_.getLong(0)).toSeq
@@ -51,12 +56,35 @@ class IvfModelSpec extends SparkSpec {
       .repartition(8)
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     Warn.set(spark, m => { buf.synchronized(buf += m); Warn.sink(m) })
-    val rows = try IvfModel.hashOrderedTake(
-      dup.select(col("id"), col("vec")), "id", 100)
-    finally Warn.clear(spark)
+    val (rows, sites) = try org.apache.spark.graft.JobCount.sites(spark.sparkContext) {
+      IvfModel.hashOrderedTake(dup.select(col("id"), col("vec")), "id", 100)
+    } finally Warn.clear(spark)
+    assert(sites.exists(_.startsWith("count at")), s"jobs: $sites")
     assert(rows.length == 100 && rows.forall(_.getLong(0) == hid))
     val mine = buf.synchronized(buf.toSeq).filter(_.contains("hashOrderedTake"))
     assert(mine.size == 1 && mine.head.contains("UNBOUNDED"), s"got: $mine")
+  }
+
+  test("hashOrderedTake runs one job on a frame of at most MergeFactor partitions") {
+    // TakeOrdered hands the driver at most partitions x n rows, so a frame
+    // planned at <= MergeFactor partitions needs no count to bound the
+    // merge: total = 50 x n would take the filter path on a wider frame
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val df = (1L to 5000L).map(i => (i, Array(i.toFloat))).toDF("id", "vec")
+      .coalesce(IvfModel.MergeFactor - 1).select(col("id"), col("vec"))
+    assert(IvfModel.plannedPartitions(df).contains(IvfModel.MergeFactor - 1))
+    val plain = df.orderBy(xxhash64(col("id")), col("id")).limit(100)
+      .collect().map(_.getLong(0)).toSeq
+    for (known <- Seq(-1L, 5000L)) {
+      val (rows, jobs, _) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+        IvfModel.hashOrderedTake(df, "id", 100, knownTotal = known)
+      }
+      assert(jobs == 1, s"knownTotal $known: $jobs jobs")
+      assert(rows.map(_.getLong(0)).toSeq == plain, s"knownTotal $known")
+    }
+    // an exchange leaves the count unknown without running stages
+    assert(IvfModel.plannedPartitions(df.repartition(2)).isEmpty)
   }
 
   test("fit is a pure function: identical centroids on every call") {
