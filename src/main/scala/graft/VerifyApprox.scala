@@ -148,10 +148,8 @@ object VerifyApprox {
     // (qEventsHeavyHitters's own definition), so derive it from the
     // checkpointed `full` instead of re-running the whole events scan +
     // trailing aggregation a second time per VerifyApprox run.
-    val exactW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("day")).orderBy(col("ne").desc, col("user_id"))
-    val exact = full.withColumn("rank", row_number().over(exactW))
-      .filter(col("rank") <= k)
+    val exact = graft.functions.Ranking
+      .topKPer(full, k, col("day"), col("ne").desc, col("user_id"))
       .select(col("day"), col("user_id"), col("ne").as("n_events"))
     val dayStats = full.groupBy(col("day"))
       .agg(count(lit(1)).as("u"), sum(col("ne")).as("n"))

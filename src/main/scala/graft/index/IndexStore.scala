@@ -433,11 +433,8 @@ object IndexStore {
         .select(col("id"), col("embedding").as("vec"),
           col("cell").cast("int").as("cell"), col("text"))
     case "ivfpq" =>
-      rows.select(col("id"),
-        element_at(graft.functions.IvfProbes.column(col("vec"), cents, 1), 1)("cell")
-          .cast("int").as("cell"),
-        transform(graft.functions.PqCodes.column(col("vec"), books), p => p("code"))
-          .as("codes"), col("text"))
+      rows.select(col("id") +: VectorOps.ivfPqLayout(col("vec"), cents, books) :+ col("text"): _*)
+        .withColumn("cell", col("cell").cast("int"))
     case "flat" =>
       rows.select(col("id"), col("vec"), lit(0).as("cell"), col("text"))
     case other => throw unknownBackend(other)
@@ -919,10 +916,8 @@ object IndexStore {
 
   /** Serve an ivfpq index: per query, probe the `nprobe` nearest coarse
     * cells and ADC-score that slice's PQ code rows — the persisted-artifact
-    * form of [[graft.operators.VectorOps.annIvfPq]]. The probed cell set
-    * across the (small) query frame is collected once and pushed as a
-    * partition FILTER, so IO is pruned to the probed cells before the
-    * broadcast join assigns queries to them.
+    * form of [[graft.operators.VectorOps.annIvfPq]], ranked per query by
+    * [[graft.operators.VectorOps.nearest]].
     *
     * `nprobe = -1` (the default) resolves from the ARTIFACT's manifest —
     * the tuned assign dial when the build persisted one, else the
@@ -934,43 +929,38 @@ object IndexStore {
                 queries: DataFrame, k: Int,
                 nprobe: Int = -1,
                 version: Option[String] = None): DataFrame =
-    adcScored(spark, root, name, queries, nprobe, version)
-      .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk").cast("long").as("rk"),
-        col("id").as("neighbor_id"), col("score"))
+    VectorOps.nearest(adcScored(spark, root, name, queries, nprobe, version), k, "id")
 
   /** [[adcSearch]]'s rows before ranking: `(q_id, id, score, text)` for
-    * every code row of each query's probed cells, with the chunk `text`
-    * read in the same pruned scan (null when the rows have none). The
-    * ivfpq text search ranks its one query's rows with
-    * [[graft.functions.Ranking.topK]]; [[adcSearch]] ranks per query.
+    * every code row of each query's probed cells of an ivfpq index
+    * (another backend is refused), with the chunk `text` read in the same
+    * scan (null when the rows have none). `queries` (`id`, `vec`) may be a
+    * stream. The index's manifest is read once (`manifestText`, a
+    * same-query read, saves even that), so the code rows, the centroids
+    * and the codebooks all come from the base it names.
+    *
+    * A batch query set is small: the driver collects and dedups its probed
+    * cells (a distinct() would shuffle) and pushes them as a partition
+    * filter, so IO is pruned to those cells. A stream meets every cell
+    * eventually, so it joins the whole code table.
     */
   private[graft] def adcScored(spark: SparkSession, root: String, name: String,
                                queries: DataFrame, nprobe: Int,
-                               version: Option[String]): DataFrame = {
-    // ONE manifest read per call: the text keys the serving scan, names
-    // the sidecars' base and its parsed form resolves the serving dial
-    val mj = checkedManifest(root, name, version)
+                               version: Option[String],
+                               manifestText: Option[String] = None): DataFrame = {
+    val mj = manifestText.getOrElse(checkedManifest(root, name, version))
+    val m = parseManifest(mj)
+    require(m.backend == "ivfpq", s"ADC search serves ivfpq indexes; '$name' is ${m.backend}")
     val cents = loadCentroids(spark, root, name, version, Some(mj))
     val cb = loadCodebooks(spark, root, name, version, Some(mj))
-    val np = parseManifest(mj).probes(nprobe)
-    val qCells = queries.select(
-        col("id").as("q_id"), col("vec").as("q_emb"),
-        graft.functions.VectorFunctions.norm(col("vec")).as("q_nrm"),
-        explode(graft.functions.IvfProbes.column(col("vec"), cents, np)).as("p"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("p.cell").cast("int").as("cell"))
-    // ≤ nprobe cells per query of the small, broadcast query side: the
-    // driver dedups them, where a distinct() would shuffle
-    val cells = qCells.select(col("cell")).collect().map(_.getInt(0)).distinct.sorted.toSeq
-    probe(loadServing(spark, root, name, version, Some(mj)), cells)
-      .join(broadcast(qCells), Seq("cell"))
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("id"),
-        graft.functions.PqAdcScore.column(col("q_emb"), col("q_nrm"), col("codes"), cb)
-          .as("score"), col("text"))
+    val qCells = VectorOps.probedQueries(queries, col("id"), col("vec"),
+      graft.functions.VectorFunctions.norm(col("vec")), cents, m.probes(nprobe))
+    val index = loadServing(spark, root, name, version, Some(mj))
+    val codes = if (queries.isStreaming) index
+      else probe(index,
+        qCells.select(col("cell")).collect().map(_.getLong(0).toInt).distinct.sorted.toSeq)
+    VectorOps.adcScan(codes, "id", qCells, cb)
+      .select(col("q_id"), col("id"), col("score"), col("text"))
   }
 
   /** Export an index version (or latest) as a single zip archive — the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Ranking
 import graft.sources.Tables
 
 /** Relational/analytics core: the engine-foundation queries and bench
@@ -348,15 +349,11 @@ object Relational {
     * [[qEventsHeavyHittersApprox]]. Deterministic tie-break (user_id asc)
     * keeps the oracle exact.
     */
-  def qEventsHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("day"))
-      .orderBy(col("n_events").desc, col("user_id"))
-    heavyHittersTrailing(spark, dir)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= HeavyHittersK)
+  def qEventsHeavyHitters(spark: SparkSession, dir: String): DataFrame =
+    Ranking.topKPer(heavyHittersTrailing(spark, dir), HeavyHittersK,
+        col("day"), col("n_events").desc, col("user_id"))
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-        col("rank"), col("user_id"), col("n_events"))
-  }
+        col("rk").as("rank"), col("user_id"), col("n_events"))
 
   /** The exact twin's pre-rank frame: TRUE trailing-7-day event counts per
     * (day: date, user_id), real corpus days only. Shared with
@@ -517,15 +514,11 @@ object Relational {
     * shuffle on p_brand; a WindowGroupLimit (Spark 4) prunes to 3 rows per
     * group before the sort at scale.
     */
-  def qWindowTopk(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("p_brand"))
-      .orderBy(col("p_retailprice").desc, col("p_partkey"))
-    Tables.part(spark, dir)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
+  def qWindowTopk(spark: SparkSession, dir: String): DataFrame =
+    Ranking.topKPer(Tables.part(spark, dir), 3,
+        col("p_brand"), col("p_retailprice").desc, col("p_partkey"))
       .select(col("p_brand"), col("p_partkey"), col("p_name"),
               col("p_retailprice"), col("rk"))
-  }
 
   /** Tumbling 1-hour window aggregation over events (batch form of the
     * streaming pipeline in graft.streaming). Epoch-aligned hourly buckets ==

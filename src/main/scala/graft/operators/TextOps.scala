@@ -386,12 +386,8 @@ object TextOps {
       .withColumn("tfidf", round(
         col("f").cast("double") *
           log(lit(nDocs).cast("double") / col("df").cast("double")), 6))
-    scored
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-          .orderBy(col("tfidf").desc, col("term"))))
-      .filter(col("rk") <= 3)
-      .select(col("doc_id"), col("rk").cast("long").as("rk"), col("term"),
+    graft.functions.Ranking.topKPer(scored, 3, col("doc_id"), col("tfidf").desc, col("term"))
+      .select(col("doc_id"), col("rk"), col("term"),
         col("f").cast("long").as("tf"), col("df"), col("tfidf"))
   }
 

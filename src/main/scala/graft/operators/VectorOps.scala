@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{IvfProbes, PqAdcScore, PqCodes, Ranking}
 import graft.functions.VectorFunctions._
 import graft.sources.Tables
 
@@ -72,13 +72,54 @@ object VectorOps {
     * to the oracle, so near-tie float noise can never flip a rank across
     * engines. metric: "cos" | "dot".
     */
-  def topK(corpus: DataFrame, queries: DataFrame, k: Int, metric: String): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id"))
-    scoredAgainst(corpus, queries, metric).withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk").cast("long").as("rk"),
-        col("vec_id").as("neighbor_id"), col("score"))
-  }
+  def topK(corpus: DataFrame, queries: DataFrame, k: Int, metric: String): DataFrame =
+    nearest(scoredAgainst(corpus, queries, metric), k, "vec_id")
+
+  /** Each query's `k` nearest rows of `scored` (`q_id`, `score`, and the
+    * row's id in column `id`): score descending, ties to the lower id, the
+    * oracle's order. Columns (`q_id`, `rk`, `neighbor_id`, `score`).
+    */
+  private[graft] def nearest(scored: DataFrame, k: Int, id: String): DataFrame =
+    Ranking.topKPer(scored, k, col("q_id"), col("score").desc, col(id))
+      .select(col("q_id"), col("rk"), col(id).as("neighbor_id"), col("score"))
+
+  /** Each row of `queries` once per probed cell: (`q_id`, `q_emb`, `q_nrm`,
+    * `cell`) from its columns `id`, `emb` and `nrm`, for the `nprobe`
+    * cells of `cents` nearest `emb` by the [[graft.functions.IvfProbes]]
+    * kernel (a long cell id, the kernel's).
+    */
+  private[graft] def probedQueries(queries: DataFrame, id: Column, emb: Column, nrm: Column,
+      cents: Array[Array[Double]], nprobe: Int): DataFrame =
+    queries.select(id.as("q_id"), emb.as("q_emb"), nrm.as("q_nrm"),
+        explode(IvfProbes.column(emb, cents, nprobe)).as("p"))
+      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("p.cell").as("cell"))
+
+  /** The ADC scan: each query of `queries` (`q_id`, `q_emb`, `q_nrm`, and
+    * `cell` when probed) against the code rows of `codes` (`codes` and
+    * the row id in column `id`) in its cell, or all of them when
+    * `queries` has no `cell`, except its own row, scored by the
+    * [[graft.functions.PqAdcScore]] kernel under `books`. The query side
+    * broadcasts.
+    */
+  private[graft] def adcScan(codes: DataFrame, id: String, queries: DataFrame,
+      books: Array[Array[Array[Double]]]): DataFrame =
+    codes.join(broadcast(queries), Seq("cell").filter(queries.columns.contains))
+      .filter(col(id) =!= col("q_id"))
+      .withColumn("score", PqAdcScore.column(col("q_emb"), col("q_nrm"), col("codes"), books))
+
+  /** The ivfpq layout of vector column `vec`: its nearest coarse `cell` of
+    * `cents` (a long, the [[graft.functions.IvfProbes]] kernel's) and its
+    * PQ [[pqCodes]].
+    */
+  private[graft] def ivfPqLayout(vec: Column, cents: Array[Array[Double]],
+      books: Array[Array[Array[Double]]]): Seq[Column] =
+    Seq(element_at(IvfProbes.column(vec, cents, 1), 1)("cell").as("cell"), pqCodes(vec, books))
+
+  /** The PQ `codes` of vector column `vec` under `books`, one long per
+    * subspace ([[graft.functions.PqCodes]]).
+    */
+  private[graft] def pqCodes(vec: Column, books: Array[Array[Array[Double]]]): Column =
+    transform(PqCodes.column(vec, books), p => p("code")).as("codes")
 
   /** [[topK]] for ONE query vector of `e` (an [[embWithNorm]] frame),
     * ranked by [[graft.functions.Ranking.topK]]: collected, it runs two
@@ -91,7 +132,7 @@ object VectorOps {
     * its own broadcast.)
     */
   def topKOf(e: DataFrame, queryVecId: Long, k: Int, metric: String): DataFrame =
-    graft.functions.Ranking.topK(
+    Ranking.topK(
         scoredAgainst(e, e.filter(array_contains(typedLit(Seq(queryVecId)), col("vec_id"))),
             metric)
           .select(col("vec_id").as("neighbor_id"), col("score")),
@@ -131,7 +172,7 @@ object VectorOps {
   def assignCells(vectors: DataFrame, cents: Array[Array[Double]]): DataFrame =
     vectors
       .withColumn("p", element_at(
-        graft.functions.IvfProbes.column(col("embedding"), cents, 1), 1))
+        IvfProbes.column(col("embedding"), cents, 1), 1))
       .withColumn("cell", col("p.cell"))
       .withColumn("d2", col("p.d2"))
       .drop("p")
@@ -154,27 +195,18 @@ object VectorOps {
     */
   def ivfSearch(spark: SparkSession, dir: String): DataFrame = {
     val cents = IvfModel.centroids(spark, dir)
-    val qCells = embWithNorm(spark, dir).filter(col("vec_id").between(0, 9))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"),
-        explode(graft.functions.IvfProbes.column(col("embedding"), cents,
-          scaledNProbe(cents.length))).as("p"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("p.cell").as("cell"))
+    val qCells = probedQueries(embWithNorm(spark, dir).filter(col("vec_id").between(0, 9)),
+      col("vec_id"), col("embedding"), col("nrm"), cents, scaledNProbe(cents.length))
     // the assigned + norm'd corpus is the served IVF index table —
     // session-cached like the multi-probe assignment (r15)
     val corpusFrame = assignCells(
         Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), cents)
       .withColumn("nrm", norm(col("embedding")))
-    val corpus = served(corpusFrame)
-    corpus.join(broadcast(qCells), Seq("cell"))
+    nearest(served(corpusFrame).join(broadcast(qCells), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("score",
-        round(cosinePre(dot(col("q_emb"), col("embedding")), col("q_nrm"), col("nrm")), 6))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id"))))
-      .filter(col("rk") <= DefaultK)
-      .select(col("q_id"), col("rk").cast("long").as("rk"),
-        col("vec_id").as("neighbor_id"), col("score"))
+        round(cosinePre(dot(col("q_emb"), col("embedding")), col("q_nrm"), col("nrm")), 6)),
+      DefaultK, "vec_id")
   }
 
   /** SURVEY §2 `ivf_build_hier`: [[ivfBuild]] with the two-level
@@ -269,7 +301,7 @@ object VectorOps {
               // try_element_at here too: a vector whose every distance is
               // non-finite yields an EMPTY flat probe list as well, and
               // ANSI element_at on an empty array is a query error
-              try_element_at(graft.functions.IvfProbes.column(
+              try_element_at(IvfProbes.column(
                 col("embedding"), cents, 1), lit(1))).as("p"))
           .select(col("vec_id"), col("embedding"), col("p.cell").as("cell"))
       }
@@ -360,7 +392,7 @@ object VectorOps {
             else scaledAssignProbes(cents.length)
     val frame = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
-        explode(graft.functions.IvfProbes.column(col("embedding"), cents,
+        explode(IvfProbes.column(col("embedding"), cents,
           r)).as("p"))
       .select(col("vec_id"), col("embedding"), col("p.cell").as("cell"))
     served(frame)
@@ -707,12 +739,10 @@ object VectorOps {
       .select(col("vec_id").as("doc_id"), col("cell"))
     val terms = Search.perDocTerms(spark, dir)
       .select(col("doc_id"), explode(col("tc")).as(Seq("term", "f")))
-    cells.join(terms, Seq("doc_id"))
-      .groupBy(col("cell"), col("term")).agg(sum(col("f")).as("tf"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("cell")).orderBy(col("tf").desc, col("term"))))
-      .filter(col("rk") <= 3)
-      .select(col("cell"), col("rk").cast("long").as("rk"), col("term"), col("tf"))
+    Ranking.topKPer(cells.join(terms, Seq("doc_id"))
+        .groupBy(col("cell"), col("term")).agg(sum(col("f")).as("tf")),
+        3, col("cell"), col("tf").desc, col("term"))
+      .select(col("cell"), col("rk"), col("term"), col("tf"))
   }
 
   /** DuckDB oracle for cluster_terms: centroid literals + the token CTEs. */
@@ -798,7 +828,7 @@ object VectorOps {
     val errSum = (0 until PqModel.SubSpaces).map(m => col("pc")(m)("d2"))
       .reduce(_ + _)
     Tables.embeddings(spark, dir)
-      .select(col("vec_id"), graft.functions.PqCodes.column(col("embedding"), cb).as("pc"))
+      .select(col("vec_id"), PqCodes.column(col("embedding"), cb).as("pc"))
       .select(col("vec_id") +: codeCols :+ round(sqrt(errSum), 6).as("err_l2"): _*)
   }
 
@@ -813,21 +843,11 @@ object VectorOps {
     val cb = PqModel.codebooks(spark, dir)
     // the code table is the PERSISTED index artifact in production (the
     // IndexStore layout); session-cached like the IVF assignment (r15)
-    val codesFrame = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        transform(graft.functions.PqCodes.column(col("embedding"), cb), p => p("code"))
-          .as("codes"))
-    val codes = served(codesFrame)
+    val codes = served(Tables.embeddings(spark, dir)
+      .select(col("vec_id"), pqCodes(col("embedding"), cb)))
     val q = embWithNorm(spark, dir).filter(col("vec_id").between(0, 9))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    codes.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("score",
-        graft.functions.PqAdcScore.column(col("q_emb"), col("q_nrm"), col("codes"), cb))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id"))))
-      .filter(col("rk") <= DefaultK)
-      .select(col("q_id"), col("rk").cast("long").as("rk"),
-        col("vec_id").as("neighbor_id"), col("score"))
+    nearest(adcScan(codes, "vec_id", q, cb), DefaultK, "vec_id")
   }
 
   /** SURVEY §2 `ann_ivfpq`: the full faiss-style IVF-PQ search stack in one
@@ -840,40 +860,23 @@ object VectorOps {
     * corpus.
     */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame =
-    ivfPqAdcRanked(spark, dir)
-      .filter(col("rk") <= DefaultK)
-      .select(col("q_id"), col("rk").cast("long").as("rk"),
-        col("vec_id").as("neighbor_id"), col("score"))
+    nearest(ivfPqAdc(spark, dir), DefaultK, "vec_id")
 
-  /** The shared ADC ranking of [[annIvfPq]] and [[annIvfPqRerank]]:
-    * `(q_id, q_emb, q_nrm, vec_id, score, rk)` over the probed cells —
-    * the query columns ride through the window so the rerank stage can
-    * re-score its shortlist without a second query join.
+  /** The shared ADC scan of [[annIvfPq]] and [[annIvfPqRerank]]:
+    * [[adcScan]]'s `(…, vec_id, q_id, q_emb, q_nrm, score)` over the probed
+    * cells — the query columns ride through the ranking so the rerank
+    * stage can re-score its shortlist without a second query join.
     */
-  private def ivfPqAdcRanked(spark: SparkSession, dir: String): DataFrame = {
+  private def ivfPqAdc(spark: SparkSession, dir: String): DataFrame = {
     val cents = IvfModel.centroids(spark, dir)
     val cb = PqModel.codebooks(spark, dir)
-    val qCells = embWithNorm(spark, dir).filter(col("vec_id").between(0, 9))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"),
-        explode(graft.functions.IvfProbes.column(col("embedding"), cents,
-          scaledNProbe(cents.length))).as("p"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("p.cell").as("cell"))
+    val qCells = probedQueries(embWithNorm(spark, dir).filter(col("vec_id").between(0, 9)),
+      col("vec_id"), col("embedding"), col("nrm"), cents, scaledNProbe(cents.length))
     // the (cell, codes) table is exactly what IndexStore persists for the
     // IVF-PQ serving path; session-cached like the IVF assignment (r15)
-    val corpusFrame = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        element_at(graft.functions.IvfProbes.column(col("embedding"), cents, 1), 1)("cell")
-          .as("cell"),
-        transform(graft.functions.PqCodes.column(col("embedding"), cb), p => p("code"))
-          .as("codes"))
-    val corpus = served(corpusFrame)
-    corpus.join(broadcast(qCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("score",
-        graft.functions.PqAdcScore.column(col("q_emb"), col("q_nrm"), col("codes"), cb))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id"))))
+    val corpus = served(Tables.embeddings(spark, dir)
+      .select(col("vec_id") +: ivfPqLayout(col("embedding"), cents, cb): _*))
+    adcScan(corpus, "vec_id", qCells, cb)
   }
 
   /** ADC shortlist depth multiplier for [[annIvfPqRerank]]: the re-rank
@@ -893,18 +896,14 @@ object VectorOps {
     * shortlist.
     */
   def annIvfPqRerank(spark: SparkSession, dir: String): DataFrame = {
-    val shortlist = ivfPqAdcRanked(spark, dir)
-      .filter(col("rk") <= DefaultK * RerankFactor)
+    val shortlist = Ranking.topKPer(ivfPqAdc(spark, dir), DefaultK * RerankFactor,
+        col("q_id"), col("score").desc, col("vec_id"))
       .select(col("q_id"), col("q_emb"), col("q_nrm"), col("vec_id"))
     val full = embWithNorm(spark, dir)
-    broadcast(shortlist).join(full, Seq("vec_id"))
+    nearest(broadcast(shortlist).join(full, Seq("vec_id"))
       .withColumn("score",
-        round(cosinePre(dot(col("q_emb"), col("embedding")), col("q_nrm"), col("nrm")), 6))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id"))))
-      .filter(col("rk") <= DefaultK)
-      .select(col("q_id"), col("rk").cast("long").as("rk"),
-        col("vec_id").as("neighbor_id"), col("score"))
+        round(cosinePre(dot(col("q_emb"), col("embedding")), col("q_nrm"), col("nrm")), 6)),
+      DefaultK, "vec_id")
   }
 
   /** SURVEY §2 `ivfpq_rerank_recall`: recall@k of the re-ranked stack

@@ -247,7 +247,7 @@ object IndexPipeline {
         // the index holds PQ codes, not vectors: probe + ADC-score
         import spark.implicits._
         val qdf = Seq(("__query__", qv)).toDF("id", "vec")
-        IndexStore.adcScored(spark, root, name, qdf, cfg.nprobe, version)
+        IndexStore.adcScored(spark, root, name, qdf, cfg.nprobe, version, Some(mj))
           .select(col("id"), col("score"), col("text"))
       case b if b.startsWith("ivf") =>
         // IVF text search PROBES: nearest nprobe coarse cells from the

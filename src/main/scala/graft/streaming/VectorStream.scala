@@ -1,10 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{IvfProbes, PqAdcScore, VectorFunctions}
+import graft.functions.VectorFunctions
 import graft.operators.VectorOps
 
 /** Continuous ANN serving: a STREAM of query vectors scored against a
@@ -13,11 +12,12 @@ import graft.operators.VectorOps
   *
   * The whole scoring path is stateless (probe → stream-static join →
   * ADC kernel), so it runs in append mode with no watermark or state
-  * store; per-query top-k is a per-micro-batch ranking ([[rankTopK]]
-  * inside `foreachBatch`), because a global rank over an unbounded
-  * stream is undefined. At scale the static side is the
-  * partition-pruned PQ code table (codes are 64× smaller than
-  * embeddings) and each micro-batch's tiny query side broadcasts.
+  * store; per-query top-k is a per-micro-batch ranking ([[rankTopK]],
+  * the batch path's [[graft.functions.Ranking.topKPer]] window, inside
+  * `foreachBatch`), because a global rank over an unbounded
+  * stream is undefined. At scale the static side is the PQ code table
+  * (codes are 64× smaller than embeddings) and each micro-batch's tiny
+  * query side broadcasts.
   */
 object VectorStream {
 
@@ -34,48 +34,31 @@ object VectorStream {
   def adcCandidates(queries: DataFrame, index: DataFrame,
                     cents: Array[Array[Double]],
                     cb: Array[Array[Array[Double]]],
-                    nprobe: Int = VectorOps.NProbe): DataFrame = {
-    val qCells = queries.select(
-        col("id").as("q_id"), col("vec").as("q_emb"),
-        VectorFunctions.norm(col("vec")).as("q_nrm"),
-        explode(IvfProbes.column(col("vec"), cents, nprobe)).as("p"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("p.cell").cast("int").as("cell"))
-    qCells.join(index, Seq("cell"))
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        PqAdcScore.column(col("q_emb"), col("q_nrm"), col("codes"), cb).as("score"))
-  }
+                    nprobe: Int = VectorOps.NProbe): DataFrame =
+    VectorOps.adcScan(index, "id", VectorOps.probedQueries(queries, col("id"), col("vec"),
+        VectorFunctions.norm(col("vec")), cents, nprobe), cb)
+      .select(col("q_id"), col("id").as("neighbor_id"), col("score"))
 
-  /** [[adcCandidates]] against a PERSISTED ivfpq artifact — the stream
-    * twin of [[graft.index.IndexStore.adcSearch]]: loads the code table,
-    * centroid and codebook sidecars once at query start, and resolves the
-    * probe count the same way batch serving does — an explicit
-    * `nprobe ≥ 1` wins, else the manifest's
-    * [[graft.index.IndexStore.Manifest.servingProbes]] (the
-    * tuned dial when the build persisted one, else the
-    * build nprobe). This closes the dial handoff end-to-end: a stream
+  /** [[adcCandidates]] against a PERSISTED ivfpq artifact, served by the
+    * batch path's own [[graft.index.IndexStore.adcScored]]: one manifest
+    * read names the code table, centroids and codebooks, and resolves the
+    * probe count the way batch serving does — an explicit `nprobe ≥ 1`
+    * wins, else the manifest's
+    * [[graft.index.IndexStore.Manifest.servingProbes]] (the tuned dial
+    * when the build persisted one, else the build nprobe). So a stream
     * server pointed at a tuned artifact serves AT the tuned dial with no
     * code knowing the number.
     *
-    * The static side stays a lazy parquet scan of the cell-partitioned
-    * code table; per-micro-batch probing joins against it stream-static.
-    * (Cell-level partition PRUNING is per-query-set and therefore a batch
-    * concept — a long-lived stream meets all cells eventually, so the
-    * static side is the full table by design, still 64× smaller than the
-    * embeddings.)
+    * The static side is the whole cell-partitioned code table: cell
+    * pruning is per query set, and a long-lived stream meets all cells
+    * eventually. It is still 64× smaller than the embeddings.
     */
   def adcCandidatesFrom(spark: org.apache.spark.sql.SparkSession,
                         root: String, name: String, queries: DataFrame,
                         nprobe: Int = -1,
-                        version: Option[String] = None): DataFrame = {
-    import graft.index.IndexStore
-    val m = IndexStore.manifest(root, name, version)
-    require(m.backend == "ivfpq",
-      s"adcCandidatesFrom serves ivfpq artifacts; '$name' is ${m.backend}")
-    adcCandidates(queries, IndexStore.loadServing(spark, root, name, version),
-      IndexStore.loadCentroids(spark, root, name, version),
-      IndexStore.loadCodebooks(spark, root, name, version), m.probes(nprobe))
-  }
+                        version: Option[String] = None): DataFrame =
+    graft.index.IndexStore.adcScored(spark, root, name, queries, nprobe, version)
+      .select(col("q_id"), col("id").as("neighbor_id"), col("score"))
 
   /** Streaming embedding near-dup candidates — the continuous form of the
     * batch [[graft.operators.Dedup.dedupEmbeddingLsh]]: each arriving
@@ -142,10 +125,5 @@ object VectorStream {
     * tiebreak — identical to the batch serving path.
     */
   def rankTopK(candidates: DataFrame, k: Int): DataFrame =
-    candidates
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("neighbor_id"))))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk").cast("long").as("rk"),
-        col("neighbor_id"), col("score"))
+    VectorOps.nearest(candidates, k, "neighbor_id")
 }

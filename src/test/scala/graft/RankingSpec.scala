@@ -2,15 +2,18 @@ package graft
 
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.RankedTopKStrategy
 
 import graft.functions.Ranking
 
-/** `Ranking.topK` against a driver replica: sort every row, take k, number
-  * them 1..k. The input spans several partitions, its first order key has
-  * ties and nulls, and the last order key is unique, so the order is total.
+/** `Ranking.topK` and `Ranking.topKPer` against driver replicas: sort
+  * every row (of each group), take k, number them 1..k. The input spans
+  * several partitions, its first order key has ties and nulls, and the
+  * last order key is unique, so the order is total.
   */
 class RankingSpec extends SparkSpec {
 
@@ -63,16 +66,41 @@ class RankingSpec extends SparkSpec {
   }
 
   test("k beyond the row count, k = 0, empty input and all-null keys") {
-    val df = input(12)
-    assert(Ranking.topK(df, 50, col("g").desc, col("id")).collect().toSeq ==
-      replica(df, 50, gDescIdAsc))
-    assert(Ranking.topK(df, 0, col("g").desc, col("id")).collect().isEmpty)
-    val empty = input(0)
-    assert(Ranking.topK(empty, 5, col("g").desc, col("id")).collect().isEmpty)
-    assert(Ranking.topK(empty, 5, col("g").desc, col("id")).count() == 0L)
-    val nulls = input(40).withColumn("g", lit(null).cast("long"))
-    assert(Ranking.topK(nulls, 6, col("g").desc, col("id")).collect().toSeq ==
-      replica(nulls, 6, gDescIdAsc))
+    // topK in its own row order; topKPer over one constant group, whose
+    // row order is unspecified, in rank order
+    for (rank <- Seq[(DataFrame, Int) => DataFrame](
+           Ranking.topK(_, _, col("g").desc, col("id")),
+           Ranking.topKPer(_, _, lit(0), col("g").desc, col("id")).orderBy("rk"))) {
+      val df = input(12)
+      assert(rank(df, 50).collect().toSeq == replica(df, 50, gDescIdAsc))
+      assert(rank(df, 0).collect().isEmpty)
+      val empty = input(0)
+      assert(rank(empty, 5).collect().isEmpty)
+      assert(rank(empty, 5).count() == 0L)
+      val nulls = input(40).withColumn("g", lit(null).cast("long"))
+      assert(rank(nulls, 6).collect().toSeq == replica(nulls, 6, gDescIdAsc))
+    }
+  }
+
+  test("topKPer equals a per-group driver replica and plans a WindowGroupLimit") {
+    // groups g (ties, nulls on every 7th id: one null group), score
+    // id % 4 descending, ties broken by id
+    val df = input(200).withColumn("sc", col("id") % 4)
+    val k = 3
+    val top = Ranking.topKPer(df, k, col("g"), col("sc").desc, col("id"))
+    assert(top.columns.toSeq == Seq("id", "g", "s", "sc", "rk"))
+    assert(top.schema("rk").dataType == org.apache.spark.sql.types.LongType)
+    assert(!top.schema("rk").nullable)
+    val want = df.collect().toSeq
+      .groupBy(r => Option(r.get(1)))
+      .values.flatMap(_.sortBy(r => (-r.getLong(3), r.getLong(0))).take(k).zipWithIndex
+        .map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) })
+      .toSeq.sortBy(_.getLong(0))
+    assert(want.exists(_.isNullAt(1)))
+    assert(top.collect().toSeq.sortBy(_.getLong(0)) == want)
+    val plan = top.queryExecution.executedPlan
+    object Plans extends AdaptiveSparkPlanHelper
+    assert(Plans.collect(plan) { case w: WindowGroupLimitExec => w }.nonEmpty, plan.toString)
   }
 
   test("below a join, union, count, filter or limit, topK returns the same rows") {
